@@ -184,11 +184,12 @@ object Bpe {
     // this they leak one vocabulary-sized cached copy per training call
     // (the caller cannot release them; unpersisting before the successor
     // is durable would break its recompute path). Materialize the final
-    // frame cheaply, then release the predecessor. The exhausted exit
+    // frame cheaply, then release the predecessor — even when the count
+    // fails, so the failure path cannot leak it. The exhausted exit
     // already cleared prevSeqs at the top of the loop.
     prevSeqs.foreach { p =>
-      seqs.count()
-      p.unpersist(blocking = false)
+      try seqs.count()
+      finally p.unpersist(blocking = false)
     }
     (merges.result(), seqs)
   }

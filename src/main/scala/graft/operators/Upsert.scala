@@ -669,22 +669,6 @@ object Upsert {
     } finally keysP.unpersist(false)
   }
 
-  /** [[deleteKeys]] with the bounded lost-race retry of the other DML
-    * twins — replayable as-is (idempotent keyed delete, re-read per
-    * attempt).
-    */
-  def deleteKeysWithRetry(spark: SparkSession, tableRoot: String,
-      keys: DataFrame, pkCols: Seq[String], statsCols: Seq[String] = Nil,
-      maxKeySetSize: Int = 100000, maxAttempts: Int = 5,
-      backoff: Int => scala.concurrent.duration.FiniteDuration =
-        graft.core.Retry.linearBackoff(scala.concurrent.duration.DurationInt(1).second),
-      sleep: scala.concurrent.duration.FiniteDuration => Unit =
-        d => Thread.sleep(d.toMillis)): Long =
-    graft.core.Retry.retryWhen(
-      _.isInstanceOf[graft.sources.ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      deleteKeys(spark, tableRoot, keys, pkCols, statsCols, maxKeySetSize))
-
   def mergeWhereMoR(spark: SparkSession, tableRoot: String, staged: DataFrame,
       pkCols: Seq[String], statsCols: Seq[String] = Nil,
       maxKeySetSize: Int = 100000,
@@ -802,49 +786,6 @@ object Upsert {
       }
     } finally stagedP.unpersist(false)
   }
-
-  /** [[mergeWhereMoR]] with the bounded lost-race retry — safe for the
-    * same reason as [[mergeWhereWithRetry]] (re-read per attempt, MERGE
-    * idempotent by key).
-    */
-  def mergeWhereMoRWithRetry(spark: SparkSession, tableRoot: String,
-      staged: DataFrame, pkCols: Seq[String], statsCols: Seq[String] = Nil,
-      maxKeySetSize: Int = 100000, maxAttempts: Int = 5,
-      backoff: Int => scala.concurrent.duration.FiniteDuration =
-        graft.core.Retry.linearBackoff(scala.concurrent.duration.DurationInt(1).second),
-      sleep: scala.concurrent.duration.FiniteDuration => Unit =
-        d => Thread.sleep(d.toMillis),
-      maxDvPositions: Long = graft.sources.SnapshotManifest.DefaultMaxDvPositions,
-      colocated: Option[Boolean] = None,
-      maxColocatedRows: Long = 1L << 20)
-      : Long =
-    graft.core.Retry.retryWhen(
-      _.isInstanceOf[graft.sources.ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      mergeWhereMoR(spark, tableRoot, staged, pkCols, statsCols, maxKeySetSize,
-        maxDvPositions, colocated, maxColocatedRows))
-
-  /** [[mergeWhere]] with the same bounded lost-race retry as
-    * `SnapshotManifest.commitWithRetry`: every attempt re-reads the current
-    * version internally, so a retry merges into the table as the winning
-    * writer left it — and MERGE is idempotent-by-key, so re-applying the
-    * same staged batch is safe.
-    */
-  def mergeWhereWithRetry(spark: SparkSession, tableRoot: String,
-      staged: DataFrame, pkCols: Seq[String], statsCols: Seq[String] = Nil,
-      maxKeySetSize: Int = 100000, maxAttempts: Int = 5,
-      backoff: Int => scala.concurrent.duration.FiniteDuration =
-        graft.core.Retry.linearBackoff(scala.concurrent.duration.DurationInt(1).second),
-      sleep: scala.concurrent.duration.FiniteDuration => Unit =
-        d => Thread.sleep(d.toMillis),
-      colocated: Option[Boolean] = None,
-      maxColocatedRows: Long = 1L << 20,
-      deletes: Option[DataFrame] = None): Long =
-    graft.core.Retry.retryWhen(
-      _.isInstanceOf[graft.sources.ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      mergeWhere(spark, tableRoot, staged, pkCols, statsCols, maxKeySetSize,
-        colocated, maxColocatedRows, deletes))
 
   /** Write `df` as a PK-bucketed catalog table — the 100-TB merge lever
     * SCALE.md names for q06: with the target bucketed (and sorted) by its

@@ -491,8 +491,9 @@ object ChangeFeed {
         // key). The old merge-then-delete pair paid two full commit
         // protocols (two data writes, two stats passes, two manifest
         // publishes) per micro-batch and rewrote overlapping files twice.
-        graft.operators.Upsert.mergeWhereWithRetry(spark, dstRoot, upserts,
-          pk, statsCols, maxKeySetSize, deletes = Some(deletes))
+        SnapshotManifest.retryOnConflict()(
+          graft.operators.Upsert.mergeWhere(spark, dstRoot, upserts, pk,
+            statsCols, maxKeySetSize, deletes = Some(deletes)))
         // watermark AFTER both arms: a crash in between replays the batch
         // (idempotent), and a lagging watermark only tightens validation
         hi.foreach(h => advanceWatermark(spark, dstRoot, h))

@@ -241,9 +241,11 @@ class GraftCatalog extends DelegatingCatalogExtension with ProcedureCatalog {
         }
         val newCols = adds.result()
         if (newCols.nonEmpty)
-          SnapshotManifest.addColumnsWithRetry(spark, root, newCols)
+          SnapshotManifest.retryOnConflict()(
+            SnapshotManifest.addColumns(spark, root, newCols))
         if (bloom.isDefined || pk.isDefined || parts.isDefined)
-          SnapshotManifest.setPropertiesWithRetry(spark, root, bloom, pk, parts)
+          SnapshotManifest.retryOnConflict()(
+            SnapshotManifest.setProperties(spark, root, bloom, pk, parts))
         val remaining = delegated.result()
         if (remaining.nonEmpty) super.alterTable(ident, remaining: _*)
         loadTable(ident)

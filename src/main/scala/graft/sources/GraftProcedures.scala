@@ -170,8 +170,8 @@ private[graft] object GraftProcedures {
       Array(in("table", StringType), in("version", LongType))) {
       override def call(input: InternalRow): java.util.Iterator[Scan] = {
         val root = resolveRoot(input.getUTF8String(0).toString)
-        val v = SnapshotManifest.restoreVersionWithRetry(spark, root,
-          input.getLong(1))
+        val v = SnapshotManifest.retryOnConflict()(
+          SnapshotManifest.restoreVersion(spark, root, input.getLong(1)))
         result(versionSchema, versionRow(v))
       }
     },
@@ -187,8 +187,8 @@ private[graft] object GraftProcedures {
         val root = resolveRoot(input.getUTF8String(0).toString)
         val cols = input.getUTF8String(1).toString.split(",")
           .map(_.trim).filter(_.nonEmpty).toSeq
-        val v = SnapshotManifest.analyzeTableWithRetry(spark, root, cols,
-          input.getBoolean(2))
+        val v = SnapshotManifest.retryOnConflict()(
+          SnapshotManifest.analyzeTable(spark, root, cols, input.getBoolean(2)))
         result(versionSchema, versionRow(v))
       }
     },

@@ -168,6 +168,11 @@ object ManifestStats {
               None
             case e: java.util.concurrent.ExecutionException =>
               e.getCause match {
+                // an interrupted footer read: restore the flag (as the
+                // bare branch above does) and fall back to the exact path
+                case _: InterruptedException =>
+                  Thread.currentThread().interrupt()
+                  None
                 case fatal if fatal != null &&
                   !scala.util.control.NonFatal(fatal) => throw fatal
                 case _ => None

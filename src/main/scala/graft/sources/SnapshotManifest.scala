@@ -12,8 +12,8 @@ import graft.core.Retry
   * published this version first. The losing attempt corrupted nothing (its
   * staged data dir is unreferenced garbage until [[SnapshotManifest.vacuum]]
   * sweeps it) and the table now holds the WINNER's snapshot — so the correct
-  * response is re-read-and-retry, which [[SnapshotManifest.commitWithRetry]]
-  * and the DML `*WithRetry` twins automate. An `IOException` subclass so
+  * response is re-read-and-retry, which [[SnapshotManifest.retryOnConflict]]
+  * automates around any verb. An `IOException` subclass so
   * pre-existing callers that matched on IOException still do.
   */
 class ConcurrentCommitException(message: String)
@@ -534,22 +534,36 @@ object SnapshotManifest {
   }
 
   /** Atomically publish version `next` with exactly `lines` — the
-    * append-free MoR publish ([[deleteWhereMoR]]'s commit point).
+    * driver-body commit point every text-manifest verb goes through.
+    * Content is delta-encoded against the previous version when smaller
+    * (checkpointed every interval) — see [[manifestText]].
     */
   private[graft] def publishLines(spark: SparkSession, root: String,
       next: Long, lines: Seq[String], op: String,
-      meta: TableMeta): Long = {
+      meta: TableMeta): Long =
+    commitPoint(spark, root, next, op, meta)((fs, manifest) =>
+      CommitProtocol.publishFile(fs, manifest,
+        manifestText(spark, root, next, meta, lines).getBytes("UTF-8"))
+    )(maybeCheckpointParquet(spark, root, next, lines))
+
+  /** THE commit point: one atomic once-only publish of version `next`
+    * (`publish` returns false when a concurrent writer published it
+    * first — fail loudly, leave the winner's snapshot intact), then, only
+    * on a win: cache invalidation, the `postCommit` hook, and the
+    * conf-gated feed catch-up. Every manifest publish routes through here.
+    */
+  private def commitPoint(spark: SparkSession, root: String, next: Long,
+      op: String, meta: TableMeta)(publish: (FileSystem, Path) => Boolean)(
+      postCommit: => Unit): Long = {
     val (fs, rootPath) = fsOf(spark, root)
-    val manifest = new Path(rootPath, manifestName(next))
-    val won = CommitProtocol.publishFile(fs, manifest,
-      manifestText(spark, root, next, meta, lines).getBytes("UTF-8"))
-    if (!won)
+    if (!publish(fs, new Path(rootPath, manifestName(next))))
       throw new ConcurrentCommitException(
         s"$op: version $next already committed by a concurrent writer; " +
-          "re-read the table and retry (staged sidecars are unreferenced " +
-          "garbage for vacuum)")
-    PartsCache.invalidate(s"${rootPath.toString}#$next"); HeaderCache.invalidate(s"${rootPath.toString}#$next")
-    maybeCheckpointParquet(spark, root, next, lines)
+          "re-read the table and retry (staged files and sidecars are " +
+          "unreferenced garbage for vacuum)")
+    val key = s"${rootPath.toString}#$next"
+    PartsCache.invalidate(key); HeaderCache.invalidate(key)
+    postCommit
     maybeAutoCdf(spark, root, meta)
     next
   }
@@ -609,31 +623,6 @@ object SnapshotManifest {
     fs.listStatus(dvDir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => s"data/$dvdName/${s.getPath.getName}").head
-  }
-
-  /** Atomically publish version `next` = `lines` (already rendered, DV
-    * tags included) + fresh data files for `appendDf` — the MoR publish
-    * path (masked lines + appended post-images/inserts in one manifest).
-    */
-  private[graft] def publishWithAppend(spark: SparkSession, root: String,
-      next: Long, lines: Seq[String], appendDf: DataFrame,
-      statsCols: Seq[String], op: String,
-      meta: TableMeta): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
-    val (dataDir, appendLines) =
-      writeDataFiles(spark, fs, rootPath, next, appendDf, statsCols, meta)
-    val manifest = new Path(rootPath, manifestName(next))
-    val won = CommitProtocol.publishFile(fs, manifest,
-      manifestText(spark, root, next, meta, lines ++ appendLines)
-        .getBytes("UTF-8"))
-    if (!won)
-      throw new ConcurrentCommitException(
-        s"$op: version $next already committed by a concurrent writer; " +
-          s"re-read the table and retry; staged data left at $dataDir")
-    PartsCache.invalidate(s"${rootPath.toString}#$next"); HeaderCache.invalidate(s"${rootPath.toString}#$next")
-    maybeCheckpointParquet(spark, root, next, lines ++ appendLines)
-    maybeAutoCdf(spark, root, meta)
-    next
   }
 
   // ───────────────────────── churn-bounded commit path ──────────────────
@@ -737,20 +726,11 @@ object SnapshotManifest {
     */
   private def publishEditsDelta(spark: SparkSession, root: String,
       next: Long, edits: BodyEdits, op: String, meta: TableMeta): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
     val text = headerFor(next, meta) +
       (s"base=${next - 1}" +: edits.ops).mkString("", "\n", "\n")
-    val won = CommitProtocol.publishFile(fs, new Path(rootPath, manifestName(next)),
-      text.getBytes("UTF-8"))
-    if (!won)
-      throw new ConcurrentCommitException(
-        s"$op: version $next already committed by a concurrent writer; " +
-          "re-read the table and retry (staged sidecars are unreferenced " +
-          "garbage for vacuum)")
-    PartsCache.invalidate(s"${rootPath.toString}#$next"); HeaderCache.invalidate(s"${rootPath.toString}#$next")
-    editsPublishes.incrementAndGet()
-    maybeAutoCdf(spark, root, meta)
-    next
+    commitPoint(spark, root, next, op, meta)((fs, manifest) =>
+      CommitProtocol.publishFile(fs, manifest, text.getBytes("UTF-8"))
+    )(editsPublishes.incrementAndGet())
   }
 
   /** Publish version `next` as a FULL manifest STREAMED from the composed
@@ -763,35 +743,28 @@ object SnapshotManifest {
     */
   private def publishEditsFullStreaming(spark: SparkSession, root: String,
       next: Long, pinned: DataFrame, op: String, meta: TableMeta): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     var n = 0L
     val lineIt = pinned.select("line").as[String].toLocalIterator.asScala
       .map { l => n += 1; (l + "\n").getBytes("UTF-8") }
     val it = Iterator.single(headerFor(next, meta).getBytes("UTF-8")) ++ lineIt
-    val won = CommitProtocol.publishFileStream(fs,
-      new Path(rootPath, manifestName(next)), it)
-    if (!won)
-      throw new ConcurrentCommitException(
-        s"$op: version $next already committed by a concurrent writer; " +
-          "re-read the table and retry (staged sidecars are unreferenced " +
-          "garbage for vacuum)")
-    PartsCache.invalidate(s"${rootPath.toString}#$next"); HeaderCache.invalidate(s"${rootPath.toString}#$next")
-    editsPublishes.incrementAndGet()
-    // post-commit hooks — NonFatal-guarded like [[maybeCheckpointParquet]]:
-    // the manifest is durable, nothing here may fail the verb
-    try {
-      if (checkpointInterval(spark) > 1 &&
-          n >= parquetCheckpointMinLines(spark))
-        writeCheckpointParquetFrame(spark, root, next, pinned)
-    } catch { case scala.util.control.NonFatal(e) =>
-      graft.core.Logging.logger().warn(
-        s"parquet checkpoint hook for version $next of $root failed " +
-          s"(the manifest is already durable): ${e.getMessage}")
+    commitPoint(spark, root, next, op, meta)((fs, manifest) =>
+      CommitProtocol.publishFileStream(fs, manifest, it)
+    ) {
+      editsPublishes.incrementAndGet()
+      // NonFatal-guarded like [[maybeCheckpointParquet]]: the manifest is
+      // durable, nothing here may fail the verb
+      try {
+        if (checkpointInterval(spark) > 1 &&
+            n >= parquetCheckpointMinLines(spark))
+          writeCheckpointParquetFrame(spark, root, next, pinned)
+      } catch { case scala.util.control.NonFatal(e) =>
+        graft.core.Logging.logger().warn(
+          s"parquet checkpoint hook for version $next of $root failed " +
+            s"(the manifest is already durable): ${e.getMessage}")
+      }
     }
-    maybeAutoCdf(spark, root, meta)
-    next
   }
 
   /** Publish `next` from churn-sized `edits` against the base body
@@ -2304,31 +2277,6 @@ object SnapshotManifest {
     }
   }
 
-  /** [[deleteWhereMoR]] / [[updateWhereMoR]] with the bounded lost-race
-    * retry of the other DML twins: every attempt re-reads the current
-    * version, so a retry masks rows in the table as the winner left it.
-    */
-  def deleteWhereMoRWithRetry(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis),
-      maxDvPositions: Long = DefaultMaxDvPositions): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      deleteWhereMoR(spark, root, predicate, maxDvPositions))
-
-  def updateWhereMoRWithRetry(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column],
-      statsCols: Seq[String] = Nil, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis),
-      maxDvPositions: Long = DefaultMaxDvPositions): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      updateWhereMoR(spark, root, predicate, assignments, statsCols,
-        maxDvPositions))
-
   /** Materialize every outstanding deletion vector as a copy-on-write
     * rewrite of just the DV'd files — the maintenance verb that ends the
     * read-side anti-join ([[deleteWhereMoR]]'s fold step, Delta's PURGE).
@@ -2534,40 +2482,6 @@ object SnapshotManifest {
   def colocatedMerge(spark: SparkSession, root: String, version: Long): Boolean =
     manifestMetaOnly(spark, root, version).colocatedMerge
 
-  def setColocatedMergeWithRetry(spark: SparkSession, root: String,
-      on: Boolean, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(setColocatedMerge(spark, root, on))
-
-  /** [[setPrimaryKey]] / [[setBloomCols]] / [[analyzeTable]] with the
-    * bounded lost-race retry of the other metadata twins — each attempt
-    * re-reads the current version, so a retry declares/retrofits on top
-    * of whatever the racing writer committed.
-    */
-  def setPrimaryKeyWithRetry(spark: SparkSession, root: String,
-      pk: Seq[String], maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(setPrimaryKey(spark, root, pk))
-
-  def setBloomColsWithRetry(spark: SparkSession, root: String,
-      cols: Seq[String], maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(setBloomCols(spark, root, cols))
-
-  def analyzeTableWithRetry(spark: SparkSession, root: String,
-      statsCols: Seq[String], force: Boolean = false, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      analyzeTable(spark, root, statsCols, force))
-
   /** Declare (or clear) the table's bloom-indexed columns — a
     * metadata-only property publish, [[addColumns]]'s sibling. Files
     * written AFTER this carry parquet-native bloom filters for `cols`
@@ -2653,34 +2567,6 @@ object SnapshotManifest {
     publishLines(spark, root, v + 1, body, op, next)
   }
 
-  def setPropertiesWithRetry(spark: SparkSession, root: String,
-      bloomCols: Option[Seq[String]] = None,
-      pk: Option[Seq[String]] = None,
-      partitionCols: Option[Seq[String]] = None, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      setProperties(spark, root, bloomCols, pk, partitionCols))
-
-  def setPartitionColumnsWithRetry(spark: SparkSession, root: String,
-      cols: Seq[String], maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(setPartitionColumns(spark, root, cols))
-
-  /** RESTORE TO VERSION (Delta's RESTORE, on this engine's manifest): make
-    * `toVersion`'s content current again by publishing a NEW version whose
-    * body — paths, stats, deletion-vector refs — and recorded schema are
-    * `toVersion`'s, verbatim. Pure metadata: no data file is read or
-    * written, the same cost at any table size; the undo for a bad DML,
-    * compaction, or merge. History is preserved (the bad versions stay
-    * time-travelable until [[vacuum]]), the restored manifest makes the
-    * old files reachable again for vacuum's sweep, and
-    * [[changesBetween]](bad, restored) emits exactly the inverse feed.
-    * Restoring a vacuumed version fails loudly ([[hasVersion]] probes).
-    */
   /** One retained version's audit row: publish instant (the manifest's
     * write-once mtime, the same clock [[versionAsOf]] travels by), body
     * size, and how many entries carry a live deletion-vector sidecar.
@@ -2711,6 +2597,17 @@ object SnapshotManifest {
     }
   }
 
+  /** RESTORE TO VERSION (Delta's RESTORE, on this engine's manifest): make
+    * `toVersion`'s content current again by publishing a NEW version whose
+    * body — paths, stats, deletion-vector refs — and recorded schema are
+    * `toVersion`'s, verbatim. Pure metadata: no data file is read or
+    * written, the same cost at any table size; the undo for a bad DML,
+    * compaction, or merge. History is preserved (the bad versions stay
+    * time-travelable until [[vacuum]]), the restored manifest makes the
+    * old files reachable again for vacuum's sweep, and
+    * [[changesBetween]](bad, restored) emits exactly the inverse feed.
+    * Restoring a vacuumed version fails loudly ([[hasVersion]] probes).
+    */
   def restoreVersion(spark: SparkSession, root: String, toVersion: Long): Long = {
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"restoreVersion: no committed snapshot under $root"))
@@ -2721,29 +2618,6 @@ object SnapshotManifest {
     val (body, meta) = manifestParts(spark, root, toVersion)
     publishLines(spark, root, v + 1, body, "restoreVersion", meta)
   }
-
-  /** [[restoreVersion]] with the bounded lost-race retry: each attempt
-    * re-reads the current version, so a retry restores ON TOP of whatever
-    * the racing writer committed (last-restore-wins, like any DML).
-    */
-  def restoreVersionWithRetry(spark: SparkSession, root: String,
-      toVersion: Long, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(restoreVersion(spark, root, toVersion))
-
-  /** [[addColumns]] with the bounded lost-race retry of the DML twins:
-    * each attempt re-reads the current schema, so a retry widens the
-    * table as the winning writer left it (and fails loudly if the winner
-    * already added a same-named column).
-    */
-  def addColumnsWithRetry(spark: SparkSession, root: String,
-      newCols: Seq[StructField], maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(addColumns(spark, root, newCols))
 
   /** SHALLOW CLONE (Delta's CLONE, on this engine's manifest): bootstrap
     * `dstRoot` as a NEW table whose version-0 body references `srcRoot`'s
@@ -2830,7 +2704,7 @@ object SnapshotManifest {
     *     rows a serial re-run would have processed.
     *
     * Anything unprovable rethrows [[ConcurrentCommitException]] for the
-    * caller's full re-run (the `*WithRetry` wrappers) — correctness never
+    * caller's full re-run ([[retryOnConflict]]) — correctness never
     * depends on the fast path.
     */
   private def publishRebased(spark: SparkSession, root: String, op: String,
@@ -3085,41 +2959,11 @@ object SnapshotManifest {
       resolved, emptySchema = Some(schema))
   }
 
-  /** Stage `df` into a fresh uniquely-nonced data dir for version `next`,
-    * collect optional per-file stats, and atomically publish the manifest
-    * (`keptLines` verbatim + the new file lines) — the ONE publish path
-    * [[commit]], [[deleteWhere]], and [[updateWhere]] all go through.
-    */
   /** Write `df` into a fresh uniquely-nonced data dir for version `next`
     * and return (dir, manifest lines incl. optional stats) — the shared
     * staging step under [[stageAndPublish]] and [[updateWhereMoR]]'s
     * post-image append. Nothing is visible until a manifest references it.
     */
-  /** Engine-internal WRITER session per caller session: identical to the
-    * caller (same SparkContext, same shared state/cache, same builder
-    * options) except `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`
-    * is set ONCE at creation. Data-file writes run through it so the
-    * INT64-micros encoding is session-scoped instead of a set/restore
-    * mutation of the CALLER's conf — concurrent commit threads
-    * (MultiWriterFuzzSpec runs 2-4) could race one thread's restore-to-INT96
-    * against another's write-job planning, and a concurrent caller-facing
-    * write could pick up TIMESTAMP_MICROS and change externally-visible
-    * bytes. Cached weakly so one clone serves a session's lifetime.
-    */
-  private val writerSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]()
-  private def internalWriterSession(spark: SparkSession): SparkSession =
-    writerSessions.synchronized {
-      val cached = writerSessions.get(spark)
-      if (cached != null) cached
-      else {
-        val s = spark.newSession()
-        s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        writerSessions.put(spark, s)
-        s
-      }
-    }
-
   private def writeDataFiles(spark: SparkSession, fs: FileSystem, rootPath: Path,
       next: Long, df: DataFrame, statsCols: Seq[String],
       meta: TableMeta = TableMeta.empty): (Path, Seq[String]) = {
@@ -3197,12 +3041,18 @@ object SnapshotManifest {
     // files are only ever read back by this engine, where both encodings
     // read identically under the UTC session; result dumps and other
     // caller-facing writes keep the session default. The encoding is
-    // SESSION-scoped (the plan is re-rooted into a cached writer session
-    // that has the conf set permanently), not a set/write/restore on the
-    // caller's conf — see [[internalWriterSession]] for the race that rules
-    // the mutation out.
+    // scoped to a PER-WRITE clone of the caller's session, never a
+    // set/write/restore on the caller's conf: concurrent commit threads
+    // could race one thread's restore against another's write planning,
+    // and a concurrent caller-facing write could pick up the engine's
+    // encoding. The clone carries the caller's RUNTIME conf as of this
+    // write (case sensitivity, shuffle partitions, time zone, ...).
+    val writerSession =
+      org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(spark)
+    writerSession.conf.set("spark.sql.parquet.outputTimestampType",
+      "TIMESTAMP_MICROS")
     val toWrite = org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(
-      internalWriterSession(spark), toWrite0.queryExecution.analyzed)
+      writerSession, toWrite0.queryExecution.analyzed)
     // parquet-NATIVE bloom filters per row group for the table's
     // bloom-indexed columns: the codegen'd scan path prunes row groups on
     // pushed equality predicates with zero reader changes here (parquet-mr
@@ -3277,6 +3127,11 @@ object SnapshotManifest {
     (dataDir, lines)
   }
 
+  /** Stage `df` into a fresh uniquely-nonced data dir for version `next`,
+    * collect optional per-file stats, and atomically publish the manifest
+    * (`keptLines` verbatim + the new file lines) — the staged publish
+    * [[commit]] and the keyed rewrites ([[publishVersion]]) go through.
+    */
   private def stageAndPublish(spark: SparkSession, fs: FileSystem, rootPath: Path,
       next: Long, df: DataFrame, statsCols: Seq[String], keptLines: Seq[String],
       op: String, requireFiles: Boolean,
@@ -3285,24 +3140,7 @@ object SnapshotManifest {
       statsCols, meta)
     if (requireFiles)
       require(newLines.nonEmpty, s"$op: write produced no parquet files under $dataDir")
-    val manifest = new Path(rootPath, manifestName(next))
-    // THE commit point: one atomic file publish. False = a concurrent
-    // writer committed this version first — fail loudly, leave their
-    // snapshot intact, and surface our staged data for inspection.
-    // Content is delta-encoded against the previous version when smaller
-    // (checkpointed every interval) — see [[manifestText]].
-    val won = CommitProtocol.publishFile(fs, manifest,
-      manifestText(spark, rootPath.toString, next, meta, keptLines ++ newLines)
-        .getBytes("UTF-8"))
-    if (!won)
-      throw new ConcurrentCommitException(
-        s"$op: version $next already committed by a concurrent writer; " +
-          s"re-read the table and retry; staged data left at $dataDir " +
-          "(unreferenced — vacuum sweeps it)")
-    PartsCache.invalidate(s"${rootPath.toString}#$next"); HeaderCache.invalidate(s"${rootPath.toString}#$next")
-    maybeCheckpointParquet(spark, rootPath.toString, next, keptLines ++ newLines)
-    maybeAutoCdf(spark, rootPath.toString, meta)
-    next
+    publishLines(spark, rootPath.toString, next, keptLines ++ newLines, op, meta)
   }
 
   /** Time travel: read an explicit committed snapshot `version`. Every
@@ -3672,26 +3510,33 @@ object SnapshotManifest {
     } finally pinned.unpersist(false)
   }
 
-  /** [[commit]] wrapped in a bounded lost-race retry loop — the first-class
-    * form of the "loser must re-read and retry" contract for the common
-    * multi-writer warehouse (many pipelines committing into one table).
+  /** Bounded lost-race retry for ANY commit verb — the first-class form of
+    * the "loser must re-read and retry" contract for the common
+    * multi-writer warehouse (many pipelines committing into one table):
+    * `retryOnConflict()(deleteWhere(spark, root, pred))`.
     *
-    * `df` is BY-NAME and re-evaluated on every attempt: derive it from
-    * `SnapshotManifest.read(spark, root)` (or any read of current table
-    * state) inside the expression, so a retry recomputes the frame against
-    * the table AS THE WINNER LEFT IT — replaying a frame captured before
-    * the race would silently discard the winner's changes (the lost-update
-    * hazard the class doc describes). Only [[ConcurrentCommitException]] is
-    * retried; a broken frame (analysis error, bad data) propagates on the
-    * first attempt. Each lost attempt's staged dir is inert garbage for
-    * [[vacuum]], exactly as with a hand-rolled loop.
+    * `verb` is BY-NAME and re-evaluated on every attempt. Every verb of
+    * this object re-reads the CURRENT version internally, so a retry
+    * applies to the table AS THE WINNER LEFT IT; a [[commit]] frame must
+    * likewise be derived inside the expression (from
+    * `SnapshotManifest.read(spark, root)` or any read of current state) —
+    * replaying a frame captured before the race would silently discard
+    * the winner's changes (the lost-update hazard the class doc
+    * describes). Only [[ConcurrentCommitException]] is retried; a broken
+    * frame (analysis error, bad data) propagates on the first attempt.
+    * Each lost attempt's staged dir is inert garbage for [[vacuum]]. The
+    * DML verbs already absorb FILE-DISJOINT races without redoing data
+    * work ([[publishRebased]]); this is the fallback for genuine conflicts
+    * — overlapping files, unprovable predicate disjointness, metadata
+    * changes. Appends use [[appendRowsWithRetry]] instead, which re-uses
+    * its staged files across attempts.
     */
-  def commitWithRetry(spark: SparkSession, root: String, df: => DataFrame,
-      statsCols: Seq[String] = Nil, maxAttempts: Int = 5,
+  def retryOnConflict[A](maxAttempts: Int = 5,
       backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
+      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis))(
+      verb: => A): A =
     Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(commit(spark, root, df, statsCols))
+      maxAttempts, backoff, sleep)(verb)
 
   /** APPEND `df`'s rows to the current snapshot: existing manifest lines
     * carry over verbatim (paths, stats, DV refs — nothing is read or
@@ -3700,7 +3545,7 @@ object SnapshotManifest {
     * incremental loads: cost is O(new rows), independent of table size.
     * Appends are the one DML whose intent commutes with ANY concurrent
     * commit, which is what makes [[appendRowsWithRetry]]'s staged-reuse
-    * rebase sound.
+    * rebase sound. A lost race throws [[ConcurrentCommitException]].
     *
     * Strict schema contract: the append frame must carry exactly the
     * table's columns (any order, case-insensitive) with identical types —
@@ -3709,34 +3554,13 @@ object SnapshotManifest {
     * first, then append.
     */
   def appendRows(spark: SparkSession, root: String, df: DataFrame,
-      statsCols: Seq[String] = Nil): Long = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"appendRows: no committed snapshot under $root — create the " +
-          "table with commit(...) first"))
-    // CHURN-BOUNDED fast path: when a checkpoint twin anchors the body
-    // (the 10⁵-10⁶-file regime), the append publishes as edits — header
-    // metadata + staged lines only; the existing file list never
-    // materializes on the driver. Fresh staged names are UUID-nonced, so
-    // like the driver path this verb carries no uniqueness job (the
-    // retry wrappers, which RE-publish staged lines onto a winner, do).
-    bodyLinesFrame(spark, root, v) match {
-      case Some(frame) =>
-        val (fs, rootPath) = fsOf(spark, root)
-        val meta = manifestMetaOnly(spark, root, v)
-        requireAppendSchemaCompatible(
-          frameSchema(spark, root, meta, frame), df, "appendRows")
-        val (_, lines) = writeDataFiles(spark, fs, rootPath, v + 1, df,
-          statsCols, meta)
-        publishEdits(spark, root, v + 1, frame, BodyEdits(Nil, lines),
-          "appendRows", meta)
-      case None =>
-        val (body, meta) = manifestParts(spark, root, v)
-        requireAppendCompatible(spark, root, body, meta, df, "appendRows")
-        publishWithAppend(spark, root, v + 1, body, df, statsCols,
-          "appendRows", meta)
-    }
-  }
+      statsCols: Seq[String] = Nil): Long =
+    // fresh staged names are UUID-nonced, so a single attempt carries no
+    // basename-uniqueness gate (on the churn-bounded path that gate is a
+    // Spark job); the retrying verbs, which RE-publish staged lines onto
+    // a winner, do
+    appendLoop(spark, root, df, statsCols, "appendRows", None,
+      gateBasenames = false, maxAttempts = 1, _ => Duration.Zero, _ => ())
 
   /** Manifest-wide basename uniqueness, the invariant stats and
     * deletion-vector identity key on — [[rebaseLoop]] gates every
@@ -3773,65 +3597,9 @@ object SnapshotManifest {
   def appendRowsWithRetry(spark: SparkSession, root: String, df: DataFrame,
       statsCols: Seq[String] = Nil, maxAttempts: Int = 5,
       backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
-    var staged: Option[(TableMeta, Seq[String])] = None
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep) {
-      val v = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"appendRowsWithRetry: no committed snapshot under $root — " +
-            "create the table with commit(...) first"))
-      // resolve per attempt: driver body, or the CHURN-BOUNDED frame when
-      // a checkpoint twin anchors it (the body never materializes; the
-      // uniqueness gate runs as a broadcast join over the frame). Meta is
-      // header-only either way, and the driver body binds ONCE per
-      // attempt — the r9 one-manifestParts-per-verb discipline (each call
-      // revalidates via getFileStatus: extra HEAD round-trips on an
-      // object store).
-      val fast = bodyLinesFrame(spark, root, v)
-      val meta = manifestMetaOnly(spark, root, v)
-      val slowBody = if (fast.isEmpty) manifestParts(spark, root, v)._1 else Nil
-      fast match {
-        case Some(frame) =>
-          requireAppendSchemaCompatible(
-            frameSchema(spark, root, meta, frame), df, "appendRowsWithRetry")
-        case None =>
-          requireAppendCompatible(spark, root,
-            slowBody, meta, df, "appendRowsWithRetry")
-      }
-      val lines = staged match {
-        case Some((m, l)) if m.schema == meta.schema &&
-            m.partitionCols == meta.partitionCols &&
-            m.bloomCols == meta.bloomCols => l
-        case prior =>
-          prior.foreach { _ =>
-            graft.core.Logging.logger().warn(
-              "appendRowsWithRetry: table metadata changed under a lost " +
-                s"race on $root — re-staging the append (the prior staged " +
-                "dir is unreferenced garbage for vacuum)")
-          }
-          val (_, l) = writeDataFiles(spark, fs, rootPath, v + 1, df,
-            statsCols, meta)
-          staged = Some((meta, l))
-          l
-      }
-      fast match {
-        case Some(frame) =>
-          val edits = BodyEdits(Nil, lines)
-          require(editsBasenamesUnique(spark, frame, edits),
-            s"appendRowsWithRetry: basename collision in composed manifest " +
-              s"body for $root — stats and deletion-vector identity key on " +
-              "basename; refusing to publish a body that would cross-assign them")
-          publishEdits(spark, root, v + 1, frame, edits,
-            "appendRowsWithRetry", meta)
-        case None =>
-          requireUniqueBasenames("appendRowsWithRetry", root, slowBody ++ lines)
-          publishLines(spark, root, v + 1, slowBody ++ lines,
-            "appendRowsWithRetry", meta)
-      }
-    }
-  }
+      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
+    appendLoop(spark, root, df, statsCols, "appendRowsWithRetry", None,
+      gateBasenames = true, maxAttempts, backoff, sleep)
 
   /** The highest transaction version recorded for `appId`, if any — the
     * read half of [[appendRowsIdempotent]]'s exactly-once contract (an
@@ -3867,72 +3635,100 @@ object SnapshotManifest {
       sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long = {
     require(appId.nonEmpty && !appId.exists(c => c == '\n' || c == '\r'),
       "appendRowsIdempotent: appId must be non-empty and newline-free")
+    appendLoop(spark, root, df, statsCols, "appendRowsIdempotent",
+      Some(appId -> txnVersion), gateBasenames = true, maxAttempts, backoff,
+      sleep)
+  }
+
+  /** The ONE append loop behind [[appendRows]], [[appendRowsWithRetry]]
+    * and [[appendRowsIdempotent]]. Per attempt: resolve the body, gate the
+    * schema, stage `df` (ONCE across attempts — a lost race re-publishes
+    * the same staged lines unless the winner changed the staged layout's
+    * metadata), gate basenames (`gateBasenames`), publish. `txn` records
+    * `(appId, txnVersion)` in the header and SKIPS the append when the
+    * recorded version already covers it. A lost race retries through
+    * [[retryOnConflict]] — `maxAttempts = 1` is the plain single attempt.
+    */
+  private def appendLoop(spark: SparkSession, root: String, df: DataFrame,
+      statsCols: Seq[String], op: String, txn: Option[(String, Long)],
+      gateBasenames: Boolean, maxAttempts: Int,
+      backoff: Int => FiniteDuration,
+      sleep: FiniteDuration => Unit): Long = {
     val (fs, rootPath) = fsOf(spark, root)
     var staged: Option[(TableMeta, Seq[String])] = None
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep) {
+    retryOnConflict(maxAttempts, backoff, sleep) {
       val v = currentVersion(spark, root).getOrElse(
         throw new IllegalStateException(
-          s"appendRowsIdempotent: no committed snapshot under $root — " +
-            "create the table with commit(...) first"))
+          s"$op: no committed snapshot under $root — create the table " +
+            "with commit(...) first"))
       // the txn skip-check needs only the HEADER — and runs FIRST: the
       // exactly-once REPLAY (an orchestrator re-running a landed batch)
-      // is this verb's hot case, and it must not pay the frame probe
-      // (chain walk + twin stamp IO) or a body parse just to discover it
-      // should skip
-      val meta = manifestMetaOnly(spark, root, v)
-      if (meta.txns.get(appId).exists(_ >= txnVersion)) {
-        graft.core.Logging.logger().info(
-          s"appendRowsIdempotent: ($appId, $txnVersion) already committed " +
-            s"on $root (recorded ${meta.txns(appId)}) — skipping" +
-            staged.fold("")(_ => " (staged files from the lost attempt " +
-              "are unreferenced vacuum garbage)"))
-        v
-      } else {
-        // non-skip: churn-bounded frame when a twin anchors the body,
-        // driver body bound ONCE per attempt otherwise
-        val fast = bodyLinesFrame(spark, root, v)
-        val slowBody = if (fast.isEmpty) manifestParts(spark, root, v)._1 else Nil
-        fast match {
-          case Some(frame) =>
-            requireAppendSchemaCompatible(
-              frameSchema(spark, root, meta, frame), df, "appendRowsIdempotent")
-          case None =>
-            requireAppendCompatible(spark, root,
-              slowBody, meta, df, "appendRowsIdempotent")
-        }
-        val lines = staged match {
-          case Some((m, l)) if m.schema == meta.schema &&
-              m.partitionCols == meta.partitionCols &&
-              m.bloomCols == meta.bloomCols => l
-          case prior =>
-            prior.foreach { _ =>
-              graft.core.Logging.logger().warn(
-                "appendRowsIdempotent: table metadata changed under a lost " +
-                  s"race on $root — re-staging the append")
-            }
-            val (_, l) = writeDataFiles(spark, fs, rootPath, v + 1, df,
-              statsCols, meta)
-            staged = Some((meta, l))
-            l
-        }
-        val outMeta = meta.copy(txns = meta.txns + (appId -> txnVersion))
-        fast match {
-          case Some(frame) =>
-            val edits = BodyEdits(Nil, lines)
-            require(editsBasenamesUnique(spark, frame, edits),
-              s"appendRowsIdempotent: basename collision in composed " +
-                s"manifest body for $root — stats and deletion-vector " +
-                "identity key on basename; refusing to publish a body that " +
-                "would cross-assign them")
-            publishEdits(spark, root, v + 1, frame, edits,
-              "appendRowsIdempotent", outMeta)
-          case None =>
-            requireUniqueBasenames("appendRowsIdempotent", root,
-              slowBody ++ lines)
-            publishLines(spark, root, v + 1, slowBody ++ lines,
-              "appendRowsIdempotent", outMeta)
-        }
+      // is the idempotent verb's hot case, and it must not pay the frame
+      // probe (chain walk + twin stamp IO) or a body parse just to
+      // discover it should skip
+      lazy val header = manifestMetaOnly(spark, root, v)
+      val landed = txn.filter { case (appId, tv) =>
+        header.txns.get(appId).exists(_ >= tv)
+      }
+      landed match {
+        case Some((appId, tv)) =>
+          graft.core.Logging.logger().info(
+            s"$op: ($appId, $tv) already committed on $root (recorded " +
+              s"${header.txns(appId)}) — skipping" +
+              staged.fold("")(_ => " (staged files from the lost attempt " +
+                "are unreferenced vacuum garbage)"))
+          v
+        case None =>
+          // CHURN-BOUNDED fast path: when a checkpoint twin anchors the
+          // body (the 10⁵-10⁶-file regime), the append publishes as edits
+          // — header metadata + staged lines only; the existing file list
+          // never materializes on the driver. Otherwise the driver body
+          // binds ONCE per attempt (each manifestParts call revalidates
+          // via getFileStatus: extra HEAD round-trips on an object store).
+          val fast = bodyLinesFrame(spark, root, v)
+          val (slowBody, meta) =
+            if (fast.isDefined) (Nil, header) else manifestParts(spark, root, v)
+          fast match {
+            case Some(frame) => requireAppendSchemaCompatible(
+              frameSchema(spark, root, meta, frame), df, op)
+            case None =>
+              requireAppendCompatible(spark, root, slowBody, meta, df, op)
+          }
+          val lines = staged match {
+            case Some((m, l)) if m.schema == meta.schema &&
+                m.partitionCols == meta.partitionCols &&
+                m.bloomCols == meta.bloomCols => l
+            case prior =>
+              prior.foreach { _ =>
+                graft.core.Logging.logger().warn(
+                  s"$op: table metadata changed under a lost race on " +
+                    s"$root — re-staging the append (the prior staged dir " +
+                    "is unreferenced garbage for vacuum)")
+              }
+              val (_, l) = writeDataFiles(spark, fs, rootPath, v + 1, df,
+                statsCols, meta)
+              staged = Some((meta, l))
+              l
+          }
+          val outMeta = txn.fold(meta) { case (appId, tv) =>
+            meta.copy(txns = meta.txns + (appId -> tv))
+          }
+          fast match {
+            case Some(frame) =>
+              val edits = BodyEdits(Nil, lines)
+              // the distributed gate is a broadcast semi-join over the
+              // body frame — the driver never holds the body's names
+              require(!gateBasenames || editsBasenamesUnique(spark, frame, edits),
+                s"$op: basename collision in composed manifest body for " +
+                  s"$root — stats and deletion-vector identity key on " +
+                  "basename; refusing to publish a body that would " +
+                  "cross-assign them")
+              publishEdits(spark, root, v + 1, frame, edits, op, outMeta)
+            case None =>
+              if (gateBasenames)
+                requireUniqueBasenames(op, root, slowBody ++ lines)
+              publishLines(spark, root, v + 1, slowBody ++ lines, op, outMeta)
+          }
       }
     }
   }
@@ -3976,40 +3772,6 @@ object SnapshotManifest {
             s"${s.fieldNames.mkString(", ")} — declare it first with addColumns"))
     }
   }
-
-  /** [[deleteWhere]] with the same bounded lost-race retry as
-    * [[commitWithRetry]]. Safe to re-run as-is: every attempt re-reads the
-    * CURRENT version internally, so a retry deletes from the table as the
-    * winning writer left it, and `predicate` describes the rows to delete
-    * regardless of which snapshot they sit in.
-    *
-    * NOTE the verb itself already absorbs FILE-DISJOINT races without
-    * redoing any data work ([[publishRebased]]); this wrapper is the
-    * fallback for genuine conflicts — overlapping files, unprovable
-    * predicate disjointness, metadata changes.
-    */
-  def deleteWhereWithRetry(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column, statsCols: Seq[String] = Nil,
-      maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      deleteWhere(spark, root, predicate, statsCols))
-
-  /** [[updateWhere]] with the same bounded lost-race retry as
-    * [[commitWithRetry]]; re-running re-reads the current version, so
-    * assignments evaluate against the winner's rows.
-    */
-  def updateWhereWithRetry(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column],
-      statsCols: Seq[String] = Nil, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Long =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      updateWhere(spark, root, predicate, assignments, statsCols))
 
   /** Compact the current snapshot into ~`targetBytes` files as a NEW
     * snapshot — same maintenance op as [[PartitionedSink.compact]], but the
@@ -4151,39 +3913,6 @@ object SnapshotManifest {
     publishMaintenanceRebased(spark, root, op, baseVersion, baseBody,
       meta.copy(schema = None), meta, newLines, emptySchema)
   }
-
-  /** [[compactSmallFiles]] with the bounded lost-race retry of the other
-    * maintenance/DML entry points — the fallback for the conflicts the
-    * partial-maintenance rebase refuses (a concurrent DML rewrite of a
-    * candidate file). Safe to replay wholesale: every attempt re-reads
-    * the current version's candidate set.
-    */
-  def compactSmallFilesWithRetry(spark: SparkSession, root: String,
-      smallBytes: Long = 16L * 1024 * 1024,
-      targetBytes: Long = 128L * 1024 * 1024,
-      minSmallFiles: Int = 2,
-      statsCols: Option[Seq[String]] = None, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Option[Long] =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      compactSmallFiles(spark, root, smallBytes, targetBytes, minSmallFiles,
-        statsCols))
-
-  /** [[compactSnapshot]] with the bounded lost-race retry of the other
-    * maintenance/DML entry points. Safe to replay wholesale: every attempt
-    * re-reads the CURRENT version (file list, byte total, no-op check, and
-    * inherited stats columns alike), so a retry compacts the table as the
-    * winning writer left it.
-    */
-  def compactSnapshotWithRetry(spark: SparkSession, root: String,
-      targetBytes: Long = 128L * 1024 * 1024,
-      statsCols: Option[Seq[String]] = None, maxAttempts: Int = 5,
-      backoff: Int => FiniteDuration = Retry.linearBackoff(1.second),
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis)): Option[Long] =
-    Retry.retryWhen(_.isInstanceOf[ConcurrentCommitException],
-      maxAttempts, backoff, sleep)(
-      compactSnapshot(spark, root, targetBytes, statsCols))
 
   /** Delete manifests superseded by the newest `keep` snapshots, then sweep
     * every data dir no surviving manifest references — superseded snapshots,

@@ -94,41 +94,34 @@ final class SnapshotSource extends TableProvider with RelationProvider
         // sink move
         val data = org.apache.spark.sql.graftbridge.ColumnBridge
           .streamingBatchAsBatch(streamData)
-        def land(attempt: Int): Unit =
-          try {
-            if (SnapshotManifest.currentVersion(spark, root).isEmpty) {
-              // bootstrap an empty v0: the ledger the idempotent append
-              // records its (appId, batchId) txn on. Schema-only — no job
-              // runs against the batch frame here (it executes exactly
-              // once, inside the append below). The declared table
-              // properties land with it.
-              SnapshotManifest.commit(spark, root,
-                spark.createDataFrame(
-                  new java.util.ArrayList[Row](), data.schema), statsCols,
-                bloomCols)
-              // partitioning and pk declare as metadata-only publishes on
-              // the empty v0 (the zero-file frame has nothing to cluster);
-              // the first appended batch clusters under the declaration
-              if (partitionCols.nonEmpty) {
-                SnapshotManifest.setPartitionColumnsWithRetry(spark, root,
-                  partitionCols)
-                ()
-              }
-              if (primaryKey.nonEmpty) {
-                SnapshotManifest.setPrimaryKeyWithRetry(spark, root,
-                  primaryKey)
-                ()
-              }
-            }
-            SnapshotManifest.appendRowsIdempotent(spark, root, data, appId,
-              batchId, statsCols)
-            ()
-          } catch {
-            case e: ConcurrentCommitException =>
-              if (attempt >= 5) throw e
-              land(attempt + 1)
+        // a racer bootstrapping the same root surfaces as a lost race:
+        // re-run the whole landing (bootstrap check included)
+        SnapshotManifest.retryOnConflict(maxAttempts = 6, sleep = _ => ()) {
+          if (SnapshotManifest.currentVersion(spark, root).isEmpty) {
+            // bootstrap an empty v0: the ledger the idempotent append
+            // records its (appId, batchId) txn on. Schema-only — no job
+            // runs against the batch frame here (it executes exactly
+            // once, inside the append below). The declared table
+            // properties land with it.
+            SnapshotManifest.commit(spark, root,
+              spark.createDataFrame(
+                new java.util.ArrayList[Row](), data.schema), statsCols,
+              bloomCols)
+            // partitioning and pk declare as metadata-only publishes on
+            // the empty v0 (the zero-file frame has nothing to cluster);
+            // the first appended batch clusters under the declaration
+            if (partitionCols.nonEmpty)
+              SnapshotManifest.retryOnConflict()(
+                SnapshotManifest.setPartitionColumns(spark, root,
+                  partitionCols))
+            if (primaryKey.nonEmpty)
+              SnapshotManifest.retryOnConflict()(
+                SnapshotManifest.setPrimaryKey(spark, root, primaryKey))
           }
-        land(0)
+          SnapshotManifest.appendRowsIdempotent(spark, root, data, appId,
+            batchId, statsCols)
+        }
+        ()
       }
       override def toString: String = s"graft-snapshot sink [$root]"
     }
@@ -219,9 +212,9 @@ final class SnapshotSource extends TableProvider with RelationProvider
     // ConcurrentCommitException — RE-DISPATCH through the mode check so
     // ErrorIfExists/Ignore keep their semantics under concurrency instead
     // of best-effort "whoever sampled first wins"
-    def dispatch(attempt: Int): Unit = {
+    SnapshotManifest.retryOnConflict(maxAttempts = 6, sleep = _ => ()) {
       val exists = SnapshotManifest.currentVersion(spark, root).isDefined
-      try mode match {
+      mode match {
         case SaveMode.ErrorIfExists if exists =>
           throw new IllegalStateException(
             s"graft-snapshot: a committed snapshot already exists under " +
@@ -234,13 +227,8 @@ final class SnapshotSource extends TableProvider with RelationProvider
           SnapshotManifest.commit(spark, root, data, statsCols,
             cols("bloomCols"), cols("partitionCols"))
           ()
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= 5) throw e
-          dispatch(attempt + 1)
       }
     }
-    dispatch(0)
     // nominal return (Spark's save command discards it): schema-only, so
     // writing never pays a relation build on the way out
     new BaseRelation {

@@ -174,18 +174,10 @@ final class SnapshotTable(
     require(versionAsOf.isEmpty && !readChangeFeed,
       s"graft-snapshot: TRUNCATE targets the CURRENT table, not a " +
         "time-traveled or change-feed handle")
-    def go(attempt: Int): Unit =
-      try {
-        SnapshotManifest.commit(spark, root,
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), schema()))
-        ()
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= 5) throw e
-          go(attempt + 1)
-      }
-    go(0)
+    SnapshotManifest.retryOnConflict(maxAttempts = 6, sleep = _ => ())(
+      SnapshotManifest.commit(spark, root,
+        spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema())))
     true
   }
 }
@@ -595,47 +587,43 @@ private[graft] final class SnapshotWriteBuilder(
           def declarePk(): Unit = {
             val pk = cols("primaryKey")
             if (pk.nonEmpty) {
-              SnapshotManifest.setPrimaryKeyWithRetry(spark, root, pk); ()
+              SnapshotManifest.retryOnConflict()(
+                SnapshotManifest.setPrimaryKey(spark, root, pk))
+              ()
             }
           }
-          def dispatch(attempt: Int): Unit =
-            try {
-              val exists = SnapshotManifest.currentVersion(spark, root).isDefined
-              val bloom = manifestBackedCols("bloomCols", exists)
-              val parts = manifestBackedCols("partitionCols", exists)
-              overwrite match {
-                case Some(Some(filters)) if exists =>
-                  // replaceWhere: ONE commit of survivors ∪ new rows
-                  val cond = filters.map(SnapshotSource.filterToColumn)
-                    .reduce(_ && _)
-                  val survivors = SnapshotManifest.read(spark, root)
-                    .filter(!org.apache.spark.sql.functions.coalesce(
-                      cond, org.apache.spark.sql.functions.lit(false)))
-                  SnapshotManifest.commit(spark, root,
-                    survivors.unionByName(data), statsCols, bloom, parts)
-                  ()
-                case Some(_) | None if !exists => // bootstrap
-                  SnapshotManifest.commit(spark, root, data, statsCols,
-                    bloom, parts)
-                  declarePk()
-                case Some(_) => // truncate-overwrite (or overwriteFlag)
-                  SnapshotManifest.commit(spark, root, data, statsCols,
-                    bloom, parts)
-                  ()
-                case None if overwriteFlag =>
-                  SnapshotManifest.commit(spark, root, data, statsCols,
-                    bloom, parts)
-                  ()
-                case None =>
-                  SnapshotManifest.appendRows(spark, root, data, statsCols)
-                  ()
-              }
-            } catch {
-              case e: ConcurrentCommitException =>
-                if (attempt >= 5) throw e
-                dispatch(attempt + 1)
+          SnapshotManifest.retryOnConflict(maxAttempts = 6, sleep = _ => ()) {
+            val exists = SnapshotManifest.currentVersion(spark, root).isDefined
+            val bloom = manifestBackedCols("bloomCols", exists)
+            val parts = manifestBackedCols("partitionCols", exists)
+            overwrite match {
+              case Some(Some(filters)) if exists =>
+                // replaceWhere: ONE commit of survivors ∪ new rows
+                val cond = filters.map(SnapshotSource.filterToColumn)
+                  .reduce(_ && _)
+                val survivors = SnapshotManifest.read(spark, root)
+                  .filter(!org.apache.spark.sql.functions.coalesce(
+                    cond, org.apache.spark.sql.functions.lit(false)))
+                SnapshotManifest.commit(spark, root,
+                  survivors.unionByName(data), statsCols, bloom, parts)
+                ()
+              case Some(_) | None if !exists => // bootstrap
+                SnapshotManifest.commit(spark, root, data, statsCols,
+                  bloom, parts)
+                declarePk()
+              case Some(_) => // truncate-overwrite (or overwriteFlag)
+                SnapshotManifest.commit(spark, root, data, statsCols,
+                  bloom, parts)
+                ()
+              case None if overwriteFlag =>
+                SnapshotManifest.commit(spark, root, data, statsCols,
+                  bloom, parts)
+                ()
+              case None =>
+                SnapshotManifest.appendRows(spark, root, data, statsCols)
+                ()
             }
-          dispatch(0)
+          }
         }
       }
   }

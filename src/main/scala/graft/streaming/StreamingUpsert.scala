@@ -36,7 +36,8 @@ import graft.sources.SnapshotManifest
   * determinism requirement: staged columns must be deterministic (no
   * `current_timestamp()` in the stream — stamp event time upstream).
   *
-  * Concurrent writers: each batch lands via [[Upsert.mergeWhereWithRetry]],
+  * Concurrent writers: each batch lands via [[Upsert.mergeWhere]] under
+  * [[SnapshotManifest.retryOnConflict]],
   * so this stream can share a table with other committers (other streams on
   * DISJOINT key ranges, maintenance compaction) and lost manifest races
   * retry against the winner's snapshot. Two streams upserting the SAME key
@@ -88,12 +89,14 @@ object StreamingUpsert {
         // maintenance cadence); mor = false rewrites the admitted files
         // copy-on-write per batch
         val freshest = graft.operators.AlertGate.latestPerKeyAgg(batch, pkCols, tsCol)
-        if (mor)
-          Upsert.mergeWhereMoRWithRetry(spark, tableRoot, freshest, pkCols,
-            statsCols, maxKeySetSize)
-        else
-          Upsert.mergeWhereWithRetry(spark, tableRoot, freshest, pkCols,
-            statsCols, maxKeySetSize)
+        SnapshotManifest.retryOnConflict() {
+          if (mor)
+            Upsert.mergeWhereMoR(spark, tableRoot, freshest, pkCols,
+              statsCols, maxKeySetSize)
+          else
+            Upsert.mergeWhere(spark, tableRoot, freshest, pkCols,
+              statsCols, maxKeySetSize)
+        }
         ()
       }
       .option("checkpointLocation", checkpointDir)

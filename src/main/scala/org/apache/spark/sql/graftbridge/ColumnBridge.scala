@@ -24,6 +24,16 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A fresh session that COPIES `spark`'s state as of now — runtime SQL
+    * conf included, which `newSession()` drops (it starts from the
+    * builder-time confs). `cloneSession()` is `private[sql]`. The engine
+    * writes its internal data files through a per-write clone so a
+    * write-only conf never touches the caller's session.
+    */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** Re-wrap a streaming micro-batch frame as a BATCH frame (the isStreaming
     * flag forbids `df.write`): the standard V1-sink move — the batch's
     * executed plan becomes a plain RDD-backed frame. `private[sql]`

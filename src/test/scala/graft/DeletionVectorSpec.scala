@@ -190,9 +190,11 @@ class DeletionVectorSpec extends SparkSpec {
 
   test("MoR update then MoR delete compose; retry twins land on a quiet table") {
     val root = newTable()
-    SnapshotManifest.updateWhereMoRWithRetry(spark, root, $"id" === 5L,
-      Map("v" -> lit(-5L)), Seq("id"))
-    SnapshotManifest.deleteWhereMoRWithRetry(spark, root, $"id" === 5L)
+    SnapshotManifest.retryOnConflict()(
+      SnapshotManifest.updateWhereMoR(spark, root, $"id" === 5L,
+        Map("v" -> lit(-5L)), Seq("id")))
+    SnapshotManifest.retryOnConflict()(
+      SnapshotManifest.deleteWhereMoR(spark, root, $"id" === 5L))
     val got = SnapshotManifest.read(spark, root)
     assert(got.filter($"id" === 5L).count() == 0L)
     assert(got.count() == 199L)
@@ -263,12 +265,11 @@ class DeletionVectorSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     val root = newTable()
     val done = Await.result(Future.sequence(Seq(
-      Future(SnapshotManifest.deleteWhereMoRWithRetry(spark, root,
-        $"id".between(10, 12),
-        backoff = _ => Duration.Zero, sleep = _ => ())),
-      Future(SnapshotManifest.updateWhereWithRetry(spark, root,
-        $"id".between(50, 52), Map("v" -> lit(-1L)), Seq("id"),
-        backoff = _ => Duration.Zero, sleep = _ => ())))), 120.seconds)
+      Future(SnapshotManifest.retryOnConflict(sleep = _ => ())(
+        SnapshotManifest.deleteWhereMoR(spark, root, $"id".between(10, 12)))),
+      Future(SnapshotManifest.retryOnConflict(sleep = _ => ())(
+        SnapshotManifest.updateWhere(spark, root, $"id".between(50, 52),
+          Map("v" -> lit(-1L)), Seq("id")))))), 120.seconds)
     assert(done.toSet == Set(1L, 2L), done.toString)
     val got = SnapshotManifest.read(spark, root)
     assert(got.filter($"id".between(10, 12)).count() == 0L)

@@ -9,7 +9,7 @@ import graft.sources.{ConcurrentCommitException, ManifestStats, SnapshotManifest
   * against a FILE-DISJOINT, PREDICATE-DISJOINT winner re-publishes the
   * already-staged rewrite (one manifest round-trip — the multi-writer
   * per-partition-backfill shape at 100 TB), and anything unprovable falls
-  * back loudly to the full re-run the `*WithRetry` wrappers own. The
+  * back loudly to the full re-run `SnapshotManifest.retryOnConflict` owns. The
   * deterministic cases drive the publish seam directly: commit a winner
   * BETWEEN the verb's read and its publish, then assert rebase vs refusal.
   */
@@ -330,8 +330,8 @@ class DmlRebaseSpec extends SparkSpec {
       def racer(pred: org.apache.spark.sql.Column) = pool.submit(new Callable[Long] {
         def call(): Long = {
           start.await()
-          SnapshotManifest.deleteWhereWithRetry(spark, root, pred, Seq("id"),
-            backoff = _ => scala.concurrent.duration.Duration.Zero, sleep = _ => ())
+          SnapshotManifest.retryOnConflict(sleep = _ => ())(
+            SnapshotManifest.deleteWhere(spark, root, pred, Seq("id")))
         }
       })
       // both predicates hit the SAME [0,19] file — rebase is unsound for

@@ -19,21 +19,17 @@ class FooterStatsSpec extends SparkSpec {
     * `outputTimestampType=TIMESTAMP_MICROS` set). An INT96 write — the
     * caller-facing session default — carries no footer stats at all, so a
     * zoo written with the session default would test the fallback, not the
-    * claim path. (Before the writer-session fix this suite only passed in
-    * full-suite order because a concurrent-writer race LEAKED the MICROS
-    * conf into the shared session; in a fresh JVM it failed.)
+    * claim path. The write runs through a DEDICATED session with the conf
+    * set, never a set/restore on the shared session (a concurrent suite
+    * could observe the mutation).
     */
   private def writeAndPaths(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Seq[org.apache.hadoop.fs.Path]) = {
     val dir = Files.createTempDirectory("footerstats").toString + "/d"
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try df.write.parquet(dir)
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val writer = spark.newSession()
+    writer.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    org.apache.spark.sql.graftbridge.ColumnBridge
+      .ofRows(writer, df.queryExecution.analyzed).write.parquet(dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val paths = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq

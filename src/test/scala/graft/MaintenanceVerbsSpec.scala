@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotManifest
+import graft.sources.{ConcurrentCommitException, SnapshotManifest}
 
 /** Timestamp time travel and the vacuum dry-run. */
 class MaintenanceVerbsSpec extends SparkSpec {
@@ -69,15 +69,38 @@ class MaintenanceVerbsSpec extends SparkSpec {
     assert(SnapshotManifest.currentVersion(spark, root).contains(5L))
   }
 
-  test("metadata retry twins compose like the DML twins (shared Retry core)") {
+  test("retryOnConflict: only lost races retry, to maxAttempts; verbs compose") {
+    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def retry[A](verb: => A): A = SnapshotManifest.retryOnConflict(
+      maxAttempts = 3, sleep = d => sleeps += d.toSeconds)(verb)
+    // a lost race re-runs the verb up to maxAttempts, then rethrows the
+    // last loss; the default backoff is linear in whole seconds
+    var attempts = 0
+    intercept[ConcurrentCommitException] {
+      retry { attempts += 1; throw new ConcurrentCommitException("lost") }
+    }
+    assert(attempts == 3 && sleeps == Seq(1L, 2L))
+    // a loss that a later attempt wins returns the winner's value
+    attempts = 0; sleeps.clear()
+    assert(retry {
+      attempts += 1
+      if (attempts < 2) throw new ConcurrentCommitException("lost")
+      attempts
+    } == 2 && sleeps == Seq(1L))
+    // any other failure propagates on the FIRST attempt, with no sleep
+    attempts = 0; sleeps.clear()
+    intercept[IllegalStateException] {
+      retry { attempts += 1; throw new IllegalStateException("broken frame") }
+    }
+    assert(attempts == 1 && sleeps.isEmpty)
+    // the metadata verbs compose under it end to end
     val root = newRoot()
     SnapshotManifest.commit(spark, root,
       (1L to 20L).map(i => (i, i * 1.5)).toDF("id", "x"))
-    // the twins wrap the same retryWhen(ConcurrentCommitException) core
-    // the racer-proven DML twins use; this pins the wiring end to end
-    SnapshotManifest.setPrimaryKeyWithRetry(spark, root, Seq("id"))
-    SnapshotManifest.setBloomColsWithRetry(spark, root, Seq("id"))
-    SnapshotManifest.analyzeTableWithRetry(spark, root, Seq("id", "x"))
+    retry(SnapshotManifest.setPrimaryKey(spark, root, Seq("id")))
+    retry(SnapshotManifest.setBloomCols(spark, root, Seq("id")))
+    retry(SnapshotManifest.analyzeTable(spark, root, Seq("id", "x")))
+    assert(sleeps.isEmpty)
     val v = SnapshotManifest.currentVersion(spark, root).get
     assert(SnapshotManifest.primaryKey(spark, root, v) == Seq("id"))
     assert(SnapshotManifest.bloomCols(spark, root, v) == Seq("id"))

@@ -16,7 +16,7 @@ import graft.operators.Upsert
   * reach (a rebase adopting the wrong winner body, masks composing
   * non-serializably, a maintenance rebase dropping a racer's rows).
   *
-  * Verbs run through their `*WithRetry` wrappers (zero-sleep backoff), so
+  * Verbs run under `retryOnConflict` (zero-sleep backoff), so
   * every lost race re-runs to success — a verb that cannot land after its
   * retries is itself a failure. Every 10 rounds a SERIAL vacuum(keep=1)
   * reclaims history (exercising the chain guard over whatever delta
@@ -35,28 +35,29 @@ class MultiWriterFuzzSpec extends SparkSpec {
     def apply(m: Model): Model
   }
   private val noSleep: scala.concurrent.duration.FiniteDuration => Unit = _ => ()
+  private def retried[A](verb: => A): A =
+    SnapshotManifest.retryOnConflict(maxAttempts = 10, sleep = noSleep)(verb)
 
   private case class CowDelete(lo: Long, hi: Long) extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.deleteWhereWithRetry(spark, root,
-        col("id").between(lo, hi), Seq("id"), maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.deleteWhere(spark, root,
+        col("id").between(lo, hi), Seq("id")))
       ()
     }
     def apply(m: Model): Model = m.filterNot { case (k, _) => k >= lo && k <= hi }
   }
   private case class MorDelete(lo: Long, hi: Long) extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.deleteWhereMoRWithRetry(spark, root,
-        col("id").between(lo, hi), maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.deleteWhereMoR(spark, root,
+        col("id").between(lo, hi)))
       ()
     }
     def apply(m: Model): Model = m.filterNot { case (k, _) => k >= lo && k <= hi }
   }
   private case class CowUpdate(lo: Long, hi: Long, d: Long) extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.updateWhereWithRetry(spark, root,
-        col("id").between(lo, hi), Map("v" -> (col("v") + d)), Seq("id"),
-        maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.updateWhere(spark, root,
+        col("id").between(lo, hi), Map("v" -> (col("v") + d)), Seq("id")))
       ()
     }
     def apply(m: Model): Model =
@@ -64,9 +65,8 @@ class MultiWriterFuzzSpec extends SparkSpec {
   }
   private case class MorUpdate(lo: Long, hi: Long, d: Long) extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.updateWhereMoRWithRetry(spark, root,
-        col("id").between(lo, hi), Map("v" -> (col("v") + d)), Seq("id"),
-        maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.updateWhereMoR(spark, root,
+        col("id").between(lo, hi), Map("v" -> (col("v") + d)), Seq("id")))
       ()
     }
     def apply(m: Model): Model =
@@ -74,16 +74,16 @@ class MultiWriterFuzzSpec extends SparkSpec {
   }
   private case class CowMerge(rows: Seq[(Long, Long)]) extends Verb {
     def run(root: String): Unit = {
-      Upsert.mergeWhereWithRetry(spark, root, rows.toDF("id", "v"), Seq("id"),
-        Seq("id"), maxAttempts = 10, sleep = noSleep)
+      retried(Upsert.mergeWhere(spark, root, rows.toDF("id", "v"), Seq("id"),
+        Seq("id")))
       ()
     }
     def apply(m: Model): Model = m ++ rows
   }
   private case class MorMerge(rows: Seq[(Long, Long)]) extends Verb {
     def run(root: String): Unit = {
-      Upsert.mergeWhereMoRWithRetry(spark, root, rows.toDF("id", "v"), Seq("id"),
-        Seq("id"), maxAttempts = 10, sleep = noSleep)
+      retried(Upsert.mergeWhereMoR(spark, root, rows.toDF("id", "v"), Seq("id"),
+        Seq("id")))
       ()
     }
     def apply(m: Model): Model = m ++ rows
@@ -100,16 +100,14 @@ class MultiWriterFuzzSpec extends SparkSpec {
   }
   private case object Compact extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.compactSnapshotWithRetry(spark, root,
-        maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.compactSnapshot(spark, root))
       ()
     }
     def apply(m: Model): Model = m
   }
   private case object CompactSmall extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.compactSmallFilesWithRetry(spark, root,
-        maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.compactSmallFiles(spark, root))
       ()
     }
     def apply(m: Model): Model = m

@@ -334,4 +334,82 @@ class PartitionedTableSpec extends SparkSpec {
     assert(SnapshotManifest.read(spark, root)
       .filter(col("id") >= 1000L).count() == 20)
   }
+
+  /** Force a lost race deterministically: `append` runs on its own thread
+    * over a 1-row frame whose evaluation parks its task until a winner (a
+    * metadata-only publish) has taken the version the append read.
+    * Returns the append's outcome and how often the frame was evaluated.
+    */
+  private def raceAppend(root: String)(
+      append: org.apache.spark.sql.DataFrame => Long): (scala.util.Try[Long], Int) = {
+    import PartitionedTableSpec.hook
+    hook.reset()
+    val parked = udf { (id: Long) =>
+      if (hook.evals.incrementAndGet() == 1) {
+        hook.staging.countDown()
+        hook.winnerDone.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      id
+    }.asNondeterministic()
+    val frame = spark.range(5000, 5001).toDF("id")
+      .select(parked(col("id")).as("id"), lit("en").as("lang"),
+        lit(1L).as("score"))
+    val out = scala.concurrent.Future(scala.util.Try(append(frame)))(
+      scala.concurrent.ExecutionContext.global)
+    assert(hook.staging.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "the append never started staging")
+    SnapshotManifest.setColocatedMerge(spark, root, on = true) // the winner
+    hook.winnerDone.countDown()
+    (scala.concurrent.Await.result(out, scala.concurrent.duration.Duration(
+      120, java.util.concurrent.TimeUnit.SECONDS)), hook.evals.get)
+  }
+
+  test("appendRows: a forced lost race throws, nothing of the append lands") {
+    val root = newRoot()
+    SnapshotManifest.commit(spark, root, sample(30), Seq("score"))
+    val (res, evals) = raceAppend(root)(
+      SnapshotManifest.appendRows(spark, root, _, Seq("score")))
+    assert(res.failed.toOption.exists(
+      _.isInstanceOf[graft.sources.ConcurrentCommitException]), res.toString)
+    assert(evals == 1)
+    // the winner's version stands; the loser's staged dir is unreferenced
+    assert(SnapshotManifest.currentVersion(spark, root).contains(1L))
+    assert(SnapshotManifest.colocatedMerge(spark, root, 1L))
+    assert(SnapshotManifest.read(spark, root).count() == 30)
+  }
+
+  test("appendRowsWithRetry: a forced lost race stages exactly once") {
+    val root = newRoot()
+    SnapshotManifest.commit(spark, root, sample(30), Seq("score"))
+    val dirs0 = dataDirs(root)
+    val (res, evals) = raceAppend(root)(
+      SnapshotManifest.appendRowsWithRetry(spark, root, _, Seq("score"),
+        sleep = _ => ()))
+    assert(res.toOption.contains(2L), res.toString)
+    // the frame ran once and one staging dir exists: the retry
+    // re-published the staged files onto the winner's version
+    assert(evals == 1, s"expected one staging evaluation, got $evals")
+    assert((dataDirs(root) -- dirs0).size == 1)
+    assert(SnapshotManifest.colocatedMerge(spark, root, 2L))
+    assert(SnapshotManifest.read(spark, root).count() == 31)
+    assert(SnapshotManifest.read(spark, root).filter(col("id") === 5000L)
+      .count() == 1)
+  }
+}
+
+object PartitionedTableSpec {
+  /** Driver-global latches for [[PartitionedTableSpec.raceAppend]]'s parked
+    * UDF (local mode: tasks run in this JVM, and a UDF closure cannot
+    * carry latches by value).
+    */
+  object hook {
+    @volatile var staging = new java.util.concurrent.CountDownLatch(1)
+    @volatile var winnerDone = new java.util.concurrent.CountDownLatch(1)
+    val evals = new java.util.concurrent.atomic.AtomicInteger(0)
+    def reset(): Unit = {
+      staging = new java.util.concurrent.CountDownLatch(1)
+      winnerDone = new java.util.concurrent.CountDownLatch(1)
+      evals.set(0)
+    }
+  }
 }

@@ -34,6 +34,8 @@ class RaceCrashFuzzSpec extends SparkSpec {
 
   private type Model = Map[Long, Long]
   private val noSleep: scala.concurrent.duration.FiniteDuration => Unit = _ => ()
+  private def retried[A](verb: => A): A =
+    SnapshotManifest.retryOnConflict(maxAttempts = 10, sleep = noSleep)(verb)
 
   private sealed trait Verb {
     def run(root: String): Unit
@@ -41,25 +43,24 @@ class RaceCrashFuzzSpec extends SparkSpec {
   }
   private case class CowDelete(lo: Long, hi: Long) extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.deleteWhereWithRetry(spark, root,
-        col("id").between(lo, hi), Seq("id"), maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.deleteWhere(spark, root,
+        col("id").between(lo, hi), Seq("id")))
       ()
     }
     def apply(m: Model): Model = m.filterNot { case (k, _) => k >= lo && k <= hi }
   }
   private case class MorDelete(lo: Long, hi: Long) extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.deleteWhereMoRWithRetry(spark, root,
-        col("id").between(lo, hi), maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.deleteWhereMoR(spark, root,
+        col("id").between(lo, hi)))
       ()
     }
     def apply(m: Model): Model = m.filterNot { case (k, _) => k >= lo && k <= hi }
   }
   private case class CowUpdate(lo: Long, hi: Long, d: Long) extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.updateWhereWithRetry(spark, root,
-        col("id").between(lo, hi), Map("v" -> (col("v") + d)), Seq("id"),
-        maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.updateWhere(spark, root,
+        col("id").between(lo, hi), Map("v" -> (col("v") + d)), Seq("id")))
       ()
     }
     def apply(m: Model): Model =
@@ -67,16 +68,16 @@ class RaceCrashFuzzSpec extends SparkSpec {
   }
   private case class CowMerge(rows: Seq[(Long, Long)]) extends Verb {
     def run(root: String): Unit = {
-      Upsert.mergeWhereWithRetry(spark, root, rows.toDF("id", "v"), Seq("id"),
-        Seq("id"), maxAttempts = 10, sleep = noSleep)
+      retried(Upsert.mergeWhere(spark, root, rows.toDF("id", "v"), Seq("id"),
+        Seq("id")))
       ()
     }
     def apply(m: Model): Model = m ++ rows
   }
   private case class MorMerge(rows: Seq[(Long, Long)]) extends Verb {
     def run(root: String): Unit = {
-      Upsert.mergeWhereMoRWithRetry(spark, root, rows.toDF("id", "v"), Seq("id"),
-        Seq("id"), maxAttempts = 10, sleep = noSleep)
+      retried(Upsert.mergeWhereMoR(spark, root, rows.toDF("id", "v"), Seq("id"),
+        Seq("id")))
       ()
     }
     def apply(m: Model): Model = m ++ rows
@@ -93,16 +94,14 @@ class RaceCrashFuzzSpec extends SparkSpec {
   }
   private case object Compact extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.compactSnapshotWithRetry(spark, root,
-        maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.compactSnapshot(spark, root))
       ()
     }
     def apply(m: Model): Model = m
   }
   private case object CompactSmall extends Verb {
     def run(root: String): Unit = {
-      SnapshotManifest.compactSmallFilesWithRetry(spark, root,
-        maxAttempts = 10, sleep = noSleep)
+      retried(SnapshotManifest.compactSmallFiles(spark, root))
       ()
     }
     def apply(m: Model): Model = m

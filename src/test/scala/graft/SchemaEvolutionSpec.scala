@@ -214,10 +214,12 @@ class SchemaEvolutionSpec extends SparkSpec {
     val root = newTable()
     // two writers race DIFFERENT columns: each retries past the lost race
     // and re-widens the winner's schema — both columns land
-    val fa = Future(SnapshotManifest.addColumnsWithRetry(spark, root,
-      Seq(StructField("nota", StringType, nullable = true))))
-    val fb = Future(SnapshotManifest.addColumnsWithRetry(spark, root,
-      Seq(StructField("notb", LongType, nullable = true))))
+    val fa = Future(SnapshotManifest.retryOnConflict()(
+      SnapshotManifest.addColumns(spark, root,
+        Seq(StructField("nota", StringType, nullable = true)))))
+    val fb = Future(SnapshotManifest.retryOnConflict()(
+      SnapshotManifest.addColumns(spark, root,
+        Seq(StructField("notb", LongType, nullable = true)))))
     Await.result(fa, 2.minutes); Await.result(fb, 2.minutes)
     val cols = SnapshotManifest.read(spark, root).columns.toSeq
     assert(cols.contains("nota") && cols.contains("notb"), cols.toString)
@@ -225,8 +227,9 @@ class SchemaEvolutionSpec extends SparkSpec {
     // a retry that finds the winner already added the SAME name fails
     // loudly (require), never double-declares
     intercept[IllegalArgumentException] {
-      SnapshotManifest.addColumnsWithRetry(spark, root,
-        Seq(StructField("nota", StringType, nullable = true)))
+      SnapshotManifest.retryOnConflict()(
+        SnapshotManifest.addColumns(spark, root,
+          Seq(StructField("nota", StringType, nullable = true))))
     }
   }
 
@@ -238,7 +241,8 @@ class SchemaEvolutionSpec extends SparkSpec {
       .filter(_.change == "added")
       .map(c => StructField(c.column, incoming(c.column).dataType, nullable = true))
     assert(adds.map(_.name) == Seq("note"))
-    SnapshotManifest.addColumnsWithRetry(spark, root, adds)
+    SnapshotManifest.retryOnConflict()(
+      SnapshotManifest.addColumns(spark, root, adds))
     assert(SnapshotManifest.read(spark, root).columns.contains("note"))
   }
 

@@ -206,7 +206,7 @@ class SnapshotManifestSpec extends SparkSpec {
     assert(SnapshotManifest.read(spark, root).count() == 2)
   }
 
-  test("commitWithRetry: two deliberate racers both land, serialized, loser recomputes") {
+  test("retryOnConflict(commit): two deliberate racers land serialized") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -219,14 +219,17 @@ class SnapshotManifestSpec extends SparkSpec {
     // loses, retries, and recomputes against the winner's snapshot.
     val firstAttempts = new java.util.concurrent.CountDownLatch(2)
     val evals = new java.util.concurrent.atomic.AtomicInteger(0)
-    def appendRow(tag: Long) = SnapshotManifest.commitWithRetry(spark, root, {
+    def appendRow(tag: Long) = SnapshotManifest.retryOnConflict(
+        maxAttempts = 5, backoff = _ => Duration.Zero, sleep = _ => ()) {
       evals.incrementAndGet()
       val out = SnapshotManifest.read(spark, root)
         .unionByName(Seq((tag, s"w$tag")).toDF("id", "x"))
       firstAttempts.countDown()
       firstAttempts.await(30, java.util.concurrent.TimeUnit.SECONDS)
-      out
-    }, maxAttempts = 5, backoff = _ => Duration.Zero, sleep = _ => ())
+      // the frame is derived INSIDE the retried expression, so a loser
+      // recomputes it against the winner's snapshot
+      SnapshotManifest.commit(spark, root, out)
+    }
     val done = Await.result(Future.sequence(Seq(
       Future(appendRow(1L)), Future(appendRow(2L)))), 120.seconds)
     // serialized: versions 1 and 2, one per writer, in either order
@@ -239,15 +242,18 @@ class SnapshotManifestSpec extends SparkSpec {
     assert(evals.get == 3, s"expected 3 frame evaluations, got ${evals.get}")
   }
 
-  test("commitWithRetry: non-race failures propagate immediately, no retry") {
+  test("retryOnConflict(commit): non-race failures propagate at once, no retry") {
     val root = newRoot()
     val evals = new java.util.concurrent.atomic.AtomicInteger(0)
     val e = intercept[IllegalStateException] {
-      SnapshotManifest.commitWithRetry(spark, root, {
-        evals.incrementAndGet()
-        throw new IllegalStateException("broken frame")
-      }, maxAttempts = 5, backoff = _ => scala.concurrent.duration.Duration.Zero,
-        sleep = _ => ())
+      SnapshotManifest.retryOnConflict(maxAttempts = 5,
+          backoff = _ => scala.concurrent.duration.Duration.Zero,
+          sleep = _ => ()) {
+        SnapshotManifest.commit(spark, root, {
+          evals.incrementAndGet()
+          throw new IllegalStateException("broken frame")
+        })
+      }
     }
     assert(e.getMessage == "broken frame" && evals.get == 1)
   }
@@ -263,12 +269,12 @@ class SnapshotManifestSpec extends SparkSpec {
     // launched together: each op re-reads the current version on entry, so
     // whichever loses the manifest race retries against the other's result
     val ops = Seq(
-      Future(SnapshotManifest.deleteWhereWithRetry(spark, root,
-        $"id".between(1, 5), Seq("id"),
-        backoff = _ => Duration.Zero, sleep = _ => ())),
-      Future(SnapshotManifest.updateWhereWithRetry(spark, root,
-        $"id".between(31, 40), Map("x" -> lit(-1.0)), Seq("id"),
-        backoff = _ => Duration.Zero, sleep = _ => ())))
+      Future(SnapshotManifest.retryOnConflict(sleep = _ => ())(
+        SnapshotManifest.deleteWhere(spark, root, $"id".between(1, 5),
+          Seq("id")))),
+      Future(SnapshotManifest.retryOnConflict(sleep = _ => ())(
+        SnapshotManifest.updateWhere(spark, root, $"id".between(31, 40),
+          Map("x" -> lit(-1.0)), Seq("id")))))
     Await.result(Future.sequence(ops), 120.seconds)
     val out = SnapshotManifest.read(spark, root).as[(Long, Double)].collect().toSet
     val expected = (6L to 40L).map(i => (i, if (i >= 31) -1.0 else i * 10.0)).toSet
@@ -498,7 +504,8 @@ class SnapshotManifestSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType, nullable = true)))
     val withNote = SnapshotManifest.currentVersion(spark, root).get
     SnapshotManifest.deleteWhere(spark, root, $"id" < 50L, Seq("id"))
-    SnapshotManifest.restoreVersionWithRetry(spark, root, withNote)
+    SnapshotManifest.retryOnConflict()(
+      SnapshotManifest.restoreVersion(spark, root, withNote))
     val restored = SnapshotManifest.read(spark, root)
     assert(restored.count() == 100L && restored.columns.contains("note"))
   }

@@ -642,7 +642,8 @@ class SnapshotSqlSpec extends SparkSpec {
       SnapshotManifest.commit(ext, root,
         ext.range(0, 100).toDF("id").withColumn("v", col("id") * 10L)
           .repartitionByRange(4, col("id")), Seq("id"))
-      SnapshotManifest.setPrimaryKeyWithRetry(ext, root, Seq("id"))
+      SnapshotManifest.retryOnConflict()(
+        SnapshotManifest.setPrimaryKey(ext, root, Seq("id")))
       ext.sql(s"CREATE TABLE snap_lc_t USING `graft-snapshot` LOCATION '$root'")
       try {
         // feed catch-up covers the bootstrap + pk declare commits
@@ -752,7 +753,8 @@ class SnapshotSqlSpec extends SparkSpec {
       SnapshotManifest.commit(ext, root,
         ext.range(0, 50).toDF("id").withColumn("v", col("id") * 10L),
         Seq("id"), Seq("id"))
-      SnapshotManifest.setPrimaryKeyWithRetry(ext, root, Seq("id"))
+      SnapshotManifest.retryOnConflict()(
+        SnapshotManifest.setPrimaryKey(ext, root, Seq("id")))
       ext.sql(s"CREATE TABLE snap_trunc_t USING `graft-snapshot` LOCATION '$root'")
       try {
         ext.sql("TRUNCATE TABLE snap_trunc_t")
@@ -778,7 +780,8 @@ class SnapshotSqlSpec extends SparkSpec {
       SnapshotManifest.commit(ext, root,
         ext.range(0, 30).toDF("id").withColumn("v", col("id")),
         Seq("id"), Seq("id"))
-      SnapshotManifest.setPrimaryKeyWithRetry(ext, root, Seq("id"))
+      SnapshotManifest.retryOnConflict()(
+        SnapshotManifest.setPrimaryKey(ext, root, Seq("id")))
       ext.sql(s"CREATE TABLE snap_show_t USING `graft-snapshot` LOCATION '$root'")
       try {
         val props = ext.sql("SHOW TBLPROPERTIES snap_show_t").collect()
@@ -788,7 +791,8 @@ class SnapshotSqlSpec extends SparkSpec {
         assert(props.get("primaryKey").contains("id"))
         // the other direction: a property CLEARED through the API must
         // stop being reported, even if DDL once declared it
-        SnapshotManifest.setBloomColsWithRetry(ext, root, Nil)
+        SnapshotManifest.retryOnConflict()(
+          SnapshotManifest.setBloomCols(ext, root, Nil))
         val cleared = ext.sql("SHOW TBLPROPERTIES snap_show_t").collect()
           .map(r => r.getString(0) -> r.getString(1)).toMap
         assert(!cleared.contains("bloomCols"),
@@ -850,13 +854,15 @@ class SnapshotSqlSpec extends SparkSpec {
         // the property is LATER changed through the API: the catalog's DDL
         // record is now stale — the next SQL INSERT must follow the
         // manifest's carry rule, not silently revert to the DDL value
-        SnapshotManifest.setBloomColsWithRetry(ext, root, Seq("v"))
+        SnapshotManifest.retryOnConflict()(
+          SnapshotManifest.setBloomCols(ext, root, Seq("v")))
         ext.sql("INSERT INTO snap_carry_t SELECT id, id * 10 FROM range(40, 80)")
         val v2 = SnapshotManifest.currentVersion(ext, root).get
         assert(SnapshotManifest.bloomCols(ext, root, v2) == Seq("v"),
           "an INSERT must not revert an API-declared property to stale DDL")
         // a cleared property stays cleared through SQL writes too
-        SnapshotManifest.setBloomColsWithRetry(ext, root, Nil)
+        SnapshotManifest.retryOnConflict()(
+          SnapshotManifest.setBloomCols(ext, root, Nil))
         ext.sql("INSERT INTO snap_carry_t SELECT id, id * 10 FROM range(80, 90)")
         val v4 = SnapshotManifest.currentVersion(ext, root).get
         assert(SnapshotManifest.bloomCols(ext, root, v4).isEmpty,

@@ -234,10 +234,10 @@ class UpsertSpec extends SparkSpec {
     // entry, so whichever loses the manifest race retries against the
     // winner's snapshot (MERGE is idempotent-by-key, so the replay is safe)
     val done = Await.result(Future.sequence(Seq(
-      Future(Upsert.mergeWhereWithRetry(spark, root, s1, Seq("id"), Seq("id"),
-        backoff = _ => Duration.Zero, sleep = _ => ())),
-      Future(Upsert.mergeWhereWithRetry(spark, root, s2, Seq("id"), Seq("id"),
-        backoff = _ => Duration.Zero, sleep = _ => ())))), 120.seconds)
+      Future(SnapshotManifest.retryOnConflict(sleep = _ => ())(
+        Upsert.mergeWhere(spark, root, s1, Seq("id"), Seq("id")))),
+      Future(SnapshotManifest.retryOnConflict(sleep = _ => ())(
+        Upsert.mergeWhere(spark, root, s2, Seq("id"), Seq("id")))))), 120.seconds)
     assert(done.toSet == Set(1L, 2L), done.toString)
     val got = SnapshotManifest.read(spark, root)
     assert(got.count() == 200L)
