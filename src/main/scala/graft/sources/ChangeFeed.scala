@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Materialized change-data feed for [[SnapshotManifest]] tables — the
@@ -24,11 +24,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * [[SnapshotManifest.changesBetween]]), and the write is the feed's own
   * size — a metadata-only commit materializes an empty marker.
   *
-  * Each materialization is one directory `c<from>-<to>`, staged under
-  * `_cdf_stage/` and published by an atomic directory rename, so a
-  * listing (or a file-stream trigger) sees a commit's feed completely or
-  * not at all; re-materializing an existing range is a no-op (idempotent
-  * catch-up). Same object-store caveat as [[CommitProtocol]]: on stores
+  * Each commit's feed is one directory `c<from>-<to>`, published by an
+  * atomic directory rename, so a listing (or a file-stream trigger) sees
+  * a commit's feed completely or not at all; re-materializing an existing
+  * range is a no-op (idempotent catch-up). A catch-up is ONE staged write
+  * under `_cdf_stage/`, whose per-commit directories publish in ascending
+  * order. Same object-store caveat as [[CommitProtocol]]: on stores
   * without atomic rename, substitute a conditional-put publish.
   */
 object ChangeFeed {
@@ -73,52 +74,69 @@ object ChangeFeed {
         s"adjacent retained version pair of $root (retained: " +
         s"${versions.mkString(", ")}) — the feed is per-commit; use " +
         "materializeNew for catch-up")
-    // adjacency in the RETAINED list is not enough after a table vacuum:
-    // (6,8) is adjacent once 7 is reclaimed, but if c6-7 is already
-    // materialized, publishing c6-8 beside it double-covers 6→7 and wedges
-    // coverage validation for every window (same guard as materializeNew)
-    val overlapping = materializedRanges(spark, root).filter { case (f, t) =>
-      !(f == fromVersion && t == toVersion) && f < toVersion && fromVersion < t }
-    require(overlapping.isEmpty,
-      s"ChangeFeed.materialize: ($fromVersion, $toVersion) overlaps " +
-        s"already-materialized range(s) ${overlapping.mkString(", ")} — a " +
-        "vacuum reclaimed a version inside existing coverage; these changes " +
-        "cannot be re-served as a step (vacuumFeed the stale ranges first " +
-        "if you intend a coarse re-materialization)")
-    materializeStep(spark, root, fromVersion, toVersion, pk)
+    val overlap = overlapping(materializedRanges(spark, root), fromVersion, toVersion)
+    require(overlap.isEmpty, s"ChangeFeed.materialize: ($fromVersion, " +
+      s"$toVersion) overlaps already-materialized range(s) ${overlap.mkString(", ")} — $Unservable")
+    materializeSteps(spark, root, Seq((fromVersion, toVersion)), pk).nonEmpty
   }
 
-  /** [[materialize]] after adjacency is already established — the shared
-    * step under the public verb and [[materializeNew]]'s catch-up, which
-    * derives its pairs from one version listing instead of re-listing
-    * per step (N+1 LIST round-trips on an object store otherwise).
+  /** Materialized ranges other than `(f, t)` that overlap its coverage.
+    * Retained adjacency is not enough after a table vacuum: (6,8) is
+    * adjacent once 7 is reclaimed, but publishing c6-8 beside c6-7
+    * double-covers 6→7 and wedges coverage validation for every window.
+    * A step in a genuine un-materialized GAP overlaps nothing.
     */
-  private def materializeStep(spark: SparkSession, root: String,
-      fromVersion: Long, toVersion: Long, pk: Seq[String]): Boolean = {
+  private def overlapping(done: Seq[(Long, Long)], f: Long, t: Long) =
+    done.filter { case (mf, mt) => !(mf == f && mt == t) && mf < t && f < mt }
+
+  private val Unservable = "a vacuum reclaimed a version inside existing " +
+    "coverage, so these changes cannot be served as a step (vacuumFeed the " +
+    "stale ranges first if you intend a coarse re-materialization)"
+
+  /** The write under [[materialize]] and [[materializeNew]]: skip the
+    * published steps, diff the rest in one plan per schema group
+    * ([[SnapshotManifest.changesByStep]]), stage each group in one write
+    * partitioned by a copy of `_commit_version`, then publish the steps'
+    * directories in ascending order — a crash leaves a published prefix
+    * that the next catch-up extends. A step without feed rows gets a copy
+    * of one schema-carrying empty part: its range must stay a readable
+    * parquet dir, and the file-stream source needs real files.
+    *
+    * @return the steps this call published (a lost race is fine — the
+    *         winner's feed is identical)
+    */
+  private def materializeSteps(spark: SparkSession, root: String,
+      steps: Seq[(Long, Long)], pk: Seq[String]): Seq[(Long, Long)] = {
     val (fs, rootPath) = SnapshotManifest.fsOf(spark, root)
-    val dest = new Path(rootPath, new Path("_cdf", dirName(fromVersion, toVersion)))
-    if (fs.exists(dest)) return false
-    val feed = SnapshotManifest.changesBetween(spark, root, fromVersion, toVersion, pk)
-      .withColumn("_commit_version", lit(toVersion))
+    def dest(f: Long, t: Long) = new Path(rootPath, new Path("_cdf", dirName(f, t)))
+    val pending = steps.filterNot { case (f, t) => fs.exists(dest(f, t)) }
+    if (pending.isEmpty) return Seq.empty
     val stage = new Path(rootPath,
       new Path("_cdf_stage", java.util.UUID.randomUUID.toString))
-    feed.write.parquet(stage.toString)
-    // an EMPTY feed (metadata-only commit, compaction) writes zero part
-    // files — plant one schema-carrying empty part so the range marker
-    // stays a readable parquet dir (a feed of only such markers must not
-    // fail schema inference; the file-stream source needs real files)
-    if (!fs.listStatus(stage).exists(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet")))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 1),
-        feed.schema).write.mode("append").parquet(stage.toString)
-    // atomic publish through the shared protocol — a lost race is fine,
-    // the winner's feed is identical
-    CommitProtocol.publishDir(fs, stage, dest)
+    def stepDir(t: Long) = new Path(stage, s"__step=$t")
+    SnapshotManifest.changesByStep(spark, root, pending, Some(pk)).zipWithIndex.foreach {
+      case ((tos, rows), i) =>
+        rows.withColumn("__step", col("_commit_version"))
+          .write.mode("append").partitionBy("__step").parquet(stage.toString)
+        val empty = tos.filterNot(t => fs.exists(stepDir(t)))
+        if (empty.nonEmpty) {
+          val marker = new Path(stage, s"_marker$i")
+          spark.createDataFrame(spark.sparkContext.parallelize(
+            Seq.empty[org.apache.spark.sql.Row], 1), rows.schema).write.parquet(marker.toString)
+          val part = fs.listStatus(marker).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+          empty.foreach(t => FileUtil.copy(fs, part, fs,
+            new Path(stepDir(t), part.getName), false, fs.getConf))
+        }
+    }
+    val published = pending.filter { case (f, t) =>
+      CommitProtocol.publishDir(fs, stepDir(t), dest(f, t)) }
+    fs.delete(stage, true)
+    published
   }
 
-  /** Catch the feed up to the table's current version: one
-    * [[materialize]] per not-yet-materialized commit boundary, preserving
+  /** Catch the feed up to the table's current version: one feed
+    * directory per not-yet-materialized commit boundary, all diffed in one
+    * plan and staged in one write ([[materializeSteps]]), preserving
     * every intermediate image (a coarse first→current jump would collapse
     * an insert-then-update into one insert — per-commit steps are what
     * make the feed a faithful event log). The natural call site is right
@@ -157,37 +175,20 @@ object ChangeFeed {
     }
     val doneRanges = materializedRanges(spark, root)
     val done = doneRanges.map(_._2).toSet
-    // A table vacuum BETWEEN catch-ups can reclaim a version that is the
-    // 'to' of an already-materialized range: with (6,7) materialized and 7
-    // vacuumed, the retained adjacency derives (6,8) — publishing c6-8
-    // NEXT TO c6-7 would double-cover 6→7 and wedge coveredRanges'
-    // contiguity check for every window. Skip exactly the pairs whose
-    // COVERAGE INTERVAL overlaps an existing range (the same test the
-    // manual verb applies): those changes are genuinely unservable as a
-    // step, and consumers past the hole keep working because coverage
-    // validates per-window. A pair in a genuine un-materialized GAP
-    // overlaps nothing and still repairs — the "missed calls are repaired
-    // here, not lost" contract.
-    def overlapsDone(f: Long, t: Long): Option[(Long, Long)] =
-      doneRanges.find { case (mf, mt) =>
-        !(mf == f && mt == t) && mf < t && f < mt }
-    versions.zip(versions.tail).collect {
-      case (f, t) if !done(t) && {
-        val overlap = overlapsDone(f, t)
-        // loud skip — the manual verb FAILS here; the catch-up must not
-        // make the same situation invisible (those commits are permanently
-        // unservable through the feed until the operator acts)
-        overlap.foreach { case (mf, mt) =>
-          graft.core.Logging.logger().warn(
-            s"ChangeFeed.materializeNew: skipping ($f, $t) of $root — it " +
-              s"overlaps already-materialized range ($mf, $mt); a vacuum " +
-              "reclaimed a version inside existing coverage, so these " +
-              "changes cannot be served as a step (vacuumFeed the stale " +
-              "ranges first if you intend a coarse re-materialization)")
-        }
+    val pending = versions.zip(versions.tail).filter { case (f, t) =>
+      !done(t) && {
+        // a step overlapping existing coverage is skipped LOUDLY: the
+        // manual verb fails there, and those commits stay unservable
+        // through the feed until the operator acts; consumers past the
+        // hole keep working because coverage validates per window
+        val overlap = overlapping(doneRanges, f, t)
+        overlap.foreach(r => graft.core.Logging.logger().warn(
+          s"ChangeFeed.materializeNew: skipping ($f, $t) of $root — it " +
+            s"overlaps already-materialized range $r; $Unservable"))
         overlap.isEmpty
-      } && materializeStep(spark, root, f, t, pk) => (f, t)
+      }
     }
+    materializeSteps(spark, root, pending, pk)
   }
 
   /** The feed's schema: the table's columns (recorded header or one

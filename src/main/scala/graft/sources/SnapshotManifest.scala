@@ -339,7 +339,7 @@ object SnapshotManifest {
       // shuffle instead of replicating to every executor.
       val fCol = freshName("__graft_f", base.columns.toSeq)
       val rCol = freshName("__graft_r", base.columns.toSeq :+ fCol)
-      val dvRaw = spark.read.parquet(dvFiles: _*)
+      val dvRaw = spark.read.schema(DvSidecarSchema).parquet(dvFiles: _*)
         .select(col("file_name").alias("__dv_f"), col("row_index").alias("__dv_r"))
         .distinct()
       val dv =
@@ -599,9 +599,16 @@ object SnapshotManifest {
     val dvFiles = entries.flatMap(_.dvRel).distinct
       .map(r => new Path(new Path(root), r).toString)
     if (dvFiles.isEmpty) None
-    else Some(spark.read.parquet(dvFiles: _*)
+    else Some(spark.read.schema(DvSidecarSchema).parquet(dvFiles: _*)
       .select(col("file_name"), col("row_index")).distinct())
   }
+
+  /** Every DV sidecar's schema ([[writeDvSidecar]] writes exactly these
+    * columns) — readers pass it instead of running a footer-inference job.
+    */
+  private[graft] val DvSidecarSchema = StructType(Seq(
+    StructField("file_name", org.apache.spark.sql.types.StringType),
+    StructField("row_index", org.apache.spark.sql.types.LongType)))
 
   /** Write the `(file_name, row_index)` frame as one DV sidecar parquet
     * for version `next` and return its manifest-relative path (invisible
@@ -3169,11 +3176,13 @@ object SnapshotManifest {
     * the scan cost is proportional to the churned fraction of the table,
     * not its size. The remainder is one null-safe full-outer join on `pk`
     * (one shuffle per side); rewritten-but-unchanged rows (compaction) are
-    * detected by column comparison and dropped.
+    * detected by column comparison and dropped. This is the one-step case
+    * of [[changesByStep]].
     */
   def changesBetween(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long, pk: Seq[String]): DataFrame =
-    changesBetweenResolved(spark, root, fromVersion, toVersion, Some(pk))
+    changesByStep(spark, root, Seq((fromVersion, toVersion)), Some(pk))
+      .head._2.drop("_commit_version")
 
   /** [[changesBetween]] keyed by the table's DECLARED primary key
     * ([[setPrimaryKey]]) — the row identity travels with the table, not
@@ -3182,24 +3191,121 @@ object SnapshotManifest {
     */
   def changesBetween(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long): DataFrame =
-    changesBetweenResolved(spark, root, fromVersion, toVersion, None)
+    changesByStep(spark, root, Seq((fromVersion, toVersion)), None)
+      .head._2.drop("_commit_version")
+
+  /** One step's diff inputs, resolved on the driver. */
+  private final case class DiffStep(to: Long, oldOnly: Seq[ManifestEntry],
+      newOnly: Seq[ManifestEntry], sideFrom: Option[StructType],
+      sideTo: Option[StructType], union: StructType)
+
+  /** The feeds of many `(from, to)` steps at once, per schema group: (the
+    * group's `to` versions, its rows with `_commit_version` = the step's
+    * `to`). One group unless a step changes the schema; each is ONE
+    * null-safe full-outer join on `(step, pk)` — exactly the disjoint
+    * union of the per-step joins, for one plan's jobs instead of one plan
+    * per step. A side without a recorded schema reads one footer on the
+    * driver (no inference job), memoized by file within the call.
+    */
+  private[graft] def changesByStep(spark: SparkSession, root: String,
+      steps: Seq[(Long, Long)], pkOpt: Option[Seq[String]]): Seq[(Seq[Long], DataFrame)] = {
+    import org.apache.spark.sql.functions._
+    val footers = scala.collection.mutable.Map.empty[String, StructType]
+    def footerSchema(path: String) =
+      footers.getOrElseUpdate(path,
+        org.apache.spark.sql.graftbridge.ColumnBridge.parquetFileSchema(spark, path))
+    val resolved = steps.map { case (f, t) => diffStep(spark, root, f, t, footerSchema) }
+    val pk = pkOpt.getOrElse(manifestMetaOnly(spark, root, steps.last._2).pk)
+    require(pk.nonEmpty, s"changesBetween: no primary key for $root — pass " +
+      "pk (at least one column) or setPrimaryKey once")
+    // nullability does not split a group: sides align to the group's
+    // union by name and type, and a union of frames widens nullability
+    def shape(s: DiffStep) = s.union.fields.toSeq.map(f => (f.name, f.dataType))
+    resolved.map(shape).distinct.map { key =>
+      val group = resolved.filter(s => shape(s) == key)
+      val unionSchema = group.head.union
+      val cols = unionSchema.fieldNames.toSeq
+      pk.foreach(c => require(cols.exists(_.equalsIgnoreCase(c)),
+        s"changesBetween: pk column $c not in $cols"))
+      // presence markers, not pk-null checks: a legitimately NULL-keyed row
+      // (the `=` merge carve-outs tolerate them) must not read as "absent".
+      // Sides read DV-APPLIED (a MoR-deleted row is absent from its side,
+      // so a DV-only change on a shared data file emits plain deletes); the
+      // side schema resolved for the union pins the scan (no re-inference)
+      def aligned(raw: DataFrame, step: org.apache.spark.sql.Column) =
+        raw.select(cols.map(c =>
+          // case-insensitive presence probe: a from-side file storing
+          // 'value' must satisfy a 'Value' union column, not read as null
+          (if (raw.columns.exists(_.equalsIgnoreCase(c))) col(s"`$c`")
+           else lit(null)).cast(unionSchema(c).dataType).alias(c)) :+
+          lit(1).alias("__graft_present") :+ step.alias("__graft_step"): _*)
+      val schemaSrc = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], unionSchema)
+      // ONE scan per read schema over the DV-free files of every step: a
+      // file → steps map tags each row with its step(s). A DV-carrying unit
+      // reads per step, its own sidecars applied. Few scans mean few stages
+      // to plan and compile, and the literals (string, map) are passed by
+      // reference, so the generated code repeats across calls.
+      def side(entries: DiffStep => Seq[ManifestEntry],
+          declared: DiffStep => Option[StructType]) = {
+        val plain = group.flatMap(s => entries(s).filter(_.dvRel.isEmpty).map(s -> _.rel))
+        val scans = plain.map(p => declared(p._1)).distinct.map { d =>
+          val steps = plain.filter(p => declared(p._1) == d)
+            .groupMap(_._2)(_._1.to.toString)
+          aligned(readEntries(spark, root, steps.keys.toSeq.map(ManifestEntry(_, None, None)), d),
+            explode(element_at(typedLit(steps.map { case (r, ts) => new Path(r).getName -> ts }),
+              element_at(split(col("_metadata.file_path"), "/"), -1))))
+        }
+        val withDv = group.flatMap { s =>
+          val es = entries(s).filter(_.dvRel.nonEmpty)
+          if (es.isEmpty) None
+          else Some(aligned(readEntries(spark, root, es, declared(s)), lit(s.to.toString)))
+        }
+        (aligned(schemaSrc, lit(null).cast("string")) +: (scans ++ withDv)).reduce(_ union _)
+      }
+      val o = side(_.oldOnly, _.sideFrom).alias("o")
+      val n = side(_.newOnly, _.sideTo).alias("n")
+      val joinCond = pk.map(c => col(s"o.$c") <=> col(s"n.$c"))
+        .foldLeft(col("o.__graft_step") === col("n.__graft_step"))(_ && _)
+      val joined = o.join(n, joinCond, "full_outer")
+      val oldAbsent = col("o.__graft_present").isNull
+      val newAbsent = col("n.__graft_present").isNull
+      val nonPk = cols.filterNot(pk.contains)
+      val differs =
+        if (nonPk.isEmpty) lit(false)
+        else nonPk.map(c => !(col(s"o.$c") <=> col(s"n.$c"))).reduce(_ || _)
+      def img(prefix: String) = struct(cols.map(c => col(s"$prefix.$c")): _*)
+      // drop unchanged rows (ones that merely moved files, e.g.
+      // compaction), then one codegen'd pass expands each survivor to its
+      // 1-2 feed rows
+      val rows = joined.filter(oldAbsent || newAbsent || differs).select(explode(
+        when(oldAbsent, array(struct(lit("insert").alias("_change"), img("n").alias("row"))))
+          .when(newAbsent, array(struct(lit("delete").alias("_change"), img("o").alias("row"))))
+          .otherwise(array(
+            struct(lit("update_preimage").alias("_change"), img("o").alias("row")),
+            struct(lit("update_postimage").alias("_change"), img("n").alias("row"))))
+      ).alias("e"),
+        coalesce(col("o.__graft_step"), col("n.__graft_step")).cast("long").alias("_commit_version"))
+        .select(cols.map(c => col(s"e.row.$c")) :+ col("e._change").alias("_change") :+
+          col("_commit_version"): _*)
+      (group.map(_.to), rows)
+    }
+  }
 
   /** The two DIFF sides of `from → to` derived churn-bounded: the winner
     * tail ([[tailEditsBetween]]) names every touched rel, a broadcast
     * semi-join over the from-version's body frame recovers the touched
-    * rels' OLD lines, and untouched sample lines resolve schema inference
-    * — the driver receives O(churn) lines, never a body. None when the
-    * window is unprovable from tails (full manifest inside, no twin) —
-    * callers run the authoritative body-diff.
+    * rels' OLD lines — the driver receives O(churn) lines, never a body.
+    * None when the window is unprovable from tails (full manifest inside,
+    * no twin) — callers run the authoritative body-diff.
     *
     * Returns (oldOnlyLines, newOnlyLines, sampleFromLine, sampleToLine):
-    * samples are arbitrary SURVIVING body lines for the no-recorded-schema
-    * footer inference (from-side: any from-body line; to-side: a line
-    * known to be in the to-body).
+    * LAZY samples of each side's body for a side whose header records no
+    * schema (an untouched line costs a head(1) job over the body frame).
     */
   private def changeSidesViaTails(spark: SparkSession, root: String,
       from: Long, to: Long)
-      : Option[(Seq[String], Seq[String], Option[String], Option[String])] =
+      : Option[(Seq[String], Seq[String], () => Option[String], () => Option[String])] =
     try tailEditsBetween(spark, root, from, to).flatMap { tail =>
       bodyLinesFrame(spark, root, from).map { frame =>
         import spark.implicits._
@@ -3221,43 +3327,34 @@ object SnapshotManifest {
             case None => newOnly += nl // pure add
           }
         }
-        // schema samples: any from-body line works for the from side; the
-        // to side needs a line PROVABLY in the to-body — a tail-added line,
-        // else an untouched from-line (still present at `to`)
-        val untouched = frame.join(
+        // an untouched from-line is still present at `to`
+        lazy val untouched = frame.join(
           org.apache.spark.sql.functions.broadcast(
             (touched :+ "").toDF("rel")), // :+ "" keeps the frame non-degenerate when touched is empty
           Seq("rel"), "left_anti")
           .select("line").as[String].head(1).headOption
         val newLines = newOnly.result()
         (oldOnly.result(), newLines,
-          untouched.orElse(oldByRel.values.headOption),
-          newLines.headOption.orElse(untouched))
+          () => untouched.orElse(oldByRel.values.headOption),
+          () => newLines.headOption.orElse(untouched))
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def changesBetweenResolved(spark: SparkSession, root: String,
-      fromVersion: Long, toVersion: Long, pkOpt: Option[Seq[String]]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    pkOpt.foreach(p => require(p.nonEmpty,
-      "changesBetween: pk must name at least one column"))
+  private def diffStep(spark: SparkSession, root: String, fromVersion: Long,
+      toVersion: Long, footerSchema: String => StructType): DiffStep = {
     require(fromVersion <= toVersion,
       s"changesBetween: fromVersion $fromVersion > toVersion $toVersion")
-    // CHURN-BOUNDED fast path: a twin-anchored from-body + delta tails
-    // yield the diff sides and schema samples without resolving either
-    // body on the driver ([[changeSidesViaTails]]); headers answer the
-    // metadata. The authoritative body-diff below remains the fallback.
-    val fast = changeSidesViaTails(spark, root, fromVersion, toVersion).map {
+    // CHURN-BOUNDED fast path ([[changeSidesViaTails]]); headers answer
+    // the metadata, and any failure (the lazy samples included) falls back
+    // to the authoritative body-diff below
+    val fast = changeSidesViaTails(spark, root, fromVersion, toVersion).flatMap {
       case (oldOnlyLines, newOnlyLines, sampleFrom, sampleTo) =>
-        val fm = manifestMetaOnly(spark, root, fromVersion)
-        val tm = manifestMetaOnly(spark, root, toVersion)
-        (oldOnlyLines.map(parseLine), newOnlyLines.map(parseLine), fm, tm,
-          fm.schema.orElse(sampleFrom.map(l =>
-            spark.read.parquet(bodyFile(root, l)).schema)),
-          tm.schema.orElse(sampleTo.map(l =>
-            spark.read.parquet(bodyFile(root, l)).schema)))
+        def schemaOf(v: Long, sample: () => Option[String]) = manifestMetaOnly(spark,
+          root, v).schema.orElse(sample().map(l => footerSchema(bodyFile(root, l))))
+        scala.util.Try((oldOnlyLines.map(parseLine), newOnlyLines.map(parseLine),
+          schemaOf(fromVersion, sampleFrom), schemaOf(toVersion, sampleTo))).toOption
     }
-    val (oldOnly, newOnly, fromMeta, toMeta, sideFrom, sideTo) = fast.getOrElse {
+    val (oldOnly, newOnly, sideFrom, sideTo) = fast.getOrElse {
       // ONE manifest fetch per version: body + recorded schema together
       val (fromBody, fm) = manifestParts(spark, root, fromVersion)
       val (toBody, tm) = manifestParts(spark, root, toVersion)
@@ -3268,40 +3365,24 @@ object SnapshotManifest {
       // diffed even though its data bytes are shared
       val shared = oldEntries.map(_.unit).toSet intersect newEntries.map(_.unit).toSet
       (oldEntries.filterNot(e => shared(e.unit)),
-        newEntries.filterNot(e => shared(e.unit)), fm, tm,
-        fm.schema.orElse(oldEntries.headOption.map(e =>
-          spark.read.parquet(new Path(new Path(root), e.rel).toString).schema)),
-        tm.schema.orElse(newEntries.headOption.map(e =>
-          spark.read.parquet(new Path(new Path(root), e.rel).toString).schema)))
+        newEntries.filterNot(e => shared(e.unit)),
+        fm.schema.orElse(oldEntries.headOption.map(e => footerSchema(bodyFile(root, e.rel)))),
+        tm.schema.orElse(newEntries.headOption.map(e => footerSchema(bodyFile(root, e.rel)))))
     }
-    val pk = pkOpt.getOrElse {
-      require(toMeta.pk.nonEmpty,
-        s"changesBetween: no primary key declared for $root — " +
-          "setPrimaryKey once, or pass pk explicitly")
-      toMeta.pk
-    }
-    // UNION schema across both versions: a schema-evolving commit (column
-    // added or dropped between the versions) must not make the diff
-    // unreadable. Each side is aligned to the union below — absent columns
-    // read as typed nulls, so an added column registers as null→value
-    // updates (the Delta-CDF convention) rather than an analysis error.
-    //
-    // Derivation cost: every file of a snapshot shares its schema, so each
-    // side's schema is its RECORDED header or ONE footer read — never a
-    // mergeSchema sweep of both versions' full file lists (at 100k files
-    // that was 100k footer round-trips per incremental refresh, and
-    // parquet's merge refuses even int→bigint anyway). A same-name/
-    // different-type collision (a retyping full commit) reconciles to
-    // Catalyst's tightest common type; irreconcilable types fail loudly
-    // with the column named. (Both sides — recorded header or ONE sampled
-    // footer — arrive resolved from the path split above.)
+    // UNION schema across both versions: an added column reads as typed
+    // nulls on the old side, so it registers as null→value updates (the
+    // Delta-CDF convention) rather than an analysis error. Every file of a
+    // snapshot shares its schema, so each side's is its RECORDED header or
+    // ONE footer — never a mergeSchema sweep of the file lists (which also
+    // refuses int→bigint). A retyped column reconciles to Catalyst's
+    // tightest common type; irreconcilable types fail with the column named.
     val fromFields = sideFrom.map(_.fields.toSeq).getOrElse(Nil)
     val toFields = sideTo.map(_.fields.toSeq).getOrElse(Nil)
     // fields match by name CASE-INSENSITIVELY (the engine's resolution
     // everywhere else): a full commit changing only a column's case must
     // reconcile to one field — two casings in the union schema would make
-    // the o.<col>/n.<col> resolution below ambiguous. The to-side casing
-    // wins (it is the table's current shape).
+    // the o.<col>/n.<col> resolution ambiguous. The to-side casing wins
+    // (it is the table's current shape).
     val reconciled = fromFields.map { f =>
       toFields.find(_.name.equalsIgnoreCase(f.name)) match {
         case Some(t) if t.dataType != f.dataType =>
@@ -3317,55 +3398,9 @@ object SnapshotManifest {
         case None => f
       }
     }
-    val unionSchema = StructType(reconciled ++
-      toFields.filterNot(t => fromFields.exists(_.name.equalsIgnoreCase(t.name))))
-    val schemaSrc = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], unionSchema)
-    val cols = unionSchema.fieldNames.toSeq
-    pk.foreach(c => require(cols.exists(_.equalsIgnoreCase(c)),
-      s"changesBetween: pk column $c not in $cols"))
-    if (oldOnly.isEmpty && newOnly.isEmpty)
-      return schemaSrc.withColumn("_change", lit(""))
-    // presence markers, not pk-null checks: a legitimately NULL-keyed row
-    // (the `=` merge carve-outs tolerate them) must not read as "absent".
-    // Sides read DV-APPLIED (a MoR-deleted row is absent from its side,
-    // so a DV-only change on a shared data file emits plain deletes);
-    // one version's files share a schema, so per-side mergeSchema is moot
-    def side(entries: Seq[ManifestEntry], declared: Option[StructType]) = {
-      val raw =
-        if (entries.isEmpty) schemaSrc
-        else readEntries(spark, root, entries, declared)
-      raw.select(cols.map(c =>
-        // case-insensitive presence probe (col() resolution already is):
-        // a from-side file storing 'value' must satisfy a 'Value' union
-        // column, not read as typed null
-        if (raw.columns.exists(_.equalsIgnoreCase(c))) col(s"`$c`").alias(c)
-        else lit(null).cast(unionSchema(c).dataType).alias(c)): _*)
-        .withColumn("__graft_present", lit(1))
-    }
-    // the side schema just resolved for the union (recorded OR the one
-    // footer read) pins the scan too — no second footer inference
-    val o = side(oldOnly, sideFrom).alias("o")
-    val n = side(newOnly, sideTo).alias("n")
-    val joinCond = pk.map(c => col(s"o.$c") <=> col(s"n.$c")).reduce(_ && _)
-    val joined = o.join(n, joinCond, "full_outer")
-    val oldAbsent = col("o.__graft_present").isNull
-    val newAbsent = col("n.__graft_present").isNull
-    val nonPk = cols.filterNot(pk.contains)
-    val differs =
-      if (nonPk.isEmpty) lit(false)
-      else nonPk.map(c => !(col(s"o.$c") <=> col(s"n.$c"))).reduce(_ || _)
-    def img(prefix: String) = struct(cols.map(c => col(s"$prefix.$c")): _*)
-    // drop unchanged rows (ones that merely moved files, e.g. compaction),
-    // then one codegen'd pass expands each survivor to its 1-2 feed rows
-    val feed = joined.filter(oldAbsent || newAbsent || differs).select(explode(
-      when(oldAbsent, array(struct(lit("insert").alias("_change"), img("n").alias("row"))))
-        .when(newAbsent, array(struct(lit("delete").alias("_change"), img("o").alias("row"))))
-        .otherwise(array(
-          struct(lit("update_preimage").alias("_change"), img("o").alias("row")),
-          struct(lit("update_postimage").alias("_change"), img("n").alias("row"))))
-    ).alias("e"))
-    feed.select(cols.map(c => col(s"e.row.$c")) :+ col("e._change").alias("_change"): _*)
+    DiffStep(toVersion, oldOnly, newOnly, sideFrom, sideTo,
+      StructType(reconciled ++
+        toFields.filterNot(t => fromFields.exists(_.name.equalsIgnoreCase(t.name)))))
   }
 
   /** Commit `df` as the next snapshot. Concurrent writers are SAFE: each

@@ -34,6 +34,28 @@ object ColumnBridge {
       : org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
+  /** The schema `spark.read.parquet(path).schema` infers for ONE parquet
+    * file, read on the driver without the one-task inference job: Spark's
+    * own derivation (the row metadata Spark writes into the footer, else
+    * the session's parquet converter), made all-nullable as a file scan
+    * reads it. `asNullable` is `private[spark]`.
+    */
+  def parquetFileSchema(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), classic.sessionState.newHadoopConf()))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(classic.sessionState.conf).convert(meta.getSchema))
+      .asNullable
+  }
+
   /** Re-wrap a streaming micro-batch frame as a BATCH frame (the isStreaming
     * flag forbids `df.write`): the standard V1-sink move — the batch's
     * executed plan becomes a plain RDD-backed frame. `private[sql]`

@@ -14,6 +14,11 @@ class ChangeFeedSpec extends SparkSpec {
 
   private def newRoot() = Files.createTempDirectory("cdf").toString
 
+  private def fsOf(root: String) = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    (rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration), rootPath)
+  }
+
   /** Collected feed rows as a comparable set (id, x, change, version). */
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String, String, Long)] =
     df.select(col("id"), col("x"), col("_change"), col("_commit_version"))
@@ -95,6 +100,112 @@ class ChangeFeedSpec extends SparkSpec {
     assert(expected.toSeq.map(_._3).groupBy(identity).view.mapValues(_.size).toMap ==
       Map("update_preimage" -> 1, "update_postimage" -> 1,
         "delete" -> 2, "insert" -> 1))
+  }
+
+  /** Feed rows as sorted strings over `cols`, null-safe (a NULL key
+    * included).
+    */
+  private def rowStrings(df: org.apache.spark.sql.DataFrame,
+      cols: Seq[String] = Seq("id", "x", "_change", "_commit_version")): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+
+  /** The per-step diffs of `steps`, as the feed would carry them. */
+  private def perStep(root: String, steps: Seq[(Long, Long)]): Seq[String] =
+    steps.flatMap { case (f, t) =>
+      rowStrings(SnapshotManifest.changesBetween(spark, root, f, t, Seq("id"))
+        .withColumn("_commit_version", lit(t)))
+    }.sorted
+
+  test("a batched catch-up equals the per-step diffs across DML, a restore, MoR, compaction, a schema change and a NULL key") {
+    val root = newRoot()
+    SnapshotManifest.commit(spark, root,
+      (0L until 20L).map(i => (i, s"v$i")).toDF("id", "x"), Seq("id"))
+    SnapshotManifest.appendRows(spark, root, Seq((200L, "a")).toDF("id", "x"), Seq("id"))
+    SnapshotManifest.updateWhere(spark, root, col("id") === 3L,
+      Map("x" -> lit("patched")), Seq("id"))
+    // the restore re-adds the file the update replaced, and the second
+    // update removes it again: one file is old-only in two steps
+    SnapshotManifest.restoreVersion(spark, root, 1L)
+    SnapshotManifest.updateWhere(spark, root, col("id") === 3L,
+      Map("x" -> lit("again")), Seq("id"))
+    SnapshotManifest.deleteWhere(spark, root, col("id") >= 18L && col("id") < 100L, Seq("id"))
+    SnapshotManifest.deleteWhereMoR(spark, root, col("id") === 5L) // DV-only
+    assert(SnapshotManifest.compactSmallFiles(spark, root).isDefined) // no rows
+    SnapshotManifest.addColumns(spark, root, Seq( // a second schema group
+      org.apache.spark.sql.types.StructField("y",
+        org.apache.spark.sql.types.StringType, nullable = true)))
+    graft.operators.Upsert.mergeWhere(spark, root,
+      Seq((Option(7L), "m7", Option("y7")), (Option.empty[Long], "nullkey", Option.empty[String]))
+        .toDF("id", "x", "y"), Seq("id"), Seq("id"))
+    val versions = SnapshotManifest.listVersions(spark, root)
+    val steps = versions.zip(versions.tail)
+    assert(steps.size == 9)
+    // the ranges the per-commit loop returned: every step, ascending
+    assert(ChangeFeed.materializeNew(spark, root, Seq("id")) == steps)
+    val feed = ChangeFeed.feed(spark, root)
+    assert(rowStrings(feed) == perStep(root, steps))
+    // both updates read the restored file; the DV-only step is a plain
+    // delete; compaction and addColumns carry no rows
+    val byStep = feed.groupBy("_commit_version").count().as[(Long, Long)].collect().toMap
+    assert(rowStrings(feed.filter(col("_commit_version") === steps(3)._2)) ==
+      Seq(s"[3,again,update_postimage,${steps(3)._2}]", s"[3,v3,update_preimage,${steps(3)._2}]"))
+    assert(byStep.get(steps(5)._2).contains(1L) && !byStep.contains(steps(6)._2) &&
+      !byStep.contains(steps(7)._2))
+    // the widened step keeps its new column; the NULL-keyed row is an insert
+    assert(rowStrings(feed.filter(col("_commit_version") === steps(8)._2),
+      Seq("id", "x", "y", "_change")) == Seq("[7,m7,y7,update_postimage]",
+        "[7,v7,null,update_preimage]", "[null,nullkey,null,insert]"))
+    // every commit directory holds a parquet file (the file-stream source
+    // lists files, not directories), and nothing is left staged
+    val (fs, rootPath) = fsOf(root)
+    steps.foreach { case (f, t) =>
+      val dir = new org.apache.hadoop.fs.Path(rootPath, f"_cdf/c$f%08d-$t%08d")
+      assert(fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet")), dir)
+    }
+    val stage = new org.apache.hadoop.fs.Path(rootPath, "_cdf_stage")
+    assert(!fs.exists(stage) || fs.listStatus(stage).isEmpty)
+  }
+
+  test("the driver-side footer schema is the schema a parquet read infers") {
+    val root = newRoot()
+    SnapshotManifest.commit(spark, root, spark.sql(
+      """SELECT id, CAST(id AS STRING) AS s, CAST(id AS DECIMAL(12, 2)) AS d,
+        |  TIMESTAMP'2024-01-02 03:04:05' AS ts, DATE'2024-01-02' AS dt,
+        |  named_struct('a', id, 'b', array(1.5D, CAST(NULL AS DOUBLE))) AS st,
+        |  map('k', id) AS m, CAST('xy' AS BINARY) AS bin
+        |FROM range(3)""".stripMargin), Seq("id"))
+    val files = SnapshotManifest.snapshotFiles(spark, root, 0L)
+    assert(files.nonEmpty)
+    files.foreach(f => assert(
+      org.apache.spark.sql.graftbridge.ColumnBridge.parquetFileSchema(spark, f) ==
+        spark.read.parquet(f).schema, f))
+  }
+
+  test("a crash mid-publish leaves a contiguous published prefix that the next catch-up completes") {
+    val root = s"faulty://${newRoot()}/t"
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    try {
+      FaultGate.disarm()
+      build4(root)
+      SnapshotManifest.deleteWhere(spark, root, col("id") === 5L, Seq("id"))
+      val steps = (0L until 4L).map(v => (v, v + 1))
+      // the publish rename of the third range crashes the process
+      FaultGate.armAt((op, p) => op == "rename" && p.getName == "c00000002-00000003")
+      intercept[java.io.IOException](ChangeFeed.materializeNew(spark, root, Seq("id")))
+      assert(FaultGate.tripped)
+      FaultGate.disarm()
+      assert(ChangeFeed.materializedRanges(spark, root) == steps.take(2))
+      // the unpublished window fails coverage instead of reading partially
+      intercept[IllegalStateException](ChangeFeed.feed(spark, root, sinceVersion = Some(2L)))
+      intercept[IllegalStateException](ChangeFeed.feed(spark, root, untilVersion = Some(4L)))
+      assert(ChangeFeed.materializeNew(spark, root, Seq("id")) == steps.drop(2))
+      assert(rowStrings(ChangeFeed.feed(spark, root)) == perStep(root, steps))
+      // the crashed stage is unreferenced; vacuumFeed sweeps it
+      ChangeFeed.vacuumFeed(spark, root, beforeVersion = 0L, staleStageMs = 0L)
+      val (fs, rootPath) = fsOf(root)
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(rootPath, "_cdf_stage")).isEmpty)
+    } finally FaultGate.disarm()
   }
 
   test("catch-up is idempotent and versioned bounds prune the batch read") {

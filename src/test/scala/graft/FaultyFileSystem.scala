@@ -129,17 +129,29 @@ object FaultyFileSystem {
 object FaultGate {
   private val remaining = new AtomicLong(Long.MaxValue)
   @volatile private var crashed = false
+  @volatile private var target: Option[(String, Path) => Boolean] = None
   private val lastTrip = new AtomicReference[String]("")
 
   /** The `afterOps`-th mutating op from now throws; all later ones too. */
   def arm(afterOps: Long): Unit = {
     require(afterOps >= 1, "arm: afterOps must be >= 1")
     crashed = false
+    target = None
     remaining.set(afterOps)
+  }
+
+  /** The first mutating op matching `at` (op name, path) throws; all
+    * later ones too — a crash at one named point instead of an op count.
+    */
+  def armAt(at: (String, Path) => Boolean): Unit = {
+    crashed = false
+    remaining.set(Long.MaxValue)
+    target = Some(at)
   }
 
   def disarm(): Unit = {
     crashed = false
+    target = None
     remaining.set(Long.MaxValue)
   }
 
@@ -152,7 +164,7 @@ object FaultGate {
   private[graft] def hit(op: String, p: Path): Unit = {
     if (crashed)
       throw new IOException(s"injected crash (post-crash IO): $op $p")
-    if (remaining.decrementAndGet() <= 0L) {
+    if (target.exists(_(op, p)) || remaining.decrementAndGet() <= 0L) {
       crashed = true
       lastTrip.set(s"$op $p")
       throw new IOException(s"injected crash: $op $p")
