@@ -440,7 +440,7 @@ object Upsert {
             .filter(_ < v).reverseIterator
             .map(SnapshotManifest.manifestBody(spark, tableRoot, _))
             .collectFirst { case b if b.nonEmpty =>
-              spark.read.parquet(SnapshotManifest.bodyFile(tableRoot, b.head)).schema
+              SnapshotManifest.tableSchema(spark, tableRoot, None, b.headOption).get
             })
         val alignedStaged = tableSchema match {
           case Some(ts) =>
@@ -455,7 +455,7 @@ object Upsert {
           alignedStaged, statsCols, Nil, "mergeWhere", meta)
       }
       val files = body.map(SnapshotManifest.bodyFile(tableRoot, _))
-      val targetSchema = meta.schema.getOrElse(spark.read.parquet(files.head).schema)
+      val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
       pk.foreach(c => require(targetSchema.fieldNames.contains(c),
         s"mergeWhere: PK column $c not in target schema ${targetSchema.fieldNames.mkString(", ")}"))
       // NOTE on evolution: merge() itself already implements ANSI MERGE
@@ -476,9 +476,8 @@ object Upsert {
       // MoR-deleted row must not resurrect through the merge rewrite
       val targetAffected =
         if (affected.isEmpty)
-          meta.schema.map(s => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
-            .getOrElse(spark.read.parquet(files.head).limit(0))
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
         else SnapshotManifest.readEntries(spark, tableRoot,
           body.map(SnapshotManifest.parseLine).zip(files)
             .collect { case (e, f) if affected(f) => e }, meta.schema)
@@ -639,7 +638,7 @@ object Upsert {
       val (body, meta) = SnapshotManifest.manifestParts(spark, tableRoot, v)
       if (body.isEmpty) return v
       val files = body.map(SnapshotManifest.bodyFile(tableRoot, _))
-      val targetSchema = meta.schema.getOrElse(spark.read.parquet(files.head).schema)
+      val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
       pk.foreach(c => require(targetSchema.fieldNames.contains(c),
         s"deleteKeys: PK column $c not in target schema ${targetSchema.fieldNames.mkString(", ")}"))
       val affected = keyPred match {
@@ -699,7 +698,7 @@ object Upsert {
           maxKeySetSize, colocated, maxColocatedRows)
       val entries = body.map(SnapshotManifest.parseLine)
       val files = body.map(SnapshotManifest.bodyFile(tableRoot, _))
-      val targetSchema = meta.schema.getOrElse(spark.read.parquet(files.head).schema)
+      val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
       pk.foreach(c => require(targetSchema.fieldNames.contains(c),
         s"mergeWhereMoR: PK column $c not in target schema ${targetSchema.fieldNames.mkString(", ")}"))
       // staged realignment is NOT needed for evolution — merge() handles
@@ -718,9 +717,8 @@ object Upsert {
       def aligned(df: DataFrame): DataFrame =
         df.select(targetSchema.fields.toSeq.map(f =>
           col(s"`${f.name}`").cast(f.dataType).alias(f.name)): _*)
-      val emptyTarget = meta.schema.map(s => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
-        .getOrElse(spark.read.parquet(files.head).limit(0))
+      val emptyTarget = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
       if (affectedEntries.isEmpty)
         // no file can hold a staged key: every staged row is an insert
         return SnapshotManifest.publishRetaggedRebased(spark, tableRoot,

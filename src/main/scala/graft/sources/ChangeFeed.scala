@@ -191,25 +191,24 @@ object ChangeFeed {
     materializeSteps(spark, root, pending, pk)
   }
 
-  /** The feed's schema: the table's columns (recorded header or one
-    * footer read — never a full-list sweep) plus the two feed columns.
+  /** The feed's schema: the table's columns (recorded header, or one
+    * footer read on the driver, no job — never a full-list sweep) plus the
+    * two feed columns.
     */
   def feedSchema(spark: SparkSession, root: String): StructType = {
     val v = SnapshotManifest.currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(
         s"ChangeFeed.feedSchema: no committed snapshot under $root"))
     // header first: a RECORDED schema answers without resolving the body
-    // (a 10⁵-line parse saved per stream start on schema-declared tables)
-    val table = SnapshotManifest.manifestMetaOnly(spark, root, v).schema
-      .getOrElse {
-        // one sampled footer — churn-bounded through the twin frame when
-        // one anchors the chain, never a full-list sweep either way
-        val sample = SnapshotManifest.sampleBodyLine(spark, root, v)
-        require(sample.nonEmpty, s"ChangeFeed.feedSchema: snapshot $v of $root " +
-          "has no data files and no recorded schema")
-        spark.read.parquet(SnapshotManifest.bodyFile(root, sample.get)).schema
-      }
-    StructType(table.fields.toSeq :+
+    // (a 10⁵-line parse saved per stream start on schema-declared tables);
+    // else one sampled line's footer, read on the driver with no job —
+    // churn-bounded through the twin frame when one anchors the chain
+    val table = SnapshotManifest.tableSchema(spark, root,
+      SnapshotManifest.manifestMetaOnly(spark, root, v).schema,
+      SnapshotManifest.sampleBodyLine(spark, root, v))
+    require(table.nonEmpty, s"ChangeFeed.feedSchema: snapshot $v of $root " +
+      "has no data files and no recorded schema")
+    StructType(table.get.fields.toSeq :+
       StructField("_change", StringType, nullable = false) :+
       StructField("_commit_version", LongType, nullable = false))
   }

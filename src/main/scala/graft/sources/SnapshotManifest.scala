@@ -307,6 +307,28 @@ object SnapshotManifest {
     dvSidecarBytes(spark, root, entries) * DvMemoryExpansion <
       dvBroadcastBytes(spark)
 
+  /** The table schema: the RECORDED one, else the footer of the data file
+    * `sampleLine` names (a body line or a rel). Every file of a snapshot
+    * shares its schema and data files are immutable, so one footer is
+    * exact — read on the driver, no Spark job. `sampleLine` is evaluated
+    * only without a recorded schema. None only with neither.
+    */
+  private[graft] def tableSchema(spark: SparkSession, root: String,
+      recorded: Option[StructType], sampleLine: => Option[String]): Option[StructType] =
+    recorded.orElse(sampleLine.map(l =>
+      org.apache.spark.sql.graftbridge.ColumnBridge.parquetFileSchema(spark, bodyFile(root, l))))
+
+  /** The scan of `entries`' data files under the RECORDED schema, else the
+    * first entry's footer schema — never an inference job. Under a
+    * recorded schema ([[addColumns]]) columns a pre-widening file lacks
+    * read as typed nulls (standard parquet missing-column fill under an
+    * explicit read schema).
+    */
+  private def scanEntries(spark: SparkSession, root: String,
+      entries: Seq[ManifestEntry], declaredSchema: Option[StructType]): DataFrame =
+    spark.read.schema(tableSchema(spark, root, declaredSchema, Some(entries.head.rel)).get)
+      .parquet(entries.map(e => bodyFile(root, e.rel)): _*)
+
   private[graft] def readEntries(spark: SparkSession, root: String,
       entries: Seq[ManifestEntry],
       declaredSchema: Option[StructType] = None): DataFrame = {
@@ -324,12 +346,7 @@ object SnapshotManifest {
     val rootPath = new Path(root)
     val dvFiles = entries.flatMap(_.dvRel).distinct
       .map(r => new Path(rootPath, r).toString)
-    // a RECORDED schema ([[addColumns]]) overrides file inference: columns
-    // a pre-widening file lacks read as typed nulls (standard parquet
-    // missing-column fill under an explicit read schema) — and the scan
-    // never pays per-file footer merging
-    val reader = declaredSchema.map(spark.read.schema).getOrElse(spark.read)
-    val base = reader.parquet(entries.map(e => new Path(rootPath, e.rel).toString): _*)
+    val base = scanEntries(spark, root, entries, declaredSchema)
     if (dvFiles.isEmpty) base
     else {
       // LAZY sidecar read: the DV parquet stays executor-side —
@@ -370,10 +387,7 @@ object SnapshotManifest {
       declaredSchema: Option[StructType] = None)
       : (DataFrame, String, String) = {
     import org.apache.spark.sql.functions.{col, element_at, split => fsplit}
-    val rootPath = new Path(root)
-    val reader = declaredSchema.map(spark.read.schema).getOrElse(spark.read)
-    val base = reader
-      .parquet(entries.map(e => new Path(rootPath, e.rel).toString): _*)
+    val base = scanEntries(spark, root, entries, declaredSchema)
     val fCol = freshName("__graft_f", base.columns.toSeq)
     val rCol = freshName("__graft_r", base.columns.toSeq :+ fCol)
     val withPos = base
@@ -874,10 +888,9 @@ object SnapshotManifest {
     val entries = body.map(parseLine)
     if (entries.isEmpty || entries.exists(_.dvRel.nonEmpty)) None
     else {
-      // recorded header schema, or ONE sampled footer (the repo-wide
-      // pattern — plain commits record no schema= line)
-      val schema = meta.schema.getOrElse(
-        spark.read.parquet(bodyFile(root, entries.head.rel)).schema)
+      // recorded header schema, or one footer read on the driver, no job
+      // (plain commits record no schema= line)
+      val schema = tableSchema(spark, root, meta.schema, body.headOption).get
       // bodyStatsOf, not bodyStats: we hold the parse — re-parsing
       // 10⁵-10⁶ lines per relation construction is the documented sin
       val idx = new SnapshotFileIndex(spark, root, v, entries,
@@ -927,14 +940,13 @@ object SnapshotManifest {
     // with a RECORDED schema the prune decision needs no file contact at
     // all (at 100k files, constructing a reader over every path pays a
     // full listing just to learn a schema the manifest already states);
-    // un-evolved tables infer from ONE file — every file of a snapshot
-    // shares its schema
-    val schema = meta.schema.getOrElse {
-      if (all.isEmpty) throw new IllegalStateException(
+    // un-evolved tables take body.head's footer — one footer read on the
+    // driver, no job — and the scan reads under it, so the columns come in
+    // the table's order whichever files survive the prune
+    val schema = tableSchema(spark, root, meta.schema, body.headOption).getOrElse(
+      throw new IllegalStateException(
         s"SnapshotManifest.readWhere: snapshot $v of $root has no data " +
-          "files and no recorded schema")
-      spark.read.parquet(all.head).schema
-    }
+          "files and no recorded schema"))
     val pred = ManifestStats.resolvePredicate(spark, schema, predicate)
     val kept = ManifestStats.prune(all, bodyStats(body), pred).toSet
     val keptEntries = entries.zip(all).collect { case (e, f) if kept(f) => e }
@@ -943,7 +955,7 @@ object SnapshotManifest {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .filter(predicate)
-    else readEntries(spark, root, keptEntries, meta.schema).filter(predicate)
+    else readEntries(spark, root, keptEntries, Some(schema)).filter(predicate)
   }
 
   /** The file list [[readWhere]] would scan for `predicate` at `version` —
@@ -967,8 +979,8 @@ object SnapshotManifest {
     if (body.isEmpty) return Nil // nothing to prune, no schema needed
     val entries = body.map(parseLine)
     val files = entries.map(e => new Path(new Path(root), e.rel).toString)
-    // recorded schema or ONE footer — never a reader over the full list
-    val schema = meta.schema.getOrElse(spark.read.parquet(files.head).schema)
+    // recorded schema or one footer read on the driver, no job
+    val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     ManifestStats.prune(files, bodyStatsOf(entries),
       ManifestStats.resolvePredicate(spark, schema, predicate))
   }
@@ -1084,8 +1096,7 @@ object SnapshotManifest {
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return (None, None)
     val entries = body.map(parseLine)
-    val schema = meta.schema.getOrElse(
-      spark.read.parquet(bodyFile(root, body.head)).schema)
+    val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     val field = schema.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
       throw new IllegalArgumentException(
         s"minMax: column $column not in ${schema.fieldNames.mkString(", ")}"))
@@ -1852,18 +1863,15 @@ object SnapshotManifest {
   }
 
   /** The table schema for a distributed pruned read: the RECORDED one, or
-    * inferred from ONE file pulled off the frame (a snapshot's files share
-    * a schema) — never a driver materialization of the body. None only for
-    * an empty body with no recorded schema (callers fall back to the
-    * driver path's canonical error).
+    * the footer of ONE line pulled off the frame (one footer read on the
+    * driver, no job) — never a driver materialization of the body. None
+    * only for an empty body with no recorded schema (callers fall back to
+    * the driver path's canonical error).
     */
   private def frameSchema(spark: SparkSession, root: String,
-      meta: TableMeta, frame: DataFrame): Option[StructType] = {
-    import spark.implicits._
-    meta.schema.orElse(
-      frame.select("line").as[String].head(1).headOption
-        .map(l => spark.read.parquet(bodyFile(root, l)).schema))
-  }
+      meta: TableMeta, frame: DataFrame): Option[StructType] =
+    tableSchema(spark, root, meta.schema, frame.select("line")
+      .as[String](org.apache.spark.sql.Encoders.STRING).head(1).headOption)
 
   /** The shared DISTRIBUTED fast path of [[readWhere]]/[[prunedFiles]]:
     * `(meta, schema, surviving raw lines)` resolved through the
@@ -2160,7 +2168,7 @@ object SnapshotManifest {
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return v
     val files = body.map(bodyFile(root, _))
-    val schema = meta.schema.getOrElse(spark.read.parquet(files.head).schema)
+    val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
     val affected = ManifestStats.prune(files, bodyStats(body), resolved).toSet
     if (affected.isEmpty) return v
@@ -2236,7 +2244,7 @@ object SnapshotManifest {
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return v
     val files = body.map(bodyFile(root, _))
-    val schema = meta.schema.getOrElse(spark.read.parquet(files.head).schema)
+    val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     assignments.keys.foreach(c => require(schema.fieldNames.contains(c),
       s"updateWhereMoR: SET column '$c' not in ${schema.fieldNames.mkString(", ")}"))
     val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
@@ -2343,11 +2351,9 @@ object SnapshotManifest {
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"addColumns: no committed snapshot under $root"))
     val (body, meta) = manifestParts(spark, root, v)
-    val cur = meta.schema.getOrElse {
-      require(body.nonEmpty,
-        "addColumns: table has no data files and no recorded schema to widen")
-      spark.read.parquet(bodyFile(root, body.head)).schema
-    }
+    require(meta.schema.nonEmpty || body.nonEmpty,
+      "addColumns: table has no data files and no recorded schema to widen")
+    val cur = tableSchema(spark, root, meta.schema, body.headOption).get
     newCols.foreach { f =>
       require(f.nullable,
         s"addColumns: new column '${f.name}' must be nullable — existing rows have no values for it")
@@ -2393,8 +2399,7 @@ object SnapshotManifest {
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return v
     val entries = body.map(parseLine)
-    val schema = meta.schema.getOrElse(
-      spark.read.parquet(bodyFile(root, body.head)).schema)
+    val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     val resolved = statsCols.map(c =>
       schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -2413,10 +2418,8 @@ object SnapshotManifest {
     val targets = entries.filter(e => force ||
       !existing.get(name(e)).exists(fs => resolved.forall(fs.cols.contains)))
     if (targets.isEmpty) return v
-    val reader = meta.schema.map(spark.read.schema).getOrElse(spark.read)
     val fresh = ManifestStats.collect(
-      reader.parquet(targets.map(e =>
-        new Path(new Path(root), e.rel).toString): _*), resolved)
+      scanEntries(spark, root, targets, Some(schema)), resolved)
     // a scanned file absent from the aggregation is EMPTY — record rows=0
     // (prunable by construction), same as commit-time staging does
     val emptyStats = ManifestStats.FileStats(0L,
@@ -2553,8 +2556,7 @@ object SnapshotManifest {
       partitionCols = partitionCols.getOrElse(meta.partitionCols))
     if (next.bloomCols == meta.bloomCols && next.pk == meta.pk &&
       next.partitionCols == meta.partitionCols) return v
-    val schema = meta.schema.orElse(body.headOption.map(l =>
-      spark.read.parquet(bodyFile(root, l)).schema))
+    val schema = tableSchema(spark, root, meta.schema, body.headOption)
     schema.foreach { s =>
       (next.bloomCols.map(s"$op (bloom)" -> _) ++
         next.pk.map(s"$op (pk)" -> _)).foreach { case (what, c) =>
@@ -2923,7 +2925,7 @@ object SnapshotManifest {
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return v
     val files = body.map(bodyFile(root, _))
-    val schema = meta.schema.getOrElse(spark.read.parquet(files.head).schema)
+    val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     val stats = bodyStats(body)
     val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
     // DELETE-only fast path: a file whose stats PROVE every live row
@@ -3777,8 +3779,7 @@ object SnapshotManifest {
   private def requireAppendCompatible(spark: SparkSession, root: String,
       body: Seq[String], meta: TableMeta, df: DataFrame, op: String): Unit =
     requireAppendSchemaCompatible(
-      meta.schema.orElse(body.headOption.map(l =>
-        spark.read.parquet(bodyFile(root, l)).schema)), df, op)
+      tableSchema(spark, root, meta.schema, body.headOption), df, op)
 
   /** The schema-shaped half of [[requireAppendCompatible]], taking the
     * resolved table schema directly — the churn-bounded append path feeds

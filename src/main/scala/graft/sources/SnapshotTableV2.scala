@@ -97,11 +97,9 @@ final class SnapshotTable(
   private lazy val rowSchema: StructType =
     if (!exists)
       providedSchema.getOrElse(new StructType()) // pre-bootstrap CREATE/write
-    else meta.schema.getOrElse {
-      if (entries.isEmpty) providedSchema.getOrElse(new StructType())
-      else spark.read.parquet(
-        SnapshotManifest.bodyFile(root, entries.head.rel)).schema
-    }
+    else SnapshotManifest.tableSchema(spark, root, meta.schema,
+      entries.headOption.map(_.rel))
+      .getOrElse(providedSchema.getOrElse(new StructType()))
 
   override def name(): String =
     s"graft-snapshot.`$root`" + versionAsOf.map(v => s"@v$v").getOrElse("")
