@@ -23,7 +23,9 @@ object ProfileJobs {
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val cs = j.properties.getProperty("callSite.short", "?")
+        // the final stage's name carries the job's call site; Spark sets
+        // the `callSite.short` property only under an explicit setCallSite
+        val cs = j.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name)
         recs.put(j.jobId, Rec(j.jobId, cs,
           j.stageInfos.map(_.numTasks).sum, j.time))
         order.add(j.jobId)

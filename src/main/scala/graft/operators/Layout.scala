@@ -169,10 +169,15 @@ object Layout {
       if (meta.partitionCols.isEmpty) zOrderByN(base, zCols, bits, numFiles)
       else base.select(col("*"),
         SnapshotManifest.clusterSortMarker(zValueFor(base, zCols, bits)))
-    // MAINTENANCE commit: every table property (recorded schema, bloom,
-    // pk, partitioning, txn records) survives OPTIMIZE like stats do, and
-    // a concurrent append rebases on instead of failing the re-layout
-    SnapshotManifest.maintenanceCommit(spark, root, "optimizeSnapshot", v,
-      body, meta, frame, statsCols)
+    // MAINTENANCE commit: every table property (bloom, pk, partitioning,
+    // txn records) survives OPTIMIZE like stats do, the rewrite retires a
+    // recorded schema it materialized, and a concurrent append rebases on
+    // instead of failing the re-layout
+    SnapshotManifest.publishCommit(spark, root, "optimizeSnapshot", v,
+      Left(body), meta, SnapshotManifest.StagedCommit(removed = body,
+        added = SnapshotManifest.stageLines(spark, root, v + 1, Some(frame),
+          statsCols, meta)),
+      gate = None, emptySchema = meta.schema.orElse(Some(base.schema)),
+      retireSchema = true)
   }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 /** MERGE upsert (SURVEY §2.9, reference `utils.py:237-296`).
@@ -388,90 +390,88 @@ object Upsert {
       if (fastKeyPred.isEmpty && deleteUnmatched.isEmpty && stagedP.isEmpty)
         return v
       // deleteUnmatched touches every file by construction — no churn
-      // fast path, the text path below rewrites the full body
+      // fast path, the driver body below rewrites all of it
       val classified = if (deleteUnmatched.isDefined) None
       else fastKeyPred match {
         case Some(p) => SnapshotManifest.classifyAffected(spark, tableRoot, v, p)
         case None => SnapshotManifest.frameWithSchema(spark, tableRoot, v)
           .map { case (m, s, f) => (m, s, f, Nil: Seq[String]) }
       }
-      val fastResult = classified.map {
-        case (meta, targetSchema, frame, affectedLines) =>
-          pk.foreach(c => require(targetSchema.fieldNames.contains(c),
-            s"mergeWhere: PK column $c not in target schema " +
-              targetSchema.fieldNames.mkString(", ")))
-          val targetAffected =
-            if (affectedLines.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                targetSchema)
-            else SnapshotManifest.readEntries(spark, tableRoot,
-              affectedLines.map(SnapshotManifest.parseLine), meta.schema)
-          val merged = dropDeleted(
-            pickMerge(meta.colocatedMerge)(targetAffected, stagedP, pk))
-          val aligned = merged.select(targetSchema.fields.toSeq.map(f =>
-            col(s"`${f.name}`").cast(f.dataType).alias(f.name)): _*)
-          SnapshotManifest.publishVersionEditsRebased(spark,
-            tableRoot, v + 1, aligned, statsCols, frame, affectedLines,
-            "mergeWhere", meta,
-            ManifestStats.resolvePredicate(spark, targetSchema,
-              fastKeyPred.getOrElse(lit(false))))
+      def targetOk(schema: StructType): StructType = {
+        pk.foreach(c => require(schema.fieldNames.contains(c),
+          s"mergeWhere: PK column $c not in target schema " +
+            schema.fieldNames.mkString(", ")))
+        schema
       }
-      if (fastResult.isDefined) return fastResult.get
-      val (body, meta) = SnapshotManifest.manifestParts(spark, tableRoot, v)
-      if (body.isEmpty) {
-        // delete arms against an EMPTY table are no-ops; without staged
-        // rows there is nothing to commit at all
-        if (stagedP.isEmpty) return v
-        // degenerate current snapshot with zero data files (everything was
-        // deleted): the merge is just the staged rows — but still ALIGNED
-        // to the TABLE's schema, recovered from the most recent version
-        // that had files (publishing the staged frame verbatim would graft
-        // its bookkeeping columns/types — e.g. a stream's ts column — into
-        // the table). Only a table whose every retained version is empty
-        // (unreachable through this API: the bootstrap commit requires
-        // files) falls back to the staged schema.
-        // one directory listing yields the retained versions — never a
-        // per-version existence probe (a long-lived table can be at v≈1e5).
-        // A RECORDED schema (addColumns) on the current version is the
-        // table's declared shape and wins over file inference.
-        val tableSchema = meta.schema
-          .orElse(SnapshotManifest.listVersions(spark, tableRoot)
-            .filter(_ < v).reverseIterator
-            .map(SnapshotManifest.manifestBody(spark, tableRoot, _))
-            .collectFirst { case b if b.nonEmpty =>
-              SnapshotManifest.tableSchema(spark, tableRoot, None, b.headOption).get
-            })
-        val alignedStaged = tableSchema match {
-          case Some(ts) =>
-            ts.fieldNames.foreach(c => require(stagedP.columns.contains(c) ||
-              !pk.contains(c), s"mergeWhere: PK column $c not in staged schema"))
-            stagedP.select(ts.fields.toSeq.map(f =>
-              (if (stagedP.columns.contains(f.name)) col(s"`${f.name}`")
-               else lit(null)).cast(f.dataType).alias(f.name)): _*)
-          case None => stagedP
-        }
-        return SnapshotManifest.publishVersion(spark, tableRoot, v + 1,
-          alignedStaged, statsCols, Nil, "mergeWhere", meta)
+      // the candidate lines: classified on executors off the twin frame,
+      // else pruned from ONE driver manifest read
+      val (meta, targetSchema, base, affected) = classified match {
+        case Some((meta, schema, frame, affected)) =>
+          (meta, targetOk(schema), Right(frame): Either[Seq[String], DataFrame],
+            affected)
+        case None =>
+          val (body, meta) = SnapshotManifest.manifestParts(spark, tableRoot, v)
+          if (body.isEmpty) {
+            // delete arms against an EMPTY table are no-ops; without staged
+            // rows there is nothing to commit at all
+            if (stagedP.isEmpty) return v
+            // degenerate current snapshot with zero data files (everything
+            // was deleted): the merge is just the staged rows — but still
+            // ALIGNED to the TABLE's schema, recovered from the most recent
+            // version that had files (publishing the staged frame verbatim
+            // would graft its bookkeeping columns/types — e.g. a stream's
+            // ts column — into the table). Only a table whose every
+            // retained version is empty (unreachable through this API: the
+            // bootstrap commit requires files) falls back to the staged
+            // schema. One directory listing yields the retained versions —
+            // never a per-version existence probe (a long-lived table can
+            // be at v≈1e5). A RECORDED schema (addColumns) on the current
+            // version is the table's declared shape and wins over file
+            // inference.
+            val tableSchema = meta.schema
+              .orElse(SnapshotManifest.listVersions(spark, tableRoot)
+                .filter(_ < v).reverseIterator
+                .map(SnapshotManifest.manifestBody(spark, tableRoot, _))
+                .collectFirst { case b if b.nonEmpty =>
+                  SnapshotManifest.tableSchema(spark, tableRoot, None, b.headOption).get
+                })
+            val alignedStaged = tableSchema match {
+              case Some(ts) =>
+                ts.fieldNames.foreach(c => require(stagedP.columns.contains(c) ||
+                  !pk.contains(c), s"mergeWhere: PK column $c not in staged schema"))
+                stagedP.select(ts.fields.toSeq.map(f =>
+                  (if (stagedP.columns.contains(f.name)) col(s"`${f.name}`")
+                   else lit(null)).cast(f.dataType).alias(f.name)): _*)
+              case None => stagedP
+            }
+            // every winner line is a conflict (the always-true gate): the
+            // inserts were aligned against an empty table
+            return SnapshotManifest.publishCommit(spark, tableRoot, "mergeWhere",
+              v, Left(body), meta, SnapshotManifest.StagedCommit(added =
+                SnapshotManifest.stageLines(spark, tableRoot, v + 1,
+                  Some(alignedStaged), statsCols, meta)),
+              Some(Literal.TrueLiteral), emptySchema = Some(alignedStaged.schema))
+          }
+          val files = body.map(SnapshotManifest.bodyFile(tableRoot, _))
+          val targetSchema = targetOk(SnapshotManifest.tableSchema(spark,
+            tableRoot, meta.schema, body.headOption).get)
+          // NOTE on evolution: merge() itself already implements ANSI MERGE
+          // schema drift — a staged frame missing a (possibly just-added)
+          // target column keeps the target value on match and inserts
+          // null, and staged extras are dropped by the aligned select. No
+          // staged realignment is needed here; only the TARGET read must
+          // follow the declared schema.
+          val hit =
+            if (deleteUnmatched.isDefined) files.toSet // every file may hold an unmatched row
+            else fastKeyPred match {
+              case Some(p) => ManifestStats.prune(files,
+                SnapshotManifest.bodyStats(body),
+                ManifestStats.resolvePredicate(spark, targetSchema, p)).toSet
+              case None => Set.empty[String]
+            }
+          (meta, targetSchema, Left(body),
+            body.zip(files).collect { case (l, f) if hit(f) => l })
       }
-      val files = body.map(SnapshotManifest.bodyFile(tableRoot, _))
-      val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
-      pk.foreach(c => require(targetSchema.fieldNames.contains(c),
-        s"mergeWhere: PK column $c not in target schema ${targetSchema.fieldNames.mkString(", ")}"))
-      // NOTE on evolution: merge() itself already implements ANSI MERGE
-      // schema drift — a staged frame missing a (possibly just-added)
-      // target column keeps the target value on match and inserts null,
-      // and staged extras are dropped by the aligned select. No staged
-      // realignment is needed here; only the TARGET read must follow the
-      // declared schema.
-      val keyPred = fastKeyPred // computed once above; staged is pinned
-      val affected =
-        if (deleteUnmatched.isDefined) files.toSet // every file may hold an unmatched row
-        else keyPred match {
-          case Some(p) => ManifestStats.prune(files, SnapshotManifest.bodyStats(body),
-            ManifestStats.resolvePredicate(spark, targetSchema, p)).toSet
-          case None => Set.empty[String]
-        }
       // affected files read with their deletion vectors APPLIED — a
       // MoR-deleted row must not resurrect through the merge rewrite
       val targetAffected =
@@ -479,8 +479,7 @@ object Upsert {
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
         else SnapshotManifest.readEntries(spark, tableRoot,
-          body.map(SnapshotManifest.parseLine).zip(files)
-            .collect { case (e, f) if affected(f) => e }, meta.schema)
+          affected.map(SnapshotManifest.parseLine), meta.schema)
       // NOT-MATCHED-BY-SOURCE arm: drop target rows whose PK no source
       // row carries AND that satisfy the clause condition, BEFORE the
       // merge — the merge then only sees survivors. Membership is a
@@ -508,8 +507,6 @@ object Upsert {
       // top-level column, not parse as a nested-field path
       val aligned = merged.select(targetSchema.fields.toSeq.map(f =>
         col(s"`${f.name}`").cast(f.dataType).alias(f.name)): _*)
-      val removedLines = body.filter(line =>
-        affected.contains(SnapshotManifest.bodyFile(tableRoot, line))).toSet
       // rebase-aware publish: a lost race against a writer whose files are
       // disjoint from the merge's affected set AND whose new lines provably
       // hold none of the staged PKs re-publishes the staged rewrite in one
@@ -518,11 +515,14 @@ object Upsert {
       // deleteUnmatched inverts this: NO winner line can be proven
       // disjoint (its rows' fates depend on the source key set), so the
       // always-true predicate forces every race to refuse, never rebase.
-      SnapshotManifest.publishVersionRebased(spark, tableRoot, v + 1, aligned,
-        statsCols, body, removedLines, "mergeWhere", meta,
-        ManifestStats.resolvePredicate(spark, targetSchema,
+      SnapshotManifest.publishCommit(spark, tableRoot, "mergeWhere", v, base,
+        meta, SnapshotManifest.StagedCommit(removed = affected,
+          added = SnapshotManifest.stageLines(spark, tableRoot, v + 1,
+            Some(aligned), statsCols, meta)),
+        Some(ManifestStats.resolvePredicate(spark, targetSchema,
           if (deleteUnmatched.isDefined) lit(true)
-          else keyPred.getOrElse(lit(false))))
+          else fastKeyPred.getOrElse(lit(false)))),
+        emptySchema = Some(aligned.schema))
     } finally {
       stagedP.unpersist(false)
       deletesP.foreach(_.unpersist(false))
@@ -641,20 +641,19 @@ object Upsert {
       val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
       pk.foreach(c => require(targetSchema.fieldNames.contains(c),
         s"deleteKeys: PK column $c not in target schema ${targetSchema.fieldNames.mkString(", ")}"))
-      val affected = keyPred match {
-        case Some(p) => ManifestStats.prune(files, SnapshotManifest.bodyStats(body),
-          ManifestStats.resolvePredicate(spark, targetSchema, p)).toSet
-        case None => Set.empty[String]
-      }
+      // the key predicate prunes the files AND gates a lost race exactly
+      // as mergeWhere's: a winner line that may hold a doomed key refuses
+      val resolvedKey = ManifestStats.resolvePredicate(spark, targetSchema,
+        keyPred.get)
+      val hit = ManifestStats.prune(files, SnapshotManifest.bodyStats(body),
+        resolvedKey).toSet
+      val affected = body.zip(files).collect { case (l, f) if hit(f) => l }
       if (affected.isEmpty) return v
-      val keptLines = body.filterNot(line =>
-        affected.contains(SnapshotManifest.bodyFile(tableRoot, line)))
       // DV-applied read (MoR-deleted rows must not resurrect); keys join
       // BROADCAST — the frame is churn-sized by contract, and the anti-join
       // keeps the corpus side shuffle-free
       val target = SnapshotManifest.readEntries(spark, tableRoot,
-        body.map(SnapshotManifest.parseLine).zip(files)
-          .collect { case (e, f) if affected(f) => e }, meta.schema)
+        affected.map(SnapshotManifest.parseLine), meta.schema)
       var kp = "__dk_"
       while (pk.exists(c => target.columns.contains(kp + c))) kp += "_"
       val keyed = broadcast(keysP.select(pk.map(c =>
@@ -663,8 +662,11 @@ object Upsert {
           pk.map(c => col(s"`$c`") === col(s"$kp$c")).reduce(_ && _), "left_anti")
         .select(targetSchema.fields.toSeq.map(f =>
           col(s"`${f.name}`").cast(f.dataType).alias(f.name)): _*)
-      SnapshotManifest.publishVersion(spark, tableRoot, v + 1, survivors,
-        statsCols, keptLines, "deleteKeys", meta)
+      SnapshotManifest.publishCommit(spark, tableRoot, "deleteKeys", v,
+        Left(body), meta, SnapshotManifest.StagedCommit(removed = affected,
+          added = SnapshotManifest.stageLines(spark, tableRoot, v + 1,
+            Some(survivors), statsCols, meta)),
+        Some(resolvedKey), emptySchema = Some(survivors.schema))
     } finally keysP.unpersist(false)
   }
 
@@ -714,17 +716,22 @@ object Upsert {
         case None => Set.empty[String]
       }
       val affectedEntries = entries.zip(files).collect { case (e, f) if affected(f) => e }
-      def aligned(df: DataFrame): DataFrame =
-        df.select(targetSchema.fields.toSeq.map(f =>
+      // the merge output appends as new files; `retag` masks the matched
+      // rows of the affected files
+      def publish(appended: DataFrame, retag: Map[String, String]): Long = {
+        val aligned = appended.select(targetSchema.fields.toSeq.map(f =>
           col(s"`${f.name}`").cast(f.dataType).alias(f.name)): _*)
-      val emptyTarget = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
-      if (affectedEntries.isEmpty)
-        // no file can hold a staged key: every staged row is an insert
-        return SnapshotManifest.publishRetaggedRebased(spark, tableRoot,
-          "mergeWhereMoR", v, body, meta, Map.empty,
-          Some(aligned(merge(emptyTarget, stagedP, pk))), statsCols,
-          resolvedKey)
+        SnapshotManifest.publishCommit(spark, tableRoot, "mergeWhereMoR", v,
+          Left(body), meta, SnapshotManifest.StagedCommit(retag = retag,
+            added = SnapshotManifest.stageLines(spark, tableRoot, v + 1,
+              Some(aligned), statsCols, meta)),
+          Some(resolvedKey), emptySchema = Some(aligned.schema))
+      }
+      def insertsOnly: Long = publish(merge(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema),
+        stagedP, pk), Map.empty)
+      // no file can hold a staged key: every staged row is an insert
+      if (affectedEntries.isEmpty) return insertsOnly
       val oldDv =
         SnapshotManifest.entryDvPositionsDf(spark, tableRoot, affectedEntries)
           .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -746,11 +753,7 @@ object Upsert {
         // sidecar is written by a Spark job; the driver sees only counts
         // and the sidecar-mentioned basename set (same pipeline as
         // SnapshotManifest.deleteWhereMoR)
-        if (matchedTarget.isEmpty)
-          return SnapshotManifest.publishRetaggedRebased(spark, tableRoot,
-            "mergeWhereMoR", v, body, meta, Map.empty,
-            Some(aligned(merge(emptyTarget, stagedP, pk))), statsCols,
-            resolvedKey)
+        if (matchedTarget.isEmpty) return insertsOnly
         val newPositions = matchedTarget
           .select(col(fCol).alias("file_name"), col(rCol).alias("row_index"))
         val nNew = newPositions.count()
@@ -773,11 +776,8 @@ object Upsert {
         val dvFileNames = dvDf.select(col("file_name")).distinct()
           .collect().map(_.getString(0)).toSet // affected ∪ sidecar-sharing files
         val dvFile = SnapshotManifest.writeDvSidecar(spark, tableRoot, v + 1, dvDf)
-        SnapshotManifest.publishRetaggedRebased(spark, tableRoot,
-          "mergeWhereMoR", v, body, meta,
-          SnapshotManifest.retagMap(body, entries.zip(files), affected,
-            dvFileNames, dvFile),
-          Some(aligned(mergedAppend)), statsCols, resolvedKey)
+        publish(mergedAppend, SnapshotManifest.retagMap(body,
+          entries.zip(files), affected, dvFileNames, dvFile))
       } finally {
         matchedTarget.unpersist(false)
         oldDv.foreach(_.unpersist(false))

@@ -262,8 +262,9 @@ object ChangeFeed {
     * that outran the consumer) throws instead of silently feeding partial
     * changes downstream. Commits materialized under different schema
     * widths merge by name (an [[SnapshotManifest.addColumns]] widening
-    * adds nullable columns; parquet's by-name merge handles exactly that
-    * shape).
+    * adds nullable columns at the end): one footer per range directory,
+    * read on the driver, first-seen columns first — the schema parquet's
+    * `mergeSchema` infers, without its inference job.
     */
   def feed(spark: SparkSession, root: String,
       sinceVersion: Option[Long] = None,
@@ -273,9 +274,22 @@ object ChangeFeed {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         feedSchema(spark, root))
-    val rootPath = new Path(root)
-    spark.read.option("mergeSchema", "true").parquet(ranges.map { case (f, t) =>
-      new Path(rootPath, new Path("_cdf", dirName(f, t))).toString }: _*)
+    val (fs, rootPath) = SnapshotManifest.fsOf(spark, root)
+    val dirs = ranges.map { case (f, t) =>
+      new Path(rootPath, new Path("_cdf", dirName(f, t))) }
+    // the footer reads are small driver IO, issued together rather than
+    // one round-trip after another
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val footers = scala.concurrent.Future.traverse(dirs)(d =>
+      scala.concurrent.Future(scala.concurrent.blocking(
+        fs.listStatus(d).map(_.getPath).find(_.getName.endsWith(".parquet"))
+          .map(p => org.apache.spark.sql.graftbridge.ColumnBridge
+            .parquetFileSchema(spark, p.toString)))))
+    val schema = scala.concurrent.Await.result(footers,
+        scala.concurrent.duration.Duration.Inf).flatten
+      .reduceLeft((a, b) =>
+        StructType(a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name))))
+    spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
   }
 
   /** SQL table-valued function `table_changes(tableOrPath, fromVersion

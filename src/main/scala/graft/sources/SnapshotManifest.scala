@@ -406,23 +406,10 @@ object SnapshotManifest {
     }
   }
 
-  /** Tag the affected, position-holding lines with the new DV sidecar —
-    * the shared manifest-rewrite step of every MoR verb; untouched lines
-    * render verbatim. Takes the ALREADY-parsed (entry, absolute file)
-    * pairs every caller holds — no second body parse. `dvFileNames` is
-    * the (affected-file-bounded) set of data-file BASENAMES the sidecar
-    * holds positions for.
-    *
-    * DV identity is keyed by basename, so basenames must be unique across
-    * the whole manifest — Spark part-file UUIDs guarantee it in practice,
-    * but a violation would cross-mask rows between files, so it is
-    * ASSERTED here (driver-side, manifest already in memory) rather than
-    * trusted.
-    */
   /** The deletion-vector tagging step as a RAW-line → tagged-line map —
     * each affected file's line gains a `dv=` ref to the freshly-written
     * sidecar. A MAP (keys = the manifest's literal lines, not re-renders)
-    * because [[publishRetaggedRebased]] re-applies it onto a concurrent
+    * because [[publishCommit]] re-applies it onto a concurrent
     * winner's body on a rebase. Basename uniqueness is ASSERTED rather
     * than trusted: DV identity keys on basename, so a collision would
     * silently cross-assign one file's deleted positions to another.
@@ -668,6 +655,32 @@ object SnapshotManifest {
       removedRels.map(r => s"-\t$r") ++ upserts.map(l => s"+\t$l")
     def touchedRels: Seq[String] =
       (removedRels ++ upserts.map(relOf)).distinct
+  }
+
+  /** One staged snapshot write, typed against its base body: the base
+    * lines it drops (`removed`), the base lines it rewrites in place
+    * (`retag`: raw base line → new line for the same rel, a MoR verb's
+    * `dv=` tag), and the new lines it adds (`added`, from [[stageLines]]).
+    * Every content verb describes its commit this way, and
+    * [[publishCommit]] derives the composed body, the [[BodyEdits]] and
+    * the rebase gates from it.
+    */
+  private[graft] final case class StagedCommit(removed: Seq[String] = Nil,
+      retag: Map[String, String] = Map.empty, added: Seq[String] = Nil) {
+    private lazy val removedSet = removed.toSet
+    /** `base` with this commit applied, in the base's line order. */
+    def compose(base: Seq[String]): Seq[String] =
+      base.collect { case l if !removedSet(l) => retag.getOrElse(l, l) } ++ added
+    /** The same commit as edits: an upsert of a retagged rel replaces its
+      * line in place.
+      */
+    def edits: BodyEdits =
+      BodyEdits(removed.map(relOf), retag.values.toSeq ++ added)
+    /** Every base line the commit was computed from, by rel: a winner that
+      * touched one of them invalidates the staged work.
+      */
+    def mustSurvive: Map[String, String] =
+      (removed ++ retag.keys).map(l => relOf(l) -> l).toMap
   }
 
   /** Diagnostic counter: commits published through the churn-bounded edits
@@ -1954,67 +1967,6 @@ object SnapshotManifest {
     Some(acc.asScala.toSeq)
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** [[rebaseLoop]]'s churn-bounded twin: the same soundness gates — winner
-    * metadata unchanged (header-only), every `mustSurvive` line untouched,
-    * every winner-added/changed line passes `winnerLineOk`, composed
-    * basenames unique — evaluated from the delta TAILS and a broadcast
-    * join over the winner's body frame, never a driver body. Anything
-    * unprovable (a boundary in the window, a twin-less winner) rethrows
-    * for the caller's full re-run; correctness never depends on this path.
-    */
-  private def rebaseLoopEdits(spark: SparkSession, root: String, op: String,
-      baseVersion: Long, frame0: DataFrame, edits: BodyEdits,
-      meta: TableMeta, gateMeta: TableMeta,
-      mustSurvive: Map[String, String], winnerLineOk: String => Boolean,
-      emptySchema: Option[StructType], maxRebases: Int = 5): Long = {
-    var v = baseVersion
-    var frame = frame0
-    var curMeta = meta
-    var attempts = 0
-    while (true) {
-      // THE EMPTYING CONTRACT on the composed FINAL body ([[rebaseLoop]]):
-      // only a pure-removal edit set can empty it — one distributed count
-      // answers whether it does, and only that narrow shape pays it
-      val pubMeta =
-        if (edits.upserts.nonEmpty || edits.removedRels.isEmpty ||
-            curMeta.schema.nonEmpty) curMeta
-        else if (frame.count() > edits.removedRels.size) curMeta
-        else curMeta.copy(schema = Some(emptySchema.getOrElse(
-          throw new IllegalStateException(
-            s"$op: rewrite would publish an empty snapshot with no " +
-              s"resolvable schema for $root — refusing to brick the table"))))
-      try return publishEdits(spark, root, v + 1, frame, edits, op, pubMeta)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > maxRebases) throw e
-          val wv = currentVersion(spark, root).getOrElse(throw e)
-          val tail = tailEditsBetween(spark, root, v, wv).getOrElse(throw e)
-          val wMeta =
-            try manifestMetaOnly(spark, root, wv)
-            catch { case scala.util.control.NonFatal(_) => throw e }
-          // TXN records adopt from the winner, everything else must match
-          // exactly ([[rebaseLoop]]'s gate, for the same reasons)
-          val metaOk =
-            wMeta.copy(txns = Map.empty) == gateMeta.copy(txns = Map.empty)
-          val surviveOk = tail.forall { case (rel, fin) =>
-            mustSurvive.get(rel).forall(line => fin.contains(line)) }
-          val winnerOk = tail.forall { case (_, fin) => fin.forall(winnerLineOk) }
-          if (!(metaOk && surviveOk && winnerOk)) throw e
-          val wFrame = bodyLinesFrame(spark, root, wv).getOrElse(throw e)
-          if (!editsBasenamesUnique(spark, wFrame, edits)) throw e
-          curMeta = meta.copy(txns = wMeta.txns)
-          graft.core.Logging.logger().info(
-            s"$op: lost the race for version ${v + 1} on $root — winner is " +
-              s"file-disjoint and predicate-disjoint (proven from its delta " +
-              s"tail), rebasing the staged work onto version $wv")
-          v = wv
-          frame = wFrame
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** [[distributedClassify]] for callers outside this object (the keyed
     * MERGE): `(meta, schema, body frame, affected lines)` — the MAY-match
     * candidates only, churn-sized for a selective predicate.
@@ -2038,26 +1990,6 @@ object SnapshotManifest {
       val meta = manifestMetaOnly(spark, root, version)
       frameSchema(spark, root, meta, frame).map(s => (meta, s, frame))
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** [[publishVersionRebased]]'s churn-bounded twin: stage `df` once, then
-    * publish through [[rebaseLoopEdits]] — removed lines become `-` ops,
-    * staged lines `+` ops, and a lost race gates through the winner's
-    * delta tail instead of a driver body.
-    */
-  private[graft] def publishVersionEditsRebased(spark: SparkSession,
-      root: String, next: Long, df: DataFrame, statsCols: Seq[String],
-      frame: DataFrame, removedLines: Seq[String], op: String,
-      meta: TableMeta,
-      resolved: org.apache.spark.sql.catalyst.expressions.Expression): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
-    val (_, newLines) = writeDataFiles(spark, fs, rootPath, next, df,
-      statsCols, meta)
-    rebaseLoopEdits(spark, root, op, next - 1, frame,
-      BodyEdits(removedLines.map(relOf), newLines), meta, meta,
-      mustSurvive = removedLines.map(l => relOf(l) -> l).toMap,
-      winnerLineOk = statsDisjoint(resolved),
-      emptySchema = Some(df.schema))
-  }
 
   private[graft] def manifestBody(spark: SparkSession, root: String,
       version: Long): Seq[String] =
@@ -2111,20 +2043,6 @@ object SnapshotManifest {
       : Map[String, ManifestStats.FileStats] =
     entries.flatMap(e =>
       e.stats.map(json => new Path(e.rel).getName -> ManifestStats.fromJson(json))).toMap
-
-  /** Stage `df` and atomically publish it as version `next` together with
-    * `keptLines` carried verbatim — the copy-on-write commit entry point
-    * for operators OUTSIDE this object ([[graft.operators.Upsert.mergeWhere]]);
-    * [[deleteWhere]]/[[updateWhere]] go through the same path internally.
-    */
-  private[graft] def publishVersion(spark: SparkSession, root: String,
-      next: Long, df: DataFrame, statsCols: Seq[String],
-      keptLines: Seq[String], op: String,
-      meta: TableMeta): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
-    stageAndPublish(spark, fs, rootPath, next, df, statsCols, keptLines,
-      op, requireFiles = false, meta = meta)
-  }
 
   /** MERGE-ON-READ DELETE — [[deleteWhere]]'s deferred twin (Delta/Iceberg
     * deletion vectors, on this engine's manifest): instead of rewriting
@@ -2208,9 +2126,10 @@ object SnapshotManifest {
       val dvFileNames = dvDf.select(col("file_name")).distinct()
         .collect().map(_.getString(0)).toSet
       val dvFile = writeDvSidecar(spark, root, v + 1, dvDf)
-      publishRetaggedRebased(spark, root, "deleteWhereMoR", v, body, meta,
-        retagMap(body, entriesWithFiles, affected, dvFileNames, dvFile),
-        None, Nil, resolved)
+      publishCommit(spark, root, "deleteWhereMoR", v, Left(body), meta,
+        StagedCommit(retag =
+          retagMap(body, entriesWithFiles, affected, dvFileNames, dvFile)),
+        Some(resolved), emptySchema = Some(schema))
     } finally {
       newMatches.unpersist(false)
       oldDv.foreach(_.unpersist(false))
@@ -2283,9 +2202,11 @@ object SnapshotManifest {
       val dvFileNames = dvDf.select(col("file_name")).distinct()
         .collect().map(_.getString(0)).toSet // affected ∪ sidecar-sharing files
       val dvFile = writeDvSidecar(spark, root, v + 1, dvDf)
-      publishRetaggedRebased(spark, root, "updateWhereMoR", v, body, meta,
-        retagMap(body, entriesWithFiles, affected, dvFileNames, dvFile),
-        Some(postImages), statsCols, resolved)
+      publishCommit(spark, root, "updateWhereMoR", v, Left(body), meta,
+        StagedCommit(
+          retag = retagMap(body, entriesWithFiles, affected, dvFileNames, dvFile),
+          added = stageLines(spark, root, v + 1, Some(postImages), statsCols, meta)),
+        Some(resolved), emptySchema = Some(schema))
     } finally {
       matched.unpersist(false)
       oldDv.foreach(_.unpersist(false))
@@ -2299,22 +2220,25 @@ object SnapshotManifest {
     * carries a DV. Stats are INHERITED by default (`None` — the columns
     * the current manifest records, as [[compactSnapshot]] does), so
     * routine maintenance never silently strips pruning power; pass
-    * `Some(cols)` to change the set or `Some(Nil)` to drop stats.
+    * `Some(cols)` to change the set or `Some(Nil)` to drop stats. A lost
+    * race rebases like [[compactSmallFiles]]: a concurrent append carries
+    * onto the folded body, a concurrent touch of a DV'd file re-runs.
     */
   def foldDeletes(spark: SparkSession, root: String,
       statsCols: Option[Seq[String]] = None): Long = {
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"foldDeletes: no committed snapshot under $root"))
     val (body, meta) = manifestParts(spark, root, v)
-    val entries = body.map(parseLine)
-    val dvd = entries.filter(_.dvRel.isDefined)
+    val (dvd, dvdLines) = body.map(parseLine).zip(body)
+      .filter(_._1.dvRel.isDefined).unzip
     if (dvd.isEmpty) return v
     val cols = statsCols.getOrElse(bodyStats(body)
       .values.flatMap(_.cols.keys).toSeq.distinct.sorted)
-    val keptLines = entries.filter(_.dvRel.isEmpty).map(_.render)
-    publishVersion(spark, root, v + 1,
-      readEntries(spark, root, dvd, meta.schema),
-      cols, keptLines, "foldDeletes", meta)
+    val folded = readEntries(spark, root, dvd, meta.schema)
+    publishCommit(spark, root, "foldDeletes", v, Left(body), meta,
+      StagedCommit(removed = dvdLines,
+        added = stageLines(spark, root, v + 1, Some(folded), cols, meta)),
+      gate = None, emptySchema = Some(folded.schema))
   }
 
   /** METADATA-ONLY widening schema evolution (Delta's ALTER TABLE ADD
@@ -2686,46 +2610,203 @@ object SnapshotManifest {
 
   /** The shared copy-on-write rewrite under [[deleteWhere]]/[[updateWhere]]:
     * stats-prune the affected files, apply `transform` to their rows,
-    * commit kept manifest lines (verbatim) + the rewritten files. ONE
-    * manifest read answers files, stats, and kept lines; the predicate
-    * schema resolves from a single file (every file of a snapshot shares
-    * it) — at 100k files the driver never lists the unaffected ones.
+    * commit kept manifest lines (verbatim) + the rewritten files. The
+    * candidate lines come from the twin-anchored frame when one exists
+    * (classified on executors; the driver receives only the lines the verb
+    * must touch, whatever the table size), else from ONE driver manifest
+    * read; the predicate schema resolves from the header or a single
+    * footer (every file of a snapshot shares it).
     */
-  /** Publish a copy-on-write rewrite — `baseBody` minus `removedLines`
-    * plus the staged `newLines` — REBASING onto a concurrent winner when
-    * provably sound instead of discarding the staged work. Optimistic
-    * concurrency in the Delta mold: N pipelines running DML against
-    * DISJOINT file sets (the common shape — per-partition backfills) each
-    * stage their rewrite exactly once, and a lost race costs one manifest
-    * round-trip, not a re-read + re-write of the churn.
+  private def rewriteWhere(spark: SparkSession, root: String,
+      predicate: org.apache.spark.sql.Column, statsCols: Seq[String],
+      op: String, transform: DataFrame => DataFrame,
+      dropProven: Boolean = false): Long = {
+    val v = currentVersion(spark, root).getOrElse(
+      throw new IllegalStateException(s"$op: no committed snapshot under $root"))
+    val (meta, schema, resolved, base, affected, dropped) =
+      distributedClassify(spark, root, v, predicate, dropProven) match {
+        case Some((meta, schema, frame, affected, dropped)) =>
+          (meta, schema, ManifestStats.resolvePredicate(spark, schema, predicate),
+            Right(frame), affected, dropped)
+        case None =>
+          val (body, meta) = manifestParts(spark, root, v)
+          if (body.isEmpty) return v
+          val files = body.map(bodyFile(root, _))
+          val schema = tableSchema(spark, root, meta.schema, body.headOption).get
+          val stats = bodyStats(body)
+          val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
+          // DELETE-only fast path: a file whose stats PROVE every live row
+          // matches ([[ManifestStats.mustMatch]]) is deleted by DROPPING its
+          // manifest line — no byte of it is read or rewritten. With a
+          // partition-clustered layout ([[setPartitionColumns]] makes every
+          // file single-valued in the partition columns) this is Delta's
+          // "DELETE WHERE partition = x" metadata-only drop: the same cost
+          // at 100 rows as at 100 TB. Sound for DV'd files (live rows are a
+          // subset of the rows the stats describe).
+          val drop: Set[String] =
+            if (!dropProven) Set.empty
+            else ManifestStats.pruneProven(files, stats, resolved).toSet
+          val hit = ManifestStats.prune(files, stats, resolved).toSet -- drop
+          val lines = body.zip(files)
+          (meta, schema, resolved, Left(body),
+            lines.collect { case (l, f) if hit(f) => l },
+            lines.collect { case (l, f) if drop(f) => l })
+      }
+    if (affected.isEmpty && dropped.isEmpty) return v // no file can match
+    // affected files read with their DVs APPLIED (already-MoR-deleted rows
+    // must not resurrect); the rewrite output is DV-free by construction.
+    // An empty `affected` is a METADATA-ONLY commit (every candidate file
+    // proven whole-match): nothing is staged. Staged ONCE: a lost race
+    // against a non-conflicting writer re-publishes these exact files
+    val added = stageLines(spark, root, v + 1,
+      Option.when(affected.nonEmpty)(
+        transform(readEntries(spark, root, affected.map(parseLine), meta.schema))),
+      statsCols, meta)
+    // removed lines drop; everything else carries over verbatim (path,
+    // stats AND any dv ref)
+    publishCommit(spark, root, op, v, base, meta,
+      StagedCommit(removed = affected ++ dropped, added = added),
+      Some(resolved), emptySchema = Some(schema))
+  }
+
+  /** Stage the optional `df` for version `next` and return the manifest
+    * lines it adds (Nil without a frame) — the one staging step in front
+    * of every [[publishCommit]].
+    */
+  private[graft] def stageLines(spark: SparkSession, root: String, next: Long,
+      df: Option[DataFrame], statsCols: Seq[String],
+      meta: TableMeta): Seq[String] =
+    df.fold(Seq.empty[String])(writeDataFiles(spark, root, next, _, statsCols, meta))
+
+  /** Bounded rebases per [[publishCommit]] before the lost race surfaces. */
+  private val MaxRebases = 5
+
+  /** Publish a [[StagedCommit]] as version `baseVersion + 1`, REBASING it
+    * onto a concurrent winner when provably sound instead of discarding
+    * the staged work — THE conflict loop of every content verb.
+    * Optimistic concurrency in the Delta mold: N pipelines running DML
+    * against DISJOINT file sets (the common shape — per-partition
+    * backfills) each stage their rewrite exactly once, and a lost race
+    * costs one manifest round-trip, not a re-read + re-write of the churn.
     *
-    * The rebase is taken only when the serial order (winner, then this
-    * verb) provably produces the same table:
-    *   - the winner's METADATA equals ours (a schema/partition/pk/bloom
-    *     change may invalidate the staged layout);
-    *   - every line we REMOVE is still in the winner's body verbatim
-    *     (path + stats + dv ref — any touch means our staged rewrite was
-    *     computed from superseded rows);
-    *   - every line the winner ADDED or CHANGED carries stats that PROVE
-    *     our predicate matches none of its rows ([[ManifestStats
-    *     .mayMatch]] false — a stats-less line is conservatively a
-    *     conflict). Otherwise a rebased DELETE/UPDATE/MERGE would skip
-    *     rows a serial re-run would have processed.
+    * `base` is the body the commit was computed from, in either form: the
+    * driver lines (published whole through [[publishLines]]) or the
+    * twin-anchored frame from [[bodyLinesFrame]] (published as churn-sized
+    * edits through [[publishEdits]], the body never on the driver). A
+    * first, uncontended attempt does nothing else.
     *
+    * On a loss the rebase is taken only when the serial order (winner,
+    * then this verb) provably produces the same table. The winner's diff
+    * against the base comes from its delta TAILS ([[tailEditsBetween]],
+    * frame form) or its full body (driver form), and then:
+    *   - the winner's METADATA equals `meta` up to txn records (a
+    *     schema/partition/pk/bloom change may invalidate the staged
+    *     layout; txn records are ADOPTED from the winner — an idempotent
+    *     append's (appId → version) map is monotone bookkeeping this verb
+    *     doesn't touch, and dropping it would re-open the winner's
+    *     exactly-once window);
+    *   - every removed or retagged base line is still in the winner's body
+    *     verbatim (path + stats + dv ref — any touch means the staged work
+    *     was computed from superseded rows);
+    *   - every line the winner ADDED or CHANGED passes `gate`: its stats
+    *     PROVE the resolved predicate matches none of its rows
+    *     ([[statsDisjoint]] — a stats-less line is conservatively a
+    *     conflict), else a rebased DELETE/UPDATE/MERGE would skip rows a
+    *     serial re-run would have processed. `None` is the maintenance
+    *     gate: compaction and OPTIMIZE have no predicate, so a concurrent
+    *     APPEND never conflicts with them (Delta's
+    *     OPTIMIZE-commutes-with-ingest property);
+    *   - the rebased manifest keeps BASENAMES unique manifest-wide (DV and
+    *     stats identity key on basename — a collision between a
+    *     winner-added file and a staged/DV-referenced one would silently
+    *     cross-mask rows), checked by a broadcast join on the frame form.
     * Anything unprovable rethrows [[ConcurrentCommitException]] for the
     * caller's full re-run ([[retryOnConflict]]) — correctness never
     * depends on the fast path.
+    *
+    * `retireSchema` drops the recorded schema from the published header
+    * (a full maintenance rewrite MATERIALIZES any declared widening into
+    * its files); the gate still compares the winner against `meta` — a
+    * winner APPEND on a schema-declared table still commutes, and
+    * retiring remains sound because appendRows enforces the exact declared
+    * column set on every appended file.
     */
-  private def publishRebased(spark: SparkSession, root: String, op: String,
-      baseVersion: Long, baseBody: Seq[String], baseMeta: TableMeta,
-      removedLines: Set[String], newLines: Seq[String],
-      resolved: org.apache.spark.sql.catalyst.expressions.Expression,
-      emptySchema: Option[StructType],
-      maxRebases: Int = 5): Long =
-    rebaseLoop(spark, root, op, baseVersion, baseBody, baseMeta, baseMeta,
-      mustSurvive = removedLines,
-      composeLines = b => b.filterNot(removedLines) ++ newLines,
-      winnerLineOk = statsDisjoint(resolved), emptySchema, maxRebases)
+  private[graft] def publishCommit(spark: SparkSession, root: String,
+      op: String, baseVersion: Long, base: Either[Seq[String], DataFrame],
+      meta: TableMeta, commit: StagedCommit,
+      gate: Option[org.apache.spark.sql.catalyst.expressions.Expression],
+      emptySchema: Option[StructType], retireSchema: Boolean = false): Long = {
+    lazy val edits = commit.edits
+    val outMeta = if (retireSchema) meta.copy(schema = None) else meta
+    var v = baseVersion
+    var body = base
+    var curMeta = outMeta
+    var attempts = 0
+    while (true) {
+      val composed = body.left.map(commit.compose)
+      // THE EMPTYING CONTRACT lives here, on the FINAL composed body — a
+      // pre-rebase caller cannot know it (two concurrent verbs that
+      // jointly empty a table, neither individually, would compose an
+      // empty schema-less manifest no read can ever resolve; conversely
+      // an emptying verb rebasing over an append must NOT record a
+      // schema onto a no-longer-empty body). On the frame form only a
+      // pure-removal edit set can empty it, and one distributed count
+      // answers whether it does. An empty body with no schema to record
+      // fails loudly rather than bricking the table.
+      def empties = composed match {
+        case Left(lines) => lines.isEmpty
+        case Right(frame) => edits.upserts.isEmpty &&
+          edits.removedRels.nonEmpty && frame.count() <= edits.removedRels.size
+      }
+      val pubMeta =
+        if (curMeta.schema.nonEmpty || !empties) curMeta
+        else curMeta.copy(schema = Some(emptySchema.getOrElse(
+          throw new IllegalStateException(
+            s"$op: rewrite would publish an empty snapshot with no " +
+              s"resolvable schema for $root — refusing to brick the table"))))
+      try return composed match {
+        case Left(lines) => publishLines(spark, root, v + 1, lines, op, pubMeta)
+        case Right(frame) =>
+          publishEdits(spark, root, v + 1, frame, edits, op, pubMeta)
+      } catch {
+        case e: ConcurrentCommitException =>
+          attempts += 1
+          if (attempts > MaxRebases) throw e
+          val wv = currentVersion(spark, root).getOrElse(throw e)
+          // the winner's diff against our base (rel → its final line, None
+          // when removed), its metadata, and its body as the next base —
+          // resolved only once the cheaper gates pass
+          val (diff, wMeta, rebased) = body match {
+            case Left(lines) =>
+              val (wBody, wMeta) = manifestParts(spark, root, wv)
+              (bodyDiff(lines, wBody), wMeta, () =>
+                Option.when(duplicateBasenames(commit.compose(wBody)).isEmpty)(
+                  Left(wBody)))
+            case Right(_) =>
+              val tail = tailEditsBetween(spark, root, v, wv).getOrElse(throw e)
+              val wMeta =
+                try manifestMetaOnly(spark, root, wv)
+                catch { case scala.util.control.NonFatal(_) => throw e }
+              (tail, wMeta, () => bodyLinesFrame(spark, root, wv)
+                .filter(editsBasenamesUnique(spark, _, edits)).map(Right(_)))
+          }
+          val mustSurvive = commit.mustSurvive
+          val sound =
+            wMeta.copy(txns = Map.empty) == meta.copy(txns = Map.empty) &&
+            diff.forall { case (rel, fin) =>
+              mustSurvive.get(rel).forall(line => fin.contains(line)) } &&
+            diff.forall(_._2.forall(line => gate.forall(statsDisjoint(_)(line))))
+          body = (if (sound) rebased() else None).getOrElse(throw e)
+          curMeta = outMeta.copy(txns = wMeta.txns)
+          graft.core.Logging.logger().info(
+            s"$op: lost the race for version ${v + 1} on $root — winner is " +
+              s"file-disjoint and predicate-disjoint, rebasing the staged " +
+              s"work onto version $wv")
+          v = wv
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
 
   /** The winner-added-line gate for PREDICATED rebases: the line's stats
     * must PROVE the verb's predicate matches none of its rows (stats-less
@@ -2737,246 +2818,29 @@ object SnapshotManifest {
     parseLine(line).stats.exists(json =>
       !ManifestStats.mayMatch(resolved, ManifestStats.fromJson(json)))
 
-  /** Maintenance (compaction / OPTIMIZE ZORDER) commit point: the verb
-    * rewrites exactly the base body into `newLines`, carrying ANY
-    * winner-added lines verbatim — maintenance has no predicate, so a
-    * concurrent APPEND never conflicts with it (Delta's
-    * OPTIMIZE-commutes-with-ingest property). A winner that REWROTE or
-    * removed one of the base lines (DML, another maintenance run) is a
-    * genuine conflict — the staged rewrite was computed from superseded
-    * rows — and rethrows for the caller's full re-run.
+  /** `winner`'s diff against `base` as [[tailEditsBetween]] shapes it: rel
+    * → the winner's line where it added or changed one, None where it
+    * removed the rel.
     */
-  private[graft] def publishMaintenanceRebased(spark: SparkSession,
-      root: String, op: String, baseVersion: Long, baseBody: Seq[String],
-      outMeta: TableMeta, gateMeta: TableMeta, newLines: Seq[String],
-      emptySchema: Option[StructType], maxRebases: Int = 5): Long = {
-    val baseSet = baseBody.toSet
-    // outMeta is the caller's retire-the-schema decision
-    // ([[maintenanceCommit]]); the GATE compares the winner against the
-    // PRE-decision meta — a winner APPEND on a schema-declared table
-    // still commutes, and retiring remains sound because appendRows
-    // enforces the exact declared column set on every appended file.
-    rebaseLoop(spark, root, op, baseVersion, baseBody, outMeta, gateMeta,
-      mustSurvive = baseSet,
-      composeLines = b => b.filterNot(baseSet) ++ newLines,
-      winnerLineOk = _ => true, emptySchema, maxRebases)
-  }
-
-  /** The ONE rebase state machine both commit points share
-    * ([[publishRebased]] removes+adds lines, [[publishRetaggedRebased]]
-    * mutates them) — a soundness-gate fix here covers both. Gates, all
-    * conservative (anything unprovable rethrows for the caller's full
-    * re-run): winner metadata unchanged; every line in `mustSurvive`
-    * still in the winner's body VERBATIM; every winner-added/changed
-    * line passes `winnerLineOk` ([[statsDisjoint]] for predicated DML,
-    * always-true for predicate-free maintenance); and the candidate
-    * rebased manifest keeps BASENAMES unique manifest-wide (DV and stats
-    * identity key on basename — a collision between a winner-added file
-    * and a staged/DV-referenced one would silently cross-mask rows, the
-    * exact hazard the MoR tagging asserts against on the base body).
-    */
-  private def rebaseLoop(spark: SparkSession, root: String, op: String,
-      baseVersion: Long, baseBody: Seq[String], meta: TableMeta,
-      gateMeta: TableMeta,
-      mustSurvive: Set[String], composeLines: Seq[String] => Seq[String],
-      winnerLineOk: String => Boolean, emptySchema: Option[StructType],
-      maxRebases: Int): Long = {
-    val baseSet = baseBody.toSet
-    var v = baseVersion
-    var body = baseBody
-    var curMeta = meta
-    var attempts = 0
-    while (true) {
-      val lines = composeLines(body)
-      // THE EMPTYING CONTRACT lives here, on the FINAL composed body — a
-      // pre-rebase caller cannot know it (two concurrent verbs that
-      // jointly empty a table, neither individually, would compose an
-      // empty schema-less manifest no read can ever resolve; conversely
-      // an emptying verb rebasing over an append must NOT record a
-      // schema onto a no-longer-empty body). An empty body with no
-      // schema to record fails loudly rather than bricking the table.
-      val pubMeta =
-        if (lines.nonEmpty || curMeta.schema.nonEmpty) curMeta
-        else curMeta.copy(schema = Some(emptySchema.getOrElse(
-          throw new IllegalStateException(
-            s"$op: rewrite would publish an empty snapshot with no " +
-              s"resolvable schema for $root — refusing to brick the table"))))
-      try return publishLines(spark, root, v + 1, lines, op, pubMeta)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > maxRebases) throw e
-          val wv = currentVersion(spark, root).getOrElse(throw e)
-          val (wBody, wMeta) = manifestParts(spark, root, wv)
-          val wSet = wBody.toSet
-          def uniqueBasenames: Boolean = {
-            val names = composeLines(wBody)
-              .map(l => new Path(parseLine(l).rel).getName)
-            names.distinct.size == names.size
-          }
-          // TXN records are compared out and carried IN from the winner:
-          // an idempotent append's (appId → version) map is monotone
-          // bookkeeping this verb doesn't touch, so the rebase must adopt
-          // the winner's records — dropping them would re-open the
-          // winner's exactly-once window. Everything else in the metadata
-          // must match exactly.
-          val sound =
-            wMeta.copy(txns = Map.empty) == gateMeta.copy(txns = Map.empty) &&
-            mustSurvive.forall(wSet.contains) &&
-            wBody.filterNot(baseSet).forall(winnerLineOk) &&
-            uniqueBasenames
-          if (!sound) throw e
-          curMeta = meta.copy(txns = wMeta.txns)
-          graft.core.Logging.logger().info(
-            s"$op: lost the race for version ${v + 1} on $root — winner is " +
-              s"file-disjoint and predicate-disjoint, rebasing the staged " +
-              s"work onto version $wv")
-          v = wv
-          body = wBody
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** The merge-on-read commit point with the same file-disjoint rebase as
-    * [[publishRebased]]: the MoR verbs MUTATE lines (a new `dv=` ref on
-    * each affected file) rather than remove+add, so the rebase carries the
-    * winner's body and re-applies the `retag` map (old raw line →
-    * dv-tagged line). Sound under the same gates — the winner's metadata
-    * is unchanged, every retagged line's OLD form is still in the winner's
-    * body verbatim (a fold/rewrite of an affected file invalidates the
-    * staged positions), and the winner's added/changed lines are
-    * stats-proven disjoint from the predicate (else the mask would miss
-    * rows a serial re-run had masked). The optional `appendDf`
-    * ([[updateWhereMoR]]'s post-images) stages exactly once.
-    */
-  private[graft] def publishRetaggedRebased(spark: SparkSession, root: String,
-      op: String, baseVersion: Long, baseBody: Seq[String], meta: TableMeta,
-      retag: Map[String, String], appendDf: Option[DataFrame],
-      statsCols: Seq[String],
-      resolved: org.apache.spark.sql.catalyst.expressions.Expression,
-      maxRebases: Int = 5): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
-    val staged = appendDf match {
-      case Some(df) =>
-        writeDataFiles(spark, fs, rootPath, baseVersion + 1, df, statsCols,
-          meta)._2
-      case None => Nil
-    }
-    // retagging never REMOVES lines, so the composed body can only empty
-    // when the base was already empty (the MoR verbs return early there);
-    // appendDf's schema is still the right record if it ever does
-    rebaseLoop(spark, root, op, baseVersion, baseBody, meta, meta,
-      mustSurvive = retag.keySet,
-      composeLines = b => b.map(l => retag.getOrElse(l, l)) ++ staged,
-      winnerLineOk = statsDisjoint(resolved),
-      emptySchema = appendDf.map(_.schema), maxRebases)
-  }
-
-  /** [[publishVersion]]'s rebase-aware twin: stage `df` once, then publish
-    * through [[publishRebased]] — the keyed-MERGE commit point
-    * ([[graft.operators.Upsert.mergeWhere]]), whose conflict predicate is
-    * the staged batch's PK-prune predicate.
-    */
-  private[graft] def publishVersionRebased(spark: SparkSession, root: String,
-      next: Long, df: DataFrame, statsCols: Seq[String],
-      baseBody: Seq[String], removedLines: Set[String], op: String,
-      meta: TableMeta,
-      resolved: org.apache.spark.sql.catalyst.expressions.Expression): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
-    val (_, newLines) = writeDataFiles(spark, fs, rootPath, next, df,
-      statsCols, meta)
-    publishRebased(spark, root, op, next - 1, baseBody, meta, removedLines,
-      newLines, resolved, emptySchema = Some(df.schema))
-  }
-
-  private def rewriteWhere(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column, statsCols: Seq[String],
-      op: String, transform: DataFrame => DataFrame,
-      dropProven: Boolean = false): Long = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"$op: no committed snapshot under $root"))
-    // CHURN-BOUNDED fast path: with a twin-anchored body, candidate
-    // classification runs on executors (the driver receives only the
-    // lines the verb must touch), the commit publishes as edits, and a
-    // lost race rebases through the delta-tail gates — the full file
-    // list never materializes on the driver, whatever the table size.
-    distributedClassify(spark, root, v, predicate, dropProven) match {
-      case Some((meta, schema, frame, affected, dropped)) =>
-        if (affected.isEmpty && dropped.isEmpty) return v // no file can match
-        val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
-        val touched = affected ++ dropped
-        val newLines =
-          if (affected.isEmpty) Nil // metadata-only proven drop
-          else {
-            val (fsW, rootPathW) = fsOf(spark, root)
-            writeDataFiles(spark, fsW, rootPathW, v + 1,
-              transform(readEntries(spark, root, affected.map(parseLine),
-                meta.schema)),
-              statsCols, meta)._2
-          }
-        return rebaseLoopEdits(spark, root, op, v, frame,
-          BodyEdits(touched.map(relOf), newLines), meta, meta,
-          mustSurvive = touched.map(l => relOf(l) -> l).toMap,
-          winnerLineOk = statsDisjoint(resolved),
-          emptySchema = Some(schema))
-      case None => ()
-    }
-    val (body, meta) = manifestParts(spark, root, v)
-    if (body.isEmpty) return v
-    val files = body.map(bodyFile(root, _))
-    val schema = tableSchema(spark, root, meta.schema, body.headOption).get
-    val stats = bodyStats(body)
-    val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
-    // DELETE-only fast path: a file whose stats PROVE every live row
-    // matches ([[ManifestStats.mustMatch]]) is deleted by DROPPING its
-    // manifest line — no byte of it is read or rewritten. With a
-    // partition-clustered layout ([[setPartitionColumns]] makes every
-    // file single-valued in the partition columns) this is Delta's
-    // "DELETE WHERE partition = x" metadata-only drop: the same cost at
-    // 100 rows as at 100 TB. Sound for DV'd files (live rows are a
-    // subset of the rows the stats describe).
-    val dropped: Set[String] =
-      if (!dropProven) Set.empty
-      else ManifestStats.pruneProven(files, stats, resolved).toSet
-    val affected = ManifestStats.prune(files, stats, resolved).toSet -- dropped
-    if (affected.isEmpty && dropped.isEmpty) return v // no file can match
-    // removed manifest lines; everything else carries over verbatim
-    // (path, stats AND any dv ref)
-    val removedLines = body.filter { line =>
-      val f = bodyFile(root, line); affected.contains(f) || dropped.contains(f)
-    }.toSet
-    if (affected.isEmpty) {
-      // METADATA-ONLY commit — every candidate file was proven
-      // whole-match. If the FINAL body empties, the rebase layer records
-      // the (already-resolved) schema so the empty snapshot stays readable
-      return publishRebased(spark, root, op, v, body, meta,
-        removedLines, Nil, resolved, emptySchema = Some(schema))
-    }
-    // affected files read with their DVs APPLIED (already-MoR-deleted rows
-    // must not resurrect); the rewrite output is DV-free by construction
-    val affectedEntries = body.map(parseLine)
-      .zip(files).collect { case (e, f) if affected(f) => e }
-    // stage ONCE, then publish with the file-disjoint rebase: a lost race
-    // against a non-conflicting writer re-publishes these exact staged
-    // files instead of re-reading and re-writing the churn
-    val (fsW, rootPathW) = fsOf(spark, root)
-    val (_, newLines) = writeDataFiles(spark, fsW, rootPathW, v + 1,
-      transform(readEntries(spark, root, affectedEntries, meta.schema)),
-      statsCols, meta)
-    publishRebased(spark, root, op, v, body, meta, removedLines, newLines,
-      resolved, emptySchema = Some(schema))
+  private def bodyDiff(base: Seq[String],
+      winner: Seq[String]): Seq[(String, Option[String])] = {
+    val (baseSet, winnerSet) = (base.toSet, winner.toSet)
+    val changed = winner.filterNot(baseSet).map(l => relOf(l) -> Some(l))
+    val changedRels = changed.map(_._1).toSet
+    changed ++ base.filterNot(winnerSet).map(relOf)
+      .filterNot(changedRels).map(_ -> None)
   }
 
   /** Write `df` into a fresh uniquely-nonced data dir for version `next`
-    * and return (dir, manifest lines incl. optional stats) — the shared
-    * staging step under [[stageAndPublish]] and [[updateWhereMoR]]'s
-    * post-image append. Nothing is visible until a manifest references it.
+    * and return its manifest lines (incl. optional stats) — the staging
+    * step under [[commit]], the append loop and [[stageLines]]. Nothing is
+    * visible until a manifest references it.
     */
-  private def writeDataFiles(spark: SparkSession, fs: FileSystem, rootPath: Path,
+  private def writeDataFiles(spark: SparkSession, root: String,
       next: Long, df: DataFrame, statsCols: Seq[String],
-      meta: TableMeta = TableMeta.empty): (Path, Seq[String]) = {
+      meta: TableMeta): Seq[String] = {
     import org.apache.spark.sql.functions.col
+    val (fs, rootPath) = fsOf(spark, root)
     val bloomCols = meta.bloomCols
     // unique per-attempt staging: the version prefix is advisory (for
     // humans); the nonce is what makes racing attempts disjoint. A crashed
@@ -3129,27 +2993,10 @@ object SnapshotManifest {
     // pruned) — the empty file can satisfy no predicate
     val emptyStats = ManifestStats.FileStats(0L,
       effStatsCols.map(_ -> ManifestStats.ColStats(None, None, 0L)).toMap)
-    val lines = files.map { f =>
+    files.map { f =>
       if (effStatsCols.isEmpty) f
       else f + "\t" + ManifestStats.toJson(stats.getOrElse(new Path(f).getName, emptyStats))
     }.toSeq
-    (dataDir, lines)
-  }
-
-  /** Stage `df` into a fresh uniquely-nonced data dir for version `next`,
-    * collect optional per-file stats, and atomically publish the manifest
-    * (`keptLines` verbatim + the new file lines) — the staged publish
-    * [[commit]] and the keyed rewrites ([[publishVersion]]) go through.
-    */
-  private def stageAndPublish(spark: SparkSession, fs: FileSystem, rootPath: Path,
-      next: Long, df: DataFrame, statsCols: Seq[String], keptLines: Seq[String],
-      op: String, requireFiles: Boolean,
-      meta: TableMeta): Long = {
-    val (dataDir, newLines) = writeDataFiles(spark, fs, rootPath, next, df,
-      statsCols, meta)
-    if (requireFiles)
-      require(newLines.nonEmpty, s"$op: write produced no parquet files under $dataDir")
-    publishLines(spark, rootPath.toString, next, keptLines ++ newLines, op, meta)
   }
 
   /** Time travel: read an explicit committed snapshot `version`. Every
@@ -3472,7 +3319,6 @@ object SnapshotManifest {
       require(ManifestStats.supportsStats(f.dataType),
         s"commit: partition column $c has unsupported type ${f.dataType.simpleString}")
     }
-    val (fs, rootPath) = fsOf(spark, root)
     val cur = currentVersion(spark, root)
     val next = cur.map(_ + 1).getOrElse(0L)
     // DECLARED table properties PERSIST across a full commit (the
@@ -3507,15 +3353,17 @@ object SnapshotManifest {
     val parts = frameCased(
       if (partitionCols.nonEmpty) partitionCols
       else carried(prior.partitionCols, "partition"))
-    stageAndPublish(spark, fs, rootPath, next, df, statsCols, Nil,
-      "commit", requireFiles = true,
-      // txn records carry unconditionally (no columns to lose): an
-      // idempotent pipeline's exactly-once guarantee must survive a full
-      // overwrite exactly as it survives every DML verb
-      // the merge hint also carries unconditionally — a strategy choice,
-      // not a column-bound property
-      meta = TableMeta(None, blooms, frameCased(carried(prior.pk, "primary-key")),
-        parts, prior.txns, prior.colocatedMerge))
+    // txn records carry unconditionally (no columns to lose): an
+    // idempotent pipeline's exactly-once guarantee must survive a full
+    // overwrite exactly as it survives every DML verb
+    // the merge hint also carries unconditionally — a strategy choice,
+    // not a column-bound property
+    val meta = TableMeta(None, blooms, frameCased(carried(prior.pk, "primary-key")),
+      parts, prior.txns, prior.colocatedMerge)
+    val lines = writeDataFiles(spark, root, next, df, statsCols, meta)
+    require(lines.nonEmpty,
+      s"commit: write produced no parquet files for version $next of $root")
+    publishLines(spark, root, next, lines, "commit", meta)
   }
 
   /** [[commit]] gated by declarative quality expectations — CHECK
@@ -3563,7 +3411,7 @@ object SnapshotManifest {
     * frame (analysis error, bad data) propagates on the first attempt.
     * Each lost attempt's staged dir is inert garbage for [[vacuum]]. The
     * DML verbs already absorb FILE-DISJOINT races without redoing data
-    * work ([[publishRebased]]); this is the fallback for genuine conflicts
+    * work ([[publishCommit]]); this is the fallback for genuine conflicts
     * — overlapping files, unprovable predicate disjointness, metadata
     * changes. Appends use [[appendRowsWithRetry]] instead, which re-uses
     * its staged files across attempts.
@@ -3600,21 +3448,26 @@ object SnapshotManifest {
       gateBasenames = false, maxAttempts = 1, _ => Duration.Zero, _ => ())
 
   /** Manifest-wide basename uniqueness, the invariant stats and
-    * deletion-vector identity key on — [[rebaseLoop]] gates every
-    * composed body with it, and the append retry paths must apply the
+    * deletion-vector identity key on — [[publishCommit]] gates every
+    * rebased body with it, and the append retry paths must apply the
     * SAME gate before re-publishing staged lines onto a winner's body
     * (a collision between a winner-added file and a staged file would
     * silently cross-assign one file's stats/DV to the other).
     */
   private def requireUniqueBasenames(op: String, root: String,
       lines: Seq[String]): Unit = {
-    val names = lines.map(l => new Path(parseLine(l).rel).getName)
-    val dup = names.diff(names.distinct).distinct
+    val dup = duplicateBasenames(lines)
     require(dup.isEmpty,
       s"$op: basename collision in composed manifest body for $root " +
         s"(${dup.take(3).mkString(", ")}) — stats and deletion-vector " +
         "identity key on basename; refusing to publish a body that would " +
         "cross-assign them")
+  }
+
+  /** The basenames `lines` reference more than once. */
+  private def duplicateBasenames(lines: Seq[String]): Seq[String] = {
+    val names = lines.map(l => new Path(parseLine(l).rel).getName)
+    names.diff(names.distinct).distinct
   }
 
   /** [[appendRows]] with a bounded lost-race retry that NEVER rewrites the
@@ -3691,7 +3544,6 @@ object SnapshotManifest {
       gateBasenames: Boolean, maxAttempts: Int,
       backoff: Int => FiniteDuration,
       sleep: FiniteDuration => Unit): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
     var staged: Option[(TableMeta, Seq[String])] = None
     retryOnConflict(maxAttempts, backoff, sleep) {
       val v = currentVersion(spark, root).getOrElse(
@@ -3742,8 +3594,7 @@ object SnapshotManifest {
                     s"$root — re-staging the append (the prior staged dir " +
                     "is unreferenced garbage for vacuum)")
               }
-              val (_, l) = writeDataFiles(spark, fs, rootPath, v + 1, df,
-                statsCols, meta)
+              val l = writeDataFiles(spark, root, v + 1, df, statsCols, meta)
               staged = Some((meta, l))
               l
           }
@@ -3841,13 +3692,17 @@ object SnapshotManifest {
       // DV-applied read: compacting a MoR-deleted table materializes the
       // deletions instead of resurrecting the rows; output carries no DVs
       // (and, read under the declared schema, materializes any addColumns
-      // widening into the compacted files). Every table property survives,
-      // and the publish is the MAINTENANCE rebase: a concurrent APPEND
-      // carries onto the compacted body (it just compacts next time),
-      // while a concurrent DML rewrite re-runs loudly.
-      Some(maintenanceCommit(spark, root, "compactSnapshot", v, body, meta,
-        readEntries(spark, root, entries, meta.schema).coalesce(targetFiles),
-        cols))
+      // widening into the compacted files — the recorded schema RETIRES).
+      // Every other table property survives, and the publish is the
+      // MAINTENANCE rebase: a concurrent APPEND carries onto the compacted
+      // body (it just compacts next time), while a concurrent DML rewrite
+      // re-runs loudly.
+      val compacted = readEntries(spark, root, entries, meta.schema)
+      Some(publishCommit(spark, root, "compactSnapshot", v, Left(body), meta,
+        StagedCommit(removed = body, added = stageLines(spark, root, v + 1,
+          Some(compacted.coalesce(targetFiles)), cols, meta)),
+        gate = None, emptySchema = meta.schema.orElse(Some(compacted.schema)),
+        retireSchema = true))
     }
   }
 
@@ -3898,7 +3753,7 @@ object SnapshotManifest {
       statsCols: Option[Seq[String]] = None): Option[Long] = {
     require(smallBytes > 0 && targetBytes > 0, "byte thresholds must be positive")
     require(minSmallFiles >= 2, "minSmallFiles must be >= 2 (one file gains nothing)")
-    val (fs, rootPath) = fsOf(spark, root)
+    val (fs, _) = fsOf(spark, root)
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(
         s"compactSmallFiles: no committed snapshot under $root"))
@@ -3913,41 +3768,13 @@ object SnapshotManifest {
     val cols = statsCols.getOrElse(bodyStatsOf(body.map(parseLine))
       .values.flatMap(_.cols.keys).toSeq.distinct.sorted)
     val tail = readEntries(spark, root, entries, meta.schema)
-    val (_, newLines) = writeDataFiles(spark, fs, rootPath, v + 1,
-      tail.coalesce(targetFiles), cols, meta)
-    val removed = smallLines.toSet
     // if the FINAL body empties (fully-DV-masked tail, empty-or-emptied
     // bulk), the rebase layer records the schema so the snapshot stays
     // readable — evaluated on the composed body, never the base view
-    Some(rebaseLoop(spark, root, "compactSmallFiles", v, body, meta, meta,
-      mustSurvive = removed,
-      composeLines = b => b.filterNot(removed) ++ newLines,
-      winnerLineOk = _ => true,
-      emptySchema = Some(tail.schema), maxRebases = 5))
-  }
-
-  /** Stage `df` and publish it as a MAINTENANCE rewrite of version
-    * `baseVersion`'s whole body ([[publishMaintenanceRebased]]) — the
-    * commit point [[graft.operators.Layout.optimizeSnapshot]] shares with
-    * [[compactSnapshot]]: concurrent appends carry, every table property
-    * survives.
-    */
-  private[graft] def maintenanceCommit(spark: SparkSession, root: String,
-      op: String, baseVersion: Long, baseBody: Seq[String], meta: TableMeta,
-      df: DataFrame, statsCols: Seq[String]): Long = {
-    val (fs, rootPath) = fsOf(spark, root)
-    val (_, newLines) = writeDataFiles(spark, fs, rootPath, baseVersion + 1,
-      df, statsCols, meta)
-    // the full rewrite MATERIALIZES any declared widening into the new
-    // files, so a recorded schema header RETIRES; if the FINAL body
-    // empties (every row DV-masked, nothing rebased in), the rebase layer
-    // records the resolved shape instead — minus the reserved sort
-    // marker, which is write-side metadata the files never carry
-    // (optimizeSnapshot's partition-declared frame includes it)
-    val emptySchema = meta.schema.orElse(Some(StructType(
-      df.schema.filterNot(_.name == ClusterSortCol))))
-    publishMaintenanceRebased(spark, root, op, baseVersion, baseBody,
-      meta.copy(schema = None), meta, newLines, emptySchema)
+    Some(publishCommit(spark, root, "compactSmallFiles", v, Left(body), meta,
+      StagedCommit(removed = smallLines, added = stageLines(spark, root, v + 1,
+        Some(tail.coalesce(targetFiles)), cols, meta)),
+      gate = None, emptySchema = Some(tail.schema)))
   }
 
   /** Delete manifests superseded by the newest `keep` snapshots, then sweep

@@ -181,6 +181,29 @@ class ChangeFeedSpec extends SparkSpec {
         spark.read.parquet(f).schema, f))
   }
 
+  test("a feed read across an addColumns widening equals the mergeSchema read") {
+    val root = newRoot() + "/t"
+    build4(root)
+    SnapshotManifest.addColumns(spark, root, Seq(
+      org.apache.spark.sql.types.StructField("note",
+        org.apache.spark.sql.types.StringType, nullable = true)))
+    SnapshotManifest.updateWhere(spark, root, col("id") === 4L,
+      Map("note" -> lit("n4")), Seq("id"))
+    graft.operators.Upsert.mergeWhere(spark, root,
+      Seq((101L, "w", "n101")).toDF("id", "x", "note"), Seq("id"), Seq("id"))
+    ChangeFeed.materializeNew(spark, root, Seq("id"))
+    val (_, rootPath) = fsOf(root)
+    val merged = spark.read.option("mergeSchema", "true").parquet(
+      ChangeFeed.materializedRanges(spark, root).map { case (f, t) =>
+        new org.apache.hadoop.fs.Path(rootPath, f"_cdf/c$f%08d-$t%08d").toString }: _*)
+    val feed = ChangeFeed.feed(spark, root)
+    assert(feed.schema == merged.schema)
+    assert(feed.schema.fieldNames.toSeq ==
+      Seq("id", "x", "_change", "_commit_version", "note"))
+    assert(feed.collect().toSet == merged.collect().toSet)
+    assert(feed.filter(col("note") === "n4").count() == 1L)
+  }
+
   test("a crash mid-publish leaves a contiguous published prefix that the next catch-up completes") {
     val root = s"faulty://${newRoot()}/t"
     spark.sparkContext.hadoopConfiguration

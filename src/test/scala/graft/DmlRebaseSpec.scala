@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Files
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import graft.operators.Upsert
 import graft.sources.{ConcurrentCommitException, ManifestStats, SnapshotManifest}
 
 /** Optimistic concurrency for the copy-on-write DML verbs: a lost race
@@ -49,9 +52,44 @@ class DmlRebaseSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
-  test("deterministic rebase: a file-disjoint winner landing mid-verb costs one manifest round-trip") {
+  /** Stage `df` as version `next` and publish it through the one rebase
+    * loop, removing `removed` from `base` — the copy-on-write commit a
+    * DELETE builds, driven directly so a winner can land between the
+    * verb's read and its publish.
+    */
+  private def publishStaged(root: String, next: Long, df: DataFrame,
+      base: Either[Seq[String], DataFrame], removed: Seq[String],
+      meta: SnapshotManifest.TableMeta, resolved: Expression): Long =
+    SnapshotManifest.publishCommit(spark, root, "deleteWhere", next - 1, base,
+      meta, SnapshotManifest.StagedCommit(removed = removed,
+        added = SnapshotManifest.stageLines(spark, root, next, Some(df),
+          Seq("id"), meta)),
+      Some(resolved), emptySchema = Some(df.schema))
+
+  /** Register `name` twice: on the driver body, and on the twin-anchored
+    * frame (a parquet twin for every body, a checkpoint every 4 versions,
+    * so winners publish churn-sized deltas the rebase reads as tails).
+    * `body` gets the version-0 base of a root in its form.
+    */
+  private def bothForms(name: String)(
+      body: (String => Either[Seq[String], DataFrame]) => Unit): Unit = {
+    test(name)(body(root => Left(SnapshotManifest.manifestBody(spark, root, 0L))))
+    test(s"$name, on the twin-anchored frame") {
+      val twin = Map("graft.manifest.parquetCheckpointMinLines" -> "1",
+        "graft.manifest.checkpointInterval" -> "4")
+      twin.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body { root =>
+        val frame = SnapshotManifest.bodyLinesFrame(spark, root, 0L)
+        assert(frame.isDefined, s"no twin anchors version 0 of $root")
+        Right(frame.get)
+      } finally twin.keys.foreach(spark.conf.unset)
+    }
+  }
+
+  bothForms("deterministic rebase: a file-disjoint winner landing mid-verb costs one manifest round-trip") { baseOf =>
     val root = freshTable()
     val (body, meta) = SnapshotManifest.manifestParts(spark, root, 0L)
+    val base = baseOf(root)
     val schema = SnapshotManifest.read(spark, root).schema
     // the verb-under-test read v0 and staged a rewrite of the [0,19] file
     val myFile = body.find(l =>
@@ -63,16 +101,16 @@ class DmlRebaseSpec extends SparkSpec {
     SnapshotManifest.appendRows(spark, root,
       spark.range(900, 910).toDF("id").withColumn("x", lit("w")), Seq("id"))
     // the rebase must land at v2 without touching the staged frame again
-    val v = SnapshotManifest.publishVersionRebased(spark, root, 1L,
-      replacement, Seq("id"), body, Set(myFile), "deleteWhere", meta,
+    val v = publishStaged(root, 1L, replacement, base, Seq(myFile), meta,
       ManifestStats.resolvePredicate(spark, schema, col("id") < 5L))
     assert(v == 2L)
     assert(ids(root) == ((5L until 200L) ++ (900L until 910L)).toSet)
   }
 
-  test("refusal: a winner whose new rows MAY match the predicate forces the full re-run") {
+  bothForms("refusal: a winner whose new rows MAY match the predicate forces the full re-run") { baseOf =>
     val root = freshTable()
     val (body, meta) = SnapshotManifest.manifestParts(spark, root, 0L)
+    val base = baseOf(root)
     val schema = SnapshotManifest.read(spark, root).schema
     val myFile = body.head
     // winner appends rows INSIDE the delete predicate's range — a rebased
@@ -80,34 +118,36 @@ class DmlRebaseSpec extends SparkSpec {
     SnapshotManifest.appendRows(spark, root,
       spark.range(1, 3).toDF("id").withColumn("x", lit("w")), Seq("id"))
     intercept[ConcurrentCommitException] {
-      SnapshotManifest.publishVersionRebased(spark, root, 1L,
+      publishStaged(root, 1L,
         spark.range(5, 20).toDF("id").withColumn("x", lit("r")),
-        Seq("id"), body, Set(myFile), "deleteWhere", meta,
+        base, Seq(myFile), meta,
         ManifestStats.resolvePredicate(spark, schema, col("id") < 5L))
     }
   }
 
-  test("refusal: stats-less winner lines, a touched file, or changed metadata are all conflicts") {
+  bothForms("refusal: stats-less winner lines, a touched file, or changed metadata are all conflicts") { baseOf =>
     val root = freshTable()
     val (body, meta) = SnapshotManifest.manifestParts(spark, root, 0L)
+    val base = baseOf(root)
     val schema = SnapshotManifest.read(spark, root).schema
     val myFile = body.find(l =>
       SnapshotManifest.bodyStats(Seq(l)).values.head
         .cols("id").min.contains(BigDecimal(0))).get
-    def attempt(): Long = SnapshotManifest.publishVersionRebased(spark, root,
+    def attempt(): Long = publishStaged(root,
       SnapshotManifest.currentVersion(spark, root).get, // stale base on purpose
       spark.range(5, 20).toDF("id").withColumn("x", lit("r")),
-      Seq("id"), body, Set(myFile), "deleteWhere", meta,
+      base, Seq(myFile), meta,
       ManifestStats.resolvePredicate(spark, schema, col("id") < 5L))
     // (a) winner appended WITHOUT stats: disjointness unprovable
     val r1 = freshTable()
     val (b1, m1) = SnapshotManifest.manifestParts(spark, r1, 0L)
+    val base1 = baseOf(r1)
     SnapshotManifest.appendRows(spark, r1,
       spark.range(900, 905).toDF("id").withColumn("x", lit("w")))
     intercept[ConcurrentCommitException] {
-      SnapshotManifest.publishVersionRebased(spark, r1, 1L,
+      publishStaged(r1, 1L,
         spark.range(5, 20).toDF("id").withColumn("x", lit("r")),
-        Seq("id"), b1, Set(b1.head), "deleteWhere", m1,
+        base1, Seq(b1.head), m1,
         ManifestStats.resolvePredicate(spark, schema, col("id") < 5L))
     }
     // (b) winner REWROTE the very file this verb is replacing
@@ -116,15 +156,83 @@ class DmlRebaseSpec extends SparkSpec {
     // (c) fresh table, winner changed table METADATA (schema evolution)
     val r2 = freshTable()
     val (b2, m2) = SnapshotManifest.manifestParts(spark, r2, 0L)
+    val base2 = baseOf(r2)
     SnapshotManifest.addColumns(spark, r2,
       Seq(org.apache.spark.sql.types.StructField("extra",
         org.apache.spark.sql.types.StringType)))
     intercept[ConcurrentCommitException] {
-      SnapshotManifest.publishVersionRebased(spark, r2, 1L,
+      publishStaged(r2, 1L,
         spark.range(5, 20).toDF("id").withColumn("x", lit("r")),
-        Seq("id"), b2, Set(b2.head), "deleteWhere", m2,
+        base2, Seq(b2.head), m2,
         ManifestStats.resolvePredicate(spark, schema, col("id") < 5L))
     }
+  }
+
+  /** [[freshTable]] on the `faulty://` scheme, where [[FaultGate]] can land
+    * a winner between a verb's read and its manifest publish.
+    */
+  private def faultyTable(): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    val root = s"faulty://${newRoot()}/t"
+    SnapshotManifest.commit(spark, root,
+      spark.range(0, 200).toDF("id").withColumn("x", concat(lit("v"), col("id")))
+        .repartitionByRange(10, col("id")), Seq("id"))
+    root
+  }
+
+  /** Run `verb` with `winner` committed just before the verb writes its
+    * manifest: the verb's first publish loses the race to `winner`.
+    */
+  private def racedBy[A](winner: => Unit)(verb: => A): A = {
+    FaultGate.disarm()
+    FaultGate.beforeFirst((op, p) =>
+      op == "create" && p.getName.startsWith(".manifest-"))(winner)
+    try verb finally FaultGate.disarm()
+  }
+
+  private def append(root: String, lo: Long, hi: Long): Unit = {
+    SnapshotManifest.appendRows(spark, root,
+      spark.range(lo, hi).toDF("id").withColumn("x", lit("w")), Seq("id")); ()
+  }
+
+  test("deleteKeys rebases over a file-disjoint winner and refuses one that touched its file") {
+    val root = faultyTable()
+    val v = racedBy(append(root, 900L, 910L)) {
+      Upsert.deleteKeys(spark, root, Seq(3L).toDF("id"), Seq("id"), Seq("id"))
+    }
+    assert(v == 2L, "the winner lands at v1, the rebased delete at v2")
+    val afterFirst = ((0L until 200L).filter(_ != 3L) ++ (900L until 910L)).toSet
+    assert(ids(root) == afterFirst)
+    // the winner rewrote the file that holds key 5: the staged rewrite was
+    // computed from superseded rows
+    intercept[ConcurrentCommitException] {
+      racedBy(SnapshotManifest.deleteWhere(spark, root, col("id") === 4L, Seq("id"))) {
+        Upsert.deleteKeys(spark, root, Seq(5L).toDF("id"), Seq("id"), Seq("id"))
+      }
+    }
+    assert(SnapshotManifest.currentVersion(spark, root).contains(3L))
+    assert(ids(root) == afterFirst - 4L)
+  }
+
+  test("foldDeletes rebases over a concurrent append and refuses a winner that touched a DV'd file") {
+    val root = faultyTable()
+    SnapshotManifest.deleteWhereMoR(spark, root, col("id") === 5L)
+    val v = racedBy(append(root, 900L, 910L))(SnapshotManifest.foldDeletes(spark, root))
+    assert(v == 3L, "the winner lands at v2, the rebased fold at v3")
+    val folded = ((0L until 200L).filter(_ != 5L) ++ (900L until 910L)).toSet
+    assert(ids(root) == folded)
+    assert(SnapshotManifest.manifestBody(spark, root, v)
+      .forall(SnapshotManifest.parseLine(_).dvRel.isEmpty))
+    // the winner re-masked the DV'd file this fold is rewriting
+    SnapshotManifest.deleteWhereMoR(spark, root, col("id") === 6L)
+    intercept[ConcurrentCommitException] {
+      racedBy(SnapshotManifest.deleteWhereMoR(spark, root, col("id") === 7L)) {
+        SnapshotManifest.foldDeletes(spark, root)
+      }
+    }
+    assert(SnapshotManifest.currentVersion(spark, root).contains(5L))
+    assert(ids(root) == folded -- Set(6L, 7L))
   }
 
   test("racing disjoint-key merges both land without a retry wrapper; serial content") {

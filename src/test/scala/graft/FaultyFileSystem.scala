@@ -131,6 +131,16 @@ object FaultGate {
   @volatile private var crashed = false
   @volatile private var target: Option[(String, Path) => Boolean] = None
   private val lastTrip = new AtomicReference[String]("")
+  private val before =
+    new AtomicReference[Option[((String, Path) => Boolean, () => Unit)]](None)
+
+  /** Run `action` once, just before the first mutating op matching `at`
+    * (op name, path) — a deterministic interleave point, e.g. landing a
+    * concurrent winner between a verb's read and its manifest publish.
+    * The hook clears before `action` runs, so IO inside it passes through.
+    */
+  def beforeFirst(at: (String, Path) => Boolean)(action: => Unit): Unit =
+    before.set(Some((at, () => action)))
 
   /** The `afterOps`-th mutating op from now throws; all later ones too. */
   def arm(afterOps: Long): Unit = {
@@ -152,6 +162,7 @@ object FaultGate {
   def disarm(): Unit = {
     crashed = false
     target = None
+    before.set(None)
     remaining.set(Long.MaxValue)
   }
 
@@ -162,6 +173,11 @@ object FaultGate {
   def trippedAt: String = lastTrip.get()
 
   private[graft] def hit(op: String, p: Path): Unit = {
+    before.get match {
+      case cur @ Some((at, action)) if at(op, p) && before.compareAndSet(cur, None) =>
+        action()
+      case _ => ()
+    }
     if (crashed)
       throw new IOException(s"injected crash (post-crash IO): $op $p")
     if (target.exists(_(op, p)) || remaining.decrementAndGet() <= 0L) {

@@ -16,11 +16,11 @@ import graft.sources.{ChangeFeed, SnapshotManifest}
   * in a family's job count fails here instead of hiding in bench noise,
   * and the failure lists each counted job's call site. Tables are small,
   * twin-less and record no schema in their header (the fixed-cost regime
-  * the budgets describe). Families pinned: change-feed catch-up, point
-  * `readWhere` (plain and over a DV-carrying file), `appendRows`, CoW
-  * `deleteWhere`/`updateWhere`, `deleteWhereMoR`, keyed
-  * `Upsert.mergeWhere`, and SQL `DELETE`/`MERGE INTO` on a
-  * `graft-snapshot` catalog table.
+  * the budgets describe). Families pinned: change-feed catch-up and feed
+  * read, point `readWhere` (plain and over a DV-carrying file),
+  * `appendRows`, CoW `deleteWhere`/`updateWhere`, `deleteWhereMoR`, keyed
+  * `Upsert.mergeWhere`, SQL `DELETE`/`MERGE INTO` on a `graft-snapshot`
+  * catalog table, and `vacuum`.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -97,6 +97,28 @@ class JobBudgetSpec extends SparkSpec {
       s"auto catch-up of one commit ran ${withFeed.size - base.size} jobs " +
         s"(budget $AutoCatchUpJobs): with ${withFeed.mkString("; ")}; " +
         s"without ${base.mkString("; ")}")
+  }
+
+  test("a feed read runs only its scan") {
+    val root = seeded()
+    (0 until 2).foreach(dml(root, _))
+    ChangeFeed.materializeNew(spark, root, Seq("id"))
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    assertBudget("a two-range feed read", jobsOf {
+      rows = ChangeFeed.feed(spark, root).collect().toSeq
+    }, 1)
+    assert(rows.map(_.getAs[Long]("_commit_version")).toSet == Set(1L, 2L))
+  }
+
+  test("vacuum of a small table plans and sweeps on the driver") {
+    val root = seeded()
+    (0 until 4).foreach(dml(root, _))
+    var reclaimed = Seq.empty[Long]
+    assertBudget("a keep = 2 vacuum after 4 DML commits", jobsOf {
+      reclaimed = SnapshotManifest.vacuum(spark, root, keep = 2)
+    }, VacuumJobs)
+    assert(reclaimed == Seq(0L, 1L, 2L))
+    assert(SnapshotManifest.read(spark, root).count() == 201L)
   }
 
   test("readWhere over a DV-carrying file infers no sidecar schema") {
@@ -228,4 +250,11 @@ class JobBudgetSpec extends SparkSpec {
 
   /** [[MergeJobs]]; 9 with the table load's inference as well. */
   private val SqlMergeJobs = 6
+
+  /** None: a twin-less table's plan (`vacuumPlan`: the retained manifests'
+    * references, one listing per data directory) and its sweep are driver
+    * metadata calls. The distributed plan (`distributedVacuumPlan`) runs
+    * only over twin-anchored bodies.
+    */
+  private val VacuumJobs = 0
 }
