@@ -1467,11 +1467,11 @@ object Oracles {
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin,
 
-    // Distributed vacuum (q153): vacuum must be INVISIBLE — the oracle is
-    // simply the two merges' net effect (disjoint update + insert) on the
-    // raw fixture. A sweep that ate a live file or spared doomed data
-    // would shift counts/sums; the in-query REQUIREs pin that the plan
-    // was computed distributed and the garbage really went away.
+    // Vacuum on a twin-anchored table (q153): vacuum must be INVISIBLE —
+    // the oracle is simply the two merges' net effect (disjoint update +
+    // insert) on the raw fixture. A sweep that ate a live file or spared
+    // doomed data would shift counts/sums; the in-query REQUIREs pin that
+    // the garbage really went away.
     "q153_distributed_vacuum" ->
       """WITH target AS (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),

@@ -3851,14 +3851,13 @@ object Queries {
     } finally spark.sql("DROP TABLE IF EXISTS graft_q165")
   }
 
-  /** Distributed vacuum reachability (q153): on a twin-anchored table the
-    * live-file set and the per-dir file sweep run on EXECUTORS
-    * ([[graft.sources.SnapshotManifest.vacuumPreview]]'s distributed
-    * planning path) — the driver receives only kept-dir names and the
-    * garbage list, never the live-file set. In-query REQUIREs pin the
-    * mechanism: the plan was computed distributed (`vacuumFramePlans`),
-    * planning parsed no manifest body on the driver, churn produced real
-    * file-level garbage, and the sweep reclaimed it. The oracle gates the
+  /** Vacuum reachability on a twin-anchored table (q153): the table
+    * carries parquet checkpoint twins, and
+    * [[graft.sources.SnapshotManifest.vacuumPreview]]/`vacuum` plan on the
+    * driver from the surviving manifests (the executor plan over the twin
+    * frames was deleted after it measured slower at 10⁴ and 10⁵ body
+    * lines). In-query REQUIREs pin that churn produced real file-level
+    * garbage and that the sweep reclaimed it. The oracle gates the
     * SEMANTICS — after churn + vacuum the table reads exactly as the
     * merges left it; a sweep that ate a live file or spared a doomed
     * version's data would shift the aggregate.
@@ -3888,13 +3887,7 @@ object Queries {
           .select((col("o_orderkey") + 30000000L).alias("o_orderkey"),
             lit("N").alias("o_orderstatus"), col("o_totalprice")),
         Seq("o_orderkey"), Seq("o_orderkey"))
-      val plans = S.vacuumFramePlans.get()
-      S.manifestReadCount.set(0L)
       val preview = S.vacuumPreview(spark, root, keep = 1)
-      require(S.vacuumFramePlans.get() == plans + 1,
-        "q153: the twin-anchored table must plan its vacuum DISTRIBUTED")
-      require(S.manifestReadCount.get() == 0L,
-        "q153: vacuum planning must not materialize a body on the driver")
       require(preview.dataFiles.nonEmpty,
         "q153: the churn must produce file-level garbage to sweep")
       require(S.vacuum(spark, root, keep = 1).nonEmpty,

@@ -1006,75 +1006,22 @@ object SnapshotManifest {
     * committed without stats, or carrying a deletion vector (the DV masks
     * an unknown number of the recorded rows) — are counted by a scan of
     * JUST those files; a stats-maintained, recently-folded table answers
-    * entirely from metadata.
+    * entirely from metadata. The fold runs on the driver whether or not a
+    * parquet twin anchors the version: an executor fold over the twin
+    * frame measured slower at both 10⁴ and 10⁵ body lines.
     */
-  /** The recorded row count of one entry when metadata answers it EXACTLY
-    * — no deletion vector masking an unknown share of the rows, stats
-    * present. THE classification both [[countRows]] folds share (per-entry
-    * stats, never a basename-keyed map: keying by name would let two
-    * same-named entries collapse to one count).
-    */
-  private def exactRows(e: ManifestEntry): Option[Long] =
-    if (e.dvRel.isEmpty) e.stats.map(ManifestStats.fromJson(_).rows) else None
-
-  /** Scan-line ceiling for [[countRows]]' distributed fold: past it the
-    * metadata cannot answer most of the table anyway, so the driver path
-    * (which materializes the body ONCE) is the cheaper shape — better
-    * than funneling a body-sized list through one aggregation buffer.
-    */
-  private val CountRowsMaxScanLines = 100000L
-
   def countRows(spark: SparkSession, root: String): Long = {
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"countRows: no committed snapshot under $root"))
-    // DISTRIBUTED fold when a checkpoint twin anchors the body: the
-    // recorded per-file rows sum on EXECUTORS and only the lines metadata
-    // cannot answer exactly (DV'd, stats-less — the ones a scan must
-    // touch anyway) come back to the driver. The try covers ONLY the
-    // derived-frame stages: the data scan below runs outside it, so a
-    // genuine scan failure surfaces once and loudly instead of silently
-    // re-running on the fallback path.
-    val dist: Option[(Long, Seq[String])] =
-      try bodyLinesFrame(spark, root, v).flatMap { frame =>
-        import spark.implicits._
-        def classified = frame.select("line").as[String].map { line =>
-          exactRows(parseLine(line)) match {
-            case Some(rows) => (rows, null: String)
-            case None => (0L, line)
-          }
-        }.toDF("rows", "line")
-        // SCREEN first with one lightweight aggregate (no persist): when
-        // scanN exceeds the cap the whole fold is discarded, so the
-        // expensive shape (persist + survivor collect) must not have run
-        // at exactly the mostly-stats-less sizes the cap targets. The
-        // common all-stats table answers in this single job; only the
-        // churn-sized scan set pays a second (cheap, metadata-frame) job.
-        val r = classified.agg(
-          org.apache.spark.sql.functions.sum(
-            org.apache.spark.sql.functions.col("rows")),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.col("line"))).head()
-        val metaCount = if (r.isNullAt(0)) 0L else r.getLong(0)
-        val scanN = r.getLong(1)
-        if (scanN > CountRowsMaxScanLines) None // driver path is cheaper
-        else if (scanN == 0L) Some((metaCount, Nil))
-        else Some((metaCount,
-          classified.filter(org.apache.spark.sql.functions.col("line").isNotNull)
-            .select("line").as[String].collect().toSeq))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    dist match {
-      case Some((metaCount, scanLines)) =>
-        return metaCount + (
-          if (scanLines.isEmpty) 0L
-          else readEntries(spark, root, scanLines.map(parseLine),
-            manifestMetaOnly(spark, root, v).schema).count())
-      case None => ()
-    }
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return 0L
-    // one stats parse per entry (exactRows pays a JSON parse — never
-    // classify and re-derive in two passes)
-    val withRows = body.map(parseLine).map(e => e -> exactRows(e))
+    // one stats parse per entry: its recorded row count where metadata
+    // answers it EXACTLY (stats present, no deletion vector masking an
+    // unknown share of the rows). Per entry, never a basename-keyed map,
+    // which would let two same-named entries collapse to one count.
+    val withRows = body.map(parseLine).map { e =>
+      e -> (if (e.dvRel.isEmpty) e.stats.map(ManifestStats.fromJson(_).rows) else None)
+    }
     val metaCount = withRows.flatMap(_._2).sum
     val scanned = withRows.collect { case (e, None) => e }
     val scanCount =
@@ -1634,6 +1581,25 @@ object SnapshotManifest {
     */
   private[graft] val ckptFramePrunes = new java.util.concurrent.atomic.AtomicLong
 
+  /** Diagnostic counter: derived twin paths (plans over a parquet
+    * checkpoint twin) that THREW and fell back to the driver plan. A
+    * twin-less version's plain None is no failure and never counts.
+    */
+  private[graft] val twinFallbacks = new java.util.concurrent.atomic.AtomicLong
+
+  /** The one catch of every derived twin path: one WARN, one
+    * [[twinFallbacks]] bump, then None, so the caller runs the exact
+    * driver plan and a bug in a derived path shows as more than a slowdown.
+    */
+  private def twinFallback(site: String, root: String)
+      : PartialFunction[Throwable, None.type] = {
+    case scala.util.control.NonFatal(e) =>
+      twinFallbacks.incrementAndGet()
+      graft.core.Logging.logger().warn(
+        s"$site: checkpoint-twin path failed on $root; running the driver plan", e)
+      None
+  }
+
   /** Best-effort parquet TWIN of a checkpoint manifest — the distributed
     * read path's anchor. The text manifest stays the commit source of
     * truth (one atomic file publish); at every checkpoint boundary whose
@@ -1802,8 +1768,8 @@ object SnapshotManifest {
     // is neither header nor a +/- op is CORRUPTION — the driver path
     // throws on it ([[manifestPartsUncached]]), and the distributed path
     // must not quietly compose a partial body instead; the throw lands in
-    // the NonFatal handler below → None → the authoritative path raises
-    // the canonical error
+    // [[twinFallback]] below → None → the authoritative path raises the
+    // canonical error
     val tails = chain.map { dv =>
       val text = CommitProtocol.readFully(fs, new Path(rootPath, manifestName(dv)))
       text.split('\n').map(_.trim).filter(_.nonEmpty).flatMap { l =>
@@ -1832,9 +1798,7 @@ object SnapshotManifest {
       if (added.isEmpty) base.select("rel", "line")
       else base.select("rel", "line").unionByName(
         added.map(l => (relOf(l), l)).toDF("rel", "line")))
-  } catch { case scala.util.control.NonFatal(_) =>
-    None // derived fast path only — the text-manifest path is authoritative
-  }
+  } catch twinFallback("bodyLinesFrame", root)
 
   /** The table metadata of `version` from the manifest HEADER alone —
     * streams header lines and stops at the first body line, so a
@@ -1902,7 +1866,7 @@ object SnapshotManifest {
         val pred = ManifestStats.resolvePredicate(spark, schema, predicate)
         (meta, schema, pruneFrame(spark, frame, pred))
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch twinFallback("distributedPrune", root)
 
   /** The DML twin of [[distributedPrune]]: classify every body line on
     * EXECUTORS into no-match (pruned), MAY-match (`affected` — must be
@@ -1931,7 +1895,7 @@ object SnapshotManifest {
           survivors.collect { case (l, _, false) => l }.toSeq,
           survivors.collect { case (l, _, true) => l }.toSeq)
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch twinFallback("distributedClassify", root)
 
   /** The winner's edits between `base` (exclusive) and `winner`
     * (inclusive) composed last-write-wins per rel — rel → None (removed) /
@@ -1965,7 +1929,7 @@ object SnapshotManifest {
     }
     import scala.jdk.CollectionConverters._
     Some(acc.asScala.toSeq)
-  } catch { case scala.util.control.NonFatal(_) => None }
+  } catch twinFallback("tailEditsBetween", root)
 
   /** [[distributedClassify]] for callers outside this object (the keyed
     * MERGE): `(meta, schema, body frame, affected lines)` — the MAY-match
@@ -1989,7 +1953,7 @@ object SnapshotManifest {
     try bodyLinesFrame(spark, root, version).flatMap { frame =>
       val meta = manifestMetaOnly(spark, root, version)
       frameSchema(spark, root, meta, frame).map(s => (meta, s, frame))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch twinFallback("frameWithSchema", root)
 
   private[graft] def manifestBody(spark: SparkSession, root: String,
       version: Long): Seq[String] =
@@ -3187,21 +3151,22 @@ object SnapshotManifest {
           () => untouched.orElse(oldByRel.values.headOption),
           () => newLines.headOption.orElse(untouched))
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch twinFallback("changeSidesViaTails", root)
 
   private def diffStep(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Long, footerSchema: String => StructType): DiffStep = {
     require(fromVersion <= toVersion,
       s"changesBetween: fromVersion $fromVersion > toVersion $toVersion")
     // CHURN-BOUNDED fast path ([[changeSidesViaTails]]); headers answer
-    // the metadata, and any failure (the lazy samples included) falls back
-    // to the authoritative body-diff below
+    // the metadata, and any failure (the lazy samples included) is counted
+    // and falls back to the authoritative body-diff below
     val fast = changeSidesViaTails(spark, root, fromVersion, toVersion).flatMap {
       case (oldOnlyLines, newOnlyLines, sampleFrom, sampleTo) =>
         def schemaOf(v: Long, sample: () => Option[String]) = manifestMetaOnly(spark,
           root, v).schema.orElse(sample().map(l => footerSchema(bodyFile(root, l))))
-        scala.util.Try((oldOnlyLines.map(parseLine), newOnlyLines.map(parseLine),
-          schemaOf(fromVersion, sampleFrom), schemaOf(toVersion, sampleTo))).toOption
+        try Some((oldOnlyLines.map(parseLine), newOnlyLines.map(parseLine),
+          schemaOf(fromVersion, sampleFrom), schemaOf(toVersion, sampleTo)))
+        catch twinFallback("changeSidesViaTails", root)
     }
     val (oldOnly, newOnly, sideFrom, sideTo) = fast.getOrElse {
       // ONE manifest fetch per version: body + recorded schema together
@@ -3922,7 +3887,7 @@ object SnapshotManifest {
 
   /** What a [[vacuum]] with the same arguments would reclaim. `dataDirs`
     * and `dataFiles` are lexicographically sorted (deterministic across
-    * runs and across the driver/distributed planning paths).
+    * runs).
     */
   final case class VacuumPlan(versions: Seq[Long], dataDirs: Seq[String],
       dataFiles: Seq[String]) {
@@ -3940,14 +3905,6 @@ object SnapshotManifest {
       minAgeMs: Long = 0L): VacuumPlan =
     vacuumPlan(spark, root, keep, minAgeMs)
 
-  /** The shared reachability planner under [[vacuum]]/[[vacuumPreview]]:
-    * doomed = superseded manifests older than the age guard; then any
-    * data dir no surviving manifest references, and any unreferenced
-    * parquet file inside referenced dirs ([[deleteWhere]] shares files
-    * across versions, so a kept dir can hold a rewritten file's old
-    * copy). The age gate also protects in-flight staging (unreferenced
-    * only because its manifest has not published yet).
-    */
   /** The component DIRECTLY under data/ — NOT the file's immediate
     * parent: partitioned staging nests files under Hive-style tag dirs
     * (data/<dir>/__gp_0=en/f.parquet), and keying on the immediate parent
@@ -3963,122 +3920,17 @@ object SnapshotManifest {
     cur.getName
   }
 
-  /** Diagnostic counter: vacuum reachability plans computed DISTRIBUTED
-    * (specs assert the twin-anchored path engaged).
+  /** The shared reachability planner under [[vacuum]]/[[vacuumPreview]]:
+    * doomed = superseded manifests older than the age guard; then any
+    * data dir no surviving manifest references, and any unreferenced
+    * parquet file inside referenced dirs ([[deleteWhere]] shares files
+    * across versions, so a kept dir can hold a rewritten file's old
+    * copy). The age gate also protects in-flight staging (unreferenced
+    * only because its manifest has not published yet). The plan runs on
+    * the driver whether or not a parquet twin anchors the surviving
+    * versions: an executor plan over the twin frames measured slower at
+    * both 10⁴ and 10⁵ body lines.
     */
-  private[graft] val vacuumFramePlans = new java.util.concurrent.atomic.AtomicLong
-
-  /** [[vacuumPlan]]'s distributed twin — the reachability sweep at the
-    * 10⁵–10⁶-file bar. The live (dir, file) set is NEVER materialized on
-    * the driver: each surviving version's body resolves as a checkpoint-
-    * frame + tail-edits DataFrame ([[bodyLinesFrame]]; versions without a
-    * twin contribute their driver-resolved rels as a local dataset — they
-    * are sub-floor by construction), and the file-level sweep inside
-    * referenced dirs runs as a per-dir executor listing anti-joined
-    * against the live frame. The driver receives: the kept-dir name set
-    * (bounded by commit count, not file count) and the GARBAGE paths —
-    * the list a vacuum must hold to delete anyway.
-    *
-    * None when no surviving version is twin-anchored (small tables — the
-    * driver path is cheaper) or on ANY failure: the driver path below is
-    * authoritative and the plans are semantically identical (spec-pinned
-    * differential), so degrading costs only driver memory at scale.
-    */
-  private def distributedVacuumPlan(spark: SparkSession, root: String,
-      doomed: Seq[Long], surviving: Seq[Long], cutoff: Long)
-      : Option[VacuumPlan] = try {
-    import spark.implicits._
-    val (fs, rootPath) = fsOf(spark, root)
-    var framed = 0
-    val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val localRels = Seq.newBuilder[String]
-    surviving.foreach { v =>
-      bodyLinesFrame(spark, root, v) match {
-        case Some(f) =>
-          framed += 1
-          frames += f.select("line").as[String].flatMap { l =>
-            val e = parseLine(l); e.rel +: e.dvRel.toSeq
-          }.toDF("rel")
-        case None =>
-          manifestBody(spark, root, v).foreach { l =>
-            val e = parseLine(l)
-            localRels += e.rel; e.dvRel.foreach(r => localRels += r)
-          }
-      }
-    }
-    if (framed == 0) return None // no twin anywhere — small-table regime
-    val allRels = (frames.toSeq :+ localRels.result().toDF("rel"))
-      .reduce(_ unionByName _)
-    val liveKeys = allRels.as[String].map { rel =>
-      val p = new Path(rel); (dataDirComponent(p), p.getName)
-    }.toDF("dir", "name").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // kept-dir NAMES: one distinct per dir — commit-count-bounded
-      val keptDirs = liveKeys.select("dir").distinct().as[String]
-        .collect().toSet
-      val dataRoot = new Path(rootPath, "data")
-      val dirs = Seq.newBuilder[String]
-      val keptLocal = Seq.newBuilder[String]
-      if (fs.exists(dataRoot)) {
-        // ONE top-level listing (an entry per commit dir, never per file)
-        fs.listStatus(dataRoot).foreach { s =>
-          if (s.isDirectory && !keptDirs.contains(s.getPath.getName) &&
-              s.getModificationTime <= cutoff) dirs += s.getPath.toString
-          else if (s.isDirectory && keptDirs.contains(s.getPath.getName))
-            keptLocal += s.getPath.toString
-        }
-      }
-      val keptLocalDirs = keptLocal.result()
-      // FILE-level sweep inside referenced dirs, on EXECUTORS: each task
-      // lists its dirs recursively (a filesystem rebuilt from the
-      // driver's Hadoop conf) and the unreferenced-file decision is an
-      // anti-join against the live frame — same *.parquet + age-gate
-      // semantics as the driver path
-      val files: Seq[String] =
-        if (keptLocalDirs.isEmpty) Nil
-        else {
-          val confMap = {
-            val it = spark.sparkContext.hadoopConfiguration.iterator()
-            val b = Map.newBuilder[String, String]
-            while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-            b.result()
-          }
-          val confB = spark.sparkContext.broadcast(confMap)
-          val listed = spark.createDataset(keptLocalDirs)
-            .repartition(math.max(1, math.min(keptLocalDirs.size,
-              spark.sparkContext.defaultParallelism)))
-            .mapPartitions { it =>
-              val conf = new org.apache.hadoop.conf.Configuration(false)
-              confB.value.foreach { case (k, v) => conf.set(k, v) }
-              it.flatMap { dirPath =>
-                val p = new Path(dirPath)
-                val dfs = p.getFileSystem(conf)
-                val out = scala.collection.mutable
-                  .ArrayBuffer[(String, String, String, Long)]()
-                val fit = dfs.listFiles(p, true)
-                while (fit.hasNext) {
-                  val f = fit.next()
-                  if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-                    out += ((p.getName, f.getPath.getName,
-                      f.getPath.toString, f.getModificationTime))
-                }
-                out
-              }
-            }.toDF("dir", "name", "path", "mtime")
-          listed.join(liveKeys, Seq("dir", "name"), "left_anti")
-            .filter(org.apache.spark.sql.functions.col("mtime") <= cutoff)
-            .select("path").as[String].collect().toSeq
-        }
-      vacuumFramePlans.incrementAndGet()
-      // deterministic order (the driver path emits listing order, which is
-      // itself unspecified; sorting here keeps previews reproducible)
-      Some(VacuumPlan(doomed, dirs.result().sorted, files.sorted))
-    } finally { liveKeys.unpersist(false); () }
-  } catch { case scala.util.control.NonFatal(_) =>
-    None // derived fast path only — the driver plan below is authoritative
-  }
-
   private def vacuumPlan(spark: SparkSession, root: String, keep: Int,
       minAgeMs: Long): VacuumPlan = {
     require(keep >= 1, "vacuum must keep at least the current snapshot")
@@ -4091,17 +3943,6 @@ object SnapshotManifest {
     if (versions.isEmpty) return VacuumPlan(Nil, Nil, Nil)
     val doomed = versions.dropRight(keep).filter { v =>
       fs.getFileStatus(new Path(rootPath, manifestName(v))).getModificationTime <= cutoff
-    }
-    // DISTRIBUTED reachability first: when a checkpoint twin anchors the
-    // surviving versions, the live-file set and the per-dir sweep run on
-    // executors and the driver receives only the garbage list — the same
-    // 10⁵–10⁶-file bar the read and commit paths hold. None (sub-floor
-    // tables, no twin, any failure) falls through to the authoritative
-    // driver path below, which is also the faster path at those sizes.
-    distributedVacuumPlan(spark, root, doomed,
-      versions.filterNot(doomed.contains), cutoff) match {
-      case Some(p) => return p
-      case None => ()
     }
     // live set FIRST, from the manifests that will survive (everything not
     // doomed -- including too-young superseded ones): any dir under data/
@@ -4149,8 +3990,7 @@ object SnapshotManifest {
         }
       }
     }
-    // deterministic order on BOTH planning paths (the distributed twin
-    // sorts too): previews are reproducible and diffable across runs
+    // deterministic order: previews are reproducible and diffable across runs
     VacuumPlan(doomed, dirs.result().sorted, files.result().sorted)
   }
 }

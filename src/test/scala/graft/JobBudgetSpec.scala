@@ -20,7 +20,8 @@ import graft.sources.{ChangeFeed, SnapshotManifest}
   * read, point `readWhere` (plain and over a DV-carrying file),
   * `appendRows`, CoW `deleteWhere`/`updateWhere`, `deleteWhereMoR`, keyed
   * `Upsert.mergeWhere`, SQL `DELETE`/`MERGE INTO` on a `graft-snapshot`
-  * catalog table, and `vacuum`.
+  * catalog table, and `vacuum`; `vacuum` and `countRows` also on a
+  * twin-anchored table (one carrying parquet checkpoint twins).
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -52,6 +53,23 @@ class JobBudgetSpec extends SparkSpec {
     val root = Files.createTempDirectory("budget").toString
     SnapshotManifest.commit(spark, root,
       (0L until 200L).map(i => (i, s"v$i")).toDF("id", "x").repartition(4), Seq("id"))
+    root
+  }
+
+  /** [[seeded]] plus three DML commits, written with a parquet checkpoint
+    * twin at every second version: versions 0 and 2 carry twins.
+    */
+  private def twinAnchored(): String = {
+    spark.conf.set("graft.manifest.checkpointInterval", "2")
+    spark.conf.set("graft.manifest.parquetCheckpointMinLines", "1")
+    val root = try { val r = seeded(); (0 until 3).foreach(dml(r, _)); r }
+    finally {
+      spark.conf.unset("graft.manifest.checkpointInterval")
+      spark.conf.unset("graft.manifest.parquetCheckpointMinLines")
+    }
+    val twin = new org.apache.hadoop.fs.Path(root, "_ckpt/v00000002")
+    assert(twin.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(twin),
+      "the version-2 boundary must carry its twin")
     root
   }
 
@@ -119,6 +137,26 @@ class JobBudgetSpec extends SparkSpec {
     }, VacuumJobs)
     assert(reclaimed == Seq(0L, 1L, 2L))
     assert(SnapshotManifest.read(spark, root).count() == 201L)
+  }
+
+  test("vacuum of a twin-anchored table plans and sweeps on the driver") {
+    val root = twinAnchored()
+    var reclaimed = Seq.empty[Long]
+    // versions 2 (full) and 3 (delta on 2) survive: no chain-guard rewrite
+    assertBudget("a keep = 2 vacuum of a twin-anchored table", jobsOf {
+      reclaimed = SnapshotManifest.vacuum(spark, root, keep = 2)
+    }, VacuumJobs)
+    assert(reclaimed == Seq(0L, 1L))
+    assert(SnapshotManifest.read(spark, root).count() == 200L)
+  }
+
+  test("countRows of a twin-anchored table answers from stats on the driver") {
+    val root = twinAnchored()
+    var n = -1L
+    // every file has stats: no scan (the executor fold this replaced ran 4)
+    assertBudget("countRows of a twin-anchored table",
+      jobsOf { n = SnapshotManifest.countRows(spark, root) }, 0)
+    assert(n == 200L)
   }
 
   test("readWhere over a DV-carrying file infers no sidecar schema") {
@@ -251,10 +289,10 @@ class JobBudgetSpec extends SparkSpec {
   /** [[MergeJobs]]; 9 with the table load's inference as well. */
   private val SqlMergeJobs = 6
 
-  /** None: a twin-less table's plan (`vacuumPlan`: the retained manifests'
-    * references, one listing per data directory) and its sweep are driver
-    * metadata calls. The distributed plan (`distributedVacuumPlan`) runs
-    * only over twin-anchored bodies.
+  /** None: the plan (`vacuumPlan`: the retained manifests' references,
+    * one listing per data directory) and the sweep are driver metadata
+    * calls, with or without a parquet twin. The executor plan this
+    * replaced ran 10 jobs on a twin-anchored body.
     */
   private val VacuumJobs = 0
 }

@@ -5,13 +5,12 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotManifest
 
-/** Distributed vacuum reachability (round 12): on a twin-anchored table
-  * the live-file set and the per-dir file sweep run on executors
-  * (`distributedVacuumPlan`); the driver receives only kept-dir names and
-  * the garbage list. The plan must be semantically IDENTICAL to the
-  * authoritative driver path — pinned here by replaying the driver
-  * reachability logic in-test and comparing sets on a table with real
-  * churn garbage, orphaned staging, and a doomed version chain.
+/** Vacuum reachability on twin-anchored tables: a parquet checkpoint
+  * twin must not change what vacuum reclaims. The plan is pinned by
+  * replaying the reachability logic in-test and comparing sets on a table
+  * with real churn garbage, orphaned staging, and a doomed version chain;
+  * live DV sidecars must survive, and a twin-less table vacuums to the
+  * same content.
   */
 class VacuumFrameSpec extends SparkSpec {
   import spark.implicits._
@@ -60,7 +59,7 @@ class VacuumFrameSpec extends SparkSpec {
     (keptDirs, dirs.toSet, files.toSet)
   }
 
-  test("distributed vacuum plan ≡ driver reachability on a churned twin-anchored table") {
+  test("twin-anchored vacuum plan ≡ the driver reachability replay") {
     val root = newRoot()
     spark.conf.set("graft.manifest.checkpointInterval", "4")
     spark.conf.set("graft.manifest.parquetCheckpointMinLines", "100")
@@ -94,13 +93,7 @@ class VacuumFrameSpec extends SparkSpec {
       assert(expDirs.exists(_.contains("zz-orphan-stage")),
         "fixture must produce an orphaned dir")
 
-      SnapshotManifest.vacuumFramePlans.set(0L)
-      SnapshotManifest.manifestReadCount.set(0L)
       val plan = SnapshotManifest.vacuumPreview(spark, root, keep = 1)
-      assert(SnapshotManifest.vacuumFramePlans.get() == 1L,
-        "the twin-anchored table must plan its vacuum DISTRIBUTED")
-      assert(SnapshotManifest.manifestReadCount.get() == 0L,
-        "the distributed plan must not materialize any body on the driver")
       assert(plan.versions.toSet == doomed)
       assert(plan.dataDirs.toSet == expDirs,
         s"dir sweep diverged: got ${plan.dataDirs}, expected $expDirs")
@@ -123,23 +116,20 @@ class VacuumFrameSpec extends SparkSpec {
     }
   }
 
-  test("sub-floor tables stay on the driver plan (no twin — no distributed detour)") {
+  test("sub-floor (twin-less) tables vacuum to the same content") {
     val root = newRoot()
     SnapshotManifest.commit(spark, root,
       spark.range(0, 50).toDF("id").withColumn("x", lit("a"))
         .repartitionByRange(5, col("id")), Seq("id"))
     graft.operators.Upsert.mergeWhere(spark, root,
       Seq((7L, "b")).toDF("id", "x"), Seq("id"), Seq("id"))
-    SnapshotManifest.vacuumFramePlans.set(0L)
     val swept = SnapshotManifest.vacuum(spark, root, keep = 1)
     assert(swept == Seq(0L))
-    assert(SnapshotManifest.vacuumFramePlans.get() == 0L,
-      "a twin-less table must not pay the distributed planning detour")
     val got = SnapshotManifest.read(spark, root).as[(Long, String)].collect().toMap
     assert(got(7L) == "b" && got.size == 50)
   }
 
-  test("DV sidecars stay reachable through the distributed plan") {
+  test("DV sidecars stay reachable on a twin-anchored table") {
     val root = newRoot()
     spark.conf.set("graft.manifest.checkpointInterval", "4")
     spark.conf.set("graft.manifest.parquetCheckpointMinLines", "100")
@@ -149,9 +139,7 @@ class VacuumFrameSpec extends SparkSpec {
           .repartitionByRange(150, col("id")), Seq("id"))
       // MoR delete → a DV sidecar parquet the sweep must NOT reclaim
       SnapshotManifest.deleteWhereMoR(spark, root, col("id").between(10, 20))
-      SnapshotManifest.vacuumFramePlans.set(0L)
       val plan = SnapshotManifest.vacuumPreview(spark, root, keep = 1)
-      assert(SnapshotManifest.vacuumFramePlans.get() == 1L)
       assert(!plan.dataFiles.exists(_.contains("-dv-")) &&
         !plan.dataDirs.exists(_.contains("-dv-")),
         s"live DV sidecar must not be swept: ${plan.dataDirs} ${plan.dataFiles}")
