@@ -25,9 +25,15 @@ object Bench {
     // the widest expression trees (MinHash signatures) costs multiple seconds
     // of pure driver time.
     val warmDir = "/root/testdata/sf0.001"
+    def compileCount = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val warmCompiles0 = compileCount
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
       try run(fn, warmDir) catch { case _: Throwable => () }
     }
+    // the suite's codegen working set: each distinct class compiled once
+    // per classloader (see graft.core.Sessions.CodegenCacheMaxEntries)
+    val warmCompiles = compileCount - warmCompiles0
     // 3 timed runs per query: the machine is shared, and a single sample
     // conflates data work with scheduler noise (observed 2× total swings on
     // identical code). The record carries BOTH estimators so cross-round
@@ -51,8 +57,13 @@ object Bench {
       t.toString.map(c =>
         if (c == '"' || c == '\\' || Character.isISOControl(c)) ' ' else c)
         .take(200)
+    // Janino compiles during each query's timed samples: the warm-up pass
+    // compiled every shape once, so a nonzero count is generated code the
+    // codegen cache evicted (or a plan whose source changes per run)
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       var err: Option[String] = None
+      val compiles0 = compileCount
       val attempts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { run(fn, sfDir); true } catch { case t: Throwable =>
@@ -61,6 +72,7 @@ object Bench {
         }
         if (ok) Some((System.nanoTime() - t0) / 1e9) else None
       }
+      compiles(name) = compileCount - compiles0
       val samples = attempts.flatten
       // -1 sentinel in the PER-QUERY maps too: a dead query recorded as
       // 0.0 is shape-identical to a record speedup for any consumer
@@ -85,6 +97,8 @@ object Bench {
       kv.map { case (k, e) => s"\"" + k + "\":\"" + e + "\"" }
         .mkString("{", ",", "}")
     val qs = jsonMap(results.map(r => r._1 -> r._2))
+    val qsCompiles = compiles.map { case (k, n) => s"\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
     val qsCold = jsonMap(results.map(r => r._1 -> r._3))
     // total_cold is only meaningful when EVERY first attempt succeeded —
     // a -1 cold sentinel (flaky first run) summed in would silently skew
@@ -95,7 +109,7 @@ object Bench {
       if (results.isEmpty) 0.0 else results.map(_._2).sum / results.length)
     val (total, totalCold, mean) =
       if (failed.nonEmpty) (-1.0, -1.0, -1.0) else sums
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","total_cold":$totalCold,"mean_per_query":$mean,"n_failed":${failed.size},"failed":${jsonStrMap(failed)},"n_flaky":${flaky.size},"flaky":${jsonStrMap(flaky)},"queries":$qs,"queries_cold":$qsCold,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","total_cold":$totalCold,"mean_per_query":$mean,"n_failed":${failed.size},"failed":${jsonStrMap(failed)},"n_flaky":${flaky.size},"flaky":${jsonStrMap(flaky)},"queries":$qs,"queries_cold":$qsCold,"compiles_warm":$warmCompiles,"compiles":$qsCompiles,"sf":"$sfDir"}"""
     // persist the FULL record to a file: the driver keeps only the last
     // ~2000 chars of stdout, and a 90+-query map is ~8 KB — r04/r05 both
     // recorded `parsed: null` because the one big line never fit the tail.
@@ -114,6 +128,7 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","total_cold":$totalCold,""" +
       s""""mean_per_query":$mean,"n_failed":${failed.size},""" +
       s""""slowest_queries":$slow,"n_queries":${results.length},""" +
+      s""""compiles_warm":$warmCompiles,"compiles_timed":${compiles.values.sum},""" +
       s""""queries_file":"$outFile","sf":"$sfDir"}""")
     spark.stop()
   }

@@ -11,8 +11,34 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions sized for the local harness but overridable — on a real
   * cluster this would be `spark.sql.shuffle.partitions ≈ 2-3× total cores`
   * plus AQE coalescing.
+  *
+  * The codegen cache size is a STATIC conf: Spark reads it once per JVM,
+  * when the first query compiles generated code, so it cannot be set on a
+  * running session. A caller that builds its own session instead of
+  * [[builder]] should set `spark.sql.codegen.cache.maxEntries` to
+  * [[CodegenCacheMaxEntries]] itself, or warm engine calls keep
+  * recompiling the classes Spark's 100-entry default evicts.
   */
 object Sessions {
+  /** Entries of Spark's generated-class cache (LRU; default 100). A cache
+    * key is (context classloader, generated source), and each class is
+    * compiled once under the driver's loader and once under the executor
+    * task's, so every distinct source takes two entries. Measured working
+    * sets (local[4], compile counts from Spark's `CodegenMetrics`):
+    *   - one call of every engine verb family on a 200-row table
+    *     (CodegenBudgetSpec's warm-up deck) compiles 98 classes, about the
+    *     whole default cache; a benchmark's deck of verified writes needs
+    *     more;
+    *   - the 165-query `graft.Bench` warm-up pass at sf0.001 compiles 2273
+    *     classes, and its three timed passes another 669 whose source
+    *     changes per run. At 2000 entries each cyclic pass evicted what
+    *     the next one needed: the timed passes recompiled 2294 classes in
+    *     161 queries. At 4096 they recompiled 672, in 43 queries (669 in
+    *     42 at 8192): only the per-run classes.
+    * A cached class costs its loaded bytecode.
+    */
+  val CodegenCacheMaxEntries = 4096
+
   def builder(
       appName: String = "graft",
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -51,6 +77,7 @@ object Sessions {
       // .writeDataFiles — because INT96 chunks carry no footer statistics
       // and Spark disables parquet predicate pushdown on INT96 entirely.
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
 
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()

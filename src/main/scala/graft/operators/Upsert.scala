@@ -452,7 +452,7 @@ object Upsert {
                   Some(alignedStaged), statsCols, meta)),
               Some(Literal.TrueLiteral), emptySchema = Some(alignedStaged.schema))
           }
-          val files = body.map(SnapshotManifest.bodyFile(tableRoot, _))
+          val files = SnapshotManifest.bodyFiles(tableRoot, body)
           val targetSchema = targetOk(SnapshotManifest.tableSchema(spark,
             tableRoot, meta.schema, body.headOption).get)
           // NOTE on evolution: merge() itself already implements ANSI MERGE
@@ -637,7 +637,7 @@ object Upsert {
       if (keyPred.isEmpty) return v
       val (body, meta) = SnapshotManifest.manifestParts(spark, tableRoot, v)
       if (body.isEmpty) return v
-      val files = body.map(SnapshotManifest.bodyFile(tableRoot, _))
+      val files = SnapshotManifest.bodyFiles(tableRoot, body)
       val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
       pk.foreach(c => require(targetSchema.fieldNames.contains(c),
         s"deleteKeys: PK column $c not in target schema ${targetSchema.fieldNames.mkString(", ")}"))
@@ -699,7 +699,7 @@ object Upsert {
         return mergeWhere(spark, tableRoot, stagedP, pk, statsCols,
           maxKeySetSize, colocated, maxColocatedRows)
       val entries = body.map(SnapshotManifest.parseLine)
-      val files = body.map(SnapshotManifest.bodyFile(tableRoot, _))
+      val files = SnapshotManifest.bodyFiles(tableRoot, body)
       val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
       pk.foreach(c => require(targetSchema.fieldNames.contains(c),
         s"mergeWhereMoR: PK column $c not in target schema ${targetSchema.fieldNames.mkString(", ")}"))

@@ -39,7 +39,7 @@ private[graft] final class SnapshotFileIndex(
 
   private val rootPath = new Path(root)
   private val absPaths: Seq[String] =
-    entries.map(e => SnapshotManifest.bodyFile(root, e.rel))
+    SnapshotManifest.bodyFiles(root, entries.map(_.rel))
 
   // one listStatus per data dir, keyed by qualified path; shared dirs are
   // filtered back to this version's files at lookup

@@ -227,7 +227,7 @@ object SnapshotManifest {
     * everything but the data path.
     */
   def snapshotFiles(spark: SparkSession, root: String, version: Long): Seq[String] =
-    manifestBody(spark, root, version).map(l => bodyFile(root, l))
+    bodyFiles(root, manifestBody(spark, root, version))
 
   /** Per-file stats of snapshot `version`, keyed by file NAME — empty for
     * files committed without stats (pre-stats manifests read fine: every
@@ -942,14 +942,14 @@ object SnapshotManifest {
             spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
               .filter(predicate)
-          else readEntries(spark, root, kept.map(parseLine), meta.schema)
-            .filter(predicate)
+          else KeyLiterals.byReference(
+            readEntries(spark, root, kept.map(parseLine), meta.schema).filter(predicate))
         }
       case None => ()
     }
     val (body, meta) = manifestParts(spark, root, v)
     val entries = body.map(parseLine)
-    val all = body.map(l => bodyFile(root, l))
+    val all = bodyFiles(root, body)
     // with a RECORDED schema the prune decision needs no file contact at
     // all (at 100k files, constructing a reader over every path pays a
     // full listing just to learn a schema the manifest already states);
@@ -961,14 +961,17 @@ object SnapshotManifest {
         s"SnapshotManifest.readWhere: snapshot $v of $root has no data " +
           "files and no recorded schema"))
     val pred = ManifestStats.resolvePredicate(spark, schema, predicate)
-    val kept = ManifestStats.prune(all, bodyStats(body), pred).toSet
+    val kept = ManifestStats.prune(all, bodyStatsOf(entries), pred).toSet
     val keptEntries = entries.zip(all).collect { case (e, f) if kept(f) => e }
     if (keptEntries.isEmpty)
       // schema must come from the table even when every file is pruned
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .filter(predicate)
-    else readEntries(spark, root, keptEntries, Some(schema)).filter(predicate)
+    // the key goes into generated code by reference: a point read of a new
+    // key reuses the compiled scan filter (the scan still pushes it down)
+    else KeyLiterals.byReference(
+      readEntries(spark, root, keptEntries, Some(schema)).filter(predicate))
   }
 
   /** The file list [[readWhere]] would scan for `predicate` at `version` —
@@ -985,13 +988,13 @@ object SnapshotManifest {
     // distributed twin of [[readWhere]]'s fast path — survivors only on
     // the driver; sorted (see ORDERING above) so repeated calls agree
     distributedPrune(spark, root, version, predicate) match {
-      case Some((_, _, kept)) => return kept.map(l => bodyFile(root, l)).sorted
+      case Some((_, _, kept)) => return bodyFiles(root, kept).sorted
       case None => ()
     }
     val (body, meta) = manifestParts(spark, root, version)
     if (body.isEmpty) return Nil // nothing to prune, no schema needed
     val entries = body.map(parseLine)
-    val files = entries.map(e => new Path(new Path(root), e.rel).toString)
+    val files = bodyFiles(root, entries.map(_.rel))
     // recorded schema or one footer read on the driver, no job
     val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     ManifestStats.prune(files, bodyStatsOf(entries),
@@ -1247,7 +1250,10 @@ object SnapshotManifest {
     * delta-encoding key: one line per live file, replaced wholesale when
     * its stats or DV tag change).
     */
-  private def relOf(line: String): String = line.split('\t').head
+  private def relOf(line: String): String = {
+    val tab = line.indexOf('\t')
+    if (tab < 0) line else line.substring(0, tab)
+  }
 
   /** Commits write FULL manifests every this-many versions (and always for
     * version 0); in between they may write churn-sized DELTAS against the
@@ -1992,7 +1998,13 @@ object SnapshotManifest {
 
   /** Absolute data-file path of one manifest body line. */
   private[graft] def bodyFile(root: String, line: String): String =
-    new Path(new Path(root), line.split('\t').head).toString
+    bodyFiles(root, Seq(line)).head
+
+  /** [[bodyFile]] of each line, parsing `root` once for all of them. */
+  private[graft] def bodyFiles(root: String, lines: Seq[String]): Seq[String] = {
+    val rootPath = new Path(root)
+    lines.map(l => new Path(rootPath, relOf(l)).toString)
+  }
 
   /** Per-file stats parsed out of manifest body lines, keyed by file name
     * (stats-less lines simply don't appear — they never prune).
@@ -2006,7 +2018,7 @@ object SnapshotManifest {
   private[graft] def bodyStatsOf(entries: Seq[ManifestEntry])
       : Map[String, ManifestStats.FileStats] =
     entries.flatMap(e =>
-      e.stats.map(json => new Path(e.rel).getName -> ManifestStats.fromJson(json))).toMap
+      e.stats.map(json => ManifestStats.baseName(e.rel) -> ManifestStats.fromJson(json))).toMap
 
   /** MERGE-ON-READ DELETE — [[deleteWhere]]'s deferred twin (Delta/Iceberg
     * deletion vectors, on this engine's manifest): instead of rewriting
@@ -2049,7 +2061,7 @@ object SnapshotManifest {
       throw new IllegalStateException(s"deleteWhereMoR: no committed snapshot under $root"))
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return v
-    val files = body.map(bodyFile(root, _))
+    val files = bodyFiles(root, body)
     val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
     val affected = ManifestStats.prune(files, bodyStats(body), resolved).toSet
@@ -2065,8 +2077,8 @@ object SnapshotManifest {
       .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val (alive, fCol, rCol) =
       readEntriesWithPositions(spark, root, affectedEntries, oldDv, meta.schema)
-    val newMatches = alive.filter(coalesce(predicate, lit(false)))
-      .select(col(fCol).alias("file_name"), col(rCol).alias("row_index"))
+    val newMatches = KeyLiterals.byReference(alive.filter(coalesce(predicate, lit(false)))
+      .select(col(fCol).alias("file_name"), col(rCol).alias("row_index")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nNew = newMatches.count()
@@ -2126,7 +2138,7 @@ object SnapshotManifest {
       throw new IllegalStateException(s"updateWhereMoR: no committed snapshot under $root"))
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return v
-    val files = body.map(bodyFile(root, _))
+    val files = bodyFiles(root, body)
     val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     assignments.keys.foreach(c => require(schema.fieldNames.contains(c),
       s"updateWhereMoR: SET column '$c' not in ${schema.fieldNames.mkString(", ")}"))
@@ -2139,7 +2151,7 @@ object SnapshotManifest {
       .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val (alive, fCol, rCol) =
       readEntriesWithPositions(spark, root, affectedEntries, oldDv, meta.schema)
-    val matched = alive.filter(coalesce(predicate, lit(false)))
+    val matched = KeyLiterals.byReference(alive.filter(coalesce(predicate, lit(false))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (matched.isEmpty) return v
@@ -2595,7 +2607,7 @@ object SnapshotManifest {
         case None =>
           val (body, meta) = manifestParts(spark, root, v)
           if (body.isEmpty) return v
-          val files = body.map(bodyFile(root, _))
+          val files = bodyFiles(root, body)
           val schema = tableSchema(spark, root, meta.schema, body.headOption).get
           val stats = bodyStats(body)
           val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
@@ -2623,8 +2635,8 @@ object SnapshotManifest {
     // proven whole-match): nothing is staged. Staged ONCE: a lost race
     // against a non-conflicting writer re-publishes these exact files
     val added = stageLines(spark, root, v + 1,
-      Option.when(affected.nonEmpty)(
-        transform(readEntries(spark, root, affected.map(parseLine), meta.schema))),
+      Option.when(affected.nonEmpty)(KeyLiterals.byReference(
+        transform(readEntries(spark, root, affected.map(parseLine), meta.schema)))),
       statsCols, meta)
     // removed lines drop; everything else carries over verbatim (path,
     // stats AND any dv ref)
@@ -2795,6 +2807,50 @@ object SnapshotManifest {
       .filterNot(changedRels).map(_ -> None)
   }
 
+  /** Each caller session's writer clone, with the caller state it copied
+    * (runtime conf, registered query-execution listeners). Access-ordered
+    * and bounded: a caller session that stops writing ages out.
+    */
+  private val writerClones =
+    new java.util.LinkedHashMap[SparkSession, (CallerState, SparkSession)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SparkSession, (CallerState, SparkSession)]): Boolean =
+        size > MaxWriterClones
+    }
+
+  /** What a writer clone copies from its caller: runtime conf, listeners. */
+  private type CallerState = (Map[String, String], Seq[AnyRef])
+
+  /** Caller sessions whose writer clone is kept. */
+  private val MaxWriterClones = 16
+
+  /** The session engine data files are written through: a clone of
+    * `spark` ([[org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession]])
+    * that writes timestamps as INT64 micros. One clone serves every write
+    * of a caller session for as long as the caller's runtime conf and its
+    * registered listeners are what the clone copied; any change to either
+    * makes it stale, and the next write clones afresh. Reuse matters for
+    * speed, not semantics: every clone gets its own session UUID and so its
+    * own artifact classloader, and Spark's codegen cache keys on the
+    * classloader, so a clone per write recompiled every generated class of
+    * every write. Concurrent writers share the clone; nothing sets a conf
+    * on it after it is made.
+    */
+  private def writerSession(spark: SparkSession): SparkSession = {
+    val state: CallerState =
+      (spark.conf.getAll,
+        org.apache.spark.sql.graftbridge.ColumnBridge.executionListeners(spark))
+    writerClones.synchronized {
+      Option(writerClones.get(spark)).collect { case (`state`, clone) => clone }
+        .getOrElse {
+          val clone = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(spark)
+          clone.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+          writerClones.put(spark, (state, clone))
+          clone
+        }
+    }
+  }
+
   /** Write `df` into a fresh uniquely-nonced data dir for version `next`
     * and return its manifest lines (incl. optional stats) — the staging
     * step under [[commit]], the append loop and [[stageLines]]. Nothing is
@@ -2878,18 +2934,15 @@ object SnapshotManifest {
     // files are only ever read back by this engine, where both encodings
     // read identically under the UTC session; result dumps and other
     // caller-facing writes keep the session default. The encoding is
-    // scoped to a PER-WRITE clone of the caller's session, never a
-    // set/write/restore on the caller's conf: concurrent commit threads
-    // could race one thread's restore against another's write planning,
-    // and a concurrent caller-facing write could pick up the engine's
-    // encoding. The clone carries the caller's RUNTIME conf as of this
-    // write (case sensitivity, shuffle partitions, time zone, ...).
-    val writerSession =
-      org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(spark)
-    writerSession.conf.set("spark.sql.parquet.outputTimestampType",
-      "TIMESTAMP_MICROS")
+    // scoped to the caller session's WRITER CLONE ([[writerSession]]),
+    // never a set/write/restore on the caller's conf: concurrent commit
+    // threads could race one thread's restore against another's write
+    // planning, and a concurrent caller-facing write could pick up the
+    // engine's encoding. The clone carries the caller's RUNTIME conf (case
+    // sensitivity, shuffle partitions, time zone, ...) and listeners as of
+    // this write: it is reused only while both are unchanged.
     val toWrite = org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(
-      writerSession, toWrite0.queryExecution.analyzed)
+      writerSession(spark), toWrite0.queryExecution.analyzed)
     // parquet-NATIVE bloom filters per row group for the table's
     // bloom-indexed columns: the codegen'd scan path prunes row groups on
     // pushed equality predicates with zero reader changes here (parquet-mr

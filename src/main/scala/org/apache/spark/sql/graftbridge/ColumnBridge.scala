@@ -25,14 +25,28 @@ object ColumnBridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** A fresh session that COPIES `spark`'s state as of now — runtime SQL
-    * conf included, which `newSession()` drops (it starts from the
-    * builder-time confs). `cloneSession()` is `private[sql]`. The engine
-    * writes its internal data files through a per-write clone so a
-    * write-only conf never touches the caller's session.
+    * conf and registered query-execution listeners included; `newSession()`
+    * drops both (it starts from the builder-time confs).
+    * `cloneSession()` is `private[sql]`. The engine writes its internal
+    * data files through a clone, so a write-only conf never touches the
+    * caller's session. It keeps ONE clone per caller session and reuses it
+    * while the caller's runtime conf and listeners are unchanged; a change
+    * to either makes the clone stale (it copied the old state), and the
+    * next write clones afresh. A clone per write would be correct but
+    * slow: each clone has its own session UUID and artifact classloader,
+    * and generated code cached under one classloader is compiled again
+    * under the next.
     */
   def cloneSession(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** The query-execution listeners registered on `spark`, which a clone
+    * copies. `listListeners()` is `private[spark]`.
+    */
+  def executionListeners(spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.util.QueryExecutionListener] =
+    spark.listenerManager.listListeners().toSeq
 
   /** The schema `spark.read.parquet(path).schema` infers for ONE parquet
     * file, read on the driver without the one-task inference job: Spark's

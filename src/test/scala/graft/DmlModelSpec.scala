@@ -260,29 +260,6 @@ class DmlModelSpec extends SparkSpec {
     1 -> Gen.const(SqlFold),
     1 -> Gen.const(SqlSetProps))
 
-  /** Fresh session with GraftExtensions + GraftCatalog (the SQL surface
-    * needs both); mirrors SnapshotSqlSpec's helper.
-    */
-  private def withExtSession[A](f: org.apache.spark.sql.SparkSession => A): A = {
-    val shared = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val ext = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.catalog.spark_catalog", "graft.sources.GraftCatalog")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      f(ext)
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(shared)
-      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
-    }
-  }
-
   test("SQL-mode fuzz: every verb rendered as a SQL statement against a catalog table matches the model") {
     withExtSession { ext =>
       import ext.implicits._

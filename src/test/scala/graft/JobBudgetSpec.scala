@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 import graft.operators.Upsert
 import graft.sources.{ChangeFeed, SnapshotManifest}
@@ -233,28 +232,6 @@ class JobBudgetSpec extends SparkSpec {
         assert(SnapshotManifest.read(spark, root).filter(col("id").isin(7L, 3000L))
           .as[(Long, String)].collect().toMap == Map(7L -> "m", 3000L -> "n"))
       } finally ext.sql("DROP TABLE IF EXISTS budget_sql_t")
-    }
-  }
-
-  /** A session over the shared context with GraftExtensions and the
-    * GraftCatalog (SQL DML routes through them); the shared session is
-    * restored afterwards.
-    */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    val shared = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try f(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.spark_catalog", "graft.sources.GraftCatalog")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate())
-    finally {
-      SparkSession.setActiveSession(shared)
-      SparkSession.setDefaultSession(shared)
     }
   }
 

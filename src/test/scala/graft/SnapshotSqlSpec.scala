@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -23,32 +23,6 @@ class SnapshotSqlSpec extends SparkSpec {
       spark.range(0, n).toDF("id").withColumn("v", col("id") * 10L)
         .repartitionByRange(parts, col("id")), Seq("id"))
     ()
-  }
-
-  /** Fresh session over the shared context with GraftExtensions (the
-    * repo-wide pattern, see ExpressionSpec); restores the shared session
-    * afterwards so later suites are unaffected.
-    */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    val shared = spark // force-init the plain shared session FIRST (see SqlTimeTravelSpec)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // mirror graft.core.Sessions exactly (extensions + catalog) so
-        // these tests exercise the same resolution paths as Verify/Bench
-        .config("spark.sql.catalog.spark_catalog", "graft.sources.GraftCatalog")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      f(ext)
-    } finally {
-      SparkSession.setActiveSession(shared)
-      SparkSession.setDefaultSession(shared)
-    }
   }
 
   test("CREATE TABLE USING graft-snapshot: SQL SELECT plans through the pruning relation; INSERT INTO/OVERWRITE map to commit verbs") {

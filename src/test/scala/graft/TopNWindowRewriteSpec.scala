@@ -11,24 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class TopNWindowRewriteSpec extends SparkSpec {
 
-  private def withExtSession[A](f: SparkSession => A): A = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      f(ext)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
-
   private def optimized(df: DataFrame): String =
     df.queryExecution.optimizedPlan.toString()
 

@@ -8,10 +8,12 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 import graft.sources.SnapshotManifest
 
-/** Engine data-file writes run through a per-write clone of the caller's
-  * session (INT64-micros timestamps set on the clone only). The clone must
-  * carry the caller's RUNTIME conf — values set after the session was
-  * built — not just its builder-time confs.
+/** Engine data-file writes run through a clone of the caller's session
+  * (INT64-micros timestamps set on the clone only). The clone must carry
+  * the caller's RUNTIME conf — values set after the session was built —
+  * not just its builder-time confs. One clone is reused across writes, so
+  * a conf set or a listener registered between two writes must still
+  * reach the second.
   */
 class WriterSessionConfSpec extends SparkSpec {
 
@@ -62,5 +64,67 @@ class WriterSessionConfSpec extends SparkSpec {
       spark.listenerManager.unregister(listener)
       prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
+  }
+
+  /** Every engine write's (writer session, value of `key` in its conf),
+    * as a listener registered on the caller sees them: the engine's writer
+    * session is the only one writing MICROS timestamps.
+    */
+  private def engineWrites(key: String) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(AnyRef, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = {
+        val c = qe.sparkSession.conf
+        if (c.get(tsKey, "") == "TIMESTAMP_MICROS") seen.add((qe.sparkSession, c.get(key, "")))
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    (seen, listener)
+  }
+
+  test("a runtime conf set between two engine writes reaches the second write") {
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.caseSensitive"
+    val prior = spark.conf.getOption(key)
+    val (seen, listener) = engineWrites(key)
+    spark.listenerManager.register(listener)
+    try {
+      spark.conf.set(key, "false")
+      SnapshotManifest.commit(spark, Files.createTempDirectory("writerconf").toString,
+        spark.range(5).select(col("id")))
+      spark.conf.set(key, "true")
+      // case-colliding columns stage only under a case-SENSITIVE writer: a
+      // writer session still on the first write's conf would refuse them
+      val root = Files.createTempDirectory("writerconf").toString
+      SnapshotManifest.commit(spark, root,
+        spark.range(5).select(col("id"), (col("id") * 2).as("ID")))
+      assert(SnapshotManifest.read(spark, root).columns.toSeq == Seq("id", "ID"))
+      eventually(timeout(Span(30, Seconds))) {
+        assert(seen.asScala.map(_._2).toSeq.distinct == Seq("false", "true"))
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  test("a listener registered after a first engine write sees the next ones, on one writer session") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("writerconf").toString
+    SnapshotManifest.commit(spark, root, spark.range(5).select(col("id")))
+    val (seen, listener) = engineWrites(tsKey)
+    spark.listenerManager.register(listener)
+    try {
+      (5 until 7).foreach(i =>
+        SnapshotManifest.appendRows(spark, root, spark.range(i, i + 1).select(col("id"))))
+      eventually(timeout(Span(30, Seconds))) {
+        assert(seen.size == 2, "the listener missed an engine write after it registered")
+      }
+      // unchanged conf and listeners: both appends reused one writer clone
+      assert(seen.asScala.map(_._1).toSet.size == 1)
+      assert(SnapshotManifest.read(spark, root).count() == 7L)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
