@@ -1443,10 +1443,9 @@ object Oracles {
         |      FROM documents WHERE doc_id < 64)
         |ORDER BY asset_id, frame_index""".stripMargin,
 
-    // Co-located merge (q152): q123's ANSI-MERGE replay over a different
-    // key range — the decomposed broadcast strategy (declared via
-    // merge=colocated) must be invisible in the result. The in-query
-    // REQUIREs pin that the decomposed path actually ran.
+    // Keyed merge on a range-clustered table (q152, id kept from the
+    // retired co-located strategy): q123's ANSI-MERGE replay over a
+    // different key range.
     "q152_colocated_merge" ->
       """WITH target AS (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),

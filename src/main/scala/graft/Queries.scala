@@ -3955,18 +3955,12 @@ object Queries {
       .orderBy(col("asset_id"), col("frame_index"))
   }
 
-  /** Co-located MERGE as a DECLARED table property (q152):
-    * [[graft.sources.SnapshotManifest.setColocatedMerge]] flips the
-    * snapshot table's merge strategy to the decomposed broadcast form
-    * ([[graft.operators.Upsert.mergeColocated]]) — zero target-side
-    * Exchange, the 100-TB merge posture as ONE flag instead of a
-    * per-call rewrite. In-query REQUIREs pin the mechanism (the hint
-    * reads back after the declaration publish; the merge takes the
-    * decomposed path — `colocatedMergeCount`); the oracle gates the
-    * semantics with the same ANSI-MERGE replay as q123 over a different
-    * key range — the strategy must be invisible in the result.
+  /** Keyed MERGE over a range-clustered snapshot table (q152; the id is
+    * kept from the retired co-located merge strategy): the file-pruned
+    * [[graft.operators.Upsert.mergeWhere]] updates one key range and
+    * inserts another. The oracle is q123's ANSI-MERGE replay.
     */
-  def q152ColocatedMerge(spark: SparkSession, dir: String): DataFrame = {
+  def q152ClusteredMerge(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{SnapshotManifest => S}
     val orders = t(spark, dir, "orders")
     val root = java.nio.file.Files.createTempDirectory(serveIdxRoot, "q152").toString
@@ -3974,23 +3968,16 @@ object Queries {
       orders.select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .repartitionByRange(8, col("o_orderkey")),
       Seq("o_orderkey"))
-    val v1 = S.setColocatedMerge(spark, root, true)
-    require(S.colocatedMerge(spark, root, v1),
-      "q152: the declared merge=colocated hint must read back")
     // key ranges present at EVERY fixture sf (orderkeys are dense from 0;
-    // sf0.001 tops out at 1499 — a range above that would stage nothing
-    // and the engage-REQUIRE below would fail vacuously)
+    // sf0.001 tops out at 1499 — a range above that would stage nothing)
     val staged = orders.filter(col("o_orderkey").between(200, 300))
       .select(col("o_orderkey"), lit("U").alias("o_orderstatus"),
         (col("o_totalprice") * 3).alias("o_totalprice"))
       .unionByName(orders.filter(col("o_orderkey").between(1000, 1040))
         .select((col("o_orderkey") + 20000000L).alias("o_orderkey"),
           lit("N").alias("o_orderstatus"), col("o_totalprice")))
-    val before = graft.operators.Upsert.colocatedMergeCount.get()
     graft.operators.Upsert.mergeWhere(spark, root, staged,
       Seq("o_orderkey"), Seq("o_orderkey"))
-    require(graft.operators.Upsert.colocatedMergeCount.get() == before + 1,
-      "q152: the declared hint must engage the decomposed merge path")
     S.read(spark, root)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).alias("n"),
@@ -4179,7 +4166,7 @@ object Queries {
     "q149_bpe_batched" -> (q149BpeBatched _),
     "q150_ckpt_pruned_read" -> (q150CkptPrunedRead _),
     "q151_frame_sampling" -> (q151FrameSampling _),
-    "q152_colocated_merge" -> (q152ColocatedMerge _),
+    "q152_colocated_merge" -> (q152ClusteredMerge _),
     "q153_distributed_vacuum" -> (q153DistributedVacuum _),
     "q154_edits_commit_path" -> (q154EditsCommitPath _),
     "q155_catalyst_scan" -> (q155CatalystScan _),

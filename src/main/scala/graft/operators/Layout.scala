@@ -155,8 +155,8 @@ object Layout {
       throw new IllegalStateException(s"optimizeSnapshot: no committed snapshot under $root"))
     // ONE manifest read answers stats, entries, and the declared schema
     val (body, meta) = SnapshotManifest.manifestParts(spark, root, v)
-    val entries = body.map(SnapshotManifest.parseLine)
-    val inherited = SnapshotManifest.bodyStatsOf(entries)
+    val entries = SnapshotManifest.bodyEntries(body)
+    val inherited = SnapshotManifest.bodyStats(body)
       .values.flatMap(_.cols.keys).toSeq
     val statsCols = (inherited ++ zCols ++ extraStatsCols).distinct.sorted
     val base = SnapshotManifest.readEntries(spark, root, entries, meta.schema)

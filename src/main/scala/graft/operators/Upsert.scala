@@ -97,126 +97,6 @@ object Upsert {
   def merge(target: DataFrame, staged: DataFrame, pkColumns: String): DataFrame =
     merge(target, staged, parsePkColumns(pkColumns))
 
-  /** Diagnostic counter: co-located merges taken (specs assert the
-    * declared-hint path engaged, or that a too-fat batch degraded).
-    */
-  private[graft] val colocatedMergeCount =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** The ONE merge-strategy gate shared by [[mergeWhere]] and
-    * [[mergeWhereMoR]]: the explicit `colocated` argument (resolved by the
-    * caller against the table's declared merge= hint) selects
-    * [[mergeColocated]], gated on the staged row count — a batch too fat
-    * to broadcast degrades LOUDLY to the shuffle [[merge]], so correctness
-    * never depends on the hint. `stagedRowCount` is a thunk: the count is
-    * only paid when the hint is actually on.
-    */
-  private def pickMergeStrategy(verb: String, wantColoc: Boolean,
-      stagedRowCount: () => Long, maxColocatedRows: Long)
-      : (DataFrame, DataFrame, Seq[String]) => DataFrame =
-    if (!wantColoc)
-      (t: DataFrame, s: DataFrame, p: Seq[String]) => merge(t, s, p)
-    else {
-      val n = stagedRowCount()
-      if (n <= maxColocatedRows) {
-        colocatedMergeCount.incrementAndGet()
-        (t: DataFrame, s: DataFrame, p: Seq[String]) => mergeColocated(t, s, p)
-      } else {
-        graft.core.Logging.logger().warn(
-          s"$verb: staged batch ($n rows) exceeds maxColocatedRows=" +
-            s"$maxColocatedRows — degrading the co-located merge to the " +
-            "shuffle merge for this batch")
-        (t: DataFrame, s: DataFrame, p: Seq[String]) => merge(t, s, p)
-      }
-    }
-
-  /** [[merge]] decomposed for a BIG target and a churn-sized staged batch:
-    * identical semantics, ZERO target-side exchange. The full-outer form
-    * shuffles both sides on the PK — at 100 TB the target-side Exchange is
-    * the merge's dominant cost. Here the staged batch (the delta — small
-    * by construction) broadcasts instead, and the target is only ever
-    * scanned:
-    *
-    *   1. update pass — `target LEFT OUTER JOIN broadcast(staged)` on the
-    *      PK: matched rows take staged values (same PK/INSERT_TIMESTAMP/
-    *      drift carve-outs as [[merge]]), unmatched target rows pass
-    *      through. A narrow broadcast-hash join over the target scan.
-    *   2. matched keys — `target SEMI JOIN broadcast(staged keys)`,
-    *      deduplicated PER PARTITION (no shuffle): the PK tuples that
-    *      found a match, ≤ distinct staged keys × partitions even when
-    *      the target holds duplicate PKs.
-    *   3. inserts — `staged ANTI JOIN broadcast(matched keys)`: staged
-    *      rows no target row matched (null-component PKs never equal, so
-    *      they insert — reference parity), aligned to the target's
-    *      columns with null for staged-absent ones.
-    *
-    * Output = pass 1 ∪ pass 3. No node in the plan is a shuffle: strictly
-    * stronger than bucketing the target (which still pays one staged-side
-    * Exchange into the bucket partitioning) — asserted in
-    * ColocatedMergeSpec. The target is scanned twice (update + matched-key
-    * pass); callers merging a pruned slice ([[mergeWhere]]) re-read only
-    * churn files. CALLER CONTRACT: `staged` must fit in a broadcast —
-    * [[mergeWhere]] gates on `maxColocatedRows` and degrades loudly to the
-    * shuffle [[merge]] rather than risking a driver OOM.
-    */
-  def mergeColocated(target: DataFrame, staged: DataFrame,
-      pkCols: Seq[String]): DataFrame = {
-    require(pkCols.nonEmpty, "at least one PK column required")
-    val pk = pkCols.map(_.trim)
-    val taken = target.columns.toSeq ++ staged.columns.toSeq
-    val sMark = freshName("__s_present", taken)
-    val t = target.alias("t")
-    val s = broadcast(staged.withColumn(sMark, lit(true))).alias("s")
-    val joined = t.join(s,
-      pk.map(c => col(s"t.`$c`") === col(s"s.`$c`")).reduce(_ && _),
-      "left_outer")
-    val matched = col(s"s.`$sMark`").isNotNull
-    val updateCols: Seq[Column] = target.columns.toSeq.map { c =>
-      val tc = col(s"t.`$c`")
-      val stagedHas = staged.columns.contains(c)
-      val v =
-        if (pk.contains(c) || c == InsertTs) tc // target wins on match
-        else if (stagedHas) when(matched, col(s"s.`$c`")).otherwise(tc)
-        else tc // staged-absent column (drift): matched rows keep target
-      v.alias(c)
-    }
-    val updatedOrKept = joined.select(updateCols: _*)
-    val pkColsOf = (d: DataFrame) => d.select(pk.map(c => col(s"`$c`")): _*)
-    val matchedRaw = pkColsOf(target).alias("tk").join(
-      broadcast(pkColsOf(staged).alias("sk")),
-      pk.map(c => col(s"tk.`$c`") === col(s"sk.`$c`")).reduce(_ && _),
-      "left_semi")
-    // PER-PARTITION dedup before the broadcast — a global distinct would
-    // reintroduce a shuffle, but without ANY dedup the broadcast is
-    // bounded by matched TARGET rows, not by the staged batch: a target
-    // with heavily duplicated PKs (legal for the raw operator, even
-    // though the snapshot MERGE family's declared invariant is pk-unique
-    // snapshots) would collect every duplicate to the driver. Per-
-    // partition dedup caps it at distinct-matched-keys × partitions —
-    // a function of the (gated) staged key count again.
-    val matchedKeys = matchedRaw.mapPartitions { it =>
-      // canonical content key, NOT the Row itself: Row.equals compares
-      // array contents but Row.hashCode hashes array IDENTITY, so a
-      // HashSet[Row] would silently never collapse binary (Array[Byte])
-      // PKs and the bound below would not hold for them
-      def canon(v: Any): Any = v match {
-        case a: Array[_] => a.toSeq.map(canon)
-        case x => x
-      }
-      val seen = new java.util.HashSet[Seq[Any]]()
-      it.filter(r => seen.add(r.toSeq.map(canon)))
-    }(org.apache.spark.sql.Encoders.row(matchedRaw.schema))
-    val inserts = staged.alias("ins").join(
-      broadcast(matchedKeys.alias("mk")),
-      pk.map(c => col(s"ins.`$c`") === col(s"mk.`$c`")).reduce(_ && _),
-      "left_anti")
-    val insertCols: Seq[Column] = target.columns.toSeq.map { c =>
-      (if (staged.columns.contains(c)) col(s"ins.`$c`") else lit(null))
-        .alias(c)
-    }
-    updatedOrKept.unionByName(inserts.select(insertCols: _*))
-  }
-
   /** Full reference flow (`merge_tmp_into_target_tbl`): stage → merge →
     * atomic swap on a parquet path → audit count of rows updated today
     * (`utils.py:293-295`). Returns the audit count.
@@ -299,6 +179,9 @@ object Upsert {
     * narrow-key merge rewrites a handful of files and the decision is one
     * driver-side manifest read.
     *
+    * The affected slice merges through the one shuffle [[merge]] plan:
+    * one full-outer join on the PK, over the pruned target slice only.
+    *
     * Output columns are cast back to the TARGET's types: a widening staged
     * column would otherwise write parquet files whose schema diverges from
     * the verbatim-kept files and corrupt the mixed-file read (the same
@@ -324,8 +207,6 @@ object Upsert {
   def mergeWhere(spark: SparkSession, tableRoot: String, staged: DataFrame,
       pkCols: Seq[String], statsCols: Seq[String] = Nil,
       maxKeySetSize: Int = 100000,
-      colocated: Option[Boolean] = None,
-      maxColocatedRows: Long = 1L << 20,
       deletes: Option[DataFrame] = None,
       deleteUnmatched: Option[(DataFrame, Column)] = None): Long = {
     import graft.sources.{ManifestStats, SnapshotManifest}
@@ -345,11 +226,6 @@ object Upsert {
     val deletesP = deletes.map(_.select(pkCols.map(c => col(s"`$c`")): _*)
       .na.drop("any", pkCols).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    lazy val stagedRowCount = stagedP.count()
-    def pickMerge(declared: Boolean)
-        : (DataFrame, DataFrame, Seq[String]) => DataFrame =
-      pickMergeStrategy("mergeWhere", colocated.getOrElse(declared),
-        () => stagedRowCount, maxColocatedRows)
     def dropDeleted(merged: DataFrame): DataFrame = deletesP match {
       case Some(d) =>
         var kp = "__md_"
@@ -501,8 +377,7 @@ object Upsert {
             .select(origCols.map(c => col(s"`$c`")): _*)
         case None => targetAffected
       }
-      val merged = dropDeleted(
-        pickMerge(meta.colocatedMerge)(targetForMerge, stagedP, pk))
+      val merged = dropDeleted(merge(targetForMerge, stagedP, pk))
       // backticked refs: a column NAME containing a dot must resolve as a
       // top-level column, not parse as a nested-field path
       val aligned = merged.select(targetSchema.fields.toSeq.map(f =>
@@ -530,7 +405,7 @@ object Upsert {
   }
 
   /** The staged batch's prune predicate — distinct non-null key tuples as
-    * per-column IN lists when the batch is SMALL (≤ [[maxInListLiterals]],
+    * per-column IN lists when the batch is SMALL (≤ [[MaxInListLiterals]],
     * a conservative cross-product superset for composite PKs), one min/max
     * aggregation and a range conjunction above that. None = no non-null
     * staged key exists (every staged row is a pure insert). Tuples with
@@ -550,15 +425,12 @@ object Upsert {
     * race-gate use stays conservative (a superset predicate can only
     * refuse more rebases, never admit a conflicting one).
     */
-  private[graft] def maxInListLiterals(spark: org.apache.spark.sql.SparkSession,
-      maxKeySetSize: Int): Int = math.min(maxKeySetSize,
-    spark.conf.getOption("graft.dml.maxInListLiterals")
-      .map(_.toInt).getOrElse(1024))
+  private[graft] val MaxInListLiterals = 1024
 
   private def stagedKeyPredicate(staged: DataFrame, pk: Seq[String],
       maxKeySetSize: Int): Option[Column] = {
     val keyDf = staged.select(pk.map(col): _*).na.drop("any", pk).distinct()
-    val inCap = maxInListLiterals(staged.sparkSession, maxKeySetSize)
+    val inCap = math.min(maxKeySetSize, MaxInListLiterals)
     // collect at most inCap+1 rows: enough to decide the tier, never the
     // 100k-row driver haul the old single-tier shape paid
     val keyRows = keyDf.limit(inCap + 1).collect()
@@ -581,22 +453,6 @@ object Upsert {
     }
   }
 
-  /** MERGE-ON-READ MERGE — [[mergeWhere]]'s deferred twin on the deletion-
-    * vector machinery ([[graft.sources.SnapshotManifest.deleteWhereMoR]]):
-    * matched target rows are MASKED by position in a DV sidecar and the
-    * merge output (matched rows with staged values + staged-only inserts)
-    * is APPENDED as new files — NO data file is rewritten at all, so a
-    * narrow-key upsert costs O(staged + admitted-file scan + churn), the
-    * cheapest per-batch shape for continuous ingestion
-    * ([[graft.streaming.StreamingUpsert]] `mor = true`). Reads pay the
-    * DV anti-join (broadcast while the sidecar is small, shuffle past the
-    * byte threshold) on masked files until [[graft.sources
-    * .SnapshotManifest.foldDeletes]] / compaction materializes.
-    * Semantics ≡ [[mergeWhere]] ≡ whole-table [[merge]]. Positions stay
-    * distributed end-to-end; a merged DV past `maxDvPositions` degrades
-    * loudly to [[mergeWhere]] (the CoW rewrite handles fat churn
-    * correctly — masking it would tax every later read).
-    */
   /** File-pruned keyed DELETE — [[mergeWhere]]'s inverse (Delta's MERGE
     * … WHEN MATCHED THEN DELETE): rows of the snapshot table whose PK
     * tuple appears in `keys` are removed; only files whose manifest
@@ -670,12 +526,28 @@ object Upsert {
     } finally keysP.unpersist(false)
   }
 
+  /** MERGE-ON-READ MERGE — [[mergeWhere]]'s deferred twin on the deletion-
+    * vector machinery ([[graft.sources.SnapshotManifest.deleteWhereMoR]]):
+    * matched target rows are MASKED by position in a DV sidecar and the
+    * merge output (matched rows with staged values + staged-only inserts)
+    * is APPENDED as new files — NO data file is rewritten at all, so a
+    * narrow-key upsert costs O(staged + admitted-file scan + churn), the
+    * cheapest per-batch shape for continuous ingestion
+    * ([[graft.streaming.StreamingUpsert]] `mor = true`). Reads pay the
+    * DV anti-join (broadcast while the sidecar is small, shuffle past the
+    * byte threshold) on masked files until [[graft.sources
+    * .SnapshotManifest.foldDeletes]] / compaction materializes.
+    * Semantics ≡ [[mergeWhere]] ≡ whole-table [[merge]]. Positions stay
+    * distributed end-to-end; a merged DV past `maxDvPositions` degrades
+    * loudly to [[mergeWhere]] (the CoW rewrite handles fat churn
+    * correctly — masking it would tax every later read). The matched
+    * slice merges with the same shuffle [[merge]] plan as every other
+    * merge verb.
+    */
   def mergeWhereMoR(spark: SparkSession, tableRoot: String, staged: DataFrame,
       pkCols: Seq[String], statsCols: Seq[String] = Nil,
       maxKeySetSize: Int = 100000,
-      maxDvPositions: Long = graft.sources.SnapshotManifest.DefaultMaxDvPositions,
-      colocated: Option[Boolean] = None,
-      maxColocatedRows: Long = 1L << 20)
+      maxDvPositions: Long = graft.sources.SnapshotManifest.DefaultMaxDvPositions)
       : Long = {
     import graft.sources.{ManifestStats, SnapshotManifest}
     require(pkCols.nonEmpty, "at least one PK column required")
@@ -685,7 +557,6 @@ object Upsert {
     val v = SnapshotManifest.currentVersion(spark, tableRoot).getOrElse(
       throw new IllegalStateException(s"mergeWhereMoR: no committed snapshot under $tableRoot"))
     val stagedP = staged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lazy val stagedRowCount = stagedP.count()
     try {
       // the key predicate's bounded collect doubles as the emptiness
       // probe in the common case (a defined predicate proves rows exist);
@@ -697,8 +568,8 @@ object Upsert {
       if (body.isEmpty)
         // nothing to mask — identical to the copy-on-write form
         return mergeWhere(spark, tableRoot, stagedP, pk, statsCols,
-          maxKeySetSize, colocated, maxColocatedRows)
-      val entries = body.map(SnapshotManifest.parseLine)
+          maxKeySetSize)
+      val entries = SnapshotManifest.bodyEntries(body)
       val files = SnapshotManifest.bodyFiles(tableRoot, body)
       val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
       pk.foreach(c => require(targetSchema.fieldNames.contains(c),
@@ -764,15 +635,10 @@ object Upsert {
               s"positions (> maxDvPositions=$maxDvPositions) — degrading " +
               "to the copy-on-write merge (mergeWhere)")
           return mergeWhere(spark, tableRoot, stagedP, pk, statsCols,
-            maxKeySetSize, colocated, maxColocatedRows)
+            maxKeySetSize)
         }
         val dvDf = oldDv.map(newPositions.unionByName(_)).getOrElse(newPositions)
-        // the matched slice is already churn-sized (it came off a
-        // broadcast semi join), but with the hint declared its merge join
-        // still decomposes — zero exchanges instead of two small ones
-        val mergedAppend = pickMergeStrategy("mergeWhereMoR",
-          colocated.getOrElse(meta.colocatedMerge), () => stagedRowCount,
-          maxColocatedRows)(matchedTarget.drop(fCol, rCol), stagedP, pk)
+        val mergedAppend = merge(matchedTarget.drop(fCol, rCol), stagedP, pk)
         val dvFileNames = dvDf.select(col("file_name")).distinct()
           .collect().map(_.getString(0)).toSet // affected ∪ sidecar-sharing files
         val dvFile = SnapshotManifest.writeDvSidecar(spark, tableRoot, v + 1, dvDf)

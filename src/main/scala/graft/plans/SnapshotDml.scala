@@ -549,7 +549,7 @@ object SnapshotStatements {
   /** Prune-key predicate over an IN subquery's materialized distinct key
     * frame — [[graft.operators.Upsert]]'s churn-bounded two-tier shape:
     * exact per-column `isin` lists when the frame is SMALL (≤
-    * `graft.dml.maxInListLiterals`, default 1024 — one bounded
+    * `Upsert.MaxInListLiterals`, 1024 — one bounded
     * `limit(n+1).collect`), a min/max range conjunction above that (one
     * 1-row aggregate). Sound either way: pruning only SELECTS candidate
     * files; the join decides row fates. The literal cap exists because a
@@ -560,8 +560,7 @@ object SnapshotStatements {
   private[plans] def inKeyPredicate(values: Seq[Column], keys: DataFrame,
       maxKeySetSize: Int): Option[Column] = {
     import org.apache.spark.sql.functions.{col, lit, max, min}
-    val inCap = graft.operators.Upsert.maxInListLiterals(
-      keys.sparkSession, maxKeySetSize)
+    val inCap = math.min(maxKeySetSize, graft.operators.Upsert.MaxInListLiterals)
     val rows = keys.limit(inCap + 1).collect()
     if (rows.isEmpty) None
     else if (rows.length <= inCap)

@@ -417,14 +417,14 @@ object SnapshotManifest {
   private[graft] def retagMap(body: Seq[String],
       entriesWithFiles: Seq[(ManifestEntry, String)], affected: Set[String],
       dvFileNames: Set[String], dvFile: String): Map[String, String] = {
-    val dupNames = entriesWithFiles.map(e => new Path(e._1.rel).getName)
+    val dupNames = entriesWithFiles.map(e => ManifestStats.baseName(e._1.rel))
       .groupBy(identity).collect { case (n, g) if g.size > 1 => n }
     require(dupNames.isEmpty,
       s"deletion-vector tagging requires manifest-wide unique file " +
         s"basenames; duplicated: ${dupNames.take(3).mkString(", ")}")
     body.zip(entriesWithFiles).collect {
       case (raw, (e, f))
-          if affected(f) && dvFileNames.contains(new Path(e.rel).getName) =>
+          if affected(f) && dvFileNames.contains(ManifestStats.baseName(e.rel)) =>
         raw -> e.copy(dvRel = Some(dvFile)).render
     }.toMap
   }
@@ -468,8 +468,7 @@ object SnapshotManifest {
   private[graft] final case class TableMeta(schema: Option[StructType],
       bloomCols: Seq[String], pk: Seq[String] = Nil,
       partitionCols: Seq[String] = Nil,
-      txns: Map[String, Long] = Map.empty,
-      colocatedMerge: Boolean = false)
+      txns: Map[String, Long] = Map.empty)
 
   private[graft] object TableMeta {
     val empty: TableMeta = TableMeta(None, Nil, Nil, Nil)
@@ -503,8 +502,7 @@ object SnapshotManifest {
       (if (meta.pk.isEmpty) "" else s"pk=${colsJson(meta.pk)}\n") +
       (if (meta.partitionCols.isEmpty) ""
        else s"partition=${colsJson(meta.partitionCols)}\n") +
-      (if (meta.txns.isEmpty) "" else s"txn=${txnsJson(meta.txns)}\n") +
-      (if (meta.colocatedMerge) "merge=colocated\n" else "")
+      (if (meta.txns.isEmpty) "" else s"txn=${txnsJson(meta.txns)}\n")
 
   private def txnsJson(txns: Map[String, Long]): String = {
     val obj = jsonMapper.createObjectNode()
@@ -512,17 +510,18 @@ object SnapshotManifest {
     jsonMapper.writeValueAsString(obj)
   }
 
-  /** Parse a `merge=` header line. The only defined value is `colocated`
-    * ([[setColocatedMerge]]); anything else is a corrupt or
-    * future-versioned manifest and fails LOUDLY — silently ignoring an
-    * unknown hint would flip a declared merge strategy off without a
-    * trace.
+  /** The table metadata recorded in a manifest's header lines (`merge=`,
+    * a retired property, is ignored).
     */
-  private def mergeHintFromHeader(version: Long, line: String): Boolean = {
-    val v = line.stripPrefix("merge=").trim
-    require(v == "colocated",
-      s"corrupt manifest for version $version: unknown merge= hint '$v'")
-    true
+  private def metaOf(header: Seq[String]): TableMeta = {
+    def field(key: String) = header.find(_.startsWith(key)).map(_.stripPrefix(key))
+    TableMeta(
+      field("schema=").map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[StructType]),
+      field("bloom=").map(colsFromJson).getOrElse(Nil),
+      field("pk=").map(colsFromJson).getOrElse(Nil),
+      field("partition=").map(colsFromJson).getOrElse(Nil),
+      field("txn=").map(txnsFromJson).getOrElse(Map.empty))
   }
 
   private def txnsFromJson(s: String): Map[String, Long] = {
@@ -744,7 +743,7 @@ object SnapshotManifest {
     if (edits.upserts.isEmpty) return true
     import spark.implicits._
     import org.apache.spark.sql.functions.{broadcast, col, element_at, split}
-    val newNames = edits.upserts.map(l => new Path(parseLine(l).rel).getName)
+    val newNames = edits.upserts.map(l => ManifestStats.baseName(relOf(l)))
     if (newNames.distinct.size != newNames.size) return false
     editsSurvivors(spark, frame, edits.touchedRels)
       .select(element_at(split(col("rel"), "/"), -1).as("name"))
@@ -818,7 +817,7 @@ object SnapshotManifest {
     // a BROAD edit set renders a delta LARGER than the full manifest (a
     // `-` per removed rel plus a `+` per upsert) — mirror the text path's
     // fall-back-to-full ([[manifestText]]'s `ops.size >= fullLines.size`):
-    // once the op count reaches [[broadEditProbeFloor]], pay ONE count of
+    // once the op count reaches [[BroadEditProbeFloor]], pay ONE count of
     // the composed frame and stream full when the delta would not be
     // smaller. Tiny edits — the hot append/merge case — return below
     // without a job, a pin, or the count (the probe floor is absolute,
@@ -831,7 +830,7 @@ object SnapshotManifest {
     // edit is O(body) regardless; the alternative (a body-sized delta)
     // would instead charge that O(body) replay to EVERY subsequent read
     // until the next boundary.
-    if (!onBoundary && opCount < broadEditProbeFloor(spark))
+    if (!onBoundary && opCount < BroadEditProbeFloor)
       return publishEditsDelta(spark, root, next, edits, op, meta)
     // pin ONCE: the full-vs-delta count, the streamed manifest, and the
     // parquet twin share a single evaluation of the composed frame
@@ -849,7 +848,7 @@ object SnapshotManifest {
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"SnapshotManifest.read: no committed snapshot under $root"))
     val (body, meta) = manifestParts(spark, root, v)
-    readEntries(spark, root, body.map(parseLine), meta.schema)
+    readEntries(spark, root, bodyEntries(body), meta.schema)
   }
 
   /** Catalyst-integrated scan: the snapshot as a RELATION whose file
@@ -898,16 +897,14 @@ object SnapshotManifest {
   private[graft] def relationFor(spark: SparkSession, root: String,
       v: Long): Option[org.apache.spark.sql.sources.BaseRelation] = {
     val (body, meta) = manifestParts(spark, root, v)
-    val entries = body.map(parseLine)
+    val entries = bodyEntries(body)
     if (entries.isEmpty || entries.exists(_.dvRel.nonEmpty)) None
     else {
       // recorded header schema, or one footer read on the driver, no job
       // (plain commits record no schema= line)
       val schema = tableSchema(spark, root, meta.schema, body.headOption).get
-      // bodyStatsOf, not bodyStats: we hold the parse — re-parsing
-      // 10⁵-10⁶ lines per relation construction is the documented sin
       val idx = new SnapshotFileIndex(spark, root, v, entries,
-        bodyStatsOf(entries), schema)
+        bodyStats(body), schema)
       Some(org.apache.spark.sql.execution.datasources.HadoopFsRelation(
         idx, new StructType(), schema, None,
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
@@ -948,7 +945,7 @@ object SnapshotManifest {
       case None => ()
     }
     val (body, meta) = manifestParts(spark, root, v)
-    val entries = body.map(parseLine)
+    val entries = bodyEntries(body)
     val all = bodyFiles(root, body)
     // with a RECORDED schema the prune decision needs no file contact at
     // all (at 100k files, constructing a reader over every path pays a
@@ -961,7 +958,7 @@ object SnapshotManifest {
         s"SnapshotManifest.readWhere: snapshot $v of $root has no data " +
           "files and no recorded schema"))
     val pred = ManifestStats.resolvePredicate(spark, schema, predicate)
-    val kept = ManifestStats.prune(all, bodyStatsOf(entries), pred).toSet
+    val kept = ManifestStats.prune(all, bodyStats(body), pred).toSet
     val keptEntries = entries.zip(all).collect { case (e, f) if kept(f) => e }
     if (keptEntries.isEmpty)
       // schema must come from the table even when every file is pruned
@@ -993,11 +990,10 @@ object SnapshotManifest {
     }
     val (body, meta) = manifestParts(spark, root, version)
     if (body.isEmpty) return Nil // nothing to prune, no schema needed
-    val entries = body.map(parseLine)
-    val files = bodyFiles(root, entries.map(_.rel))
+    val files = bodyFiles(root, body)
     // recorded schema or one footer read on the driver, no job
     val schema = tableSchema(spark, root, meta.schema, body.headOption).get
-    ManifestStats.prune(files, bodyStatsOf(entries),
+    ManifestStats.prune(files, bodyStats(body),
       ManifestStats.resolvePredicate(spark, schema, predicate))
   }
 
@@ -1022,8 +1018,9 @@ object SnapshotManifest {
     // answers it EXACTLY (stats present, no deletion vector masking an
     // unknown share of the rows). Per entry, never a basename-keyed map,
     // which would let two same-named entries collapse to one count.
-    val withRows = body.map(parseLine).map { e =>
-      e -> (if (e.dvRel.isEmpty) e.stats.map(ManifestStats.fromJson(_).rows) else None)
+    val parsed = parsedBody(body)
+    val withRows = parsed.entries.zip(parsed.entryStats).map { case (e, fs) =>
+      e -> (if (e.dvRel.isEmpty) fs.map(_.rows) else None)
     }
     val metaCount = withRows.flatMap(_._2).sum
     val scanned = withRows.collect { case (e, None) => e }
@@ -1058,7 +1055,7 @@ object SnapshotManifest {
       throw new IllegalStateException(s"minMax: no committed snapshot under $root"))
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return (None, None)
-    val entries = body.map(parseLine)
+    val entries = bodyEntries(body)
     val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     val field = schema.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
       throw new IllegalArgumentException(
@@ -1067,11 +1064,11 @@ object SnapshotManifest {
       case _: NumericType | StringType => true
       case _ => false
     }
-    val stats = bodyStatsOf(entries)
+    val stats = bodyStats(body)
     // ONE pass: each entry's exact bounds, or its membership in the scan set
     val withBounds: Seq[(ManifestEntry, Option[ManifestStats.ColStats])] =
       entries.map { e =>
-        e -> stats.get(new Path(e.rel).getName)
+        e -> stats.get(ManifestStats.baseName(e.rel))
           .filter(_ => foldable && e.dvRel.isEmpty)
           .flatMap { fs =>
             fs.cols.get(field.name).filter(cs =>
@@ -1278,10 +1275,10 @@ object SnapshotManifest {
       version: Long): Boolean =
     manifestBase(spark, root, version).isDefined
 
-  /** Every header key [[headerFor]] can emit — the single source of truth
-    * for "is this line still header?" scans. Extend HERE when adding a
-    * table property, or delta-manifest resolution silently breaks for
-    * tables carrying it (see [[manifestBase]]).
+  /** Every header key [[headerFor]] can emit, and the retired `merge=` old
+    * manifests carry — the single source of truth for "is this line still
+    * header?" scans. Extend HERE when adding a table property, or delta
+    * resolution breaks for tables carrying it (see [[manifestBase]]).
     */
   private val HeaderKeys =
     Seq("version=", "schema=", "bloom=", "pk=", "partition=", "txn=",
@@ -1366,20 +1363,7 @@ object SnapshotManifest {
       } finally in.close()
       require(lines.headOption.contains(s"version=$version"),
         s"corrupt manifest for version $version: bad header ${lines.headOption}")
-      val meta = TableMeta(
-        lines.find(_.startsWith("schema=")).map(l =>
-          org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("schema="))
-            .asInstanceOf[StructType]),
-        lines.find(_.startsWith("bloom=")).map(l =>
-          colsFromJson(l.stripPrefix("bloom="))).getOrElse(Nil),
-        lines.find(_.startsWith("pk=")).map(l =>
-          colsFromJson(l.stripPrefix("pk="))).getOrElse(Nil),
-        lines.find(_.startsWith("partition=")).map(l =>
-          colsFromJson(l.stripPrefix("partition="))).getOrElse(Nil),
-        lines.find(_.startsWith("txn=")).map(l =>
-          txnsFromJson(l.stripPrefix("txn="))).getOrElse(Map.empty),
-        lines.find(_.startsWith("merge=")).exists(l =>
-          mergeHintFromHeader(version, l)))
+      val meta = metaOf(lines)
       val e = HeaderCache.Entry(st.getModificationTime, st.getLen, meta,
         lines.find(_.startsWith("base="))
           .map(_.stripPrefix("base=").trim.toLong))
@@ -1399,17 +1383,21 @@ object SnapshotManifest {
     * re-parsed on every read of every version that chains to it.
     *
     * Budgeted by TOTAL CACHED BODY LINES, not entry count — 256 resolved
-    * 10⁵-line bodies would pin gigabytes of driver heap. Keys are the
+    * 10⁵-line bodies would pin gigabytes of driver heap; a
+    * [[ManifestBody]] counts its parse as lines too. Keys are the
     * canonical `Path` form so read verbs (caller string) and publish paths
     * (rootPath.toString) share entries.
     */
   private object PartsCache {
-    private val MaxTotalLines = 500000L
+    val MaxTotalLines = 500000L
+    /** A [[ManifestBody]]'s weight multiple: its lines, entries and stats. */
+    val BodyLayers = 3
     private val map =
       new java.util.LinkedHashMap[String, (Long, Long, Seq[String], TableMeta)](
         64, 0.75f, true)
     private var totalLines = 0L
-    private def weight(body: Seq[String]): Long = math.max(body.size.toLong, 1L)
+    private def weight(body: Seq[String]): Long = math.max(body.size.toLong, 1L) *
+      (body match { case _: ManifestBody => BodyLayers; case _ => 1 })
     def get(key: String, mtime: Long, len: Long): Option[(Seq[String], TableMeta)] =
       synchronized {
         Option(map.get(key)).collect {
@@ -1441,6 +1429,55 @@ object SnapshotManifest {
     }
     def stats: (Int, Long) = synchronized { (map.size, totalLines) }
   }
+
+  /** A resolved manifest body as [[PartsCache]] holds it: the lines plus
+    * their entries and per-file stats, parsed on first use, dropped with
+    * the cache entry and weighed as if held. A body resolved from a delta
+    * keeps its base while that base holds a parse, for its first parse to
+    * reuse on every line the two share (the loan stands in for that parse).
+    */
+  private[graft] final class ManifestBody(lines: IndexedSeq[String],
+      base: Option[(ManifestBody, Array[Int])])
+      extends scala.collection.immutable.AbstractSeq[String]
+      with IndexedSeq[String] {
+    def apply(i: Int): String = lines(i)
+    def length: Int = lines.length
+    @volatile private var parsed: IndexedSeq[ManifestEntry] = _
+    @volatile private var parsedStats: IndexedSeq[Option[ManifestStats.FileStats]] = _
+    private var donor = base.filter(_._1.parsed != null)
+    def entries: IndexedSeq[ManifestEntry] = synchronized {
+      if (parsed == null) {
+        val d = donor; donor = None
+        // line i is the donor's line at(i), or new where at(i) < 0
+        def reuse[T](held: ManifestBody => IndexedSeq[T], parse: Int => T) =
+          d.flatMap { case (b, at) => Option(held(b)).map(h => Vector.tabulate(
+            lines.length)(i => if (at(i) < 0) parse(i) else h(at(i)))) }
+        parsed = reuse(_.parsed, i => parseLine(lines(i))).getOrElse(lines.map(parseLine))
+        reuse(_.parsedStats, i => parsed(i).stats.map(ManifestStats.fromJson))
+          .foreach(parsedStats = _)
+      }
+      parsed
+    }
+    /** Each entry's parsed stats, in body order (None: a stats-less line). */
+    def entryStats: IndexedSeq[Option[ManifestStats.FileStats]] = synchronized {
+      val es = entries
+      if (parsedStats == null) parsedStats = es.map(_.stats.map(ManifestStats.fromJson))
+      parsedStats
+    }
+    lazy val stats: Map[String, ManifestStats.FileStats] =
+      entries.iterator.zip(entryStats.iterator).collect {
+        case (e, Some(fs)) => ManifestStats.baseName(e.rel) -> fs
+      }.toMap
+  }
+
+  /** `lines` as [[PartsCache]] holds them: a [[ManifestBody]] (resolved
+    * from `base`, each line's position in it given) where its full weight
+    * fits the budget, plain lines, parsed per call, above that.
+    */
+  private def cachedBody(lines: IndexedSeq[String],
+      base: Option[(Seq[String], Array[Int])]): Seq[String] =
+    if (lines.size.toLong * PartsCache.BodyLayers > PartsCache.MaxTotalLines) lines
+    else new ManifestBody(lines, base.collect { case (b: ManifestBody, at) => (b, at) })
 
   /** (entries, total cached body lines) of the parts cache — the eviction
     * spec pins the 500k-line budget and over-budget-body skip.
@@ -1476,31 +1513,11 @@ object SnapshotManifest {
     val lines = text.split('\n').map(_.trim).filter(_.nonEmpty)
     require(lines.headOption.contains(s"version=$version"),
       s"corrupt manifest for version $version: bad header ${lines.headOption}")
-    // `schema=` / `bloom=` / `pk=` / `partition=` / `base=` are HEADER
-    // fields ([[addColumns]], [[setBloomCols]], [[setPrimaryKey]],
-    // [[setPartitionColumns]], delta form)
-    val (schemaLines, rest) = lines.tail.toSeq.partition(_.startsWith("schema="))
-    val (bloomLines, rest2) = rest.partition(_.startsWith("bloom="))
-    val (pkLines, rest3) = rest2.partition(_.startsWith("pk="))
-    val (partLines, rest4) = rest3.partition(_.startsWith("partition="))
-    val (txnLines, rest5) = rest4.partition(_.startsWith("txn="))
-    val (mergeLines, rest6) = rest5.partition(_.startsWith("merge="))
-    val (baseLines, rawBody) = rest6.partition(_.startsWith("base="))
-    val meta = TableMeta(
-      schemaLines.headOption.map(l =>
-        org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("schema="))
-          .asInstanceOf[StructType]),
-      bloomLines.headOption.map(l => colsFromJson(l.stripPrefix("bloom=")))
-        .getOrElse(Nil),
-      pkLines.headOption.map(l => colsFromJson(l.stripPrefix("pk=")))
-        .getOrElse(Nil),
-      partLines.headOption.map(l => colsFromJson(l.stripPrefix("partition=")))
-        .getOrElse(Nil),
-      txnLines.headOption.map(l => txnsFromJson(l.stripPrefix("txn=")))
-        .getOrElse(Map.empty),
-      mergeLines.headOption.exists(l => mergeHintFromHeader(version, l)))
+    val (header, rest) = lines.tail.toSeq.partition(l => HeaderKeys.exists(l.startsWith))
+    val (baseLines, rawBody) = rest.partition(_.startsWith("base="))
+    val meta = metaOf(header)
     val body = baseLines.headOption match {
-      case None => rawBody
+      case None => cachedBody(rawBody.toIndexedSeq, None)
       case Some(bl) =>
         // DELTA manifest: body = base version's RESOLVED body, minus `-`
         // rels, with `+` lines put in place (replacing a changed entry's
@@ -1510,18 +1527,20 @@ object SnapshotManifest {
         // retained dependent is rewritten full ([[vacuum]]'s chain guard).
         val base = bl.stripPrefix("base=").trim.toLong
         val (baseBody, _) = manifestParts(spark, root, base)
-        val acc = new java.util.LinkedHashMap[String, String]()
-        baseBody.foreach(l => acc.put(relOf(l), l))
+        // each line with its position in the base (-1: a `+` line)
+        val acc = new java.util.LinkedHashMap[String, (String, Int)]()
+        baseBody.iterator.zipWithIndex.foreach { case (l, j) => acc.put(relOf(l), (l, j)) }
         rawBody.foreach { l =>
           if (l.startsWith("-\t")) acc.remove(l.stripPrefix("-\t"))
           else if (l.startsWith("+\t")) {
-            val e = l.stripPrefix("+\t"); acc.put(relOf(e), e)
+            val e = l.stripPrefix("+\t"); acc.put(relOf(e), (e, -1))
           } else throw new IllegalStateException(
             s"corrupt delta manifest for version $version: body line " +
               s"without +/- op: ${l.take(80)}")
         }
         import scala.jdk.CollectionConverters._
-        acc.values.asScala.toSeq
+        val resolved = acc.values.asScala.toIndexedSeq
+        cachedBody(resolved.map(_._1), Some(baseBody -> resolved.map(_._2).toArray))
     }
     (body, meta)
   }
@@ -1556,13 +1575,12 @@ object SnapshotManifest {
     else header + (s"base=$base" +: ops).mkString("", "\n", "\n")
   }
 
-  /** Body-line floor below which no parquet checkpoint twin is written —
-    * a driver parse of a few thousand lines is faster than any Spark job,
-    * so the distributed artifact only earns its write at the 10⁴-10⁶-file
-    * scale it exists for. Overridable via
-    * `graft.manifest.parquetCheckpointMinLines` (specs set it low).
+  /** Body-line floor below which no parquet checkpoint twin is written:
+    * up to 10⁵ lines the warm driver path (its stats parsed once per
+    * cached body) is ahead of or level with every twin path. Overridable
+    * via `graft.manifest.parquetCheckpointMinLines` (specs set it low).
     */
-  private val ParquetCheckpointMinLinesDefault = 10000
+  private val ParquetCheckpointMinLinesDefault = 100000
   private def parquetCheckpointMinLines(spark: SparkSession): Int =
     spark.conf.getOption("graft.manifest.parquetCheckpointMinLines")
       .map(_.toInt).getOrElse(ParquetCheckpointMinLinesDefault)
@@ -1571,16 +1589,11 @@ object SnapshotManifest {
     * Spark job (a count of the composed body frame), so unlike the text
     * path's free in-memory comparison it must not run per tiny commit: it
     * engages only for edit sets big enough in absolute terms that a
-    * body-sized delta is a plausible outcome worth preventing. Kept a
-    * SEPARATE knob from `parquetCheckpointMinLines` — tests pin the twin
-    * floor to 1 to force twins on tiny tables, and reusing that value here
-    * would charge every 2-op append on such a table a probe job.
+    * body-sized delta is a plausible outcome worth preventing. Not the
+    * twin floor: tests pin that to 1, which would charge every 2-op append
+    * a probe job.
     */
-  private val BroadEditProbeFloorDefault = 1024
-  private def broadEditProbeFloor(spark: SparkSession): Int =
-    math.max(
-      spark.conf.getOption("graft.manifest.broadEditProbeFloor")
-        .map(_.toInt).getOrElse(BroadEditProbeFloorDefault), 1)
+  private val BroadEditProbeFloor = 1024
 
   /** Diagnostic counter: pruned reads answered through the DISTRIBUTED
     * checkpoint-frame path (specs assert the fast path actually ran).
@@ -2000,25 +2013,52 @@ object SnapshotManifest {
   private[graft] def bodyFile(root: String, line: String): String =
     bodyFiles(root, Seq(line)).head
 
-  /** [[bodyFile]] of each line, parsing `root` once for all of them. */
+  /** [[bodyFile]] of each line, parsing `root` once for all of them. A
+    * plain rel joins the root as a string, which is what `Path` gives
+    * without its per-line URI parse; any other rel resolves through `Path`.
+    */
   private[graft] def bodyFiles(root: String, lines: Seq[String]): Seq[String] = {
     val rootPath = new Path(root)
-    lines.map(l => new Path(rootPath, relOf(l)).toString)
+    val prefix = rootPath.toString.stripSuffix("/") + "/"
+    lines.map { l =>
+      val rel = relOf(l)
+      if (isPlainRel(rel)) prefix + rel else new Path(rootPath, rel).toString
+    }
   }
+
+  /** A rel that `Path` resolution leaves as written: ASCII letters,
+    * digits and `-_.=` in `/`-separated segments, none of them empty, `.`
+    * or `..` (nothing to escape or normalize, no scheme, not absolute).
+    */
+  private def isPlainRel(rel: String): Boolean = {
+    var i = 0
+    while (i < rel.length) {
+      val c = rel.charAt(i)
+      if (!(c >= 'a' && c <= 'z' || c >= 'A' && c <= 'Z' || c >= '0' && c <= '9' ||
+          "-_.=/".indexOf(c) >= 0)) return false
+      i += 1
+    }
+    val s = "/" + rel + "/"
+    rel.nonEmpty && !s.contains("//") && !s.contains("/./") && !s.contains("/../")
+  }
+
+  /** `body` with its parse: a cached [[ManifestBody]] as it is, any other
+    * `Seq` wrapped (and parsed) for this call only.
+    */
+  private def parsedBody(body: Seq[String]): ManifestBody = body match {
+    case b: ManifestBody => b
+    case _ => new ManifestBody(body.toIndexedSeq, None)
+  }
+
+  /** The parsed entries of manifest body lines, in body order. */
+  private[graft] def bodyEntries(body: Seq[String]): Seq[ManifestEntry] =
+    parsedBody(body).entries
 
   /** Per-file stats parsed out of manifest body lines, keyed by file name
     * (stats-less lines simply don't appear — they never prune).
     */
   private[graft] def bodyStats(body: Seq[String]): Map[String, ManifestStats.FileStats] =
-    bodyStatsOf(body.map(parseLine))
-
-  /** [[bodyStats]] over ALREADY-parsed entries — callers holding the parse
-    * must not pay it twice (200k line parses on a 100k-file manifest).
-    */
-  private[graft] def bodyStatsOf(entries: Seq[ManifestEntry])
-      : Map[String, ManifestStats.FileStats] =
-    entries.flatMap(e =>
-      e.stats.map(json => ManifestStats.baseName(e.rel) -> ManifestStats.fromJson(json))).toMap
+    parsedBody(body).stats
 
   /** MERGE-ON-READ DELETE — [[deleteWhere]]'s deferred twin (Delta/Iceberg
     * deletion vectors, on this engine's manifest): instead of rewriting
@@ -2066,7 +2106,7 @@ object SnapshotManifest {
     val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
     val affected = ManifestStats.prune(files, bodyStats(body), resolved).toSet
     if (affected.isEmpty) return v
-    val entriesWithFiles = body.map(parseLine).zip(files)
+    val entriesWithFiles = bodyEntries(body).zip(files)
     val affectedEntries = entriesWithFiles.collect { case (e, f) if affected(f) => e }
     // positions attach on the raw scan; the old sidecars — read ONCE — are
     // anti-joined away so already-deleted rows can't match again
@@ -2145,7 +2185,7 @@ object SnapshotManifest {
     val resolved = ManifestStats.resolvePredicate(spark, schema, predicate)
     val affected = ManifestStats.prune(files, bodyStats(body), resolved).toSet
     if (affected.isEmpty) return v
-    val entriesWithFiles = body.map(parseLine).zip(files)
+    val entriesWithFiles = bodyEntries(body).zip(files)
     val affectedEntries = entriesWithFiles.collect { case (e, f) if affected(f) => e }
     val oldDv = entryDvPositionsDf(spark, root, affectedEntries)
       .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -2205,7 +2245,7 @@ object SnapshotManifest {
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"foldDeletes: no committed snapshot under $root"))
     val (body, meta) = manifestParts(spark, root, v)
-    val (dvd, dvdLines) = body.map(parseLine).zip(body)
+    val (dvd, dvdLines) = bodyEntries(body).zip(body)
       .filter(_._1.dvRel.isDefined).unzip
     if (dvd.isEmpty) return v
     val cols = statsCols.getOrElse(bodyStats(body)
@@ -2298,15 +2338,15 @@ object SnapshotManifest {
       throw new IllegalStateException(s"analyzeTable: no committed snapshot under $root"))
     val (body, meta) = manifestParts(spark, root, v)
     if (body.isEmpty) return v
-    val entries = body.map(parseLine)
+    val entries = bodyEntries(body)
     val schema = tableSchema(spark, root, meta.schema, body.headOption).get
     val resolved = statsCols.map(c =>
       schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
           s"analyzeTable: column $c not in ${schema.fieldNames.mkString(", ")}"))
         .name)
-    val existing = bodyStatsOf(entries)
-    def name(e: ManifestEntry) = new Path(e.rel).getName
+    val existing = bodyStats(body)
+    def name(e: ManifestEntry) = ManifestStats.baseName(e.rel)
     // stats key by BASENAME (ManifestStats.collect's _metadata grouping),
     // so a basename collision across data dirs would bake one file's
     // stats onto another — assert uniqueness, same as the DV tagging path
@@ -2359,38 +2399,6 @@ object SnapshotManifest {
     */
   def primaryKey(spark: SparkSession, root: String, version: Long): Seq[String] =
     manifestMetaOnly(spark, root, version).pk
-
-  /** Declare (or clear) the CO-LOCATED MERGE strategy as a table property
-    * — a metadata-only publish like [[setPrimaryKey]]. With the hint
-    * declared, [[graft.operators.Upsert.mergeWhere]] (and its retry/MoR
-    * twins) decompose the merge join so the TARGET side never shuffles:
-    * the churn-sized staged batch broadcasts onto the target scan (update
-    * pass + matched-key pass are narrow broadcast joins, inserts anti-join
-    * a broadcast of the matched keys). This is the 100-TB merge posture as
-    * ONE declared flag instead of a per-call rewrite — the big side of the
-    * join pays scan cost only, no Exchange, regardless of table size. The
-    * verbs degrade loudly to the shuffle merge when a staged batch is too
-    * large to broadcast ([[graft.operators.Upsert.mergeWhere]]'s
-    * `maxColocatedRows`), so declaring the hint is safe under the Upsert
-    * family's documented invariant — pk-unique snapshots ([[setPrimaryKey]]):
-    * the broadcast volumes are then functions of the gated staged size
-    * (matched keys are per-partition-deduplicated, bounding even a
-    * duplicate-PK target at distinct-staged-keys × partitions).
-    */
-  def setColocatedMerge(spark: SparkSession, root: String,
-      on: Boolean): Long = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"setColocatedMerge: no committed snapshot under $root"))
-    val (body, meta) = manifestParts(spark, root, v)
-    if (meta.colocatedMerge == on) return v
-    publishLines(spark, root, v + 1, body, "setColocatedMerge",
-      meta.copy(colocatedMerge = on))
-  }
-
-  /** The declared merge strategy of `version` — header-only metadata. */
-  def colocatedMerge(spark: SparkSession, root: String, version: Long): Boolean =
-    manifestMetaOnly(spark, root, version).colocatedMerge
 
   /** Declare (or clear) the table's bloom-indexed columns — a
     * metadata-only property publish, [[addColumns]]'s sibling. Files
@@ -2498,7 +2506,7 @@ object SnapshotManifest {
       // sidecar (crashed chain-guard rewrite) has no manifest file until
       // manifestParts completes the swap — stat-before-resolve would
       // throw FileNotFound on a table that reads fine
-      val entries = manifestParts(spark, root, v)._1.map(parseLine)
+      val entries = bodyEntries(manifestParts(spark, root, v)._1)
       val mtime = fs.getFileStatus(new Path(rootPath, manifestName(v)))
         .getModificationTime
       HistoryEntry(v, mtime, entries.size.toLong,
@@ -3012,7 +3020,7 @@ object SnapshotManifest {
       effStatsCols.map(_ -> ManifestStats.ColStats(None, None, 0L)).toMap)
     files.map { f =>
       if (effStatsCols.isEmpty) f
-      else f + "\t" + ManifestStats.toJson(stats.getOrElse(new Path(f).getName, emptyStats))
+      else f + "\t" + ManifestStats.toJson(stats.getOrElse(ManifestStats.baseName(f), emptyStats))
     }.toSeq
   }
 
@@ -3023,7 +3031,7 @@ object SnapshotManifest {
     */
   def readVersion(spark: SparkSession, root: String, version: Long): DataFrame = {
     val (body, meta) = manifestParts(spark, root, version)
-    readEntries(spark, root, body.map(parseLine), meta.schema)
+    readEntries(spark, root, bodyEntries(body), meta.schema)
   }
 
   /** Row-level change feed between two committed versions: what happened to
@@ -3119,7 +3127,7 @@ object SnapshotManifest {
           val steps = plain.filter(p => declared(p._1) == d)
             .groupMap(_._2)(_._1.to.toString)
           aligned(readEntries(spark, root, steps.keys.toSeq.map(ManifestEntry(_, None, None)), d),
-            explode(element_at(typedLit(steps.map { case (r, ts) => new Path(r).getName -> ts }),
+            explode(element_at(typedLit(steps.map { case (r, ts) => ManifestStats.baseName(r) -> ts }),
               element_at(split(col("_metadata.file_path"), "/"), -1))))
         }
         val withDv = group.flatMap { s =>
@@ -3225,8 +3233,8 @@ object SnapshotManifest {
       // ONE manifest fetch per version: body + recorded schema together
       val (fromBody, fm) = manifestParts(spark, root, fromVersion)
       val (toBody, tm) = manifestParts(spark, root, toVersion)
-      val oldEntries = fromBody.map(parseLine)
-      val newEntries = toBody.map(parseLine)
+      val oldEntries = bodyEntries(fromBody)
+      val newEntries = bodyEntries(toBody)
       // shared = same data file AND same deletion vector: a file whose DV
       // changed between the versions contributes different ROWS and must be
       // diffed even though its data bytes are shared
@@ -3374,10 +3382,8 @@ object SnapshotManifest {
     // txn records carry unconditionally (no columns to lose): an
     // idempotent pipeline's exactly-once guarantee must survive a full
     // overwrite exactly as it survives every DML verb
-    // the merge hint also carries unconditionally — a strategy choice,
-    // not a column-bound property
     val meta = TableMeta(None, blooms, frameCased(carried(prior.pk, "primary-key")),
-      parts, prior.txns, prior.colocatedMerge)
+      parts, prior.txns)
     val lines = writeDataFiles(spark, root, next, df, statsCols, meta)
     require(lines.nonEmpty,
       s"commit: write produced no parquet files for version $next of $root")
@@ -3484,7 +3490,7 @@ object SnapshotManifest {
 
   /** The basenames `lines` reference more than once. */
   private def duplicateBasenames(lines: Seq[String]): Seq[String] = {
-    val names = lines.map(l => new Path(parseLine(l).rel).getName)
+    val names = lines.map(l => ManifestStats.baseName(relOf(l)))
     names.diff(names.distinct).distinct
   }
 
@@ -3704,8 +3710,8 @@ object SnapshotManifest {
     val targetFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (body.length <= targetFiles) None
     else {
-      val entries = body.map(parseLine)
-      val cols = statsCols.getOrElse(bodyStatsOf(entries)
+      val entries = bodyEntries(body)
+      val cols = statsCols.getOrElse(bodyStats(body)
         .values.flatMap(_.cols.keys).toSeq.distinct.sorted)
       // DV-applied read: compacting a MoR-deleted table materializes the
       // deletions instead of resurrecting the rows; output carries no DVs
@@ -3783,7 +3789,7 @@ object SnapshotManifest {
     if (small.size <= targetFiles) return None // already converged
     val smallLines = small.map(_._1)
     val entries = smallLines.map(parseLine)
-    val cols = statsCols.getOrElse(bodyStatsOf(body.map(parseLine))
+    val cols = statsCols.getOrElse(bodyStats(body)
       .values.flatMap(_.cols.keys).toSeq.distinct.sorted)
     val tail = readEntries(spark, root, entries, meta.schema)
     // if the FINAL body empties (fully-DV-masked tail, empty-or-emptied
@@ -4006,7 +4012,7 @@ object SnapshotManifest {
     // DELETION-VECTOR sidecars are reachable files too: sweeping a live
     // DV would silently RESURRECT its deleted rows
     val keptFiles = versions.filterNot(doomed.contains).flatMap(v =>
-      manifestBody(spark, root, v).map(parseLine).flatMap(e =>
+      bodyEntries(manifestBody(spark, root, v)).flatMap(e =>
         e.rel +: e.dvRel.toSeq).map { rel =>
         val p = new Path(rel); (dataDirComponent(p), p.getName)
       }).toSet

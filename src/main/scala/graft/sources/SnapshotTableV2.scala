@@ -73,14 +73,16 @@ final class SnapshotTable(
 
   def exists: Boolean = snapshotVersion.isDefined
 
-  private lazy val parts: (Seq[SnapshotManifest.ManifestEntry], SnapshotManifest.TableMeta) = {
+  private lazy val parts: (Seq[String], SnapshotManifest.TableMeta) = {
     val v = snapshotVersion.getOrElse(throw new IllegalStateException(
       s"graft-snapshot: no committed snapshot under $root"))
-    val (body, meta) = SnapshotManifest.manifestParts(spark, root, v)
-    (body.map(SnapshotManifest.parseLine), meta)
+    SnapshotManifest.manifestParts(spark, root, v)
   }
 
-  private[graft] lazy val entries: Seq[SnapshotManifest.ManifestEntry] = parts._1
+  private[graft] lazy val entries: Seq[SnapshotManifest.ManifestEntry] =
+    SnapshotManifest.bodyEntries(parts._1)
+  private[graft] lazy val fileStats: Map[String, ManifestStats.FileStats] =
+    SnapshotManifest.bodyStats(parts._1)
   private[graft] lazy val meta: SnapshotManifest.TableMeta = parts._2
 
   /** Live deletion-vector sidecars make every reader an anti-join — not a
@@ -266,7 +268,7 @@ private[graft] final class SnapshotScanBuilder(
       // zero body parses across a CDF tail)
       if (!table.readChangeFeed && table.canFileRelation)
         new SnapshotV2FileIndex(spark, table.root, table.snapshotVersion.get,
-          table.entries, SnapshotManifest.bodyStatsOf(table.entries),
+          table.entries, table.fileStats,
           table.schema())
       else new StaticParquetFileIndex(spark, Nil, table.schema()),
       table.schema(), table.schema(), options) {

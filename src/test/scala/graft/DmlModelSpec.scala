@@ -34,11 +34,6 @@ class DmlModelSpec extends SparkSpec {
   private case object Analyze extends Op
   private case object SetPk extends Op
   private case object SetBloom extends Op
-  // flips merge=colocated: every merge AFTER a toggle-on runs through the
-  // decomposed broadcast strategy — the fuzz proves the strategy is
-  // invisible in content under arbitrary interleavings, and that the
-  // header property survives every verb like pk=/bloom=
-  private case object ToggleColoc extends Op
   // fresh-key idempotent append (txn records fuzzed through every verb's
   // TableMeta carry) and the partial tail compaction (content-neutral)
   private case class Append(rows: List[(Long, Long)]) extends Op
@@ -73,7 +68,6 @@ class DmlModelSpec extends SparkSpec {
     2 -> Gen.listOfN(3, Gen.choose(-99L, 99L)).map(vs => Append(vs.zipWithIndex
       .map { case (v, i) => (i.toLong, v) })),
     1 -> Gen.const(CompactSmall),
-    2 -> Gen.const(ToggleColoc),
     1 -> Gen.const(Truncate),
     1 -> Gen.const(Restore),
     1 -> Gen.const(SetProps))
@@ -99,13 +93,12 @@ class DmlModelSpec extends SparkSpec {
         (0L until 100L).map(i => i -> i * 10L): _*)
       var pkSet = false
       var bloomSet = false
-      var colocOn = false
-      // (version, expected content, pk/bloom/coloc flags) after each step
+      // (version, expected content, pk/bloom flags) after each step
       // — replayed at the end as time-travel reads resolving through
       // whatever delta chains the history produced, and the RESTORE op's
       // revert targets. Vacuum clears it (old versions are reclaimed).
       val hist = scala.collection.mutable.ArrayBuffer[
-        (Long, Map[Long, Long], Boolean, Boolean, Boolean)]()
+        (Long, Map[Long, Long], Boolean, Boolean)]()
       val ops = samples(genOp, 10, 5000L + trial * 100L)
       ops.zipWithIndex.foreach { case (op, step) =>
         op match {
@@ -163,9 +156,6 @@ class DmlModelSpec extends SparkSpec {
             fresh.foreach { case (k, v) => model(k) = v }
           case CompactSmall =>
             SnapshotManifest.compactSmallFiles(spark, root, smallBytes = 1L << 20)
-          case ToggleColoc =>
-            SnapshotManifest.setColocatedMerge(spark, root, !colocOn)
-            colocOn = !colocOn
           case Truncate =>
             // the SQL TRUNCATE path: one empty commit, properties carry
             new graft.sources.SnapshotTable(spark, root, None, None,
@@ -173,10 +163,10 @@ class DmlModelSpec extends SparkSpec {
               .truncateTable()
             model.clear()
           case Restore if hist.nonEmpty =>
-            val (tv, want, p, bl, co) = hist(step % hist.size)
+            val (tv, want, p, bl) = hist(step % hist.size)
             SnapshotManifest.restoreVersion(spark, root, tv)
             model.clear(); model ++= want
-            pkSet = p; bloomSet = bl; colocOn = co
+            pkSet = p; bloomSet = bl
           case Restore => () // nothing retained to restore to
           case SetProps =>
             // the atomic multi-property declare (SQL ALTER's one-publish)
@@ -199,14 +189,12 @@ class DmlModelSpec extends SparkSpec {
         assert(SnapshotManifest.bloomCols(spark, root, curV) ==
           (if (bloomSet) Seq("id") else Nil),
           s"trial $trial step $step ($op): bloom property lost")
-        assert(SnapshotManifest.colocatedMerge(spark, root, curV) == colocOn,
-          s"trial $trial step $step ($op): merge=colocated hint lost")
-        hist += ((curV, model.toMap, pkSet, bloomSet, colocOn))
+        hist += ((curV, model.toMap, pkSet, bloomSet))
       }
       // time-travel replay: every retained historical version must read
       // back to the content the model had at that step — exercising delta
       // resolution from an arbitrary chain position, not just the head
-      hist.foreach { case (v, want, _, _, _) =>
+      hist.foreach { case (v, want, _, _) =>
         val got = SnapshotManifest.readVersion(spark, root, v)
           .select($"id", $"v").as[(Long, Long)].collect().toMap
         assert(got == want,
@@ -487,12 +475,6 @@ class DmlModelSpec extends SparkSpec {
             fresh.foreach { case (k, v) => model(k) = (v, None) }
           case CompactSmall =>
             SnapshotManifest.compactSmallFiles(spark, root, smallBytes = 1L << 20)
-          case ToggleColoc =>
-            // evolution × colocated merge: post-toggle merges decompose
-            // AND handle the schema-drifted staged frame (no note column)
-            val curV = SnapshotManifest.currentVersion(spark, root).get
-            SnapshotManifest.setColocatedMerge(spark, root,
-              !SnapshotManifest.colocatedMerge(spark, root, curV))
           case SetProps =>
             SnapshotManifest.setProperties(spark, root,
               bloomCols = Some(Seq("id")), pk = Some(Seq("id")))

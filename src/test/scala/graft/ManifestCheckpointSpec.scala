@@ -425,42 +425,43 @@ class ManifestCheckpointSpec extends SparkSpec {
   }
 
   test("broad-edit fallback: the full-vs-delta probe engages at broadEditProbeFloor, not the twin floor") {
-    // (a) probe floor DEFAULT (1024): a broad-but-sub-floor DML keeps the
-    //     delta form and pays no probe job, even on a twin-floor-1 table
-    //     — the twin floor is a test knob, not the probe threshold
+    // (a) under the probe floor (1024 ops): a broad-but-sub-floor DML
+    //     keeps the delta form and pays no probe job, even on a
+    //     twin-floor-1 table — the twin floor is a test knob, not the
+    //     probe threshold
     val rootA = newRoot()
-    // (b) probe floor lowered under the op count: the same DML streams a
-    //     FULL manifest because its 2N-op delta would exceed the body
+    // (b) past the probe floor: 1100 files rewritten remove 1100 lines,
+    //     so the same DML streams a FULL manifest because its delta would
+    //     not be smaller than the body
     val rootB = newRoot()
     spark.conf.set("graft.manifest.checkpointInterval", "8")
     spark.conf.set("graft.manifest.parquetCheckpointMinLines", "1")
     try {
-      def bootstrap(root: String): Unit = SnapshotManifest.commit(spark, root,
-        spark.range(0, 1000).toDF("id").withColumn("x", lit(1L))
-          .repartitionByRange(100, col("id")), Seq("id"))
+      def bootstrap(root: String, files: Int): Unit = SnapshotManifest.commit(spark, root,
+        spark.range(0, files).toDF("id").withColumn("x", lit(1L))
+          .repartitionByRange(files, col("id")), Seq("id"))
       def broadUpdate(root: String): Unit = {
         SnapshotManifest.updateWhere(spark, root, col("id") >= 0L,
           Map("x" -> (col("x") + 1L)), Seq("id"))
         ()
       }
-      bootstrap(rootA); broadUpdate(rootA)
+      bootstrap(rootA, 100); broadUpdate(rootA)
       assert(rawManifest(rootA, 1L).contains("base=0"),
         "sub-floor broad edit must keep the churn delta form")
-      bootstrap(rootB)
-      spark.conf.set("graft.manifest.broadEditProbeFloor", "10")
+      bootstrap(rootB, 1100)
+      assert(SnapshotManifest.snapshotFiles(spark, rootB, 0L).size == 1100)
       broadUpdate(rootB)
       assert(!rawManifest(rootB, 1L).contains("base="),
         "a broad edit past the probe floor must stream a full manifest " +
-          "(its 2N-op delta would not be smaller than the body)")
+          "(its delta would not be smaller than the body)")
       // both forms resolve to the identical updated table
-      for (root <- Seq(rootA, rootB)) {
+      for ((root, n) <- Seq(rootA -> 100L, rootB -> 1100L)) {
         val out = SnapshotManifest.read(spark, root)
-        assert(out.count() == 1000L && out.filter(col("x") =!= 2L).isEmpty)
+        assert(out.count() == n && out.filter(col("x") =!= 2L).isEmpty)
       }
     } finally {
       spark.conf.unset("graft.manifest.checkpointInterval")
       spark.conf.unset("graft.manifest.parquetCheckpointMinLines")
-      spark.conf.unset("graft.manifest.broadEditProbeFloor")
     }
   }
 

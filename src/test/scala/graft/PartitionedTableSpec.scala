@@ -358,7 +358,7 @@ class PartitionedTableSpec extends SparkSpec {
       scala.concurrent.ExecutionContext.global)
     assert(hook.staging.await(60, java.util.concurrent.TimeUnit.SECONDS),
       "the append never started staging")
-    SnapshotManifest.setColocatedMerge(spark, root, on = true) // the winner
+    SnapshotManifest.setPrimaryKey(spark, root, Seq("id")) // the winner
     hook.winnerDone.countDown()
     (scala.concurrent.Await.result(out, scala.concurrent.duration.Duration(
       120, java.util.concurrent.TimeUnit.SECONDS)), hook.evals.get)
@@ -374,7 +374,7 @@ class PartitionedTableSpec extends SparkSpec {
     assert(evals == 1)
     // the winner's version stands; the loser's staged dir is unreferenced
     assert(SnapshotManifest.currentVersion(spark, root).contains(1L))
-    assert(SnapshotManifest.colocatedMerge(spark, root, 1L))
+    assert(SnapshotManifest.primaryKey(spark, root, 1L) == Seq("id"))
     assert(SnapshotManifest.read(spark, root).count() == 30)
   }
 
@@ -390,7 +390,7 @@ class PartitionedTableSpec extends SparkSpec {
     // re-published the staged files onto the winner's version
     assert(evals == 1, s"expected one staging evaluation, got $evals")
     assert((dataDirs(root) -- dirs0).size == 1)
-    assert(SnapshotManifest.colocatedMerge(spark, root, 2L))
+    assert(SnapshotManifest.primaryKey(spark, root, 2L) == Seq("id"))
     assert(SnapshotManifest.read(spark, root).count() == 31)
     assert(SnapshotManifest.read(spark, root).filter(col("id") === 5000L)
       .count() == 1)
