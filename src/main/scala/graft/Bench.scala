@@ -5,6 +5,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // the host's cores beside the session's: a local[32]-versus-local[8]
+    // comparison means something only where nproc reaches 32
+    val nproc = Runtime.getRuntime.availableProcessors
     // library session builder: carries GraftExtensions (native SQL fns +
     // the top-N-window rewrite rule), AQE, UTC — bench measures the
     // engine's real configuration
@@ -109,7 +112,7 @@ object Bench {
       if (results.isEmpty) 0.0 else results.map(_._2).sum / results.length)
     val (total, totalCold, mean) =
       if (failed.nonEmpty) (-1.0, -1.0, -1.0) else sums
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","total_cold":$totalCold,"mean_per_query":$mean,"n_failed":${failed.size},"failed":${jsonStrMap(failed)},"n_flaky":${flaky.size},"flaky":${jsonStrMap(flaky)},"queries":$qs,"queries_cold":$qsCold,"compiles_warm":$warmCompiles,"compiles":$qsCompiles,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","total_cold":$totalCold,"mean_per_query":$mean,"n_failed":${failed.size},"failed":${jsonStrMap(failed)},"n_flaky":${flaky.size},"flaky":${jsonStrMap(flaky)},"queries":$qs,"queries_cold":$qsCold,"compiles_warm":$warmCompiles,"compiles":$qsCompiles,"sf":"$sfDir","cpus":${cpus.toInt},"nproc":$nproc}"""
     // persist the FULL record to a file: the driver keeps only the last
     // ~2000 chars of stdout, and a 90+-query map is ~8 KB — r04/r05 both
     // recorded `parsed: null` because the one big line never fit the tail.
@@ -129,7 +132,7 @@ object Bench {
       s""""mean_per_query":$mean,"n_failed":${failed.size},""" +
       s""""slowest_queries":$slow,"n_queries":${results.length},""" +
       s""""compiles_warm":$warmCompiles,"compiles_timed":${compiles.values.sum},""" +
-      s""""queries_file":"$outFile","sf":"$sfDir"}""")
+      s""""queries_file":"$outFile","sf":"$sfDir","cpus":${cpus.toInt},"nproc":$nproc}""")
     spark.stop()
   }
 }

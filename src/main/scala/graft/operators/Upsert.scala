@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
@@ -167,14 +168,17 @@ object Upsert {
     * match (pure inserts) — so `mergeWhere` ≡ `merge` over the whole
     * table, file pruning only decides which bytes are rewritten.
     *
-    * The prune predicate comes from the staged batch itself: the distinct
-    * non-null PK tuples are collected when there are at most
-    * `maxKeySetSize` of them (churn-bounded — staged is the delta) and
-    * become per-column `IN` lists (a conservative cross-product superset
-    * for composite PKs — sound: a file holding a matching row admits each
-    * key component independently); above the cap, one aggregation yields
-    * per-column min/max and the predicate degrades to a range conjunction
-    * (still sound, coarser). At 100 TB with a PK-range-clustered layout
+    * The staged batch is evaluated once ([[pin]]): a batch of at most
+    * [[MaxInListLiterals]] rows becomes a local relation of its rows, a
+    * larger one is persisted. The prune predicate comes from the batch
+    * itself ([[keyPredicate]]; read on the driver for a pinned batch): the
+    * distinct non-null PK tuples become per-column `IN` lists when there
+    * are at most `maxKeySetSize` of them (churn-bounded — staged is the
+    * delta; a conservative cross-product superset for composite PKs —
+    * sound: a file holding a matching row admits each key component
+    * independently); above the cap, per-column min/max bound a range
+    * conjunction (still sound, coarser). At 100 TB with a
+    * PK-range-clustered layout
     * ([[graft.operators.Layout]] or `repartitionByRange` at commit), a
     * narrow-key merge rewrites a handful of files and the decision is one
     * driver-side manifest read.
@@ -215,19 +219,20 @@ object Upsert {
     val pk = pkCols.map(_.trim)
     val v = SnapshotManifest.currentVersion(spark, tableRoot).getOrElse(
       throw new IllegalStateException(s"mergeWhere: no committed snapshot under $tableRoot"))
-    // the staged frame feeds THREE actions (emptiness probe, key-set
-    // collect, merge write): persist pins one evaluation — a heavy staged
-    // expression prices once, and a non-deterministic source cannot hand
-    // the prune and the merge different rows
-    val stagedP = staged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the staged frame feeds the key set, the emptiness probe and the
+    // merge write: pinning evaluates it once — a heavy staged expression
+    // prices once, and a non-deterministic source cannot hand the prune
+    // and the merge different rows. A churn-sized batch is pinned as
+    // driver rows, which the key set reads without a job; a larger one is
+    // persisted.
+    val (stagedP, stagedPersisted) = pin(staged)
     // matched-DELETE keys: same pin (they feed the prune key-set AND the
     // anti-join); normalized to distinct non-null PK tuples (SQL IN
     // semantics — a null-component key matches nothing)
-    val deletesP = deletes.map(_.select(pkCols.map(c => col(s"`$c`")): _*)
-      .na.drop("any", pkCols).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val deletesP = deletes.map(d => pin(d.select(pkCols.map(c => col(s"`$c`")): _*)
+      .na.drop("any", pkCols).distinct()))
     def dropDeleted(merged: DataFrame): DataFrame = deletesP match {
-      case Some(d) =>
+      case Some((d, _)) =>
         var kp = "__md_"
         while (pkCols.exists(c => merged.columns.contains(kp + c))) kp += "_"
         val keyed = d.select(pkCols.map(c =>
@@ -249,20 +254,18 @@ object Upsert {
       // classify — and rewrite — the whole table.
       // The key-set prune covers BOTH arms: staged upsert keys and the
       // matched-delete keys (a file holding a doomed key must rewrite)
+      val pkRefs = pk.map(c => col(s"`$c`"))
       val keyFrame = deletesP match {
-        case Some(d) =>
-          stagedP.select(pk.map(c => col(s"`$c`")): _*).unionByName(d)
-        case None => stagedP
+        case Some((d, _)) => stagedP.select(pkRefs: _*).unionByName(d)
+        case None => stagedP.select(pkRefs: _*)
       }
-      val fastKeyPred = stagedKeyPredicate(keyFrame, pk, maxKeySetSize)
-      // ONE bounded collect (the key predicate's) answers the emptiness
-      // probe too: a defined predicate proves a non-null key exists, so
-      // the common non-empty batch skips the separate isEmpty job the old
-      // shape paid first. Only the None case (no non-null key anywhere)
-      // still needs isEmpty — to tell a genuinely empty batch (no-op)
-      // from an all-null-key pure-insert batch (must commit). deletesP is
-      // normalized to non-null distinct keys, so None also proves the
-      // delete arm is empty.
+      val fastKeyPred = keyPredicate(pkRefs, keyFrame, maxKeySetSize)
+      // the key set answers the emptiness probe too: a defined predicate
+      // proves a non-null key exists. Only the None case (no non-null key
+      // anywhere) still needs isEmpty — to tell a genuinely empty batch
+      // (no-op) from an all-null-key pure-insert batch (must commit); on a
+      // pinned batch it runs no job. deletesP is normalized to non-null
+      // distinct keys, so None also proves the delete arm is empty.
       if (fastKeyPred.isEmpty && deleteUnmatched.isEmpty && stagedP.isEmpty)
         return v
       // deleteUnmatched touches every file by construction — no churn
@@ -399,57 +402,93 @@ object Upsert {
           else fastKeyPred.getOrElse(lit(false)))),
         emptySchema = Some(aligned.schema))
     } finally {
-      stagedP.unpersist(false)
-      deletesP.foreach(_.unpersist(false))
+      release(stagedP, stagedPersisted)
+      deletesP.foreach { case (d, persisted) => release(d, persisted) }
     }
   }
 
-  /** The staged batch's prune predicate — distinct non-null key tuples as
-    * per-column IN lists when the batch is SMALL (≤ [[MaxInListLiterals]],
-    * a conservative cross-product superset for composite PKs), one min/max
-    * aggregation and a range conjunction above that. None = no non-null
-    * staged key exists (every staged row is a pure insert). Tuples with
-    * ANY null component can never match under `=`, so they contribute
-    * nothing.
+  /** The largest key set that becomes per-column IN lists, and the
+    * largest staged batch a merge pins as driver rows ([[pin]]).
     *
-    * Why TWO tiers below `maxKeySetSize`: a literal IN list is a PLAN-SIZE
-    * tax, not just a collect — every `lit()` captures a stack trace at
-    * construction, the optimizer turns the list into an `InSet` whose
-    * `simpleString` sorts and re-renders all N literals, and EVERY action
-    * on a plan embedding it pays that render again in
-    * `SQLExecution.withNewExecutionId`'s eager `explainString` (plus each
-    * AQE re-plan). Measured on a 50k-key merge: ~27 s of single-threaded
-    * driver time for ~6 s of actual executor work. The range conjunction
-    * is a handful of literals whatever the churn; pruning stays sound
-    * (only SELECTS candidate files — joins decide row fates) and the
-    * race-gate use stays conservative (a superset predicate can only
-    * refuse more rebases, never admit a conflicting one).
+    * Why the IN tier is capped below `maxKeySetSize`: a literal IN list is
+    * a PLAN-SIZE tax, not just a collect — the optimizer turns the list
+    * into an `InSet` whose `simpleString` sorts and re-renders all N
+    * literals, and EVERY action on a plan embedding it pays that render
+    * again in `SQLExecution.withNewExecutionId`'s eager `explainString`
+    * (plus each AQE re-plan). Measured on a 50k-key merge: ~27 s of
+    * single-threaded driver time for ~6 s of actual executor work. The
+    * range conjunction is a handful of literals whatever the churn;
+    * pruning stays sound (only SELECTS candidate files — joins decide row
+    * fates) and the race-gate use stays conservative (a superset predicate
+    * can only refuse more rebases, never admit a conflicting one).
     */
   private[graft] val MaxInListLiterals = 1024
 
-  private def stagedKeyPredicate(staged: DataFrame, pk: Seq[String],
+  /** `df` pinned for the length of one verb, and whether it was persisted:
+    * at most [[MaxInListLiterals]] rows become a local relation of their
+    * rows (one bounded collect, none for a local plan); a larger frame is
+    * persisted, as before. Either way every later action sees one
+    * evaluation. Release with [[release]].
+    */
+  private[graft] def pin(df: DataFrame): (DataFrame, Boolean) =
+    org.apache.spark.sql.graftbridge.ColumnBridge.pinned(df, MaxInListLiterals) match {
+      case Some((local, _)) => (local, false)
+      case None => (df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), true)
+    }
+
+  private[graft] def release(df: DataFrame, persisted: Boolean): Unit =
+    if (persisted) df.unpersist(false)
+
+  /** The prune predicate of a churn-sized key set: `keys` holds key tuples
+    * whose columns pair positionally with `keyCols`. Its distinct non-null
+    * tuples become per-column IN lists when there are at most
+    * min(`maxKeySetSize`, [[MaxInListLiterals]]) of them (a conservative
+    * cross-product superset for composite keys: a file holding a matching
+    * row admits each key component independently); above that, per-column
+    * min/max in the ENGINE's ordering bound a range conjunction (a
+    * driver-side ordering of external values would diverge from
+    * UTF8String binary order on supplementary characters, and a wrong
+    * bound prunes wrong, which is a data bug). None = no non-null tuple
+    * (every staged row is a pure insert). A tuple with ANY null component
+    * can never match under `=`, so it contributes nothing.
+    *
+    * A pinned `keys` frame (see [[pin]]) is read on the driver with no job.
+    * Any other costs one bounded collect of its distinct tuples, plus one
+    * 1-row aggregate in the range tier. Values stay Catalyst internal
+    * values end to end.
+    */
+  private[graft] def keyPredicate(keyCols: Seq[Column], keys: DataFrame,
       maxKeySetSize: Int): Option[Column] = {
-    val keyDf = staged.select(pk.map(col): _*).na.drop("any", pk).distinct()
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     val inCap = math.min(maxKeySetSize, MaxInListLiterals)
-    // collect at most inCap+1 rows: enough to decide the tier, never the
-    // 100k-row driver haul the old single-tier shape paid
-    val keyRows = keyDf.limit(inCap + 1).collect()
-    if (keyRows.isEmpty) None
-    else if (keyRows.length <= inCap)
-      Some(pk.zipWithIndex.map { case (c, i) =>
-        col(c).isin(keyRows.map(_.get(i)).distinct.toSeq: _*)
-      }.reduce(_ && _))
-    else {
-      // one 1-row aggregate on the (persisted) key frame — min/max in the
-      // ENGINE's ordering (driver-side ordering of collected values would
-      // diverge from UTF8String binary order on supplementary characters,
-      // and a wrong bound prunes wrong, which is a data bug)
-      val aggs = pk.flatMap(c =>
-        Seq(min(col(c)).alias(s"__mn_$c"), max(col(c)).alias(s"__mx_$c")))
-      val b = keyDf.agg(aggs.head, aggs.tail: _*).head()
-      Some(pk.zipWithIndex.map { case (c, i) =>
-        col(c) >= lit(b.get(2 * i)) && col(c) <= lit(b.get(2 * i + 1))
-      }.reduce(_ && _))
+    val types = keys.schema.fields.toSeq.map(_.dataType)
+    def tuple(r: InternalRow): Seq[Any] = types.indices.map(i => r.get(i, types(i)))
+    def lit(i: Int, v: Any): Column = ColumnBridge.column(Literal(v, types(i)))
+    val nonNull = keys.na.drop("any")
+    val tuples = ColumnBridge.localRows(keys) match {
+      case Some(rows) => Some(rows.map(tuple).filterNot(_.contains(null)).distinct)
+      case None => ColumnBridge.pinned(nonNull.distinct(), inCap).map(_._2.map(tuple))
+    }
+    def range(bounds: Seq[(Any, Any)]): Column = keyCols.zip(bounds).zipWithIndex.map {
+      case ((c, (mn, mx)), i) => c >= lit(i, mn) && c <= lit(i, mx)
+    }.reduce(_ && _)
+    tuples match {
+      case Some(ts) if ts.isEmpty => None
+      case Some(ts) if ts.length <= inCap =>
+        Some(keyCols.zipWithIndex.map { case (c, i) =>
+          c.isin(ts.map(_(i)).distinct.map(lit(i, _)): _*)
+        }.reduce(_ && _))
+      case Some(ts) => Some(range(types.indices.map { i =>
+        val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(types(i))
+        val vs = ts.map(_(i))
+        (vs.min(ord), vs.max(ord))
+      }))
+      case None =>
+        val aggs = keys.columns.toSeq.flatMap(c =>
+          Seq(min(col(s"`$c`")), max(col(s"`$c`"))))
+        val b = ColumnBridge.pinned(nonNull.agg(aggs.head, aggs.tail: _*), 1).get._2.head
+        Some(range(types.indices.map(i =>
+          (b.get(2 * i, types(i)), b.get(2 * i + 1, types(i))))))
     }
   }
 
@@ -482,14 +521,12 @@ object Upsert {
       s"deleteKeys: PK column $c not in keys frame ${keys.columns.mkString(", ")}"))
     val v = SnapshotManifest.currentVersion(spark, tableRoot).getOrElse(
       throw new IllegalStateException(s"deleteKeys: no committed snapshot under $tableRoot"))
-    val keysP = keys.select(pk.map(c => col(s"`$c`")): _*)
-      .na.drop("any", pk).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pkRefs = pk.map(c => col(s"`$c`"))
+    val (keysP, keysPersisted) = pin(keys.select(pkRefs: _*))
     try {
-      // keysP is na-dropped + distinct, so the key predicate's bounded
-      // collect doubles as the emptiness probe (None ⟺ no keys) — no
-      // separate isEmpty job
-      val keyPred = stagedKeyPredicate(keysP, pk, maxKeySetSize)
+      // the key predicate doubles as the emptiness probe (None ⟺ no
+      // non-null key) — no separate isEmpty job
+      val keyPred = keyPredicate(pkRefs, keysP, maxKeySetSize)
       if (keyPred.isEmpty) return v
       val (body, meta) = SnapshotManifest.manifestParts(spark, tableRoot, v)
       if (body.isEmpty) return v
@@ -523,7 +560,7 @@ object Upsert {
           added = SnapshotManifest.stageLines(spark, tableRoot, v + 1,
             Some(survivors), statsCols, meta)),
         Some(resolvedKey), emptySchema = Some(survivors.schema))
-    } finally keysP.unpersist(false)
+    } finally release(keysP, keysPersisted)
   }
 
   /** MERGE-ON-READ MERGE — [[mergeWhere]]'s deferred twin on the deletion-
@@ -534,15 +571,16 @@ object Upsert {
     * narrow-key upsert costs O(staged + admitted-file scan + churn), the
     * cheapest per-batch shape for continuous ingestion
     * ([[graft.streaming.StreamingUpsert]] `mor = true`). Reads pay the
-    * DV anti-join (broadcast while the sidecar is small, shuffle past the
-    * byte threshold) on masked files until [[graft.sources
+    * DV mask on masked files until [[graft.sources
     * .SnapshotManifest.foldDeletes]] / compaction materializes.
-    * Semantics ≡ [[mergeWhere]] ≡ whole-table [[merge]]. Positions stay
-    * distributed end-to-end; a merged DV past `maxDvPositions` degrades
-    * loudly to [[mergeWhere]] (the CoW rewrite handles fat churn
-    * correctly — masking it would tax every later read). The matched
-    * slice merges with the same shuffle [[merge]] plan as every other
-    * merge verb.
+    * Semantics ≡ [[mergeWhere]] ≡ whole-table [[merge]]. The staged batch
+    * is pinned as in [[mergeWhere]], and the matched positions go through
+    * [[graft.sources.SnapshotManifest.maskMatched]] as in `deleteWhereMoR`:
+    * churn-sized sets stay on the driver, larger ones distributed. A
+    * merged DV past `maxDvPositions` degrades loudly to [[mergeWhere]]
+    * (the CoW rewrite handles fat churn correctly — masking it would tax
+    * every later read). The matched slice merges with the same shuffle
+    * [[merge]] plan as every other merge verb.
     */
   def mergeWhereMoR(spark: SparkSession, tableRoot: String, staged: DataFrame,
       pkCols: Seq[String], statsCols: Seq[String] = Nil,
@@ -556,21 +594,22 @@ object Upsert {
     val pk = pkCols.map(_.trim)
     val v = SnapshotManifest.currentVersion(spark, tableRoot).getOrElse(
       throw new IllegalStateException(s"mergeWhereMoR: no committed snapshot under $tableRoot"))
-    val stagedP = staged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (stagedP, stagedPersisted) = pin(staged)
     try {
-      // the key predicate's bounded collect doubles as the emptiness
-      // probe in the common case (a defined predicate proves rows exist);
-      // only the None case still needs isEmpty, to tell an empty batch
-      // (no-op) from an all-null-key pure-insert batch (must commit)
-      val keyPred = stagedKeyPredicate(stagedP, pk, maxKeySetSize)
+      // the key predicate doubles as the emptiness probe in the common
+      // case (a defined predicate proves rows exist); only the None case
+      // still needs isEmpty, to tell an empty batch (no-op) from an
+      // all-null-key pure-insert batch (must commit)
+      val keyPred = keyPredicate(pk.map(c => col(s"`$c`")),
+        stagedP.select(pk.map(c => col(s"`$c`")): _*), maxKeySetSize)
       if (keyPred.isEmpty && stagedP.isEmpty) return v
       val (body, meta) = SnapshotManifest.manifestParts(spark, tableRoot, v)
       if (body.isEmpty)
         // nothing to mask — identical to the copy-on-write form
         return mergeWhere(spark, tableRoot, stagedP, pk, statsCols,
           maxKeySetSize)
-      val entries = SnapshotManifest.bodyEntries(body)
-      val files = SnapshotManifest.bodyFiles(tableRoot, body)
+      val entriesWithFiles = SnapshotManifest.bodyEntries(body)
+        .zip(SnapshotManifest.bodyFiles(tableRoot, body))
       val targetSchema = SnapshotManifest.tableSchema(spark, tableRoot, meta.schema, body.headOption).get
       pk.foreach(c => require(targetSchema.fieldNames.contains(c),
         s"mergeWhereMoR: PK column $c not in target schema ${targetSchema.fieldNames.mkString(", ")}"))
@@ -582,11 +621,11 @@ object Upsert {
       val resolvedKey = ManifestStats.resolvePredicate(spark, targetSchema,
         keyPred.getOrElse(lit(false)))
       val affected = keyPred match {
-        case Some(_) => ManifestStats.prune(files,
+        case Some(_) => ManifestStats.prune(entriesWithFiles.map(_._2),
           SnapshotManifest.bodyStats(body), resolvedKey).toSet
         case None => Set.empty[String]
       }
-      val affectedEntries = entries.zip(files).collect { case (e, f) if affected(f) => e }
+      val affectedEntries = entriesWithFiles.collect { case (e, f) if affected(f) => e }
       // the merge output appends as new files; `retag` masks the matched
       // rows of the affected files
       def publish(appended: DataFrame, retag: Map[String, String]): Long = {
@@ -603,52 +642,27 @@ object Upsert {
         stagedP, pk), Map.empty)
       // no file can hold a staged key: every staged row is an insert
       if (affectedEntries.isEmpty) return insertsOnly
-      val oldDv =
-        SnapshotManifest.entryDvPositionsDf(spark, tableRoot, affectedEntries)
-          .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val (alive, fCol, rCol) = SnapshotManifest.readEntriesWithPositions(
-        spark, tableRoot, affectedEntries, oldDv, meta.schema)
-      // staged-key aliases chosen collision-free against the target's
-      // columns (same adversarial-name guard as the position columns)
-      var kp = "__k_"
-      while (pk.exists(c => alive.columns.contains(kp + c))) kp += "_"
-      val matchedTarget = alive.join(
-          broadcast(stagedP.select(pk.map(c => col(c).alias(s"$kp$c")): _*).distinct()),
-          pk.map(c => col(c) === col(s"$kp$c")).reduce(_ && _), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val oldDv = SnapshotManifest.priorDv(spark, tableRoot, affectedEntries)
+        .map(_.map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
       try {
-        // positions stay DISTRIBUTED: old and new are disjoint by
-        // construction (`alive` anti-joined the old sidecars away), so
-        // the merged size is the exact sum — the cap decides before any
-        // union work, the union needs no distinct shuffle, and the
-        // sidecar is written by a Spark job; the driver sees only counts
-        // and the sidecar-mentioned basename set (same pipeline as
-        // SnapshotManifest.deleteWhereMoR)
-        if (matchedTarget.isEmpty) return insertsOnly
-        val newPositions = matchedTarget
-          .select(col(fCol).alias("file_name"), col(rCol).alias("row_index"))
-        val nNew = newPositions.count()
-        val nOld = oldDv.map(_.count()).getOrElse(0L)
-        if (nNew + nOld > maxDvPositions) {
-          graft.core.Logging.logger().warn(
-            s"mergeWhereMoR: merged deletion vector would hold ${nNew + nOld} " +
-              s"positions (> maxDvPositions=$maxDvPositions) — degrading " +
-              "to the copy-on-write merge (mergeWhere)")
-          return mergeWhere(spark, tableRoot, stagedP, pk, statsCols,
-            maxKeySetSize)
-        }
-        val dvDf = oldDv.map(newPositions.unionByName(_)).getOrElse(newPositions)
-        val mergedAppend = merge(matchedTarget.drop(fCol, rCol), stagedP, pk)
-        val dvFileNames = dvDf.select(col("file_name")).distinct()
-          .collect().map(_.getString(0)).toSet // affected ∪ sidecar-sharing files
-        val dvFile = SnapshotManifest.writeDvSidecar(spark, tableRoot, v + 1, dvDf)
-        publish(mergedAppend, SnapshotManifest.retagMap(body,
-          entries.zip(files), affected, dvFileNames, dvFile))
-      } finally {
-        matchedTarget.unpersist(false)
-        oldDv.foreach(_.unpersist(false))
-      }
-    } finally stagedP.unpersist(false)
+        val (alive, fCol, rCol) = SnapshotManifest.readEntriesWithPositions(
+          spark, tableRoot, affectedEntries, oldDv, meta.schema)
+        // staged-key aliases chosen collision-free against the target's
+        // columns (same adversarial-name guard as the position columns)
+        var kp = "__k_"
+        while (pk.exists(c => alive.columns.contains(kp + c))) kp += "_"
+        val matchedTarget = alive.join(
+          broadcast(stagedP.select(pk.map(c => col(s"`$c`").alias(s"$kp$c")): _*)),
+          pk.map(c => col(s"`$c`") === col(s"$kp$c")).reduce(_ && _), "left_semi")
+        // the matched target rows: positions to mask, and the rows the
+        // merge output re-appends with staged values
+        SnapshotManifest.maskMatched(spark, tableRoot, "mergeWhereMoR", v, body,
+          entriesWithFiles, affected, oldDv, matchedTarget, fCol, rCol, maxDvPositions)(
+          mergeWhere(spark, tableRoot, stagedP, pk, statsCols, maxKeySetSize)) {
+          (matched, retag) => publish(merge(matched, stagedP, pk), retag)
+        }.getOrElse(insertsOnly)
+      } finally oldDv.foreach(_.foreach(_.unpersist(false)))
+    } finally release(stagedP, stagedPersisted)
   }
 
   /** Write `df` as a PK-bucketed catalog table — the 100-TB merge lever

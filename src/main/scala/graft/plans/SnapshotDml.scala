@@ -456,22 +456,25 @@ object SnapshotStatements {
 
   /** Run a DELETE/UPDATE whose condition carries subquery conjuncts.
     * EXISTS gates probe first (a false gate makes the whole statement a
-    * provable no-op — nothing commits); IN subqueries materialize ONCE
-    * (persisted — the frame feeds a null probe, an emptiness probe, the
-    * prune-key collect, and the rewrite join), and each candidate row's
-    * membership is decided by a LEFT JOIN against the distinct key frame
-    * (AQE broadcasts a small frame; a huge one shuffles — never an
-    * unbounded driver collect). File pruning and the concurrent-writer
-    * gate use a sound SUPERSET predicate: the plain conjuncts plus an
-    * isin/min-max key predicate per positive IN ([[inKeyPredicate]]).
-    * NOT IN follows SQL three-valued logic: any NULL in the subquery
-    * result, or a NULL row value, means the conjunct is never TRUE.
+    * provable no-op — nothing commits); IN subqueries are evaluated ONCE
+    * (pinned by [[graft.operators.Upsert.pin]]: a churn-sized result as
+    * driver rows, a larger one persisted — the frame feeds a null probe,
+    * an emptiness probe, the prune-key set, and the rewrite join), and
+    * each candidate row's membership is decided by a LEFT JOIN against
+    * the distinct key frame (AQE broadcasts a small frame; a huge one
+    * shuffles — never an unbounded driver collect). File pruning and the
+    * concurrent-writer gate use a sound SUPERSET predicate: the plain
+    * conjuncts plus an isin/min-max key predicate per positive IN
+    * ([[graft.operators.Upsert.keyPredicate]]). NOT IN follows SQL
+    * three-valued logic: any NULL in the subquery result, or a NULL row
+    * value, means the conjunct is never TRUE.
     */
   def runSubqueryDml(spark: SparkSession, root: String, plainCond: Expression,
       ins: Seq[InMembership], gates: Seq[ExistsGate],
       sets: Option[Seq[(String, Expression)]],
       maxKeySetSize: Int = 100000): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    import graft.operators.Upsert
     gates.foreach { g =>
       val hasRows = ColumnBridge.ofRows(spark, g.source).limit(1).count() > 0
       if (hasRows == g.negated) return // gate false ⇒ provable no-op
@@ -479,33 +482,34 @@ object SnapshotStatements {
     val plain = byName(substituteScalars(spark, plainCond))
     val setsSub = sets.map(_.map { case (n, e) =>
       n -> byName(substituteScalars(spark, e)) })
-    final case class RtIn(values: Seq[Column], frame: DataFrame, negated: Boolean)
+    final case class RtIn(values: Seq[Column], frame: DataFrame, negated: Boolean,
+        keyPred: Option[Column])
     val rt = Seq.newBuilder[RtIn]
-    val persisted = Seq.newBuilder[DataFrame]
+    val pinned = Seq.newBuilder[(DataFrame, Boolean)]
     try {
       ins.foreach { m =>
         val raw = ColumnBridge.ofRows(spark, m.source)
         require(raw.columns.length == m.values.length,
           s"IN subquery arity ${raw.columns.length} != ${m.values.length}")
+        val values = m.values.map(byName)
         if (m.negated) {
           // NOT IN: one NULL in the subquery result ⇒ conjunct never TRUE
-          val rawP = raw.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          persisted += rawP
+          val (rawP, persisted) = Upsert.pin(raw)
+          pinned += ((rawP, persisted))
           if (rawP.filter(col(rawP.columns.head).isNull).limit(1).count() > 0)
             return // provable no-op
-          rt += RtIn(m.values.map(byName), rawP.distinct(), negated = true)
+          rt += RtIn(values, rawP.distinct(), negated = true, None)
         } else {
-          val keys = raw.na.drop("any").distinct().persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          persisted += keys
-          if (keys.isEmpty) return // v IN (∅) is FALSE for every row
-          rt += RtIn(m.values.map(byName), keys, negated = false)
+          val (keys, persisted) = Upsert.pin(raw.na.drop("any").distinct())
+          pinned += ((keys, persisted))
+          // None ⟺ no non-null key: v IN (∅) is FALSE for every row
+          val keyPred = Upsert.keyPredicate(values, keys, maxKeySetSize)
+          if (keyPred.isEmpty) return
+          rt += RtIn(values, keys, negated = false, keyPred)
         }
       }
       val rtIns = rt.result()
-      val prune = (Seq(plain) ++ rtIns.filterNot(_.negated).flatMap(m =>
-        inKeyPredicate(m.values, m.frame, maxKeySetSize))).reduce(_ && _)
+      val prune = (Seq(plain) ++ rtIns.flatMap(_.keyPred)).reduce(_ && _)
       val op = if (sets.isDefined) "updateWhereIn" else "deleteWhereIn"
       SnapshotManifest.rewriteWhereTransform(spark, root, prune,
         statsColsOf(spark, root), op, { df =>
@@ -543,39 +547,7 @@ object SnapshotStatements {
           }
         })
       ()
-    } finally persisted.result().foreach(_.unpersist(false))
-  }
-
-  /** Prune-key predicate over an IN subquery's materialized distinct key
-    * frame — [[graft.operators.Upsert]]'s churn-bounded two-tier shape:
-    * exact per-column `isin` lists when the frame is SMALL (≤
-    * `Upsert.MaxInListLiterals`, 1024 — one bounded
-    * `limit(n+1).collect`), a min/max range conjunction above that (one
-    * 1-row aggregate). Sound either way: pruning only SELECTS candidate
-    * files; the join decides row fates. The literal cap exists because a
-    * huge IN list is a driver tax on EVERY action over a plan embedding
-    * it (InSet's simpleString re-renders all N literals in each eager
-    * explainString) — see Upsert.stagedKeyPredicate for the measurement.
-    */
-  private[plans] def inKeyPredicate(values: Seq[Column], keys: DataFrame,
-      maxKeySetSize: Int): Option[Column] = {
-    import org.apache.spark.sql.functions.{col, lit, max, min}
-    val inCap = math.min(maxKeySetSize, graft.operators.Upsert.MaxInListLiterals)
-    val rows = keys.limit(inCap + 1).collect()
-    if (rows.isEmpty) None
-    else if (rows.length <= inCap)
-      Some(values.zipWithIndex.map { case (v, i) =>
-        v.isin(rows.map(_.get(i)).distinct.toSeq: _*)
-      }.reduce(_ && _))
-    else {
-      val kCols = keys.columns
-      val aggs = kCols.flatMap(c =>
-        Seq(min(col(s"`$c`")).alias(s"__mn_$c"), max(col(s"`$c`")).alias(s"__mx_$c"))).toSeq
-      val b = keys.agg(aggs.head, aggs.tail: _*).head()
-      Some(values.zipWithIndex.map { case (v, i) =>
-        v >= lit(b.get(2 * i)) && v <= lit(b.get(2 * i + 1))
-      }.reduce(_ && _))
-    }
+    } finally pinned.result().foreach { case (df, p) => Upsert.release(df, p) }
   }
 
   /** Detach a resolved single-relation expression from its attribute ids:
@@ -673,8 +645,7 @@ final case class GraftMergeCommand(root: String, source: LogicalPlan,
     val statsCols = SnapshotStatements.statsColsOf(spark, root)
     if (deleteMatched) {
       graft.operators.Upsert.deleteKeys(spark, root,
-        staged.select(pkNames.map(org.apache.spark.sql.functions.col): _*)
-          .distinct(),
+        staged.select(pkNames.map(org.apache.spark.sql.functions.col): _*),
         pkNames, statsCols)
     } else if (insertOnly) {
       val current = SnapshotManifest.read(spark, root)
@@ -742,16 +713,18 @@ final case class GraftMergeActionsCommand(root: String, source: LogicalPlan,
               s"${a.name}#${a.exprId.id}")))
     })
     val pkNames = pkPairs.map(_._1)
-    val srcP = ColumnBridge.ofRows(spark, source).select(
-      srcOut.zipWithIndex.map { case (a, i) =>
-        ColumnBridge.column(a).alias(s"__s_$i") }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one evaluation of the source feeds the key set, the matched join
+    // and the insert anti-join
+    val (srcP, srcPersisted) = graft.operators.Upsert.pin(
+      ColumnBridge.ofRows(spark, source).select(
+        srcOut.zipWithIndex.map { case (a, i) =>
+          ColumnBridge.column(a).alias(s"__s_$i") }: _*))
     try {
       val srcKeyAlias: Seq[(String, String)] =
         pkPairs.map { case (n, a) => n -> srcAlias(a.exprId) }
       val sourceKeys = srcP.select(srcKeyAlias.map { case (n, sa) =>
-        col(sa).alias(n) }: _*).na.drop("any").distinct()
-      val srcKeyPred = SnapshotStatements.inKeyPredicate(
+        col(sa).alias(n) }: _*)
+      val srcKeyPred = graft.operators.Upsert.keyPredicate(
         pkNames.map(n => col(s"`$n`")), sourceKeys, 100000)
       val targetRead = S.readWhere(spark, root,
         srcKeyPred.getOrElse(lit(false)))
@@ -823,7 +796,7 @@ final case class GraftMergeActionsCommand(root: String, source: LogicalPlan,
           SnapshotStatements.statsColsOf(spark, root),
           deletes = deletesDf, deleteUnmatched = bySourceOpt)
       } finally acted.unpersist(false)
-    } finally srcP.unpersist(false)
+    } finally graft.operators.Upsert.release(srcP, srcPersisted)
     Nil
   }
 }

@@ -343,47 +343,35 @@ object SnapshotManifest {
         case None => throw new IllegalStateException(
           "readEntries: snapshot has no data files and no recorded schema")
       }
-    val rootPath = new Path(root)
-    val dvFiles = entries.flatMap(_.dvRel).distinct
-      .map(r => new Path(rootPath, r).toString)
     val base = scanEntries(spark, root, entries, declaredSchema)
-    if (dvFiles.isEmpty) base
-    else {
-      // LAZY sidecar read: the DV parquet stays executor-side —
-      // constructing this frame never runs a driver job. Strategy by
-      // sidecar size: churn-sized DVs broadcast (corpus side stays
-      // shuffle-free); a DV past the byte threshold joins as a plain
-      // shuffle instead of replicating to every executor.
-      val fCol = freshName("__graft_f", base.columns.toSeq)
-      val rCol = freshName("__graft_r", base.columns.toSeq :+ fCol)
-      val dvRaw = spark.read.schema(DvSidecarSchema).parquet(dvFiles: _*)
-        .select(col("file_name").alias("__dv_f"), col("row_index").alias("__dv_r"))
-        .distinct()
-      val dv =
-        if (dvShouldBroadcast(spark, root, entries))
-          org.apache.spark.sql.functions.broadcast(dvRaw)
-        else dvRaw
-      val withMeta = base
-        .withColumn(fCol, element_at(fsplit(col("_metadata.file_path"), "/"), -1))
-        .withColumn(rCol, col("_metadata.row_index"))
-      withMeta.join(dv, withMeta(fCol) === dv("__dv_f") &&
-          withMeta(rCol) === dv("__dv_r"), "left_anti")
-        .drop(fCol, rCol)
+    priorDv(spark, root, entries) match {
+      case None => base
+      // a churn-sized DV, read on the driver: a row-position filter
+      case Some(Left(positions)) =>
+        base.filter(dvAlive(element_at(fsplit(col("_metadata.file_path"), "/"), -1),
+          col("_metadata.row_index"), positions))
+      case Some(Right(dv)) =>
+        val fCol = freshName("__graft_f", base.columns.toSeq)
+        val rCol = freshName("__graft_r", base.columns.toSeq :+ fCol)
+        val withMeta = base
+          .withColumn(fCol, element_at(fsplit(col("_metadata.file_path"), "/"), -1))
+          .withColumn(rCol, col("_metadata.row_index"))
+        dvAntiJoin(spark, root, entries, withMeta, fCol, rCol, dv).drop(fCol, rCol)
     }
   }
 
   /** [[readEntries]] keeping row positions: the ALIVE rows of `entries`
-    * (`oldDv` — the lazily-read prior sidecars, see [[entryDvPositionsDf]]
-    * — anti-joined away), with file-name and row-index columns attached
-    * under COLLISION-FREE names, returned alongside the frame. The input
-    * every MoR masking verb ([[deleteWhereMoR]], [[updateWhereMoR]],
+    * (`oldDv`, their prior positions from [[priorDv]], masked away), with
+    * file-name and row-index columns attached under COLLISION-FREE names,
+    * returned alongside the frame. The input every MoR masking verb
+    * ([[deleteWhereMoR]], [[updateWhereMoR]],
     * [[graft.operators.Upsert.mergeWhereMoR]]) computes its positions
-    * from. Positions are never materialized on the driver: the prior DV
-    * stays a DataFrame, joined broadcast or shuffle by sidecar size
-    * (same policy as [[readEntries]]).
+    * from. Prior positions held on the driver mask by a row-position
+    * filter; a prior DV over the cap stays a DataFrame, anti-joined
+    * broadcast or shuffle by sidecar size (as in [[readEntries]]).
     */
   private[graft] def readEntriesWithPositions(spark: SparkSession, root: String,
-      entries: Seq[ManifestEntry], oldDv: Option[DataFrame],
+      entries: Seq[ManifestEntry], oldDv: Option[Either[Seq[(String, Long)], DataFrame]],
       declaredSchema: Option[StructType] = None)
       : (DataFrame, String, String) = {
     import org.apache.spark.sql.functions.{col, element_at, split => fsplit}
@@ -393,17 +381,51 @@ object SnapshotManifest {
     val withPos = base
       .withColumn(fCol, element_at(fsplit(col("_metadata.file_path"), "/"), -1))
       .withColumn(rCol, col("_metadata.row_index"))
-    oldDv match {
-      case None => (withPos, fCol, rCol)
-      case Some(dv0) =>
-        val small = dvShouldBroadcast(spark, root, entries)
-        val dv = dv0.select(col("file_name").alias("__dv_f"),
-          col("row_index").alias("__dv_r"))
-        val dvSided =
-          if (small) org.apache.spark.sql.functions.broadcast(dv) else dv
-        (withPos.join(dvSided, withPos(fCol) === dvSided("__dv_f") &&
-          withPos(rCol) === dvSided("__dv_r"), "left_anti"), fCol, rCol)
+    val alive = oldDv match {
+      case None => withPos
+      case Some(Left(positions)) => withPos.filter(dvAlive(col(fCol), col(rCol), positions))
+      case Some(Right(dv)) => dvAntiJoin(spark, root, entries, withPos, fCol, rCol, dv)
     }
+    (alive, fCol, rCol)
+  }
+
+  /** `withPos` without the rows whose `(fCol, rCol)` position `dv` lists:
+    * a broadcast anti-join while the sidecars are small, a shuffle one
+    * past the byte threshold.
+    */
+  private def dvAntiJoin(spark: SparkSession, root: String,
+      entries: Seq[ManifestEntry], withPos: DataFrame, fCol: String, rCol: String,
+      dv: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val dvRenamed = dv.select(col("file_name").alias("__dv_f"),
+      col("row_index").alias("__dv_r"))
+    val dvSided =
+      if (dvShouldBroadcast(spark, root, entries))
+        org.apache.spark.sql.functions.broadcast(dvRenamed)
+      else dvRenamed
+    withPos.join(dvSided, withPos(fCol) === dvSided("__dv_f") &&
+      withPos(rCol) === dvSided("__dv_r"), "left_anti")
+  }
+
+  /** TRUE for a row whose `(fileName, rowIndex)` position is not among
+    * `positions`. Both sets reach the generated code by reference (an
+    * `InSet`, never inlined literals), so a new DV reuses the compiled
+    * filter; a file name is checked first, and only a row of a masked file
+    * builds its position key (`name/row`: a basename holds no slash).
+    */
+  private def dvAlive(fileName: org.apache.spark.sql.Column,
+      rowIndex: org.apache.spark.sql.Column,
+      positions: Seq[(String, Long)]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.functions.{concat, lit, not}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.unsafe.types.UTF8String
+    def inSet(c: org.apache.spark.sql.Column, values: Iterable[String]) =
+      ColumnBridge.column(InSet(ColumnBridge.expression(c),
+        values.iterator.map(s => UTF8String.fromString(s): Any).toSet))
+    not(inSet(fileName, positions.map(_._1).distinct) &&
+      inSet(concat(fileName, lit("/"), rowIndex.cast("string")),
+        positions.map { case (f, r) => s"$f/$r" }))
   }
 
   /** The deletion-vector tagging step as a RAW-line → tagged-line map —
@@ -589,18 +611,55 @@ object SnapshotManifest {
             s"already published; the next catch-up repairs): ${e.getMessage}")
       }
 
-  /** Existing DV positions of `entries` as a LAZY `(file_name, row_index)`
-    * frame — never collected; None when no entry carries a sidecar. The
-    * write-side counterpart of [[readEntries]]'s sidecar read.
+  /** The prior DV positions of `entries`; None when no entry carries a
+    * sidecar. Churn-sized sidecars — small by [[dvShouldBroadcast]]'s
+    * byte signal and holding at most [[MaxDriverPositions]] rows by their
+    * footers — are read on the driver, with no Spark job (`Left`). Any
+    * other is a LAZY distinct `(file_name, row_index)` frame (`Right`).
     */
-  private[graft] def entryDvPositionsDf(spark: SparkSession, root: String,
-      entries: Seq[ManifestEntry]): Option[DataFrame] = {
+  private[graft] def priorDv(spark: SparkSession, root: String,
+      entries: Seq[ManifestEntry]): Option[Either[Seq[(String, Long)], DataFrame]] = {
     import org.apache.spark.sql.functions.col
     val dvFiles = entries.flatMap(_.dvRel).distinct
-      .map(r => new Path(new Path(root), r).toString)
+      .map(r => new Path(new Path(root), r))
     if (dvFiles.isEmpty) None
-    else Some(spark.read.schema(DvSidecarSchema).parquet(dvFiles: _*)
-      .select(col("file_name"), col("row_index")).distinct())
+    else Some((if (dvShouldBroadcast(spark, root, entries))
+        readDvPositions(spark, dvFiles, MaxDriverPositions) else None)
+      .map(Left(_)).getOrElse(Right(
+        spark.read.schema(DvSidecarSchema).parquet(dvFiles.map(_.toString): _*)
+          .select(col("file_name"), col("row_index")).distinct())))
+  }
+
+  /** The most DV positions a verb holds on the driver: its position sets
+    * and sidecars up to this size skip the Spark jobs that count, collect
+    * and write them. Past it they stay distributed.
+    */
+  private[graft] val MaxDriverPositions: Int = graft.operators.Upsert.MaxInListLiterals
+
+  /** The distinct positions of the sidecars `files`, read with the parquet
+    * library on the driver; None, before any row is read, when their
+    * footers count more than `cap` rows.
+    */
+  private def readDvPositions(spark: SparkSession, files: Seq[Path],
+      cap: Int): Option[Seq[(String, Long)]] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.ColumnIOFactory
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    val conf = spark.sparkContext.hadoopConfiguration
+    val readers = files.map(f => ParquetFileReader.open(HadoopInputFile.fromPath(f, conf)))
+    try {
+      if (readers.map(_.getRecordCount).sum > cap) None
+      else Some(readers.flatMap { r =>
+        val schema = r.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { pages =>
+          val records = io.getRecordReader(pages, new GroupRecordConverter(schema))
+          Iterator.fill(pages.getRowCount.toInt)(records.read()).map(g =>
+            (g.getString("file_name", 0), g.getLong("row_index", 0)))
+        }.toVector
+      }.distinct)
+    } finally readers.foreach(_.close())
   }
 
   /** Every DV sidecar's schema ([[writeDvSidecar]] writes exactly these
@@ -610,26 +669,57 @@ object SnapshotManifest {
     StructField("file_name", org.apache.spark.sql.types.StringType),
     StructField("row_index", org.apache.spark.sql.types.LongType)))
 
+  /** A fresh DV sidecar directory for version `next`: its path and its
+    * manifest-relative name.
+    */
+  private def dvSidecarDir(spark: SparkSession, root: String, next: Long): (Path, String) = {
+    val dvdName = s"${dataDirName(next)}-dv-${java.util.UUID.randomUUID.toString.take(8)}"
+    (new Path(fsOf(spark, root)._2, new Path("data", dvdName)), s"data/$dvdName")
+  }
+
   /** Write the `(file_name, row_index)` frame as one DV sidecar parquet
     * for version `next` and return its manifest-relative path (invisible
-    * until referenced). The write is a CLUSTER job — the driver never
-    * holds the positions; `coalesce(1)` funnels them through one executor
-    * task (parquet writes stream row groups, so task memory stays bounded)
-    * because the manifest's `dv=` field references a single file and the
-    * read side prices a single-file scan fine at the [[deleteWhereMoR]]
-    * `maxDvPositions`-bounded sizes.
+    * until referenced). The write is a CLUSTER job, for position sets past
+    * [[MaxDriverPositions]]; `coalesce(1)` funnels them through one
+    * executor task (parquet writes stream row groups, so task memory stays
+    * bounded) because the manifest's `dv=` field references a single file
+    * and the read side prices a single-file scan fine at the
+    * [[deleteWhereMoR]] `maxDvPositions`-bounded sizes.
     */
   private[graft] def writeDvSidecar(spark: SparkSession, root: String,
       next: Long, positions: DataFrame): String = {
     import org.apache.spark.sql.functions.col
-    val (fs, rootPath) = fsOf(spark, root)
-    val dvdName = s"${dataDirName(next)}-dv-${java.util.UUID.randomUUID.toString.take(8)}"
-    val dvDir = new Path(rootPath, new Path("data", dvdName))
+    val (dvDir, rel) = dvSidecarDir(spark, root, next)
     positions.select(col("file_name"), col("row_index"))
       .coalesce(1).write.parquet(dvDir.toString)
-    fs.listStatus(dvDir)
+    fsOf(spark, root)._1.listStatus(dvDir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"data/$dvdName/${s.getPath.getName}").head
+      .map(s => s"$rel/${s.getPath.getName}").head
+  }
+
+  /** [[writeDvSidecar]] for positions held on the driver: the parquet
+    * library writes the same two columns from the driver, no Spark job.
+    */
+  private[graft] def writeDvSidecar(spark: SparkSession, root: String,
+      next: Long, positions: Seq[(String, Long)]): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val (dvDir, rel) = dvSidecarDir(spark, root, next)
+    val name = s"part-00000-${java.util.UUID.randomUUID}.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message spark_schema { optional binary file_name (STRING); optional int64 row_index; }")
+    val groups = new SimpleGroupFactory(schema)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new Path(dvDir, name), spark.sparkContext.hadoopConfiguration))
+      .withType(schema)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try positions.foreach { case (f, r) =>
+      writer.write(groups.newGroup().append("file_name", f).append("row_index", r))
+    } finally writer.close()
+    s"$rel/$name"
   }
 
   // ───────────────────────── churn-bounded commit path ──────────────────
@@ -2067,28 +2157,29 @@ object SnapshotManifest {
     * affected file's manifest line gains a `dv=` reference — the data
     * bytes are untouched and every reader ([[read]], [[readWhere]],
     * [[changesBetween]], the DML rewrites, [[graft.operators.Upsert
-    * .mergeWhere]]) anti-joins the DV away. Cost: one scan of the
+    * .mergeWhere]]) masks the DV away. Cost: one scan of the
     * stats-admitted files + a DV write proportional to the MATCHES —
     * high-frequency small deletes stop paying a full file rewrite each
-    * (the CoW pain point at 100 TB); reads on DV'd files pay a broadcast
-    * anti-join until [[foldDeletes]] or any CoW rewrite of the file
-    * materializes the deletions. A file already carrying a DV gets a
-    * MERGED sidecar (old ∪ new positions — one `dv=` ref per line).
+    * (the CoW pain point at 100 TB); reads on DV'd files pay the mask
+    * until [[foldDeletes]] or any CoW rewrite of the file materializes
+    * the deletions. A file already carrying a DV gets a MERGED sidecar
+    * (old ∪ new positions — one `dv=` ref per line).
     *
     * Same SQL DELETE semantics as [[deleteWhere]] (NULL-predicate rows
     * kept), same no-op short-circuit, same atomic manifest publish; the
     * deleted rows stay readable in superseded versions until [[vacuum]]
     * (which treats live DV sidecars as reachable).
     *
-    * The position pipeline is DISTRIBUTED end-to-end: matches and prior
-    * sidecars stay DataFrames (old ∪ new = union+distinct in the
-    * cluster), the merged sidecar is written by a Spark job, and the
-    * driver only ever sees two scalars (the position count, the
-    * affected-file-bounded basename set). `maxDvPositions` bounds the
-    * MASKED regime: past it the verb degrades LOUDLY to the CoW twin
-    * ([[deleteWhere]]) — a predicate matching that much of the table
-    * should rewrite files once, not tax every subsequent read with a
-    * fat anti-join.
+    * Churn-sized position sets stay on the driver ([[maskMatched]]): the
+    * new positions come back in one bounded collect, a small prior sidecar
+    * is read without a job, and the count, the basename set and the
+    * merged sidecar's write need no further job. Past
+    * [[MaxDriverPositions]] the pipeline is distributed: positions stay
+    * DataFrames and the sidecar is written by a Spark job.
+    * `maxDvPositions` bounds the MASKED regime: past it the verb degrades
+    * LOUDLY to the CoW twin ([[deleteWhere]]) — a predicate matching that
+    * much of the table should rewrite files once, not tax every
+    * subsequent read with a fat mask.
     *
     * @return the committed version (unchanged if nothing matched)
     */
@@ -2108,47 +2199,79 @@ object SnapshotManifest {
     if (affected.isEmpty) return v
     val entriesWithFiles = bodyEntries(body).zip(files)
     val affectedEntries = entriesWithFiles.collect { case (e, f) if affected(f) => e }
-    // positions attach on the raw scan; the old sidecars — read ONCE — are
-    // anti-joined away so already-deleted rows can't match again
-    // the old sidecar frame feeds FOUR consumers (the alive anti-join,
-    // the size count, the basename collect, the sidecar write) — persist
-    // pins one materialization of its scan+distinct
-    val oldDv = entryDvPositionsDf(spark, root, affectedEntries)
-      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val (alive, fCol, rCol) =
-      readEntriesWithPositions(spark, root, affectedEntries, oldDv, meta.schema)
-    val newMatches = KeyLiterals.byReference(alive.filter(coalesce(predicate, lit(false)))
-      .select(col(fCol).alias("file_name"), col(rCol).alias("row_index")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // a distributed old sidecar feeds the alive anti-join, the size count,
+    // the basename collect and the sidecar write: persist pins one read
+    val oldDv = priorDv(spark, root, affectedEntries).map(_.map(
+      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
     try {
-      val nNew = newMatches.count()
-      if (nNew == 0) return v
-      // old and new are DISJOINT by construction (`alive` already
-      // anti-joined the old sidecars away) and each side is unique
-      // (physical positions / a distinct sidecar read), so the merged
-      // size is the exact SUM — the cap decides BEFORE any union work,
-      // and the union itself needs no distinct shuffle
-      val nOld = oldDv.map(_.count()).getOrElse(0L)
-      if (nNew + nOld > maxDvPositions) {
-        graft.core.Logging.logger().warn(
-          s"deleteWhereMoR: merged deletion vector would hold ${nNew + nOld} " +
-            s"positions (> maxDvPositions=$maxDvPositions) — degrading to " +
-            "the copy-on-write rewrite (deleteWhere)")
-        return deleteWhere(spark, root, predicate)
-      }
-      val dvDf = oldDv.map(newMatches.unionByName(_)).getOrElse(newMatches)
-      // bounded by the files the sidecars mention: the affected set plus
-      // any file still sharing an old sidecar with one of them
-      val dvFileNames = dvDf.select(col("file_name")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val dvFile = writeDvSidecar(spark, root, v + 1, dvDf)
-      publishCommit(spark, root, "deleteWhereMoR", v, Left(body), meta,
-        StagedCommit(retag =
-          retagMap(body, entriesWithFiles, affected, dvFileNames, dvFile)),
-        Some(resolved), emptySchema = Some(schema))
-    } finally {
-      newMatches.unpersist(false)
-      oldDv.foreach(_.unpersist(false))
+      val (alive, fCol, rCol) =
+        readEntriesWithPositions(spark, root, affectedEntries, oldDv, meta.schema)
+      maskMatched(spark, root, "deleteWhereMoR", v, body, entriesWithFiles, affected,
+        oldDv, KeyLiterals.byReference(alive.filter(coalesce(predicate, lit(false)))
+          .select(col(fCol), col(rCol))), fCol, rCol, maxDvPositions)(
+        deleteWhere(spark, root, predicate)) { (_, retag) =>
+        publishCommit(spark, root, "deleteWhereMoR", v, Left(body), meta,
+          StagedCommit(retag = retag), Some(resolved), emptySchema = Some(schema))
+      }.getOrElse(v)
+    } finally oldDv.foreach(_.foreach(_.unpersist(false)))
+  }
+
+  /** The position step every MoR masking verb shares. `matched` holds the
+    * alive rows to mask, with their file-name and row-index columns
+    * `fCol`/`rCol`. It is pinned on the driver when it holds at most
+    * [[MaxDriverPositions]] rows; with a driver-held (or no) prior DV the
+    * count, the sidecar-mentioned basenames and the merged sidecar then
+    * need no Spark job. Otherwise — and with a distributed prior DV — the
+    * positions stay DataFrames: old and new are disjoint by construction
+    * (`matched` masked the old ones away) and each is unique, so the
+    * merged size is the exact sum, the cap decides before any union work,
+    * and the union needs no distinct shuffle. Past `maxDvPositions`
+    * `degrade` runs (loudly) instead; else `publish` gets the matched rows
+    * without their position columns, and the retag map. None when nothing
+    * matched.
+    */
+  private[graft] def maskMatched(spark: SparkSession, root: String, verb: String,
+      v: Long, body: Seq[String], entriesWithFiles: Seq[(ManifestEntry, String)],
+      affected: Set[String], oldDv: Option[Either[Seq[(String, Long)], DataFrame]],
+      matched: DataFrame, fCol: String, rCol: String, maxDvPositions: Long)(
+      degrade: => Long)(publish: (DataFrame, Map[String, String]) => Long): Option[Long] = {
+    import org.apache.spark.sql.functions.col
+    def capped(n: Long): Boolean = n > maxDvPositions && {
+      graft.core.Logging.logger().warn(
+        s"$verb: merged deletion vector would hold $n positions " +
+          s"(> maxDvPositions=$maxDvPositions) — degrading to the copy-on-write twin")
+      true
+    }
+    def retag(dvFileNames: Set[String], dvFile: String) =
+      retagMap(body, entriesWithFiles, affected, dvFileNames, dvFile)
+    val pinned = org.apache.spark.sql.graftbridge.ColumnBridge.pinned(matched, MaxDriverPositions)
+    (pinned, oldDv) match {
+      case (Some((rows, internal)), None | Some(Left(_))) =>
+        if (internal.isEmpty) return None
+        val (fi, ri) = (rows.schema.fieldIndex(fCol), rows.schema.fieldIndex(rCol))
+        val positions = internal.map(r => (r.getUTF8String(fi).toString, r.getLong(ri))) ++
+          oldDv.flatMap(_.left.toOption).getOrElse(Nil)
+        if (capped(positions.size.toLong)) return Some(degrade)
+        val dvFile = writeDvSidecar(spark, root, v + 1, positions)
+        Some(publish(rows.drop(fCol, rCol), retag(positions.map(_._1).toSet, dvFile)))
+      case _ =>
+        val m = pinned.map(_._1).getOrElse(
+          matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        try {
+          val newPositions = m.select(col(fCol).alias("file_name"), col(rCol).alias("row_index"))
+          val nNew = newPositions.count()
+          if (nNew == 0) return None
+          val old = oldDv.map(_.fold(ps => spark.createDataFrame(ps)
+            .toDF("file_name", "row_index"), identity))
+          if (capped(nNew + old.map(_.count()).getOrElse(0L))) return Some(degrade)
+          val dvDf = old.map(newPositions.unionByName(_)).getOrElse(newPositions)
+          // bounded by the files the sidecars mention: the affected set
+          // plus any file still sharing an old sidecar with one of them
+          val dvFileNames = dvDf.select(col("file_name")).distinct()
+            .collect().map(_.getString(0)).toSet
+          Some(publish(m.drop(fCol, rCol),
+            retag(dvFileNames, writeDvSidecar(spark, root, v + 1, dvDf))))
+        } finally if (pinned.isEmpty) m.unpersist(false)
     }
   }
 
@@ -2158,10 +2281,10 @@ object SnapshotManifest {
     * [[updateWhere]]: `assignments` evaluate on the pre-update row, cast
     * back to the column's original type) are appended as NEW data files.
     * Cost ∝ matches, not affected-file bytes; readers see the update
-    * immediately through the same DV anti-join + the appended files.
+    * immediately through the same DV mask + the appended files.
     * [[foldDeletes]]/CoW rewrites/compaction materialize as usual.
-    * Positions stay distributed exactly as in [[deleteWhereMoR]], with
-    * the same `maxDvPositions` loud degrade to the CoW twin
+    * Positions go through [[maskMatched]] exactly as in [[deleteWhereMoR]],
+    * with the same `maxDvPositions` loud degrade to the CoW twin
     * ([[updateWhere]]).
     *
     * @return the committed version (unchanged if nothing matched)
@@ -2187,46 +2310,27 @@ object SnapshotManifest {
     if (affected.isEmpty) return v
     val entriesWithFiles = bodyEntries(body).zip(files)
     val affectedEntries = entriesWithFiles.collect { case (e, f) if affected(f) => e }
-    val oldDv = entryDvPositionsDf(spark, root, affectedEntries)
-      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val (alive, fCol, rCol) =
-      readEntriesWithPositions(spark, root, affectedEntries, oldDv, meta.schema)
-    val matched = KeyLiterals.byReference(alive.filter(coalesce(predicate, lit(false))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val oldDv = priorDv(spark, root, affectedEntries).map(_.map(
+      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
     try {
-      if (matched.isEmpty) return v
-      // post-images: assignments on the PRE-update row, original types kept
-      val postImages = matched.select(schema.fieldNames.toSeq.map { c =>
-        assignments.get(c)
-          .map(e => e.cast(schema(c).dataType).alias(c))
-          .getOrElse(col(s"`$c`"))
-      }: _*)
-      val newPositions = matched
-        .select(col(fCol).alias("file_name"), col(rCol).alias("row_index"))
-      // disjoint-by-construction sizing, no distinct shuffle — see
-      // deleteWhereMoR
-      val nNew = newPositions.count()
-      val nOld = oldDv.map(_.count()).getOrElse(0L)
-      if (nNew + nOld > maxDvPositions) {
-        graft.core.Logging.logger().warn(
-          s"updateWhereMoR: merged deletion vector would hold ${nNew + nOld} " +
-            s"positions (> maxDvPositions=$maxDvPositions) — degrading to " +
-            "the copy-on-write rewrite (updateWhere)")
-        return updateWhere(spark, root, predicate, assignments, statsCols)
-      }
-      val dvDf = oldDv.map(newPositions.unionByName(_)).getOrElse(newPositions)
-      val dvFileNames = dvDf.select(col("file_name")).distinct()
-        .collect().map(_.getString(0)).toSet // affected ∪ sidecar-sharing files
-      val dvFile = writeDvSidecar(spark, root, v + 1, dvDf)
-      publishCommit(spark, root, "updateWhereMoR", v, Left(body), meta,
-        StagedCommit(
-          retag = retagMap(body, entriesWithFiles, affected, dvFileNames, dvFile),
-          added = stageLines(spark, root, v + 1, Some(postImages), statsCols, meta)),
-        Some(resolved), emptySchema = Some(schema))
-    } finally {
-      matched.unpersist(false)
-      oldDv.foreach(_.unpersist(false))
-    }
+      val (alive, fCol, rCol) =
+        readEntriesWithPositions(spark, root, affectedEntries, oldDv, meta.schema)
+      maskMatched(spark, root, "updateWhereMoR", v, body, entriesWithFiles, affected,
+        oldDv, KeyLiterals.byReference(alive.filter(coalesce(predicate, lit(false)))),
+        fCol, rCol, maxDvPositions)(
+        updateWhere(spark, root, predicate, assignments, statsCols)) { (matched, retag) =>
+        // post-images: assignments on the PRE-update row, original types kept
+        val postImages = matched.select(schema.fieldNames.toSeq.map { c =>
+          assignments.get(c)
+            .map(e => e.cast(schema(c).dataType).alias(c))
+            .getOrElse(col(s"`$c`"))
+        }: _*)
+        publishCommit(spark, root, "updateWhereMoR", v, Left(body), meta,
+          StagedCommit(retag = retag,
+            added = stageLines(spark, root, v + 1, Some(postImages), statsCols, meta)),
+          Some(resolved), emptySchema = Some(schema))
+      }.getOrElse(v)
+    } finally oldDv.foreach(_.foreach(_.unpersist(false)))
   }
 
   /** Materialize every outstanding deletion vector as a copy-on-write

@@ -24,6 +24,40 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df` pinned on the driver: a frame over a `LocalRelation` of the
+    * internal rows one bounded collect returned, with those rows; None
+    * when `df` holds more than `cap` rows. The collect is `executeCollect`
+    * of `df.limit(cap + 1)` under an execution id, like any action, and
+    * runs no job when the plan is already local. The rows never pass
+    * through external `Row`s, so every value (a pre-1582 timestamp, a NaN,
+    * a decimal's scale) stays bit-exact. Every later action reads the
+    * same rows, so a non-deterministic `df` is evaluated once.
+    */
+  def pinned(df: org.apache.spark.sql.DataFrame, cap: Int)
+      : Option[(org.apache.spark.sql.DataFrame,
+        IndexedSeq[org.apache.spark.sql.catalyst.InternalRow])] = {
+    val qe = df.limit(cap + 1).queryExecution
+    val rows = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+      qe, Some("pin"))(qe.executedPlan.executeCollect()).toIndexedSeq
+    if (rows.length > cap) None
+    else Some((ofRows(df.sparkSession,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema),
+        rows)), rows))
+  }
+
+  /** The rows of `df` when its optimized plan is a `LocalRelation` (a
+    * pinned frame, or a projection of one), read without executing
+    * anything; None for any other plan.
+    */
+  def localRows(df: org.apache.spark.sql.DataFrame)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if !l.isStreaming => Some(l.data)
+      case _ => None
+    }
+
   /** A fresh session that COPIES `spark`'s state as of now — runtime SQL
     * conf and registered query-execution listeners included; `newSession()`
     * drops both (it starts from the builder-time confs).

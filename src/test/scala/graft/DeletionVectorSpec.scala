@@ -353,14 +353,16 @@ class DeletionVectorSpec extends SparkSpec {
     assert(got2.filter($"v" === -7L).count() == 40L)
   }
 
-  test("DV read anti-join: broadcast while the sidecar is small, shuffle past the byte threshold") {
+  test("DV read mask: a position filter when small, a shuffle anti-join when fat") {
     val root = newTable()
     SnapshotManifest.deleteWhereMoR(spark, root, $"id".between(10, 20))
     def plan(): String =
       SnapshotManifest.read(spark, root).queryExecution.executedPlan.toString
-    // default threshold (32 MB): the churn-sized sidecar broadcasts
+    // default threshold (32 MB): the churn-sized sidecar is read on the
+    // driver and masks the scan by a row-position filter, with no join
     val small = plan()
-    assert(small.contains("BroadcastHashJoin"), small)
+    assert(!small.contains("Join") && small.contains("INSET"), small)
+    assert(SnapshotManifest.read(spark, root).count() == 189L)
     // force the fat-DV regime: 1-byte threshold drops OUR broadcast hint,
     // and (since the test sidecar is physically tiny) autoBroadcast=-1
     // stands in for Catalyst's own size estimate rejecting a fat build

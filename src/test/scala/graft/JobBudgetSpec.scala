@@ -17,7 +17,8 @@ import graft.sources.{ChangeFeed, SnapshotManifest}
   * twin-less and record no schema in their header (the fixed-cost regime
   * the budgets describe). Families pinned: change-feed catch-up and feed
   * read, point `readWhere` (plain and over a DV-carrying file),
-  * `appendRows`, CoW `deleteWhere`/`updateWhere`, `deleteWhereMoR`, keyed
+  * `appendRows`, CoW `deleteWhere`/`updateWhere`, `deleteWhereMoR` and CoW
+  * `deleteWhere` on a clean and on a DV-carrying file, keyed
   * `Upsert.mergeWhere`, SQL `DELETE`/`MERGE INTO` on a `graft-snapshot`
   * catalog table, and `vacuum`; `vacuum` and `countRows` also on a
   * twin-anchored table (one carrying parquet checkpoint twins).
@@ -199,6 +200,23 @@ class JobBudgetSpec extends SparkSpec {
     assert(SnapshotManifest.readWhere(spark, root, col("id") <= 6L).count() == 6L)
   }
 
+  test("deleteWhereMoR on a file that already carries a DV stays within its budget") {
+    val root = seeded()
+    SnapshotManifest.deleteWhereMoR(spark, root, col("id") === 5L)
+    assertBudget("a 1-key deleteWhereMoR over a DV'd file",
+      jobsOf(SnapshotManifest.deleteWhereMoR(spark, root, col("id") === 6L)), MorDeleteDvJobs)
+    assert(SnapshotManifest.readWhere(spark, root, col("id") <= 7L).count() == 6L)
+  }
+
+  test("CoW deleteWhere on a file that carries a DV stays within its budget") {
+    val root = seeded()
+    SnapshotManifest.deleteWhereMoR(spark, root, col("id") === 5L)
+    assertBudget("a 1-key CoW deleteWhere over a DV'd file",
+      jobsOf(SnapshotManifest.deleteWhere(spark, root, col("id") === 6L, Seq("id"))),
+      DvDeleteJobs)
+    assert(SnapshotManifest.readWhere(spark, root, col("id") <= 7L).count() == 6L)
+  }
+
   test("a 2-key mergeWhere stays within its budget") {
     val root = seeded()
     assertBudget("a 2-key mergeWhere", jobsOf(Upsert.mergeWhere(spark, root,
@@ -240,31 +258,45 @@ class JobBudgetSpec extends SparkSpec {
     */
   private val AutoCatchUpJobs = 3
 
-  /** Three jobs for the broadcast DV anti-join and the collect. The table
-    * and sidecar schemas are read on the driver (a footer and a fixed
-    * schema), so the prune and the scan run no inference job (with them, 5
-    * and 6).
+  /** The collect alone: the sidecar's positions are read on the driver
+    * and mask the scan by a row-position filter. The distinct and
+    * broadcast anti-join this replaced ran 3.
     */
-  private val DvReadWhereJobs = 3
+  private val DvReadWhereJobs = 1
 
-  /** The count of the matched positions with its adaptive stage jobs,
-    * then the sidecar write; 7 with the two schema inferences.
+  /** The bounded collect of the matched positions, which scans one
+    * partition and then the rest; the count, the basenames and the
+    * sidecar write run on the driver. 5 with the count's adaptive stage
+    * jobs and a sidecar write job.
     */
-  private val MorDeleteJobs = 5
+  private val MorDeleteJobs = 2
 
-  /** Three for the staged key set (its cache, distinct and collect), then
-    * two shuffle-map jobs and the write of the full-outer merge; 8 with
-    * the two schema inferences.
+  /** [[MorDeleteJobs]]: the prior sidecar's positions are read on the
+    * driver. 11 when they were a persisted, counted and collected frame.
     */
-  private val MergeJobs = 6
+  private val MorDeleteDvJobs = 2
+
+  /** The rewrite alone: the prior DV masks the rewrite scan by a
+    * row-position filter. 3 with a distinct and broadcast anti-join.
+    */
+  private val DvDeleteJobs = 1
+
+  /** Two shuffle-map jobs and the write of the full-outer merge: the
+    * 2-row staged batch is a local relation, so its key set is read on the
+    * driver. 6 with the key set's cache, distinct and collect; 8 with the
+    * two schema inferences as well.
+    */
+  private val MergeJobs = 3
 
   /** The rewrite alone; 4 with the table load's and the verb's schema
     * inferences and the rewrite scan's.
     */
   private val SqlDeleteJobs = 1
 
-  /** [[MergeJobs]]; 9 with the table load's inference as well. */
-  private val SqlMergeJobs = 6
+  /** [[MergeJobs]]: the source view is local too. 6 at the key set's
+    * three jobs, 9 with the table load's inference as well.
+    */
+  private val SqlMergeJobs = 3
 
   /** None: the plan (`vacuumPlan`: the retained manifests' references,
     * one listing per data directory) and the sweep are driver metadata
