@@ -82,20 +82,31 @@ object ColumnBridge {
       : Seq[org.apache.spark.sql.util.QueryExecutionListener] =
     spark.listenerManager.listListeners().toSeq
 
+  /** Wait until every event posted to `sc`'s listener bus so far has been
+    * delivered, so a listener's count covers the calls that have returned.
+    * `listenerBus` is `private[spark]`.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** The schema `spark.read.parquet(path).schema` infers for ONE parquet
     * file, read on the driver without the one-task inference job: Spark's
     * own derivation (the row metadata Spark writes into the footer, else
-    * the session's parquet converter), made all-nullable as a file scan
-    * reads it. `asNullable` is `private[spark]`.
+    * the session's parquet converter, under the session's conf as it is
+    * now), made all-nullable as a file scan reads it. Only the footer's
+    * file metadata is decoded: the row-group metadata is skipped, so the
+    * cost does not grow with the file's row groups and columns' stats.
+    * `asNullable` is `private[spark]`.
     */
   def parquetFileSchema(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{DataType, StructType}
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), classic.sessionState.newHadoopConf()))
-    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    val meta = org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+      .readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), classic.sessionState.newHadoopConf()),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      .getFileMetaData
     Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
       .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
       .collect { case st: StructType => st }

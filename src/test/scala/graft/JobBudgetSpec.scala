@@ -1,12 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, lit}
 import graft.operators.Upsert
 import graft.sources.{ChangeFeed, SnapshotManifest}
@@ -20,29 +16,14 @@ import graft.sources.{ChangeFeed, SnapshotManifest}
   * `appendRows`, CoW `deleteWhere`/`updateWhere`, `deleteWhereMoR` and CoW
   * `deleteWhere` on a clean and on a DV-carrying file, keyed
   * `Upsert.mergeWhere`, SQL `DELETE`/`MERGE INTO` on a `graft-snapshot`
-  * catalog table, and `vacuum`; `vacuum` and `countRows` also on a
-  * twin-anchored table (one carrying parquet checkpoint twins).
+  * catalog table, and `vacuum`; `vacuum`, `countRows` and `prunedFiles`
+  * also on a twin-anchored table (one carrying parquet checkpoint twins);
+  * and one read query over a fixture table.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The short call site of each Spark job `body` launches (its final
-    * stage's name), read once the listener bus has drained.
-    */
-  private def jobsOf(body: => Any): Seq[String] = {
-    val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
-    val sites = new ConcurrentLinkedQueue[String]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        sites.add(e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name))
-        ()
-      }
-    }
-    sc.addSparkListener(l)
-    try { body; GraftTestBus.drain(sc); sites.asScala.toSeq }
-    finally sc.removeSparkListener(l)
-  }
+  private def jobsOf(body: => Any): Seq[String] = GraftTestBus.jobsOf(spark.sparkContext)(body)
 
   private def assertBudget(what: String, jobs: Seq[String], budget: Int): Unit =
     assert(jobs.size <= budget,
@@ -157,6 +138,26 @@ class JobBudgetSpec extends SparkSpec {
     assertBudget("countRows of a twin-anchored table",
       jobsOf { n = SnapshotManifest.countRows(spark, root) }, 0)
     assert(n == 200L)
+  }
+
+  test("prunedFiles of a twin-anchored table reads the twin under its fixed schema") {
+    val root = twinAnchored()
+    val fallbacks = SnapshotManifest.twinFallbacks.get()
+    val prunes = SnapshotManifest.ckptFramePrunes.get()
+    var files = Seq.empty[String]
+    assertBudget("prunedFiles of a twin-anchored table", jobsOf {
+      files = SnapshotManifest.prunedFiles(spark, root, 3L, col("id") === 6L)
+    }, TwinPruneJobs)
+    assert(SnapshotManifest.twinFallbacks.get() == fallbacks, "the twin path must not fall back")
+    assert(SnapshotManifest.ckptFramePrunes.get() == prunes + 1, "the twin path must prune")
+    assert(files.nonEmpty)
+  }
+
+  test("a read query opens its tables without a schema-inference job") {
+    val q11 = SparkEntry.queries("q11_having")
+    assertBudget("q11_having at sf0.001 through the noop sink", jobsOf {
+      q11(spark, sfDir).write.format("noop").mode("overwrite").save()
+    }, ReadQueryJobs)
   }
 
   test("readWhere over a DV-carrying file infers no sidecar schema") {
@@ -297,6 +298,17 @@ class JobBudgetSpec extends SparkSpec {
     * three jobs, 9 with the table load's inference as well.
     */
   private val SqlMergeJobs = 3
+
+  /** The schema probe's `head(1)` jobs and the pruning collect: the twin
+    * is read under its fixed `(rel, line)` schema after one driver footer
+    * read of a part. 5 with the twin's schema-inference job.
+    */
+  private val TwinPruneJobs = 4
+
+  /** q11_having's own plan: its table is opened with the schema read from
+    * the file's footer on the driver. 5 with the open's inference job.
+    */
+  private val ReadQueryJobs = 4
 
   /** None: the plan (`vacuumPlan`: the retained manifests' references,
     * one listing per data directory) and the sweep are driver metadata
