@@ -64,23 +64,8 @@ object Bench {
     // compiled every shape once, so a nonzero count is generated code the
     // codegen cache evicted (or a plan whose source changes per run)
     val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    // Spark jobs launched during each query's timed samples, counted by a
-    // listener once the bus has drained: the layer split ROADMAP aim 1
-    // asks for, and where a table open's schema-inference job would show
-    val jobsStarted = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobsStarted.incrementAndGet(); ()
-      }
-    })
-    def jobCount = {
-      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark.sparkContext)
-      jobsStarted.get
-    }
-    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       var err: Option[String] = None
-      val jobs0 = jobCount
       val compiles0 = compileCount
       val attempts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
@@ -91,7 +76,6 @@ object Bench {
         if (ok) Some((System.nanoTime() - t0) / 1e9) else None
       }
       compiles(name) = compileCount - compiles0
-      jobs(name) = jobCount - jobs0
       val samples = attempts.flatten
       // -1 sentinel in the PER-QUERY maps too: a dead query recorded as
       // 0.0 is shape-identical to a record speedup for any consumer
@@ -116,8 +100,8 @@ object Bench {
       kv.map { case (k, e) => s"\"" + k + "\":\"" + e + "\"" }
         .mkString("{", ",", "}")
     val qs = jsonMap(results.map(r => r._1 -> r._2))
-    def jsonCounts(kv: Iterable[(String, Long)]): String =
-      kv.map { case (k, n) => s"\"" + k + "\":" + n }.mkString("{", ",", "}")
+    val qsCompiles = compiles.map { case (k, n) => s"\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
     val qsCold = jsonMap(results.map(r => r._1 -> r._3))
     // total_cold is only meaningful when EVERY first attempt succeeded —
     // a -1 cold sentinel (flaky first run) summed in would silently skew
@@ -128,7 +112,7 @@ object Bench {
       if (results.isEmpty) 0.0 else results.map(_._2).sum / results.length)
     val (total, totalCold, mean) =
       if (failed.nonEmpty) (-1.0, -1.0, -1.0) else sums
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","total_cold":$totalCold,"mean_per_query":$mean,"n_failed":${failed.size},"failed":${jsonStrMap(failed)},"n_flaky":${flaky.size},"flaky":${jsonStrMap(flaky)},"queries":$qs,"queries_cold":$qsCold,"compiles_warm":$warmCompiles,"compiles":${jsonCounts(compiles)},"jobs":${jsonCounts(jobs)},"sf":"$sfDir","cpus":${cpus.toInt},"nproc":$nproc}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","total_cold":$totalCold,"mean_per_query":$mean,"n_failed":${failed.size},"failed":${jsonStrMap(failed)},"n_flaky":${flaky.size},"flaky":${jsonStrMap(flaky)},"queries":$qs,"queries_cold":$qsCold,"compiles_warm":$warmCompiles,"compiles":$qsCompiles,"sf":"$sfDir","cpus":${cpus.toInt},"nproc":$nproc}"""
     // persist the FULL record to a file: the driver keeps only the last
     // ~2000 chars of stdout, and a 90+-query map is ~8 KB — r04/r05 both
     // recorded `parsed: null` because the one big line never fit the tail.
@@ -148,7 +132,6 @@ object Bench {
       s""""mean_per_query":$mean,"n_failed":${failed.size},""" +
       s""""slowest_queries":$slow,"n_queries":${results.length},""" +
       s""""compiles_warm":$warmCompiles,"compiles_timed":${compiles.values.sum},""" +
-      s""""jobs_timed":${jobs.values.sum},""" +
       s""""queries_file":"$outFile","sf":"$sfDir","cpus":${cpus.toInt},"nproc":$nproc}""")
     spark.stop()
   }

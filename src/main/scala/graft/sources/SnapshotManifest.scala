@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import scala.concurrent.duration._
 
@@ -1765,13 +1765,6 @@ object SnapshotManifest {
         .map(l => (l.split('\t').head, l)).toDF("rel", "line"))
   }
 
-  /** The columns of a parquet checkpoint twin, as
-    * [[writeCheckpointParquetFrame]] writes them: one nullable string pair
-    * per body line.
-    */
-  private val TwinSchema = StructType(Seq(
-    StructField("rel", StringType), StructField("line", StringType)))
-
   /** [[writeCheckpointParquet]] from an already-distributed body frame
     * (`rel`, `line`) — the edits path's boundary twin, where the body
     * never existed as driver strings to begin with.
@@ -1896,17 +1889,7 @@ object SnapshotManifest {
             s"+/- op: ${l.take(80)}")
       }.toSeq
     }
-    // the twin is read under its fixed schema, so no inference job reads
-    // a part's footer. One footer is read on the driver instead: a twin
-    // whose parts are gone or unreadable must fail HERE, into the text
-    // path, not read as an empty body or fail later in a caller's scan
-    val part = fs.listStatus(dir).map(_.getPath).find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"checkpoint twin $dir holds no parquet part"))
-    val partSchema =
-      org.apache.spark.sql.graftbridge.ColumnBridge.parquetFileSchema(spark, part.toString)
-    if (partSchema != TwinSchema) throw new IllegalStateException(
-      s"checkpoint twin $dir has schema ${partSchema.simpleString}, not ${TwinSchema.simpleString}")
-    val ckpt = spark.read.schema(TwinSchema).parquet(dir.toString)
+    val ckpt = spark.read.parquet(dir.toString)
     // replay ops oldest→newest into one last-write-wins edit map:
     // None = removed, Some(line) = added or replaced
     val edits = new java.util.LinkedHashMap[String, Option[String]]()

@@ -82,13 +82,6 @@ object ColumnBridge {
       : Seq[org.apache.spark.sql.util.QueryExecutionListener] =
     spark.listenerManager.listListeners().toSeq
 
-  /** Wait until every event posted to `sc`'s listener bus so far has been
-    * delivered, so a listener's count covers the calls that have returned.
-    * `listenerBus` is `private[spark]`.
-    */
-  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
-
   /** The schema `spark.read.parquet(path).schema` infers for ONE parquet
     * file, read on the driver without the one-task inference job: Spark's
     * own derivation (the row metadata Spark writes into the footer, else

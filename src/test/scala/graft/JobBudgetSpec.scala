@@ -16,9 +16,9 @@ import graft.sources.{ChangeFeed, SnapshotManifest}
   * `appendRows`, CoW `deleteWhere`/`updateWhere`, `deleteWhereMoR` and CoW
   * `deleteWhere` on a clean and on a DV-carrying file, keyed
   * `Upsert.mergeWhere`, SQL `DELETE`/`MERGE INTO` on a `graft-snapshot`
-  * catalog table, and `vacuum`; `vacuum`, `countRows` and `prunedFiles`
-  * also on a twin-anchored table (one carrying parquet checkpoint twins);
-  * and one read query over a fixture table.
+  * catalog table, and `vacuum`; `vacuum` and `countRows` also on a
+  * twin-anchored table (one carrying parquet checkpoint twins); and one
+  * read query over a fixture table.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -138,19 +138,6 @@ class JobBudgetSpec extends SparkSpec {
     assertBudget("countRows of a twin-anchored table",
       jobsOf { n = SnapshotManifest.countRows(spark, root) }, 0)
     assert(n == 200L)
-  }
-
-  test("prunedFiles of a twin-anchored table reads the twin under its fixed schema") {
-    val root = twinAnchored()
-    val fallbacks = SnapshotManifest.twinFallbacks.get()
-    val prunes = SnapshotManifest.ckptFramePrunes.get()
-    var files = Seq.empty[String]
-    assertBudget("prunedFiles of a twin-anchored table", jobsOf {
-      files = SnapshotManifest.prunedFiles(spark, root, 3L, col("id") === 6L)
-    }, TwinPruneJobs)
-    assert(SnapshotManifest.twinFallbacks.get() == fallbacks, "the twin path must not fall back")
-    assert(SnapshotManifest.ckptFramePrunes.get() == prunes + 1, "the twin path must prune")
-    assert(files.nonEmpty)
   }
 
   test("a read query opens its tables without a schema-inference job") {
@@ -298,12 +285,6 @@ class JobBudgetSpec extends SparkSpec {
     * three jobs, 9 with the table load's inference as well.
     */
   private val SqlMergeJobs = 3
-
-  /** The schema probe's `head(1)` jobs and the pruning collect: the twin
-    * is read under its fixed `(rel, line)` schema after one driver footer
-    * read of a part. 5 with the twin's schema-inference job.
-    */
-  private val TwinPruneJobs = 4
 
   /** q11_having's own plan: its table is opened with the schema read from
     * the file's footer on the driver. 5 with the open's inference job.
