@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection harness: prints `explain("formatted")` for selected
   * queries so scan pruning (`ReadSchema`/`PushedFilters`), broadcast

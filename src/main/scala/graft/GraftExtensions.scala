@@ -12,6 +12,15 @@ import graft.functions.expressions.{CanonicalTokens, CosineSimilarity, HashedTok
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`.
   *
+  * Plan rules:
+  *   - `TopNWindowRewrite` (optimizer) — window top-N as a bounded top-k
+  *     aggregate (graft.plans.TopNWindowRewrite)
+  *   - `SmallRangeSort` (adaptive query-stage prep) — a global sort over
+  *     an input that coalescing would merge into one partition gets a
+  *     one-partition range exchange, with no sampling job
+  *     (graft.plans.SmallRangeSort)
+  *
+  * Functions:
   *   - `cosine_similarity(a, b)` — the codegen'd kernel (CosineSimilarity)
   *   - `graft_hash_id(s)`       — the reference's hash_id contract
   *     (`utils.py:46-55`): sha1 hex, null/empty → null, as pure Catalyst
@@ -33,6 +42,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rule: window top-N (row_number <= k) → bounded topk
     // aggregate with map-side partials (see graft.plans.TopNWindowRewrite)
     e.injectOptimizerRule(_ => graft.plans.TopNWindowRewrite())
+    // adaptive prep rule: a global sort over an input that coalescing
+    // would merge into one partition anyway gets a one-partition range
+    // exchange, so the range partitioner runs no sampling job
+    // (see graft.plans.SmallRangeSort)
+    e.injectQueryStagePrepRule(_ => graft.plans.SmallRangeSort)
     // snapshot-format SQL statements: DELETE/UPDATE/MERGE on registered
     // graft-snapshot tables → the engine's commit verbs, and catalog
     // reads of non-file-relation versions (live DVs, empty bodies) →

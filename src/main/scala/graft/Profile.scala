@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc profiler (dev tool): mimic Bench's flow — warm every query shape
   * at sf0.001, then time the named queries at the target scale factor for 3

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: run one query and print every Spark job it launched —
   * callsite, duration, task count — so a multi-verb lifecycle query's wall

@@ -3277,7 +3277,6 @@ object Queries {
     require(ctr.lastKept < ctr.lastConsidered,
       s"q155: a narrow key range on a range-clustered 16-file table must " +
         s"drop files (considered ${ctr.lastConsidered}, kept ${ctr.lastKept})")
-    import spark.implicits._
     spark.createDataFrame(
       spark.sparkContext.parallelize(collected.toSeq, 1), out.schema)
   }

@@ -10,7 +10,12 @@ import org.apache.spark.sql.SparkSession
   * coalescing), UTC session timezone for deterministic timestamp semantics,
   * shuffle partitions sized for the local harness but overridable — on a real
   * cluster this would be `spark.sql.shuffle.partitions ≈ 2-3× total cores`
-  * plus AQE coalescing.
+  * plus AQE coalescing. A global sort over a small input takes ONE range
+  * partition from the start ([[graft.plans.SmallRangeSort]], injected by
+  * [[graft.GraftExtensions]]): when the measured input is at most
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB by
+  * default), the size coalescing always merges into one partition, and
+  * the range partitioner then runs no sampling job.
   *
   * The codegen cache size is a STATIC conf: Spark reads it once per JVM,
   * when the first query compiles generated code, so it cannot be set on a

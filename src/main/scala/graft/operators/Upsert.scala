@@ -151,9 +151,10 @@ object Upsert {
       spark, tableRoot, merge(target, staged, pkCols))
     // pin the audit to the version we just committed, not to read(): a
     // concurrent commit landing in between would make the audit describe a
-    // different snapshot than the returned version
-    (version, auditUpdatedToday(spark.read.parquet(
-      graft.sources.SnapshotManifest.snapshotFiles(spark, tableRoot, version): _*)))
+    // different snapshot than the returned version. readVersion takes the
+    // recorded (or footer) schema, so the audit infers none with a job
+    (version, auditUpdatedToday(
+      graft.sources.SnapshotManifest.readVersion(spark, tableRoot, version)))
   }
 
   /** File-pruned copy-on-write MERGE — [[mergeAndCommit]]'s fast path for

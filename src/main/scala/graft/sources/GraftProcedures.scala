@@ -9,7 +9,6 @@ import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL maintenance surface of the snapshot format — Spark 4 stored
   * procedures ([[org.apache.spark.sql.connector.catalog.ProcedureCatalog]],
@@ -66,8 +65,6 @@ private[graft] object GraftProcedures {
         s"(provider ${meta.provider.getOrElse("none")})")
     meta.location.toString
   }
-
-  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
   private def row(values: Any*): InternalRow =
     new GenericInternalRow(values.toArray)

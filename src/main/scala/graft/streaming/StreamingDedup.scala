@@ -69,7 +69,6 @@ object StreamingDedup {
   // sinks, so two DIFFERENT streams feeding one index (each with its own
   // checkpoint, each starting at batchId 0) can never alias each other's
   // commits
-  private val DeltaMarkerRe = MarkerLog.markerRe("delta")
   private val MatchesMarkerRe = MarkerLog.markerRe("matches")
 
   /** Materialize the bootstrap corpus index at `indexDir/base`.

@@ -26,24 +26,42 @@ object ColumnBridge {
 
   /** `df` pinned on the driver: a frame over a `LocalRelation` of the
     * internal rows one bounded collect returned, with those rows; None
-    * when `df` holds more than `cap` rows. The collect is `executeCollect`
-    * of `df.limit(cap + 1)` under an execution id, like any action, and
-    * runs no job when the plan is already local. The rows never pass
-    * through external `Row`s, so every value (a pre-1582 timestamp, a NaN,
-    * a decimal's scale) stays bit-exact. Every later action reads the
-    * same rows, so a non-deterministic `df` is evaluated once.
+    * when `df` holds more than `cap` rows. The collect is ONE job under an
+    * execution id, like any action: each partition returns at most
+    * `cap + 1` rows, and the driver keeps them, in partition order, only
+    * while their total is at most `cap`. (A `limit(cap + 1)` collect scans
+    * the first partition in one job and the rest in a second.) A plan that
+    * is already local runs no job. The rows never pass through external
+    * `Row`s, so every value (a pre-1582 timestamp, a NaN, a decimal's
+    * scale) stays bit-exact. Every later action reads the same rows, so a
+    * non-deterministic `df` is evaluated once.
     */
   def pinned(df: org.apache.spark.sql.DataFrame, cap: Int)
       : Option[(org.apache.spark.sql.DataFrame,
         IndexedSeq[org.apache.spark.sql.catalyst.InternalRow])] = {
-    val qe = df.limit(cap + 1).queryExecution
+    import org.apache.spark.sql.catalyst.InternalRow
+    val qe = df.queryExecution
+    val n = cap + 1
     val rows = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
-      qe, Some("pin"))(qe.executedPlan.executeCollect()).toIndexedSeq
-    if (rows.length > cap) None
-    else Some((ofRows(df.sparkSession,
+      qe, Some("pin"))(qe.executedPlan match {
+      case local: org.apache.spark.sql.execution.LocalTableScanExec =>
+        Some(local.executeTake(n).toIndexedSeq).filter(_.length <= cap)
+      case plan =>
+        val rdd = plan.execute()
+        val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+        var taken = 0L
+        if (parts.nonEmpty) df.sparkSession.sparkContext.runJob(rdd,
+          (it: Iterator[InternalRow]) => it.take(n).map(_.copy()).toArray,
+          (i: Int, part: Array[InternalRow]) => {
+            taken += part.length
+            if (taken <= cap) parts(i) = part
+          })
+        if (taken > cap) None else Some(parts.iterator.flatten.toIndexedSeq)
+    })
+    rows.map(rs => (ofRows(df.sparkSession,
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
         org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema),
-        rows)), rows))
+        rs)), rs))
   }
 
   /** The rows of `df` when its optimized plan is a `LocalRelation` (a

@@ -17,8 +17,9 @@ import graft.sources.{ChangeFeed, SnapshotManifest}
   * `deleteWhere` on a clean and on a DV-carrying file, keyed
   * `Upsert.mergeWhere`, SQL `DELETE`/`MERGE INTO` on a `graft-snapshot`
   * catalog table, and `vacuum`; `vacuum` and `countRows` also on a
-  * twin-anchored table (one carrying parquet checkpoint twins); and one
-  * read query over a fixture table.
+  * twin-anchored table (one carrying parquet checkpoint twins); and two
+  * sorted read queries over fixture tables, one with a stage below its
+  * sort and one without.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -140,11 +141,21 @@ class JobBudgetSpec extends SparkSpec {
     assert(n == 200L)
   }
 
+  /** `name` at sf0.001 through the noop sink, in a session with the
+    * engine's extensions (as `graft.core.Sessions` builds).
+    */
+  private def readQueryJobs(name: String): Seq[String] = withExtSession { ext =>
+    jobsOf(SparkEntry.queries(name)(ext, sfDir).write.format("noop").mode("overwrite").save())
+  }
+
   test("a read query opens its tables without a schema-inference job") {
-    val q11 = SparkEntry.queries("q11_having")
-    assertBudget("q11_having at sf0.001 through the noop sink", jobsOf {
-      q11(spark, sfDir).write.format("noop").mode("overwrite").save()
-    }, ReadQueryJobs)
+    assertBudget("q11_having at sf0.001 through the noop sink",
+      readQueryJobs("q11_having"), ReadQueryJobs)
+  }
+
+  test("a stage-free sorted read runs no sampling job") {
+    assertBudget("q24_minhash_signature at sf0.001 through the noop sink",
+      readQueryJobs("q24_minhash_signature"), StageFreeReadJobs)
   }
 
   test("readWhere over a DV-carrying file infers no sidecar schema") {
@@ -252,12 +263,12 @@ class JobBudgetSpec extends SparkSpec {
     */
   private val DvReadWhereJobs = 1
 
-  /** The bounded collect of the matched positions, which scans one
-    * partition and then the rest; the count, the basenames and the
-    * sidecar write run on the driver. 5 with the count's adaptive stage
-    * jobs and a sidecar write job.
+  /** The bounded collect of the matched positions, one job over every
+    * partition; the count, the basenames and the sidecar write run on the
+    * driver. 2 when the collect scanned one partition and then the rest,
+    * 5 with the count's adaptive stage jobs and a sidecar write job.
     */
-  private val MorDeleteJobs = 2
+  private val MorDeleteJobs = 1
 
   /** [[MorDeleteJobs]]: the prior sidecar's positions are read on the
     * driver. 11 when they were a persisted, counted and collected frame.
@@ -286,10 +297,19 @@ class JobBudgetSpec extends SparkSpec {
     */
   private val SqlMergeJobs = 3
 
-  /** q11_having's own plan: its table is opened with the schema read from
-    * the file's footer on the driver. 5 with the open's inference job.
+  /** q11_having's own plan: the aggregate's shuffle-map job, the sort's
+    * shuffle-map job and the result. Its table is opened with the schema
+    * read from the file's footer on the driver, and the small sort takes
+    * one range partition, so its partitioner samples nothing. 4 with the
+    * sampling job, 5 with the open's inference job as well.
     */
-  private val ReadQueryJobs = 4
+  private val ReadQueryJobs = 3
+
+  /** q24_minhash_signature's plan has no stage below its sort: the sort's
+    * shuffle-map job and the result. 3 with the range partitioner's
+    * sampling job.
+    */
+  private val StageFreeReadJobs = 2
 
   /** None: the plan (`vacuumPlan`: the retained manifests' references,
     * one listing per data directory) and the sweep are driver metadata
